@@ -29,11 +29,16 @@ shuffle joins via AQE otherwise.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.cleaning import clean_int, clean_price, multi_format_date, non_empty
+from ..functions.cleaning import (
+    clean_int_sql,
+    clean_price_sql,
+    multi_format_date_sql,
+    non_empty_sql,
+)
 
 CORRUPT_COL = "_corrupt_record"
 
@@ -76,33 +81,49 @@ TRANSACTIONS_SCHEMA = T.StructType(
 
 
 #: Replay-order columns attached by ``_read_csv`` (major..minor):
-#: numeric feed sequence, then full URI, then within-file position.
-ORDINAL_COLS = ["_src_seq", "_src_file", "_ordinal"]
+#: numeric feed sequence, then full URI, then split offset, then position
+#: within the split.
+ORDINAL_COLS = ["_src_seq", "_src_file", "_src_block", "_ordinal"]
 
 #: Digit run immediately before the file extension — the conventional
 #: feed sequence (feed_9.csv, feed_10.csv, part-00012.csv...).
-_SEQ_RE = r"(\d+)\.[A-Za-z0-9]+$"
+_SEQ_SQL = "regexp_extract(input_file_name(), '([0-9]+)[.][A-Za-z0-9]+$', 1)"
 
 
-def _read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+def _read_csv(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType,
+    columns: list[str] | None = None,
+) -> DataFrame:
     """S1-S3 scan: header-skipped, quote-aware, malformed rows quarantined
     into _corrupt_record instead of aborting (P7) — with a replay ordinal
     so S7 dedup replays in file order like MySQL upserts did.
 
-    The ordinal is (numeric file sequence, input_file_name,
-    monotonically_increasing_id): a file-level key is the MAJOR part
-    because Spark packs splits into partitions by size, not file order,
-    so the bare partition-indexed id does not follow file order across
-    files. The leading key is the NUMERIC suffix before the extension
-    (NATURAL order: feed_10 replays after feed_9, where bare
-    lexicographic URI order would invert them and silently flip upsert
-    winners); files without a numeric suffix get -1 and fall back to the
-    lexicographic URI tiebreak among themselves. Within one file the id
-    follows byte offset per split; a single file only splits above
-    ``spark.sql.files.maxPartitionBytes`` (128 MB — far beyond any dim
-    CSV; for larger single-file feeds raise that conf or ship an explicit
-    ordinal column), so within-file order is exact in practice and the
-    cross-FILE order is exact by construction.
+    ``columns`` (SQL text; default every parsed column) are computed in
+    the same projection that attaches the ordinal. The ordinal is
+    nondeterministic, so the optimizer never pushes a later filter below
+    that projection: a cleaned value the filter tests is computed once
+    per row, not once for the filter and again for the output.
+
+    The ordinal is (numeric file sequence, input_file_name, split offset,
+    monotonically_increasing_id). A file-level key is the MAJOR part
+    because Spark packs splits into partitions by size, not file order, so
+    the bare partition-indexed id does not follow file order across files.
+    The leading key is the NUMERIC suffix before the extension (NATURAL
+    order: feed_10 replays after feed_9, where bare lexicographic URI order
+    would invert them and silently flip upsert winners); files without a
+    numeric suffix get -1 and fall back to the lexicographic URI tiebreak
+    among themselves.
+
+    Spark splits one file as soon as it exceeds ``max(openCostInBytes,
+    total input bytes / cores)`` (capped by ``maxPartitionBytes``) — a few
+    MB on a small cluster, not 128 MB — and the packing then decides which
+    partition, and so which id range, each split lands in. So the split's
+    start offset (``_metadata.file_block_start``) orders splits within a
+    file, and the id only orders rows inside one split, where it follows
+    byte offset. A row belongs to the split its line starts in, so the
+    whole key is exact file order for any split layout.
     """
     df = (
         spark.read.option("header", True)
@@ -113,15 +134,12 @@ def _read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame
         .schema(schema)
         .csv(path)
     )
-    src = F.input_file_name()
-    seq = F.regexp_extract(src, _SEQ_RE, 1)
-    return (
-        df.withColumn("_src_file", src)
-        .withColumn(
-            "_src_seq",
-            F.when(seq == "", F.lit(-1)).otherwise(seq.cast("bigint")),
-        )
-        .withColumn("_ordinal", F.monotonically_increasing_id())
+    return df.selectExpr(
+        *(columns or ["*"]),
+        f"coalesce(CAST(nullif({_SEQ_SQL}, '') AS bigint), -1) AS _src_seq",
+        "input_file_name() AS _src_file",
+        "_metadata.file_block_start AS _src_block",
+        "monotonically_increasing_id() AS _ordinal",
     )
 
 
@@ -140,94 +158,77 @@ def dedup_last_wins(
     df: DataFrame, pk: list[str], ordinal: list[str] | str | None = None
 ) -> DataFrame:
     """S7: PK upsert as deterministic last-write-wins dedup. Replay order
-    is (numeric feed sequence, file URI, within-file position) by default
-    — naturally-later feeds (feed_10 after feed_9) count as later
-    writes; see ``_read_csv`` for the full key semantics."""
+    is (numeric feed sequence, file URI, split offset, within-split
+    position) by default — naturally-later feeds (feed_10 after feed_9)
+    count as later writes; see ``_read_csv`` for the full key semantics.
+    NULL keys form one group, as in GROUP BY."""
     if ordinal is None:
         ordinal = ORDINAL_COLS
     if isinstance(ordinal, str):
         ordinal = [ordinal]
-    w = Window.partitionBy(*pk).orderBy(*[F.desc(c) for c in ordinal])
+    keys = ", ".join(f"`{c}`" for c in pk)
+    order = ", ".join(f"`{c}` DESC" for c in ordinal)
     return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        df.selectExpr("*", f"row_number() OVER (PARTITION BY {keys} ORDER BY {order}) AS _rn")
+        .where("_rn = 1")
         .drop("_rn")
     )
 
 
-def read_customers(spark: SparkSession, path: str) -> DataFrame:
-    raw = _read_csv(spark, path, CUSTOMERS_SCHEMA)
-    cleaned = (
-        raw.filter(F.col(CORRUPT_COL).isNull())
-        .filter(non_empty("customer_id") & non_empty("customer_name"))
-        .select(
-            F.trim("customer_id").alias("customer_id"),
-            F.trim("customer_name").alias("customer_name"),
-            F.trim("gender").alias("gender"),
-            "_src_file",
-            "_src_seq",
-            "_ordinal",
-        )
+def _clean(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType,
+    pk: str,
+    columns: list[str],
+    keep: str,
+) -> DataFrame:
+    """One reader's cleaning: one projection computing the cleaned
+    ``columns`` beside the replay ordinal, one filter (``keep``, SQL text
+    over the cleaned columns, plus the quarantine rule), then the S7
+    last-wins dedup on ``pk`` with the ordinal dropped."""
+    cleaned = _read_csv(spark, path, schema, [*columns, CORRUPT_COL]).where(
+        f"{CORRUPT_COL} IS NULL AND {keep}"
     )
-    return dedup_last_wins(cleaned, ["customer_id"]).drop("_src_file", "_src_seq", "_ordinal")
+    return dedup_last_wins(cleaned, [pk]).drop(CORRUPT_COL, *ORDINAL_COLS)
+
+
+def _trimmed(*cols: str) -> list[str]:
+    return [f"trim({c}) AS {c}" for c in cols]
+
+
+def read_customers(spark: SparkSession, path: str) -> DataFrame:
+    columns = _trimmed("customer_id", "customer_name", "gender")
+    keep = f"{non_empty_sql('customer_id')} AND {non_empty_sql('customer_name')}"
+    return _clean(spark, path, CUSTOMERS_SCHEMA, "customer_id", columns, keep)
 
 
 def read_products(spark: SparkSession, path: str) -> DataFrame:
-    raw = _read_csv(spark, path, PRODUCTS_SCHEMA)
-    priced = (
-        raw.filter(F.col(CORRUPT_COL).isNull())
-        # P8: the reference requires ALL six identity fields non-empty
-        # (MeshJoin.java:114-117) — id/name for product, supplier, store.
-        .filter(
-            non_empty("product_id")
-            & non_empty("product_name")
-            & non_empty("supplier_id")
-            & non_empty("supplier_name")
-            & non_empty("store_id")
-            & non_empty("store_name")
-        )
-        .withColumn("product_price", clean_price("product_price_raw"))
-        # P9: negative price drops the row; P10 already defaulted unparsable
-        # to 0.00 (kept) — the reference's deliberate asymmetry.
-        .filter(F.col("product_price") >= 0)
-        .select(
-            F.trim("product_id").alias("product_id"),
-            F.trim("product_name").alias("product_name"),
-            "product_price",
-            F.trim("supplier_id").alias("supplier_id"),
-            F.trim("supplier_name").alias("supplier_name"),
-            F.trim("store_id").alias("store_id"),
-            F.trim("store_name").alias("store_name"),
-            "_src_file",
-            "_src_seq",
-            "_ordinal",
-        )
-    )
-    return dedup_last_wins(priced, ["product_id"]).drop("_src_file", "_src_seq", "_ordinal")
+    columns = [
+        *_trimmed("product_id", "product_name"),
+        f"{clean_price_sql('product_price_raw')} AS product_price",
+        *_trimmed("supplier_id", "supplier_name", "store_id", "store_name"),
+    ]
+    identity = ["product_id", "product_name", "supplier_id", "supplier_name", "store_id", "store_name"]
+    # P8: the reference requires ALL six identity fields non-empty
+    # (MeshJoin.java:114-117) — id/name for product, supplier, store.
+    # P9: negative price drops the row; P10 already defaulted unparsable
+    # to 0.00 (kept) — the reference's deliberate asymmetry.
+    keep = " AND ".join([*map(non_empty_sql, identity), "product_price >= 0"])
+    return _clean(spark, path, PRODUCTS_SCHEMA, "product_id", columns, keep)
 
 
 def read_transactions(spark: SparkSession, path: str) -> DataFrame:
-    raw = _read_csv(spark, path, TRANSACTIONS_SCHEMA)
-    cleaned = (
-        raw.filter(F.col(CORRUPT_COL).isNull())
-        .filter(non_empty("order_id"))
-        .withColumn("order_date", multi_format_date("order_date_raw"))
-        .withColumn("quantity", clean_int("quantity_raw"))
-        # P12: unparsable date drops the row; P9: bad/negative quantity too.
-        .filter(F.col("order_date").isNotNull())
-        .filter(F.col("quantity").isNotNull() & (F.col("quantity") >= 0))
-        .select(
-            F.trim("order_id").alias("order_id"),
-            "order_date",
-            F.trim("product_id").alias("product_id"),
-            "quantity",
-            F.trim("customer_id").alias("customer_id"),
-            "_src_file",
-            "_src_seq",
-            "_ordinal",
-        )
-    )
-    return dedup_last_wins(cleaned, ["order_id"]).drop("_src_file", "_src_seq", "_ordinal")
+    columns = [
+        *_trimmed("order_id"),
+        f"{multi_format_date_sql('order_date_raw')} AS order_date",
+        *_trimmed("product_id"),
+        f"{clean_int_sql('quantity_raw')} AS quantity",
+        *_trimmed("customer_id"),
+    ]
+    # P12: unparsable date drops the row; P9: bad/negative quantity too.
+    keep = f"{non_empty_sql('order_id')} AND order_date IS NOT NULL AND quantity >= 0"
+    return _clean(spark, path, TRANSACTIONS_SCHEMA, "order_id", columns, keep)
 
 
 def build_fact(

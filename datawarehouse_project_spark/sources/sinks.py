@@ -23,13 +23,16 @@ equivalents:
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .csv_ingest import dedup_last_wins
 
@@ -73,7 +76,6 @@ def upsert_parquet(
     the same batch changes nothing) — the property the reference's
     ON DUPLICATE KEY UPDATE provided and our streaming sink contract
     requires."""
-    cols = incoming.columns
     # Within-batch ordinal: monotonically_increasing_id over the incoming
     # frame — duplicates INSIDE one batch resolve deterministically by the
     # batch's own (partition, offset) order, the only row order a
@@ -81,17 +83,12 @@ def upsert_parquet(
     # which is what idempotence needs). Incumbent rows sit below every
     # incoming row (-1), so any incoming PK beats the stored one.
     ordered = incoming.withColumn("_ordinal", F.monotonically_increasing_id())
-    if os.path.exists(path):
-        incumbent = (
-            spark.read.parquet(path)
-            .select(cols)
-            .withColumn("_ordinal", F.lit(-1).cast("bigint"))
-        )
-        merged = dedup_last_wins(
-            incumbent.unionByName(ordered), pk, ordinal="_ordinal"
-        ).drop("_ordinal")
-    else:
-        merged = dedup_last_wins(ordered, pk, ordinal="_ordinal").drop("_ordinal")
+    incumbent = (
+        spark.read.parquet(path).select(incoming.columns)
+        if os.path.exists(path)
+        else None
+    )
+    merged = _merge_last_wins(incumbent, ordered, pk)
     # parquet cannot overwrite in place from its own scan: stage fully,
     # then swap via RENAMES (one write, not a second full copy).
     # Crash-recovery story: the incumbent is renamed ASIDE (path._old),
@@ -118,8 +115,6 @@ def _nullable_form(dt):
     comparison form for schema-evolution conflict checks: nullability
     differences are representationally compatible (union resolves them),
     only genuine TYPE differences should refuse an upsert."""
-    from pyspark.sql import types as T
-
     if isinstance(dt, T.StructType):
         return T.StructType(
             [
@@ -134,6 +129,61 @@ def _nullable_form(dt):
             _nullable_form(dt.keyType), _nullable_form(dt.valueType), True
         )
     return dt
+
+
+def _write_synced(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` and fsync it before returning."""
+    with open(path, "w") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+
+
+def _snapshot(spark: SparkSession, data_dir: str) -> DataFrame:
+    """Read one committed snapshot dir with the schema its commit stored
+    in ``_schema`` — no parquet footer read, so building the scan launches
+    no Spark job. A snapshot without ``_schema`` (committed before the
+    file existed) is read by parquet schema inference."""
+    try:
+        with open(os.path.join(data_dir, "_schema")) as fh:
+            schema = T.StructType.fromJson(json.load(fh))
+    except FileNotFoundError:
+        return spark.read.parquet(data_dir)
+    return spark.read.schema(schema).parquet(data_dir)
+
+
+def _drop_keys(df: DataFrame, keys: DataFrame, pk: list[str]) -> DataFrame:
+    """``df`` without the rows whose ``pk`` appears in ``keys``: a LEFT
+    ANTI join, null-safe so NULL-keyed rows match too."""
+    cond = None
+    for k in pk:
+        c = df[k].eqNullSafe(keys[k])
+        cond = c if cond is None else cond & c
+    return df.join(keys, cond, "left_anti")
+
+
+def _merge_last_wins(
+    incumbent: DataFrame | None, ordered: DataFrame, pk: list[str]
+) -> DataFrame:
+    """Last-write-wins merge of ``ordered`` over ``incumbent`` (None for an
+    empty table): one last-wins window over their union, where
+    ``ordered`` carries an ``_ordinal`` >= 0 and incumbent rows rank below
+    it at -1, so any incoming PK beats the stored one. NULL keys form one
+    group, as in GROUP BY. Columns come in ``ordered``'s order; the two
+    sides must hold the same column names.
+
+    The window's one exchange sits above the union, so AQE coalesces
+    incumbent and incoming rows as one shuffle. Pre-partitioning the
+    incumbent on ``pk`` to reuse a batch's own partitioning (the ingest
+    dedup's) was measured and left out: AQE coalesces union sides
+    separately and drops the union's partitioning unless both land on the
+    same boundaries, so past about 1 MB of incumbent it coalesces neither
+    and each commit writes ``spark.sql.shuffle.partitions`` files."""
+    if incumbent is not None:
+        ordered = ordered.unionByName(
+            incumbent.withColumn("_ordinal", F.lit(-1).cast("bigint"))
+        )
+    return dedup_last_wins(ordered, pk, ordinal="_ordinal").drop("_ordinal")
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -154,6 +204,10 @@ class VersionedParquetTable:
     Layout under ``root``::
 
         _versions/<uuid>/      immutable parquet snapshots (never mutated)
+            _schema            the snapshot's Spark schema (JSON), so reads
+                               skip parquet schema inference
+            _txn_<app_id>      writer ledger: last txn version applied by
+                               <app_id> (see ``upsert(txn=...)``)
         _commits/<n>           commit manifest: file CONTENT is the uuid
                                dir holding version n's data
         CURRENT                pointer file: highest committed version (a
@@ -163,8 +217,8 @@ class VersionedParquetTable:
 
     1. read the current version ``n`` and its data dir;
     2. merge ``incoming`` over that snapshot (last-write-wins on PK) and
-       write the result to a FRESH uuid dir — staging never touches live
-       data;
+       write the result, its schema and its ledger to a FRESH uuid dir —
+       staging never touches live data;
     3. claim version ``n+1`` by **exclusive hard-link** of a fully
        written+fsynced manifest into ``_commits/<n+1>`` — the POSIX CAS:
        exactly one writer can create that name, and because the manifest
@@ -239,19 +293,20 @@ class VersionedParquetTable:
         ``version`` (time travel). Every committed snapshot is immutable,
         so a long-running job reading version N is never affected by
         concurrent commits of N+1... — snapshot isolation without locks.
+        Lazy: the stored schema means no Spark job runs before an action.
 
         Raises ``ValueError`` for a version that was never committed;
         raises the underlying read error for a vacuumed one."""
         if version is None:
             path = self.current_path()
-            return None if path is None else spark.read.parquet(path)
+            return None if path is None else _snapshot(spark, path)
         path = self.version_path(version)
         if path is None:
             raise ValueError(
                 f"version {version} was never committed to {self.root} "
                 f"(history: {self.versions() or 'empty'})"
             )
-        return spark.read.parquet(path)
+        return _snapshot(spark, path)
 
     # -- idempotent-writer ledger -----------------------------------------
     def _read_txns(self, data_dir: str) -> dict[str, int]:
@@ -279,6 +334,53 @@ class VersionedParquetTable:
         return None if path is None else self._read_txns(path).get(app_id)
 
     # -- write side --------------------------------------------------------
+    def _commit(
+        self,
+        op: str,
+        derive: Callable[[str | None], DataFrame | None],
+        max_retries: int,
+        txn: tuple[str, int] | None = None,
+        expected_base: int | None = None,
+    ) -> int | None:
+        """The optimistic commit loop every writer shares: take the
+        current version, let ``derive(base_path)`` build the next
+        snapshot from its data dir (None for an empty table), stage it
+        with the advanced ledger and CAS-commit it; on a lost race,
+        re-derive over the winner's snapshot. Returns the committed
+        version, the current one when ``txn`` was already applied (a
+        replay no-op), or None when ``derive`` has nothing to write."""
+        for _ in range(max_retries):
+            base_version = self.current_version()
+            if expected_base is not None and base_version != expected_base:
+                raise ConcurrentWriteError(
+                    f"table {self.root} is at version {base_version}, "
+                    f"caller derived its merge from {expected_base} — "
+                    "re-read and recompute"
+                )
+            base_path = self.version_path(base_version)
+            ledger = {} if base_path is None else self._read_txns(base_path)
+            if txn is not None:
+                app_id, txn_version = txn
+                if not re.fullmatch(r"[A-Za-z0-9._-]+", app_id):
+                    raise ValueError(
+                        f"txn app_id {app_id!r} must match [A-Za-z0-9._-]+ "
+                        "(it becomes a ledger filename)"
+                    )
+                last = ledger.get(app_id)
+                if last is not None and txn_version <= last:
+                    return base_version  # already applied — idempotent no-op
+                ledger = {**ledger, app_id: txn_version}
+            merged = derive(base_path)
+            if merged is None:
+                return None
+            committed = self._try_commit(merged, ledger, base_version)
+            if committed is not None:
+                return committed
+        raise RuntimeError(
+            f"{op} lost the commit race {max_retries} times in a row — "
+            f"writer contention on {self.root} exceeds the retry budget"
+        )
+
     def upsert(
         self,
         spark: SparkSession,
@@ -321,111 +423,62 @@ class VersionedParquetTable:
                 f"incoming batch lacks primary-key column(s) {missing_pk} — "
                 "schema evolution applies to payload columns only"
             )
-        ordered = incoming.withColumn(
-            "_ordinal", F.monotonically_increasing_id()
-        )
-        for _ in range(max_retries):
-            base_version = self.current_version()
-            if expected_base is not None and base_version != expected_base:
-                raise ConcurrentWriteError(
-                    f"table {self.root} is at version {base_version}, "
-                    f"caller derived its merge from {expected_base} — "
-                    "re-read and recompute"
-                )
-            base_path = self.current_path()
-            ledger = {} if base_path is None else self._read_txns(base_path)
-            if txn is not None:
-                app_id, txn_version = txn
-                if not re.fullmatch(r"[A-Za-z0-9._-]+", app_id):
-                    raise ValueError(
-                        f"txn app_id {app_id!r} must match [A-Za-z0-9._-]+ "
-                        "(it becomes a ledger filename)"
-                    )
-                last = ledger.get(app_id)
-                if last is not None and txn_version <= last:
-                    return base_version  # already applied — idempotent no-op
-                ledger = {**ledger, app_id: txn_version}
-            if base_path is not None:
-                # additive schema evolution (Delta mergeSchema semantics):
-                # align BOTH sides to the union of columns — a column one
-                # side lacks becomes typed NULLs there. Same-name columns
-                # with different types are refused loudly: implicit casts
-                # silently corrupt a table, an explicit migration doesn't.
-                incumbent = spark.read.parquet(base_path)
-                inc_types = {f.name: f.dataType for f in incumbent.schema.fields}
-                new_types = {
-                    f.name: f.dataType
-                    for f in ordered.schema.fields
-                    if f.name != "_ordinal"
-                }
-                conflicts = sorted(
-                    n
-                    for n, t in new_types.items()
-                    if n in inc_types
-                    and _nullable_form(inc_types[n]) != _nullable_form(t)
-                )
-                if conflicts:
-                    raise ValueError(
-                        f"schema evolution type conflict on {conflicts}: "
-                        "incoming and incumbent disagree — migrate "
-                        "explicitly instead of upserting"
-                    )
-                all_cols = cols + [c for c in incumbent.columns if c not in cols]
-                inc_aligned = incumbent
-                ord_aligned = ordered
-                for n in all_cols:
-                    if n not in inc_types:
-                        inc_aligned = inc_aligned.withColumn(
-                            n, F.lit(None).cast(new_types[n])
-                        )
-                    if n not in new_types:
-                        ord_aligned = ord_aligned.withColumn(
-                            n, F.lit(None).cast(inc_types[n])
-                        )
-                inc_aligned = inc_aligned.select(*all_cols).withColumn(
-                    "_ordinal", F.lit(-1).cast("bigint")
-                )
-                ord_aligned = ord_aligned.select(*all_cols, "_ordinal")
-                merged = dedup_last_wins(
-                    inc_aligned.unionByName(ord_aligned), pk, ordinal="_ordinal"
-                ).drop("_ordinal")
-            else:
-                merged = dedup_last_wins(
-                    ordered, pk, ordinal="_ordinal"
-                ).drop("_ordinal")
+        ordered = incoming.withColumn("_ordinal", F.monotonically_increasing_id())
 
-            committed = self._try_commit(merged, ledger, base_version)
-            if committed is not None:
-                return committed
-        raise RuntimeError(
-            f"upsert lost the commit race {max_retries} times in a row — "
-            "writer contention on this table exceeds the optimistic "
-            "protocol's retry budget"
-        )
+        def merge(base_path: str | None) -> DataFrame:
+            if base_path is None:
+                return _merge_last_wins(None, ordered, pk)
+            # additive schema evolution (Delta mergeSchema semantics):
+            # align BOTH sides to the union of columns — a column one
+            # side lacks becomes typed NULLs there. Same-name columns
+            # with different types are refused loudly: implicit casts
+            # silently corrupt a table, an explicit migration doesn't.
+            incumbent = _snapshot(spark, base_path)
+            inc_types = {f.name: f.dataType for f in incumbent.schema.fields}
+            new_types = {f.name: f.dataType for f in incoming.schema.fields}
+            conflicts = sorted(
+                n
+                for n, t in new_types.items()
+                if n in inc_types
+                and _nullable_form(inc_types[n]) != _nullable_form(t)
+            )
+            if conflicts:
+                raise ValueError(
+                    f"schema evolution type conflict on {conflicts}: "
+                    "incoming and incumbent disagree — migrate "
+                    "explicitly instead of upserting"
+                )
+
+            def padded(df: DataFrame, lacks: dict) -> DataFrame:
+                nulls = {n: F.lit(None).cast(t) for n, t in lacks.items()}
+                return df.withColumns(nulls) if nulls else df
+
+            return _merge_last_wins(
+                padded(incumbent, {n: t for n, t in new_types.items() if n not in inc_types}),
+                padded(ordered, {n: t for n, t in inc_types.items() if n not in new_types}),
+                pk,
+            )
+
+        return self._commit("upsert", merge, max_retries, txn, expected_base)
 
     def _try_commit(
         self, merged: DataFrame, ledger: dict[str, int], base_version: int
     ) -> int | None:
-        """Stage ``merged`` + the ledger and attempt the CAS commit of
-        ``base_version + 1``. Returns the new version, or None when the
-        race was lost (the staged data is cleaned up; caller re-derives
-        over the winner's snapshot and retries)."""
+        """Stage ``merged``, its schema and the ledger, and attempt the
+        CAS commit of ``base_version + 1``. Returns the new version, or
+        None when the race was lost (the staged data is cleaned up;
+        caller re-derives over the winner's snapshot and retries)."""
         data_dir = uuid.uuid4().hex
         staged = os.path.join(self._versions, data_dir)
         merged.write.mode("overwrite").parquet(staged)
+        _write_synced(os.path.join(staged, "_schema"), merged.schema.json())
         for app_id, v in ledger.items():
-            with open(os.path.join(staged, f"_txn_{app_id}"), "w") as fh:
-                fh.write(str(v))
-                fh.flush()
-                os.fsync(fh.fileno())
+            _write_synced(os.path.join(staged, f"_txn_{app_id}"), str(v))
 
         manifest_tmp = os.path.join(
             self._commits, f".tmp-{uuid.uuid4().hex}"
         )
-        with open(manifest_tmp, "w") as fh:
-            fh.write(data_dir)
-            fh.flush()
-            os.fsync(fh.fileno())
+        _write_synced(manifest_tmp, data_dir)
         commit = os.path.join(self._commits, str(base_version + 1))
         try:
             os.link(manifest_tmp, commit)  # the CAS
@@ -466,12 +519,10 @@ class VersionedParquetTable:
         the compacted files' row groups. Costs the one range exchange +
         local sort a clustered write always pays; plain compaction stays
         a shuffle-free coalesce."""
-        for _ in range(max_retries):
-            base_version = self.current_version()
-            base_path = self.current_path()
+
+        def rewrite(base_path: str | None) -> DataFrame | None:
             if base_path is None:
                 return None
-            ledger = self._read_txns(base_path)
             if target_files is not None:
                 n_out = target_files
             else:
@@ -481,29 +532,23 @@ class VersionedParquetTable:
                     if e.name.endswith(".parquet")
                 )
                 n_out = max(1, -(-total // target_bytes))
-            df = spark.read.parquet(base_path)
+            df = _snapshot(spark, base_path)
             if not cluster_keys:
-                merged = df.coalesce(n_out)
-            elif len(cluster_keys) == 1:
-                merged = df.repartitionByRange(
+                return df.coalesce(n_out)
+            if len(cluster_keys) == 1:
+                return df.repartitionByRange(
                     n_out, cluster_keys[0]
                 ).sortWithinPartitions(cluster_keys[0])
-            else:
-                from .clustered import zorder_column
+            from .clustered import zorder_column
 
-                zdf, zcol = zorder_column(df, cluster_keys, method="depth")
-                merged = (
-                    zdf.repartitionByRange(n_out, zcol)
-                    .sortWithinPartitions(zcol)
-                    .drop(zcol)
-                )
-            committed = self._try_commit(merged, ledger, base_version)
-            if committed is not None:
-                return committed
-        raise RuntimeError(
-            f"compact lost the commit race {max_retries} times in a row — "
-            "run it in a quieter window or raise max_retries"
-        )
+            zdf, zcol = zorder_column(df, cluster_keys, method="depth")
+            return (
+                zdf.repartitionByRange(n_out, zcol)
+                .sortWithinPartitions(zcol)
+                .drop(zcol)
+            )
+
+        return self._commit("compact", rewrite, max_retries)
 
     def delete(
         self,
@@ -521,38 +566,15 @@ class VersionedParquetTable:
         rows. Completes the table's CRUD surface (the reference's MySQL
         tables had DELETE for free; a snapshot store must write it)."""
         key_frame = keys.select(*pk).distinct()
-        for _ in range(max_retries):
-            base_version = self.current_version()
-            base_path = self.current_path()
-            ledger = {} if base_path is None else self._read_txns(base_path)
-            if txn is not None:
-                app_id, txn_version = txn
-                if not re.fullmatch(r"[A-Za-z0-9._-]+", app_id):
-                    raise ValueError(
-                        f"txn app_id {app_id!r} must match [A-Za-z0-9._-]+ "
-                        "(it becomes a ledger filename)"
-                    )
-                last = ledger.get(app_id)
-                if last is not None and txn_version <= last:
-                    return base_version  # already applied
-                ledger = {**ledger, app_id: txn_version}
+
+        def remaining(base_path: str | None) -> DataFrame:
             if base_path is None:
                 raise ValueError(
                     f"delete on empty table {self.root}: nothing committed yet"
                 )
-            incumbent = spark.read.parquet(base_path)
-            cond = None
-            for k in pk:
-                c = incumbent[k].eqNullSafe(key_frame[k])
-                cond = c if cond is None else cond & c
-            remaining = incumbent.join(key_frame, cond, "left_anti")
-            committed = self._try_commit(remaining, ledger, base_version)
-            if committed is not None:
-                return committed
-        raise RuntimeError(
-            f"delete lost the commit race {max_retries} times in a row — "
-            "writer contention on this table exceeds the retry budget"
-        )
+            return _drop_keys(_snapshot(spark, base_path), key_frame, pk)
+
+        return self._commit("delete", remaining, max_retries, txn)
 
     def replace_by_key(
         self,
@@ -578,44 +600,20 @@ class VersionedParquetTable:
         Same txn-ledger idempotence and commit/retry protocol as the
         rest of the CRUD surface."""
         key_frame = (keys if keys is not None else incoming).select(*pk).distinct()
-        for _ in range(max_retries):
-            base_version = self.current_version()
-            base_path = self.current_path()
-            ledger = {} if base_path is None else self._read_txns(base_path)
-            if txn is not None:
-                app_id, txn_version = txn
-                if not re.fullmatch(r"[A-Za-z0-9._-]+", app_id):
-                    raise ValueError(
-                        f"txn app_id {app_id!r} must match [A-Za-z0-9._-]+ "
-                        "(it becomes a ledger filename)"
-                    )
-                last = ledger.get(app_id)
-                if last is not None and txn_version <= last:
-                    return base_version  # already applied
-                ledger = {**ledger, app_id: txn_version}
+
+        def replaced(base_path: str | None) -> DataFrame:
             if base_path is None:
-                merged = incoming
-            else:
-                incumbent = spark.read.parquet(base_path)
-                if set(incumbent.columns) != set(incoming.columns):
-                    raise ValueError(
-                        "replace_by_key requires identical columns: "
-                        f"table has {sorted(incumbent.columns)}, batch has "
-                        f"{sorted(incoming.columns)} — migrate explicitly"
-                    )
-                cond = None
-                for k in pk:
-                    c = incumbent[k].eqNullSafe(key_frame[k])
-                    cond = c if cond is None else cond & c
-                remaining = incumbent.join(key_frame, cond, "left_anti")
-                merged = remaining.unionByName(incoming)
-            committed = self._try_commit(merged, ledger, base_version)
-            if committed is not None:
-                return committed
-        raise RuntimeError(
-            f"replace_by_key lost the commit race {max_retries} times in a "
-            "row — writer contention on this table exceeds the retry budget"
-        )
+                return incoming
+            incumbent = _snapshot(spark, base_path)
+            if set(incumbent.columns) != set(incoming.columns):
+                raise ValueError(
+                    "replace_by_key requires identical columns: "
+                    f"table has {sorted(incumbent.columns)}, batch has "
+                    f"{sorted(incoming.columns)} — migrate explicitly"
+                )
+            return _drop_keys(incumbent, key_frame, pk).unionByName(incoming)
+
+        return self._commit("replace_by_key", replaced, max_retries, txn)
 
     def _advance_current(self, version: int) -> None:
         """Monotonic best-effort pointer update (atomic rename; readers
@@ -628,10 +626,7 @@ class VersionedParquetTable:
         except (FileNotFoundError, ValueError):
             pass
         tmp = os.path.join(self.root, f".CURRENT-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-            fh.flush()
-            os.fsync(fh.fileno())
+        _write_synced(tmp, str(version))
         os.rename(tmp, current)
 
     def vacuum(self, keep: int = 2, orphan_grace_sec: float = 3600.0) -> int:
@@ -803,51 +798,16 @@ def apply_changes(
         has_deletes = bool(deletes.limit(1).count())
         if not has_upserts and not has_deletes:
             return replica.current_version()  # empty feed: no new version
-        ordered = upserts.withColumn(
-            "_ordinal", F.monotonically_increasing_id()
-        )
-        for _ in range(max_retries):
-            base_version = replica.current_version()
-            base_path = replica.current_path()
-            ledger = (
-                {} if base_path is None else replica._read_txns(base_path)
-            )
-            if txn is not None:
-                app_id, txn_version = txn
-                if not re.fullmatch(r"[A-Za-z0-9._-]+", app_id):
-                    raise ValueError(
-                        f"txn app_id {app_id!r} must match [A-Za-z0-9._-]+ "
-                        "(it becomes a ledger filename)"
-                    )
-                last = ledger.get(app_id)
-                if last is not None and txn_version <= last:
-                    return base_version  # already applied — replay no-op
-                ledger = {**ledger, app_id: txn_version}
-            if base_path is not None:
-                incumbent = spark.read.parquet(base_path)
-                kept = incumbent
-                if has_deletes:
-                    cond = None
-                    for k in pk:
-                        c = incumbent[k].eqNullSafe(deletes[k])
-                        cond = c if cond is None else cond & c
-                    kept = incumbent.join(deletes, cond, "left_anti")
-                kept = kept.select(*upserts.columns).withColumn(
-                    "_ordinal", F.lit(-1).cast("bigint")
-                )
-                merged = dedup_last_wins(
-                    kept.unionByName(ordered), pk, ordinal="_ordinal"
-                ).drop("_ordinal")
-            else:
-                merged = dedup_last_wins(
-                    ordered, pk, ordinal="_ordinal"
-                ).drop("_ordinal")
-            committed = replica._try_commit(merged, ledger, base_version)
-            if committed is not None:
-                return committed
-        raise RuntimeError(
-            f"apply_changes lost the commit race {max_retries} times in a "
-            "row — writer contention on this replica exceeds the retry budget"
-        )
+        ordered = upserts.withColumn("_ordinal", F.monotonically_increasing_id())
+
+        def merge(base_path: str | None) -> DataFrame:
+            if base_path is None:
+                return _merge_last_wins(None, ordered, pk)
+            kept = _snapshot(spark, base_path)
+            if has_deletes:
+                kept = _drop_keys(kept, deletes, pk)
+            return _merge_last_wins(kept.select(*upserts.columns), ordered, pk)
+
+        return replica._commit("apply_changes", merge, max_retries, txn)
     finally:
         release_checkpoint(changes)

@@ -4,7 +4,11 @@
 Usage: python scripts/dump_plans.py <tag> <suffix> [name ...]
   tag     — subdirectory under plans/ (e.g. r21)
   suffix  — "before" or "after"
-  names   — query names; default = the headline set
+  names   — query names; default = the headline set. The name "etl_feed"
+            dumps the ETL feed's commit instead: csv_ingest.read_transactions
+            -> meshjoin.enrich_batch -> VersionedParquetTable.upsert of a
+            10k-row dirty feed (perfbench's generator, seed 601) over the
+            snapshot of one earlier feed — the merged frame the commit writes.
 
 The judge cannot run Spark; these files are the plan-shape evidence for
 OPTIMIZATION_r<N>.md claims (Exchange counts, join strategies, PushedFilters,
@@ -15,19 +19,60 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from datawarehouse_project_spark.catalog import all_queries, headline_queries
 from datawarehouse_project_spark.io import sf_from_dir
 from datawarehouse_project_spark.session import get_spark
+
+ETL_FEED = "etl_feed"
+
+
+def etl_feed(spark, work: str):
+    """The merged frame the second feed's upsert commits."""
+    from pyspark.sql import functions as F
+
+    sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+    import datagen
+
+    from datawarehouse_project_spark.sources import csv_ingest, sinks
+    from datawarehouse_project_spark.streaming import meshjoin
+
+    dims = datagen.DirtyDims(os.path.join(work, "dims"), 601)
+    feeds = datagen.DirtyFeeds(dims, os.path.join(work, "feeds"), 601, 0, 10_000)
+    enrich_with = {
+        "customer": (csv_ingest.read_customers(spark, dims.customers_path), "customer_id"),
+        "product": (csv_ingest.read_products(spark, dims.products_path), "product_id"),
+    }
+    table = sinks.VersionedParquetTable(os.path.join(work, "fact"))
+    merged = []
+    commit = sinks.VersionedParquetTable._try_commit
+
+    def capture(self, df, ledger, base_version):
+        merged.append(df)
+        return commit(self, df, ledger, base_version)
+
+    sinks.VersionedParquetTable._try_commit = capture
+    try:
+        for k in range(2):
+            txns = csv_ingest.read_transactions(spark, feeds.write_feed())
+            enriched = meshjoin.enrich_batch(txns, enrich_with).withColumn(
+                "sale", (F.col("quantity") * F.col("product_price")).cast("decimal(10,2)")
+            )
+            table.upsert(spark, enriched, pk=["order_id"], txn=("dump", k))
+    finally:
+        sinks.VersionedParquetTable._try_commit = commit
+    return merged[-1]
 
 
 def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
     sf = sf_from_dir(sf_dir)
@@ -36,17 +81,21 @@ def main() -> None:
 
     builds = all_queries() if names else headline_queries()
     if names:
-        builds = {n: builds[n] for n in names}
+        builds = {n: builds[n] for n in names if n != ETL_FEED}
+    work = tempfile.TemporaryDirectory(prefix="dump-plans-")
+    if ETL_FEED in names:
+        builds[ETL_FEED] = lambda spark, _: etl_feed(spark, work.name)
 
-    for name, build in sorted(builds.items()):
-        df = build(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-        with open(path, "w") as fh:
-            fh.write(plan)
-        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
+    with work:
+        for name, build in sorted(builds.items()):
+            df = build(spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+            path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+            with open(path, "w") as fh:
+                fh.write(plan)
+            print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
 
 
 if __name__ == "__main__":

@@ -50,3 +50,36 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_correct_dir():
     return SF_CORRECT
+
+
+@pytest.fixture()
+def feed_dir(tmp_path):
+    """Dirty CSV inputs for the ETL feed path (read_transactions ->
+    enrich_batch -> upsert): customer and product dims, and two
+    transaction feeds whose order ids repeat within each feed (last wins)
+    and overlap across them (upserts over the incumbent), with dangling
+    keys and rows the cleaning drops."""
+    (tmp_path / "customers.csv").write_text(
+        "customer_id,customer_name,gender\n"
+        + "".join(f"C{i},Name {i},{'MF'[i % 2]}\n" for i in range(20))
+    )
+    (tmp_path / "products.csv").write_text(
+        "productID,productName,productPrice,supplierID,supplierName,storeID,storeName\n"
+        + "".join(
+            f"P{i},Item {i},{i + 1}.25$,S{i % 3},Supplier {i % 3},T{i % 4},Store {i % 4}\n"
+            for i in range(10)
+        )
+    )
+    for n in (1, 2):
+        rows = []
+        for i in range(300):
+            qty = "-1" if i % 37 == 0 else str(i % 5)
+            day = "not-a-date" if i % 41 == 0 else f"2019-04-{1 + i % 28:02d}"
+            rows.append(
+                f"O{(i * 7 + n * 100) % 250},{day},P{i % 12},{qty},C{i % 22},{i}\n"
+            )
+        (tmp_path / f"transactions_{n}.csv").write_text(
+            "Order ID,Order Date,ProductID,Quantity Ordered,customer_id,time_id\n"
+            + "".join(rows)
+        )
+    return str(tmp_path)

@@ -16,6 +16,7 @@ from datawarehouse_project_spark.sources.csv_ingest import (
     read_products,
     read_transactions,
     _read_csv,
+    CUSTOMERS_SCHEMA,
     TRANSACTIONS_SCHEMA,
 )
 
@@ -191,3 +192,23 @@ def test_upsert_replay_order_is_natural_not_lexicographic(spark, tmp_path):
     out = read_customers(spark, str(tmp_path)).collect()
     assert len(out) == 1
     assert out[0].customer_name == "from_feed_10"
+
+
+def test_last_wins_follows_file_order_across_splits(spark, tmp_path):
+    """A file larger than the split size is read as several splits, which
+    Spark packs into partitions by size; last-wins must still follow the
+    rows' order in the file, not the split packing."""
+    hdr = "customer_id,customer_name,gender\n"
+    (tmp_path / "customers.csv").write_text(
+        hdr + "".join(f"{i % 40},{i:05d},F\n" for i in range(4000))
+    )
+    path = str(tmp_path / "customers.csv")
+    conf = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "4096")
+        assert _read_csv(spark, path, CUSTOMERS_SCHEMA).rdd.getNumPartitions() > 10
+        got = {r.customer_id: r.customer_name for r in read_customers(spark, path).collect()}
+    finally:
+        spark.conf.set(conf, prev)
+    assert got == {str(k): f"{3960 + k:05d}" for k in range(40)}

@@ -5,6 +5,7 @@ Spark versions."""
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -433,3 +434,70 @@ def test_sketch_rollup_partial_aggregates_registers(spark, sf_dir):
     p = plan_of(all_queries()["events_daily_sketch_rollup"](spark, sf_dir))
     assert p.count("ObjectHashAggregate") >= 2, p
     assert len(re.findall(r"Exchange hashpartitioning", p)) == 1
+
+
+def test_feed_upsert_shape_and_jobless_snapshot_reads(spark, feed_dir, tmp_path, monkeypatch):
+    """The feed read_transactions -> enrich_batch -> upsert over a stored
+    snapshot: the incoming side keeps the ingest dedup's single
+    hashpartitioning(order_id) exchange, the incumbent side is a bare
+    parquet scan, and the merge's one exchange sits above the Union. The
+    commit stored its schema, so neither the upsert's planning nor a
+    snapshot read runs a job before an action."""
+    from pyspark.sql import functions as F
+
+    from datawarehouse_project_spark.sources.csv_ingest import (
+        read_customers,
+        read_products,
+        read_transactions,
+    )
+    from datawarehouse_project_spark.sources.sinks import VersionedParquetTable
+    from datawarehouse_project_spark.streaming.meshjoin import enrich_batch
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    dims = {
+        "customer": (read_customers(spark, f"{feed_dir}/customers.csv"), "customer_id"),
+        "product": (read_products(spark, f"{feed_dir}/products.csv"), "product_id"),
+    }
+    table = VersionedParquetTable(str(tmp_path / "fact"))
+    merges = []
+    commit = VersionedParquetTable._try_commit
+
+    def capture(self, merged, ledger, base_version):
+        merges.append((plan_of(merged), tracker.getJobIdsForGroup(f"feed-{len(merges)}")))
+        return commit(self, merged, ledger, base_version)
+
+    monkeypatch.setattr(VersionedParquetTable, "_try_commit", capture)
+    try:
+        for n in (1, 2):
+            sc.setJobGroup(f"feed-{n - 1}", "feed upsert up to its write")
+            txns = read_transactions(spark, f"{feed_dir}/transactions_{n}.csv")
+            enriched = enrich_batch(txns, dims).withColumn(
+                "sale", (F.col("quantity") * F.col("product_price")).cast("decimal(10,2)")
+            )
+            table.upsert(spark, enriched, pk=["order_id"], txn=("feed", n))
+        sc.setJobGroup("vpt-read", "snapshot read with a stored schema")
+        table.read(spark)
+        read_jobs = tracker.getJobIdsForGroup("vpt-read")
+        # control: without the stored schema, parquet inference runs a job
+        sc.setJobGroup("vpt-read-inferred", "snapshot read by inference")
+        os.remove(os.path.join(table.current_path(), "_schema"))
+        table.read(spark)
+        inferred_jobs = tracker.getJobIdsForGroup("vpt-read-inferred")
+    finally:
+        sc._jsc.clearJobGroup()
+    plan, jobs_before_write = merges[-1]
+    assert jobs_before_write == [] and read_jobs == [] and inferred_jobs != []
+
+    lines = plan.splitlines()
+    u = next(i for i, line in enumerate(lines) if line.lstrip(" :+-").startswith("Union"))
+    col = lines[u].index("Union")
+    second = next(i for i in range(u + 1, len(lines)) if lines[i][col : col + 2] == "+-")
+    above = "\n".join(lines[:u])
+    incoming, incumbent = sorted(
+        ["\n".join(lines[u + 1 : second]), "\n".join(lines[second:])],
+        key=lambda side: "FileScan csv" not in side,
+    )
+    assert above.count("Exchange") == 1 and "Exchange hashpartitioning(order_id" in above
+    assert "FileScan parquet" in incumbent and "Exchange" not in incumbent
+    assert len(re.findall(r"Exchange hashpartitioning\(order_id#\d+, \d+\)", incoming)) == 1
