@@ -257,12 +257,19 @@ def sample_lang_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("keep_permille"),
-        # lazy localCheckpoint (the q08 pattern, r22): `rates` feeds BOTH
-        # the kept-filter broadcast and the final census join — without
-        # it each consumer re-runs the full lang-counting pass (3
-        # documents scans per run; 2 after). Language-cardinality frame:
-        # seconds to rebuild, so the non-reliable-checkpoint trade (and
-        # the freshness/accrual caveats documented at q08) apply safely.
+        # lazy localCheckpoint (r22): `rates` feeds BOTH the kept-filter
+        # broadcast and the final census join — without it each consumer
+        # re-runs the full lang-counting pass (3 documents scans per run;
+        # 2 after). Caveats: (1) FRESHNESS — the checkpoint materializes
+        # once per BUILT frame, so a caller that holds this frame across
+        # a source rewrite re-reads stale rates; rebuild via the catalog.
+        # (2) RELIABILITY — the blocks have no lineage: executor loss
+        # between materialization and the census join's read fails the
+        # query instead of recomputing. (3) ACCRUAL — each build
+        # checkpoints a fresh RDD, released only when the JVM Dataset is
+        # GC'd (io.release_checkpoint releases eagerly). All three are
+        # acceptable for a language-cardinality frame that rebuilds in
+        # seconds.
     ).localCheckpoint(eager=False)
     h = portable_hash(F.concat(F.lit(_TEMP_SALT), F.col("doc_id").cast("string")))
     kept = (

@@ -502,7 +502,8 @@ def q07g_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Q8 — H1/H2 half-yearly revenue & volume joined to yearly totals
-# (A5 half bucket + A1 + A2, then J5 agg-to-agg join on a non-key).
+# (A5 half bucket + A1 + A2; the reference's J5 agg-to-agg join on a
+# non-key becomes a window over the half-year aggregate).
 # Reference: olap_queries.sql:140-169.
 @register(
     "q08_halfyearly_vs_yearly",
@@ -531,63 +532,37 @@ FROM half hs JOIN yearly ys ON hs.product_name = ys.product_name
 """,
 )
 def q08_halfyearly_vs_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ONE fact pass (r21, guide §1.2 "don't compute things twice"): the
-    # reference shape aggregates the fact in two CTEs and joins them —
-    # Spark shares no subplans, so the enriched fact (scan + 4 joins)
-    # executed TWICE per run. The yearly totals are exactly the re-sum
-    # of the half-year partials (every fact row lands in exactly one
-    # half; decimal sums re-aggregate losslessly), so derive `yearly`
-    # FROM the half aggregate and keep the reference's agg⨝agg join
-    # (J5) over the two frames. The half aggregate is product-cardinality
-    # sized — materialize it once (the lift_rules/eval-rows pattern) so
-    # the join's two sides read one execution instead of re-running the
-    # fact agg per branch. Values are bit-identical to the two-pass
-    # form (equality re-proven against the unchanged oracle).
-    #
-    # localCheckpoint caveats (ADVICE r21): (1) FRESHNESS — the
-    # checkpoint materializes once per BUILT frame and is reused by
-    # every later execution of that same frame, so a caller that holds a
-    # q08 DataFrame across a source rewrite re-reads the stale halves;
-    # rebuild via the catalog (the fact memo's mtime guard then
-    # re-derives everything) after changing sources. (2) RELIABILITY —
-    # localCheckpoint stores partitions on executors with no lineage to
-    # recompute them: on a real cluster, executor loss / dynamic-
-    # allocation decommission between materialization and the join's
-    # second read FAILS the query where the two-pass form would have
-    # recomputed; acceptable here because the frame is product-
-    # cardinality (seconds to rebuild by re-running q08) — the same
-    # bounded-frame trade retrieval_eval.py documents. (3) ACCRUAL —
-    # each build checkpoints a fresh RDD that is unpersisted only when
-    # the JVM Dataset is GC'd (ContextCleaner); repeated builds in a
-    # long session accumulate small executor-storage blocks in the
-    # interim (io.release_checkpoint is the eager-release hook for
-    # loops that care).
-    half_dec = fact(spark, sf_dir).groupBy(
-        "product_name",
-        F.when(F.month("order_date").between(1, 6), "H1")
-        .otherwise("H2")
-        .alias("sales_half"),
-    ).agg(
-        F.sum("sale").alias("_rev"),
-        F.sum("quantity").alias("_qty"),
-    ).localCheckpoint(eager=False)
-    half = half_dec.select(
+    # ONE fact pass, no build-time jobs: the reference joins the half-year
+    # CTE to a yearly CTE over the same fact, and Spark shares no
+    # subplans, so that shape runs the enriched fact (scan + 4 joins)
+    # twice. The yearly totals are exactly the re-sum of the half-year
+    # partials (every fact row lands in one half; decimal sums
+    # re-aggregate losslessly), so they are window sums over the
+    # product's halves — the q09 pattern: one pipeline, one exchange on
+    # product_name. The inner join dropped NULL product names; the
+    # filter keeps that. Values are bit-identical to the join form.
+    half = (
+        fact(spark, sf_dir)
+        .filter(F.col("product_name").isNotNull())
+        .groupBy(
+            "product_name",
+            F.when(F.month("order_date").between(1, 6), "H1")
+            .otherwise("H2")
+            .alias("sales_half"),
+        )
+        .agg(
+            F.sum("sale").alias("_rev"),
+            F.sum("quantity").alias("_qty"),
+        )
+    )
+    w = Window.partitionBy("product_name")
+    return half.select(
         "product_name",
         "sales_half",
         F.col("_rev").cast("double").alias("total_revenue"),
         F.col("_qty").cast("double").alias("total_quantity"),
-    )
-    yearly = half_dec.groupBy("product_name").agg(
-        F.sum("_rev").cast("double").alias("total_yearly_revenue"),
-        F.sum("_qty").cast("double").alias("total_yearly_quantity"),
-    )
-    return half.join(yearly, "product_name").select(
-        "product_name",
-        "sales_half",
-        "total_revenue",
-        "total_quantity",
-        "total_yearly_revenue",
-        "total_yearly_quantity",
+        F.sum("_rev").over(w).cast("double").alias("total_yearly_revenue"),
+        F.sum("_qty").over(w).cast("double").alias("total_yearly_quantity"),
     )
 
 

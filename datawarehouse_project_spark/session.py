@@ -69,11 +69,27 @@ _RUNTIME_CONFS = {
     # enriches error messages with Python call sites — turn it off in the
     # engine; re-enable interactively when debugging a broken query.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Whole-stage codegen names each generated class after its codegen
+    # stage id (GeneratedIteratorForCodegenStage<N>), and the class source
+    # is the codegen cache's key. Under AQE the ids are handed out in the
+    # order query stages are created, which follows which concurrent
+    # shuffle stages finish first — so rows with parallel branches (e.g.
+    # retrieval_rrf_fusion, lexical_bm25_topk) got different ids, hence
+    # different source, on some builds and recompiled identical code. One
+    # fixed class name makes equal plans hit the cache; explain output
+    # keeps its *(N) stage ids. Naming only, results are unchanged.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
 def prepare(spark: SparkSession) -> SparkSession:
-    """Pin runtime confs on a session we did not create (driver contract)."""
+    """Pin runtime confs on a session we did not create (driver contract).
+
+    Static confs cannot be set on a live session, so a driver-provided
+    session keeps Spark's 100-entry codegen class cache
+    (``spark.sql.codegen.cache.maxEntries``) and recompiles interleaved
+    queries; only sessions built by :func:`get_spark` get the sized one.
+    """
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -105,6 +121,20 @@ def get_spark(
         # (bucketed) tables out of the repo working dir
         .config("spark.sql.warehouse.dir", "/tmp/dwspark-warehouse")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # static conf — the JVM-wide cache of compiled codegen classes
+        # (whole-stage iterators, projections, predicates, orderings).
+        # Spark's default of 100 entries is far below this engine's
+        # working set, measured at sf0.01 on 4 cores: the 8 perfbench
+        # query_mix rows compile ~190 entries, one cold sweep of the 50
+        # driver-facing rows ~850. At 100 the LRU evicts each entry before
+        # its query comes round again, so every interleaved warm request
+        # recompiles in Janino (~175 compiles per query_mix pass, ~1,190
+        # per warm catalog sweep). 4096 is ~5x the catalog sweep; an
+        # entry is ~6.5 KB of bytecode on average, so a full cache costs
+        # ~27 MB. Fixed, not an option: the size follows the catalog, not
+        # the caller, and a static conf cannot change once the session
+        # exists (see prepare()).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

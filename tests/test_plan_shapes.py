@@ -12,7 +12,7 @@ import pytest
 
 from datawarehouse_project_spark.catalog import all_queries, queries
 from datawarehouse_project_spark.operators.dedup import signature_frame
-from datawarehouse_project_spark.plans.star import fact
+from datawarehouse_project_spark.plans.star import FACT_SOURCE_TABLES, fact
 
 
 def plan_of(df) -> str:
@@ -45,6 +45,27 @@ def test_q01_scan_prunes_columns_and_pushes_filter(spark, sf_dir):
     assert len(m.group(1).split(",")) <= 4
     # the year filter reaches the orders parquet scan as a date range
     assert re.search(r"PushedFilters: \[[^\]]*GreaterThanOrEqual\(o_orderdate", p)
+
+
+def test_q08_builds_without_jobs_and_scans_each_source_once(spark, sf_dir):
+    """q08's yearly totals are window sums over its half-year aggregate,
+    not a join of that aggregate with a checkpointed copy of itself:
+    building the frame launches no Spark job (the checkpoint form ran the
+    whole fact join at build time) and the plan reads each fact source
+    exactly once."""
+    build = queries()["q08_halfyearly_vs_yearly"]
+    build(spark, sf_dir)  # first touch resolves the table memos
+    sc = spark.sparkContext
+    sc.setJobGroup("q08-build", "q08 build")
+    try:
+        df = build(spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup("q08-build") == []
+    p = plan_of(df)
+    scans = re.findall(r"FileScan parquet .*?/(\w+)\.parquet[,\]]", p)
+    assert sorted(scans) == sorted(FACT_SOURCE_TABLES)
+    assert "Scan ExistingRDD" not in p
 
 
 def test_signature_frame_has_no_shuffle(spark, sf_dir):
@@ -267,7 +288,7 @@ def test_funnel_is_one_pass_chained_windows(spark, sf_dir):
     fmt = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    assert fmt.count("Scan parquet") // 2 == 1  # tree + detail section
+    assert fmt.count("Scan parquet") == 2  # one scan: tree + detail section
     assert "In(event_type" in fmt
 
 
