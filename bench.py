@@ -76,7 +76,8 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from datawarehouse_project_spark.catalog import headline_queries  # noqa: E402
 from datawarehouse_project_spark.io import (  # noqa: E402
-    pin_table,
+    pin,
+    refresh_table,
     sf_from_dir,
     spread,
     table,
@@ -85,7 +86,7 @@ from datawarehouse_project_spark.operators.dedup import (  # noqa: E402
     doc_shingle_frame,
     signature_frame,
 )
-from datawarehouse_project_spark.plans.star import fact, pin_fact  # noqa: E402
+from datawarehouse_project_spark.plans.star import fact  # noqa: E402
 from datawarehouse_project_spark.session import get_spark  # noqa: E402
 
 N_WARM_RUNS = 3
@@ -290,7 +291,7 @@ def main() -> None:
     # defaultParallelism (core-count-adaptive: the driver's lower-core
     # re-run spreads to ITS core count; at real scale scans split
     # naturally and a warehouse materializes hot tables well-partitioned)
-    # before caching, and pin the spread handles into the engine memos so
+    # before caching, and pin the spread handles into the session state so
     # every query's fact()/table() plan IS the cached plan (Spark cache
     # substitution matches by logical plan — caching a repartitioned copy
     # without re-pointing the handle would never hit). The repartition
@@ -318,8 +319,8 @@ def main() -> None:
     for fr in shared:
         fr.cache()
         fr.count()
-    pin_fact(spark, sf_dir, shared[0])
-    pin_table(spark, sf_dir, "events", shared[3])
+    pin(spark, sf_dir, "fact", shared[0])
+    pin(spark, sf_dir, "events", shared[3])
     cache_build = round(time.perf_counter() - t0, 3)
 
     import statistics
@@ -338,13 +339,12 @@ def main() -> None:
         # only equals the median for odd N_WARM_RUNS (ADVICE r19 #3).
         warm_median[name] = round(statistics.median(reps), 3)
 
-    # Warm sweep done: clear the bench's pinned handles (ADVICE r21 —
-    # pin_fact/pin_table survive refresh_table by contract, so the bench
-    # drops them explicitly the moment the last warm measurement is in;
-    # nothing below reads the tables through Spark, but a future edit
-    # that does must not silently see the spread/cached layout).
-    getattr(spark, "_dw_fact_cache", {}).pop(sf_dir, None)
-    getattr(spark, "_dw_table_cache", {}).pop((sf_dir, "events"), None)
+    # Warm sweep done: drop the bench's pinned handles (and the rest of
+    # the session state under sf_dir) the moment the last warm
+    # measurement is in; nothing below reads the tables through Spark,
+    # but a future edit that does must not silently see the
+    # spread/cached layout.
+    refresh_table(spark, sf_dir)
 
     # same-session DuckDB control (r18, VERDICT r17 #2) — runs after
     # every timed Spark sweep so warm/cold are untouched; see docstring.

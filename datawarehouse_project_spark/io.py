@@ -8,6 +8,9 @@ Catalyst keeps predicate pushdown / column pruning / partition pruning.
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,68 +48,15 @@ def sf_from_dir(sf_dir: str) -> float:
         return 0.0
 
 
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one star-schema table. Never collects; never caches data.
-
-    The resolved leaf ``DataFrame`` HANDLE is memoized per
-    ``(session, sf_dir, name)`` — this is a catalog, not a data cache: a
-    warehouse resolves a table (open footers, infer schema) once per
-    session, not once per query, and ``spark.read.parquet`` costs a
-    ~60-70 ms py4j/footer round-trip per call that repeated resolution
-    would pay 40+ times across the query catalog. The memo holds the
-    logical scan relation — schema AND file listing are pinned at
-    resolution time (Spark's ``InMemoryFileIndex``); data PAGES are
-    re-read on every execution. Staleness guard: the memo entry carries
-    the path's mtime (one ``os.stat`` per call — nanoseconds against the
-    ~65 ms it avoids), so a LOCAL table directory that is overwritten
-    in-session re-resolves automatically; :func:`refresh_table` (the
-    ``REFRESH TABLE`` analog) remains the explicit form and the only one
-    for non-local paths, where the stat is skipped and the listing stays
-    pinned. The cache dict lives on the session object itself, so its
-    lifetime (and identity) is exactly the session's.
-
-    ``events.ts`` is physically INT64 TIMESTAMP(NANOS), which Spark's
-    vectorized parquet reader rejects outright — read it as raw nanos
-    (legacy conf) and truncate to a microsecond timestamp, matching how
-    DuckDB coerces nanos to its µs TIMESTAMP.
-    """
-    cache = getattr(spark, "_dw_table_cache", None)
-    if cache is None:
-        cache = {}
-        spark._dw_table_cache = cache
-    key = (sf_dir, name)
-    # non-local or not-yet-written path: no cheap stat, mtime is None
-    mtime = source_mtime_ns(sf_dir, name)
-    entry = cache.get(key)
-    if entry is not None and entry[0] == mtime:
-        return entry[1]
-    df = _load_table(spark, sf_dir, name)
-    cache[key] = (mtime, df)
-    return df
-
-
-#: Invalidation hooks fired by :func:`refresh_table` — modules that build
-#: DERIVED serving state from a table (the served hourly rollup, the
-#: served vector index) register a callback here so an explicit refresh
-#: reaches them too; the mtime guards on their memos cover in-process
-#: overwrites that skip refresh_table (VERDICT r12 #6: the immutability
-#: assumption is now enforced, not assumed). Process-global like the
-#: served roots themselves.
-_REFRESH_HOOKS: list = []
-
-
-def on_refresh(fn):
-    """Register ``fn(sf_dir, name)`` to run on every refresh_table call
-    (either argument may be None, with refresh_table's wildcard
-    semantics). Returns fn, so it works as a decorator."""
-    _REFRESH_HOOKS.append(fn)
-    return fn
+#: The tables the enriched fact view (``plans.star.fact``) joins: the
+#: sources of its plan handle, of a fact pin, and of state built from it.
+FACT_SOURCE_TABLES = ("lineitem", "orders", "part", "supplier", "nation")
 
 
 def source_mtime_ns(sf_dir: str, name: str) -> int | None:
     """mtime of a source table path, or None when it can't be stat'd
-    (non-local path) — the shared staleness token for table-handle and
-    served-state memos."""
+    (non-local path) — the staleness token of every session-state
+    entry derived from that table."""
     import os
 
     try:
@@ -115,149 +65,177 @@ def source_mtime_ns(sf_dir: str, name: str) -> int | None:
         return None
 
 
-class ServingMemo:
-    """Per-sf_dir serving-state roots with the repo's standard lifecycle
-    (the pattern events.served_hourly_rollup and
-    similarity.served_vector_index carry inline, generalized): temp-dir
-    state built once per process, a lock serializing first-touch builds,
-    atexit cleanup, a staleness token built from the source tables'
-    mtimes (rebuild on mismatch), and an :func:`on_refresh` hook so the
-    explicit ``refresh_table`` form — the only one for non-local dirs —
-    drops derived state too."""
+def _remove_dirs(dirs: list[str]) -> None:
+    import shutil
 
-    def __init__(self, prefix: str, source_tables: list[str]):
-        import atexit
-        import threading
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
 
-        self.prefix = prefix
-        self.source_tables = list(source_tables)
-        self.roots: dict[str, tuple[str, tuple]] = {}
-        #: roots displaced by staleness/refresh: NOT deleted immediately —
-        #: a previously-returned handle may still hold lazy plans against
-        #: them (deleting out from under it turns stale-but-consistent
-        #: serving into FileNotFoundError mid-query). Reclaimed at
-        #: :meth:`reset` (atexit, or the explicit caller reset — which
-        #: is only safe when the caller knows no handles are live;
-        #: reset() deletes unconditionally and cannot check).
-        self.retired: list[str] = []
-        self.lock = threading.Lock()
-        on_refresh(self._on_refresh)
-        atexit.register(self.reset)
 
-    def _token(self, sf_dir: str) -> tuple:
-        return tuple(source_mtime_ns(sf_dir, t) for t in self.source_tables)
+class SessionState:
+    """One session's derived state: table and fact handles, pins, served
+    store roots, checkpoints and tuned sizes. An entry is keyed by
+    ``(kind, sf_dir, name)`` and records the source tables it derives
+    from; its token is their :func:`source_mtime_ns` tuple, so a local
+    source rewritten in-session re-derives it on the next lookup, and
+    :func:`refresh_table` drops it by source name — the only path on
+    non-local dirs, where the token never changes. A displaced entry's
+    ``release`` action (if any) runs once it is out of the store.
 
-    def get_or_build(self, sf_dir: str, build) -> str:
-        """Return the serving root for ``sf_dir``, calling ``build(root)``
-        to populate a fresh temp dir on first touch or staleness."""
+    Builds run outside the store lock, serialized per key, so a build
+    may look up other keys (a served store reads ``fact()``, which reads
+    ``table()``). Served roots are never deleted while the state lives:
+    a displaced or half-built root may still back a lazy plan handed out
+    earlier. They are reclaimed when the state is collected or the
+    process exits."""
+
+    def __init__(self) -> None:
+        #: key -> (sources, token, value, release)
+        self._entries: dict[tuple, tuple] = {}
+        self._lock = threading.Lock()
+        self._build_locks: dict[tuple, threading.Lock] = {}
+        self._dirs: list[str] = []
+        weakref.finalize(self, _remove_dirs, self._dirs)
+
+    def get(self, kind, sf_dir, name, sources, build):
+        """The value at ``(kind, sf_dir, name)``; ``build()`` makes it on
+        first lookup and whenever a source has changed since."""
+        key = (kind, sf_dir, name)
+        token = tuple(source_mtime_ns(sf_dir, t) for t in sources)
+        with self._lock:
+            entry = self._entries.get(key)
+            if entry is not None and entry[1] == token:
+                return entry[2]
+            build_lock = self._build_locks.setdefault(key, threading.Lock())
+        with build_lock:
+            with self._lock:
+                entry = self._entries.get(key)
+            if entry is not None and entry[1] == token:
+                return entry[2]  # built by another thread meanwhile
+            return self._put(key, sources, token, build(), None)
+
+    def put(self, kind, sf_dir, name, sources, value, release=None):
+        """Set ``(kind, sf_dir, name)`` to ``value`` under the sources'
+        current token (a pin, or state rebuilt on every call)."""
+        token = tuple(source_mtime_ns(sf_dir, t) for t in sources)
+        return self._put((kind, sf_dir, name), sources, token, value, release)
+
+    def _put(self, key, sources, token, value, release):
+        with self._lock:
+            old = self._entries.get(key)
+            self._entries[key] = (tuple(sources), token, value, release)
+        if old is not None and old[3] is not None:
+            old[3](old[2])
+        return value
+
+    def drop(self, sf_dir: str | None = None, name: str | None = None) -> None:
+        """Drop every entry under ``sf_dir`` that derives from table
+        ``name``; either argument None matches all."""
+        with self._lock:
+            dropped = [
+                self._entries.pop(k)
+                for k, (sources, *_) in list(self._entries.items())
+                if (sf_dir is None or k[1] == sf_dir)
+                and (name is None or name in sources)
+            ]
+        for _, _, value, release in dropped:
+            if release is not None:
+                release(value)
+
+    def served_root(self, sf_dir: str, name: str, sources, build) -> str:
+        """A ``tempfile.mkdtemp`` root holding state that ``build(root)``
+        derives from ``sf_dir``'s ``sources``, built on first use and on
+        staleness."""
         import os
         import tempfile
 
-        with self.lock:
-            tok = self._token(sf_dir)
-            entry = self.roots.get(sf_dir)
-            if entry is not None:
-                root, built_tok = entry
-                if built_tok == tok and os.path.isdir(root):
-                    return root
-                del self.roots[sf_dir]
-                self.retired.append(root)  # deferred delete; see __init__
-            root = tempfile.mkdtemp(prefix=self.prefix)
-            try:
-                build(root)
-            except BaseException:
-                # a failed build leaves the fresh root unregistered —
-                # retire it so atexit reset reclaims it (advisor, r16);
-                # deferred rather than rmtree'd here because the failed
-                # build may have returned lazy handles before raising
-                # (e.g. the injected-crash restart tests resume on it)
-                self.retired.append(root)
-                raise
-            self.roots[sf_dir] = (root, tok)
+        def make() -> str:
+            root = tempfile.mkdtemp(prefix=f"dw-{name}-")
+            self._dirs.append(root)
+            build(root)
             return root
 
-    def _on_refresh(self, sf_dir: str | None, name: str | None) -> None:
-        if name is not None and name not in self.source_tables:
-            return
-        with self.lock:
-            keys = [sf_dir] if sf_dir is not None else list(self.roots)
-            for k in keys:
-                entry = self.roots.pop(k, None)
-                if entry is not None:
-                    self.retired.append(entry[0])
-
-    def reset(self) -> None:
-        import shutil
-
-        with self.lock:
-            for root, _ in self.roots.values():
-                shutil.rmtree(root, ignore_errors=True)
-            self.roots.clear()
-            for root in self.retired:
-                shutil.rmtree(root, ignore_errors=True)
-            self.retired.clear()
+        root = self.get("served", sf_dir, name, sources, make)
+        if os.path.isdir(root):
+            return root
+        # removed from outside the session: rebuild into a fresh root
+        with self._lock:
+            self._entries.pop(("served", sf_dir, name), None)
+        return self.get("served", sf_dir, name, sources, make)
 
 
-def pin_table(
+_STATES: "weakref.WeakKeyDictionary[SparkSession, SessionState]" = (
+    weakref.WeakKeyDictionary()
+)
+_STATES_LOCK = threading.Lock()
+
+
+def session_state(spark: SparkSession) -> SessionState:
+    """``spark``'s :class:`SessionState`; handles never cross sessions."""
+    with _STATES_LOCK:
+        state = _STATES.get(spark)
+        if state is None:
+            state = _STATES[spark] = SessionState()
+        return state
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one star-schema table. Never collects; never caches data.
+
+    The resolved leaf ``DataFrame`` HANDLE is kept in the session's
+    :class:`SessionState` per ``(sf_dir, name)`` — this is a catalog,
+    not a data cache: a warehouse resolves a table (open footers, infer
+    schema) once per session, not once per query, and
+    ``spark.read.parquet`` costs a ~60-70 ms py4j/footer round-trip per
+    call that repeated resolution would pay 40+ times across the query
+    catalog. The handle holds the logical scan relation — schema AND
+    file listing are pinned at resolution time (Spark's
+    ``InMemoryFileIndex``); data PAGES are re-read on every execution.
+    A LOCAL table directory overwritten in-session re-resolves on its
+    mtime token (one ``os.stat`` per call); :func:`refresh_table` (the
+    ``REFRESH TABLE`` analog) is the explicit form and the only one for
+    non-local paths.
+
+    ``events.ts`` is physically INT64 TIMESTAMP(NANOS), which Spark's
+    vectorized parquet reader rejects outright — read it as raw nanos
+    (legacy conf) and truncate to a microsecond timestamp, matching how
+    DuckDB coerces nanos to its µs TIMESTAMP.
+    """
+    def load() -> DataFrame:
+        return _load_table(spark, sf_dir, name)
+
+    return session_state(spark).get("table", sf_dir, name, (name,), load)
+
+
+def pin(
     spark: SparkSession, sf_dir: str, name: str, df: DataFrame
 ) -> DataFrame:
-    """Override :func:`table`'s memoized handle for ``(sf_dir, name)``
-    with ``df`` — the table-level analog of
-    ``sources.catalog_ddl.use_materialized_fact``'s fact pin. The entry
-    carries the source path's current mtime token, so it follows the
-    normal lifecycle: :func:`refresh_table` drops it and an overwritten
-    local source re-resolves past it. Use case (bench.py r21): cache a
-    better-partitioned layout of a hot table and have every builder's
-    ``table()`` plan BE the cached plan (Spark cache substitution matches
-    by logical plan, so caching a repartitioned copy without re-pointing
-    the handle would never hit)."""
-    cache = getattr(spark, "_dw_table_cache", None)
-    if cache is None:
-        cache = {}
-        spark._dw_table_cache = cache
-    cache[(sf_dir, name)] = (source_mtime_ns(sf_dir, name), df)
-    return df
+    """Make ``df`` the handle :func:`table` returns for ``name`` — or,
+    with ``name="fact"``, the plan ``plans.star.fact`` returns — under
+    ``sf_dir``. The pin takes the sources' current token like any entry,
+    so :func:`refresh_table` or a source rewrite drops it. Use cases: a
+    cached, better-partitioned layout of a hot table or of the fact
+    (Spark cache substitution matches by logical plan, so caching a
+    repartitioned copy without re-pointing the handle would never hit),
+    and a materialized fact (``sources.catalog_ddl``)."""
+    if name == "fact":
+        return session_state(spark).put(
+            "fact", sf_dir, name, FACT_SOURCE_TABLES, df
+        )
+    return session_state(spark).put("table", sf_dir, name, (name,), df)
 
 
 def refresh_table(
     spark: SparkSession, sf_dir: str | None = None, name: str | None = None
 ) -> None:
-    """Invalidate :func:`table`'s memoized handles — the ``REFRESH
-    TABLE`` analog for this path-based catalog. Call after overwriting a
-    table directory that was previously resolved in this session (e.g.
-    ``df.write.mode("overwrite").parquet(...)`` over a dir ``table`` has
-    read): the pinned file listing otherwise serves deleted-file reads
-    or stale rows. With ``name`` (and its ``sf_dir``), drops one entry;
-    with ``sf_dir`` alone, every entry under that dir; with neither,
-    everything. Also fires every :func:`on_refresh` hook, so derived
-    serving state (rollup stores, vector indexes) built from the
-    refreshed table is dropped in the same call."""
-    cache = getattr(spark, "_dw_table_cache", None)
-    if cache:
-        if name is not None:
-            cache.pop((sf_dir, name), None)
-        elif sf_dir is not None:
-            for key in [k for k in cache if k[0] == sf_dir]:
-                del cache[key]
-        else:
-            cache.clear()
-    # The fact() PLAN memo (plans/star.py) derives from five source
-    # tables; a refresh touching any of them (or a wildcard) drops the
-    # derived plan too — on non-stat-able dirs the memo's mtime token is
-    # all-None, so this call is its ONLY invalidation path. Bare-frame
-    # entries are use_materialized_fact pins: deliberate overrides that
-    # survive refresh and are cleared only by their owner.
-    fcache = getattr(spark, "_dw_fact_cache", None)
-    if fcache:
-        from .plans.star import FACT_SOURCE_TABLES
-
-        if name is None or name in FACT_SOURCE_TABLES:
-            keys = [sf_dir] if sf_dir is not None else list(fcache)
-            for k in keys:
-                if isinstance(fcache.get(k), tuple):
-                    del fcache[k]
-    for fn in _REFRESH_HOOKS:
-        fn(sf_dir, name)
+    """Drop the session state derived from table ``name`` under
+    ``sf_dir`` — the ``REFRESH TABLE`` analog for this path-based
+    catalog: table handles and pins, the fact plan, served stores,
+    checkpoints and tuned sizes. Call after overwriting a table
+    directory that was previously resolved in this session: the pinned
+    file listing otherwise serves deleted-file reads or stale rows.
+    Either argument None matches all."""
+    session_state(spark).drop(sf_dir, name)
 
 
 def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -300,14 +278,14 @@ def require_small(df: DataFrame, limit: int, what: str) -> DataFrame:
 #: the r21 defaultParallelism spread made every warm fact-agg run 32-task
 #: waves over ~600k cached rows, and the driver's own 8-vs-32-core pair
 #: showed ALL OLAP rows faster at 8 cores (dispatch > compute). Measured
-#: r22 (scripts/ab_spread_width.py, interleaved widths 2/4/8/16/32 x 2
-#: cycles at sf0.1/c32): width 16 won both cycles for the fact-agg rows
-#: (totals 2.37/3.25 vs 3.35/3.23 at width 32), events rows were best at
-#: widths 2-8; 40k rows/partition puts the 600k-row fact at 15 and the
-#: 100k-row events at 3 — inside the measured knee for both. Scale-
-#: adaptive by construction: width grows linearly with row count until
-#: it hits defaultParallelism, so at real scale the cap is inactive and
-#: the spread stays core-count-wide.
+#: r22 (OPTIMIZATION_r22.md "Spread-width A/B": interleaved widths
+#: 2/4/8/16/32 x 2 cycles at sf0.1/c32): width 16 won both cycles for
+#: the fact-agg rows (totals 2.37/3.25 vs 3.35/3.23 at width 32), events
+#: rows were best at widths 2-8; 40k rows/partition puts the 600k-row
+#: fact at 15 and the 100k-row events at 3 — inside the measured knee for
+#: both. Scale-adaptive by construction: width grows linearly with row
+#: count until it hits defaultParallelism, so at real scale the cap is
+#: inactive and the spread stays core-count-wide.
 SPREAD_TARGET_ROWS = 40_000
 
 

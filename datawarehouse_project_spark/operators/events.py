@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import ServingMemo, table
+from ..io import session_state, table
 from ..plans.registry import register
 from ..session import prepare
 
@@ -57,27 +57,14 @@ def events_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-#: Served hourly-rollup state per sf_dir: built ONCE per process by
-#: folding the events table into an IncrementalRollup, then every
-#: serving query reads the group-cardinality-sized state. Lifecycle
-#: (first-touch lock, atexit cleanup, mtime staleness token,
-#: refresh_table hook — VERDICT r12 #6: staleness ENFORCED, not
-#: assumed) is the shared :class:`~..io.ServingMemo`.
-_SERVED_HOURLY_MEMO = ServingMemo("dw-hourly-rollup-", ["events"])
-
-
-def reset_served_hourly() -> None:
-    """Drop (and delete) every memoized served hourly rollup."""
-    _SERVED_HOURLY_MEMO.reset()
-
-
 def served_hourly_rollup(spark: SparkSession, sf_dir: str):
     """The session's maintained hourly rollup over ``sf_dir``'s events
     (build-on-first-use, then reads only): keys (event_type,
     window_start_us), measure value through DECIMAL(18,6) so the folded
-    state equals the exact full aggregation bit-for-bit. A changed
-    source mtime (in-process rewrite of events.parquet) rebuilds the
-    state instead of serving it stale."""
+    state equals the exact full aggregation bit-for-bit. Built once per
+    session (``io.SessionState.served_root``); a changed source mtime
+    (in-process rewrite of events.parquet) or ``io.refresh_table``
+    rebuilds it instead of serving it stale."""
     from .incremental import IncrementalRollup
 
     def handle(root: str) -> IncrementalRollup:
@@ -100,7 +87,11 @@ def served_hourly_rollup(spark: SparkSession, sf_dir: str):
             app_id="served-hourly",
         )
 
-    return handle(_SERVED_HOURLY_MEMO.get_or_build(sf_dir, build))
+    return handle(
+        session_state(spark).served_root(
+            sf_dir, "hourly-rollup", ["events"], build
+        )
+    )
 
 
 @register(

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import words
-from ..io import spread, table
+from ..io import session_state, spread, table
 from .skew import validate_guard
 from ..plans.registry import register
 from ..session import prepare
@@ -465,26 +465,13 @@ def lexical_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Serving form: the postings as MAINTAINED STATE (io.ServingMemo +
-# IncrementalRollup), same lifecycle as the hourly rollup and the vector
-# index — build on first use, mtime-token staleness, refresh_table hook,
-# atexit cleanup. tf is additive across appended document batches, so
-# the rollup folds appends exactly; df/dl/corpus stats derive from the
-# state at query time (vocabulary × doc-sized, never the corpus text).
-
-# Eager at module scope like _SERVED_HOURLY_MEMO/_SERVED_INDEX_MEMO: a
-# lazy check-then-set singleton races on concurrent first touch (two
-# memos, double-registered hooks, reset reaching only one — advisor
-# finding, r13). Construction is cheap (no Spark work until first use).
-from ..io import ServingMemo as _ServingMemo
-
-_SERVED_POSTINGS_MEMO = _ServingMemo("dw-postings-", ["documents"])
-
-
-def reset_served_postings() -> None:
-    """Drop (and delete) every memoized served postings store."""
-    _SERVED_POSTINGS_MEMO.reset()
-
+# Serving form: the postings as MAINTAINED STATE (an IncrementalRollup
+# under io.SessionState.served_root), same lifecycle as the hourly rollup
+# and the vector index — build on first use, mtime-token staleness,
+# refresh_table invalidation, cleanup at exit. tf is additive across
+# appended document batches, so the rollup folds appends exactly;
+# df/dl/corpus stats derive from the state at query time (vocabulary ×
+# doc-sized, never the corpus text).
 
 def state_counts(state: DataFrame) -> DataFrame:
     """An IncrementalRollup postings state as ``(doc_id, w, tf)`` — the
@@ -509,7 +496,9 @@ def served_postings(spark: SparkSession, sf_dir: str) -> "StreamingPostingsStore
             spark, docs, batch_id=0, app_id="served-postings"
         )
 
-    root = _SERVED_POSTINGS_MEMO.get_or_build(sf_dir, build)
+    root = session_state(spark).served_root(
+        sf_dir, "postings", ["documents"], build
+    )
     return StreamingPostingsStore(f"{root}/store")
 
 
@@ -717,35 +706,26 @@ def lexical_bm25_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     return store.topk(spark, q, k=LEXICAL_K)
 
 
-# Streamed-serving twin: same memo lifecycle, but the state is built by a
-# REAL Structured Streaming job (availableNow micro-batches through
-# StreamingPostingsStore.apply_batch) instead of one batch fold — the
-# driver-checkable form of the stream==batch pin in
+# Streamed-serving twin: same served-state lifecycle, but the state is
+# built by a REAL Structured Streaming job (availableNow micro-batches
+# through StreamingPostingsStore.apply_batch) instead of one batch fold —
+# the driver-checkable form of the stream==batch pin in
 # tests/test_postings_stream.py (VERDICT r14 #7 / r15 next-1).
-_SERVED_STREAM_POSTINGS_MEMO = _ServingMemo(
-    "dw-postings-stream-", ["documents"]
-)
-
 #: Micro-batch count for the simulated ingest: doc_id % N file partitions,
 #: maxFilesPerTrigger=1 — every batch boundary cuts through the corpus, so
 #: the fold's additivity is genuinely exercised, not vacuous.
 _STREAM_CHUNKS = 4
 
 
-def reset_served_stream_postings() -> None:
-    """Drop (and delete) every memoized streamed postings store."""
-    _SERVED_STREAM_POSTINGS_MEMO.reset()
-
-
 def _stream_fold(
     spark: SparkSession,
     sf_dir: str,
-    memo: _ServingMemo,
+    name: str,
     counts_fn,
     with_doclen: bool = True,
 ) -> StreamingPostingsStore:
-    """Build (once per memo key) a :class:`StreamingPostingsStore` by a
-    REAL ``availableNow`` file stream of ``sf_dir``'s documents in
+    """Build (once per served ``name``) a :class:`StreamingPostingsStore`
+    by a REAL ``availableNow`` file stream of ``sf_dir``'s documents in
     ``_STREAM_CHUNKS`` micro-batches — the shared ingest glue of both
     streamed-serving rows (unigram BM25 and 3-gram TF-IDF; the latter
     passes ``with_doclen=False`` — its serving path never reads dl)."""
@@ -784,7 +764,9 @@ def _stream_fold(
             .awaitTermination()
         )
 
-    root = memo.get_or_build(sf_dir, build)
+    root = session_state(spark).served_root(
+        sf_dir, name, ["documents"], build
+    )
     return StreamingPostingsStore(
         f"{root}/postings", counts_fn=counts_fn, with_doclen=with_doclen
     )
@@ -796,14 +778,14 @@ def served_stream_postings(
     """The session's STREAMED inverted index over ``sf_dir``'s documents:
     :class:`StreamingPostingsStore` fed by an ``availableNow`` file
     stream of the corpus in ``_STREAM_CHUNKS`` micro-batches. The
-    corpus copy under the memo root is ingest-simulation glue only — at
+    corpus copy under the served root is ingest-simulation glue only — at
     deployment the document stream already exists and the ``readStream
     → foreachBatch(store.apply_batch)`` wiring in :func:`_stream_fold`
     is the whole recipe; the state itself is the same table pair the
     batch store maintains (postings keyed (doc_id, w) + doc lengths
     keyed doc_id), so serving cost and exactly-once posture are
     identical (ledger-replay-pinned in tests/test_postings_stream.py)."""
-    return _stream_fold(spark, sf_dir, _SERVED_STREAM_POSTINGS_MEMO, term_counts)
+    return _stream_fold(spark, sf_dir, "postings-stream", term_counts)
 
 
 @register(
@@ -1227,19 +1209,11 @@ def lexical_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the module's own at-scale recommendation made real): the word-3-gram
 # postings live in an IncrementalRollup keyed (doc_id, w) summing tf
 # (shingle tf is additive across appended document batches, exactly like
-# the unigram BM25 store), under the standard ServingMemo lifecycle.
+# the unigram BM25 store), under the standard served-state lifecycle.
 # Per query, df / n_docs / weights / norms all derive from the state —
 # the corpus text is scanned once per ingest fold, never per query —
 # and the bounded guard-window build runs as everywhere (the r14
 # default).
-
-_SERVED_SHINGLES_MEMO = _ServingMemo("dw-shingles-", ["documents"])
-
-
-def reset_served_shingles() -> None:
-    """Drop (and delete) every memoized served shingle-postings store."""
-    _SERVED_SHINGLES_MEMO.reset()
-
 
 def served_shingle_postings(spark: SparkSession, sf_dir: str):
     """The session's maintained 3-gram shingle index over ``sf_dir``'s
@@ -1257,7 +1231,11 @@ def served_shingle_postings(spark: SparkSession, sf_dir: str):
             app_id="served-shingles",
         )
 
-    return handle(_SERVED_SHINGLES_MEMO.get_or_build(sf_dir, build))
+    return handle(
+        session_state(spark).served_root(
+            sf_dir, "shingles", ["documents"], build
+        )
+    )
 
 
 @register(
@@ -1278,16 +1256,6 @@ def lexical_tfidf_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     store = served_shingle_postings(spark, sf_dir)
     return tfidf_cosine_pairs(state_counts(store.read(spark)), bounded=True)
-
-
-_SERVED_STREAM_SHINGLES_MEMO = _ServingMemo(
-    "dw-shingles-stream-", ["documents"]
-)
-
-
-def reset_served_stream_shingles() -> None:
-    """Drop (and delete) every memoized streamed shingle store."""
-    _SERVED_STREAM_SHINGLES_MEMO.reset()
 
 
 @register(
@@ -1311,7 +1279,7 @@ def lexical_tfidf_from_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _stream_fold(
         spark,
         sf_dir,
-        _SERVED_STREAM_SHINGLES_MEMO,
+        "shingles-stream",
         shingle_counts_of,
         with_doclen=False,
     )

@@ -32,7 +32,7 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import ServingMemo, require_small, spread, table
+from ..io import require_small, session_state, spread, table
 from ..plans.registry import register
 from ..session import prepare
 
@@ -1894,30 +1894,14 @@ def similarity_binary_rerank_inline(spark: SparkSession, sf_dir: str) -> DataFra
 # cross-check, and stored == inline is pinned bit-for-bit in
 # tests/test_ann_index.py.
 
-#: Served-index state per sf_dir: the index is built ONCE per process
-#: (batch 0 ingest into a temp-dir VersionedParquetTable) and every
-#: stored-form query in the same session reads it — the serving
-#: lifecycle in miniature. The driver's fresh process builds on first
-#: touch (sub-second at its sf0.01 gate). Lifecycle (first-touch lock —
-#: advisor finding r11 — atexit cleanup, mtime staleness token,
-#: refresh_table hook — VERDICT r12 #6) is the shared
-#: :class:`~..io.ServingMemo`.
-_SERVED_INDEX_MEMO = ServingMemo("dw-vector-index-", ["embeddings"])
-
-
-def reset_served_indexes() -> None:
-    """Drop (and delete) every memoized served index. The in-process
-    rewrite case is handled automatically (mtime guard + refresh_table
-    hook); this remains the blanket escape hatch."""
-    _SERVED_INDEX_MEMO.reset()
-
 
 def served_vector_index(spark: SparkSession, sf_dir: str):
     """The session's stored vector index over ``sf_dir``'s embeddings
-    (build-on-first-use, then reads only). A changed source mtime
-    (in-process rewrite of embeddings.parquet) rebuilds the index
-    instead of serving it stale; :func:`reset_served_indexes` remains
-    the blanket escape hatch."""
+    (build-on-first-use into a temp-dir VersionedParquetTable, then
+    reads only; the driver's fresh process builds on first touch,
+    sub-second at its sf0.01 gate). A changed source mtime (in-process
+    rewrite of embeddings.parquet) or ``io.refresh_table`` rebuilds the
+    index instead of serving it stale."""
     from .ann_index import IvfVectorIndex
 
     def build(root: str) -> None:
@@ -1930,7 +1914,11 @@ def served_vector_index(spark: SparkSession, sf_dir: str):
         )
         idx.snapshot_occupancy(spark)  # drift-monitor baseline
 
-    return IvfVectorIndex(_SERVED_INDEX_MEMO.get_or_build(sf_dir, build))
+    return IvfVectorIndex(
+        session_state(spark).served_root(
+            sf_dir, "vector-index", ["embeddings"], build
+        )
+    )
 
 
 @register(

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from .olap import YEAR, _in_year
 from .registry import REGISTRY, register
 from .star import FACT_CTE, fact
-from ..io import ServingMemo, table
+from ..io import FACT_SOURCE_TABLES, release_checkpoint, session_state, table
 from ..session import prepare
 
 # --------------------------------------------------------------------------
@@ -343,16 +343,16 @@ def affinity_lift_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the returned frame stays lazy, so there is no scope to release the
     # checkpoint in — instead cap accumulation at ONE live checkpoint per
-    # session: each rebuild releases the previous builder's blocks
-    from ..io import release_checkpoint
-
-    prev = getattr(spark, "_dw_basket_ckpt", None)
-    if prev is not None:
-        try:
-            release_checkpoint(prev)
-        except Exception:
-            pass  # already cleaned by GC/ContextCleaner
-    spark._dw_basket_ckpt = op
+    # (session, sf_dir): each rebuild, and a refresh of a fact source,
+    # releases the previous builder's blocks
+    session_state(spark).put(
+        "checkpoint",
+        sf_dir,
+        "affinity_baskets",
+        FACT_SOURCE_TABLES,
+        op,
+        release=release_checkpoint,
+    )
     n_orders = op.select(
         F.count_distinct("order_id").alias("n")
     )
@@ -583,11 +583,6 @@ def rfm_customer_segments_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # |products|); every query then reads the state and plans a
 # TakeOrderedAndProject over it — no fact scan, no join, scale-flat.
 
-#: Serving memo for the product-revenue rollup (staleness enforced by the
-#: five fact source tables' mtimes + the refresh_table hook).
-_PRODUCT_ROLLUP_MEMO = ServingMemo(
-    "dw-product-rollup-", ["lineitem", "orders", "part", "supplier", "nation"]
-)
 _PRODUCT_ROLLUP_KEYS = ["product_id", "product_name"]
 
 
@@ -612,7 +607,11 @@ def served_product_rollup(spark: SparkSession, sf_dir: str):
             app_id="served-q01",
         )
 
-    return handle(_PRODUCT_ROLLUP_MEMO.get_or_build(sf_dir, build))
+    return handle(
+        session_state(spark).served_root(
+            sf_dir, "product-rollup", FACT_SOURCE_TABLES, build
+        )
+    )
 
 
 @register(

@@ -29,18 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import table
+from ..io import FACT_SOURCE_TABLES, session_state, table
 from ..session import prepare
 
 #: DECIMAL(18,2) casts make money/quantity addition exact and
 #: order-insensitive => identical results regardless of partitioning, and
 #: bit-identical to the DuckDB oracle.
 _DEC = "decimal(18,2)"
-
-#: The five source tables the fact plan derives from — the staleness-token
-#: basis for the plan memo, and the table names whose explicit
-#: ``io.refresh_table`` must drop the derived plan too.
-FACT_SOURCE_TABLES = ("lineitem", "orders", "part", "supplier", "nation")
 
 
 def fact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,60 +46,28 @@ def fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     data has no dangling FKs, and inner keeps the canonical row count equal
     to lineitem's (validated in tests).
 
-    The PLAN HANDLE is memoized per (session, sf_dir) — CREATE VIEW
-    semantics: the reference materializes FACT_TRANSACTIONS once
+    The PLAN HANDLE is kept in the session state per ``sf_dir`` — CREATE
+    VIEW semantics: the reference materializes FACT_TRANSACTIONS once
     (metro.sql:42-59) and every query reads the view; here the logical
     plan is likewise derived once per session instead of re-built through
     ~40 py4j calls by each of the 8 OLAP builders. No data is cached —
-    every execution re-reads the scans — and `io.refresh_table` callers
-    can clear `spark._dw_fact_cache` the same way."""
-    from ..io import source_mtime_ns
+    every execution re-reads the scans. A rewrite of any of the five
+    source tables re-derives it, as does ``io.refresh_table``; an
+    ``io.pin(spark, sf_dir, "fact", df)`` replaces it until then."""
 
-    cache = getattr(spark, "_dw_fact_cache", None)
-    if cache is None:
-        cache = {}
-        spark._dw_fact_cache = cache
-    # staleness token: a rewritten source table re-derives the plan (the
-    # same guard io.table carries — r13, closing the last memo without
-    # one). On non-stat-able (non-local) dirs the token is all-None and
-    # never changes; there `io.refresh_table` is the invalidation path —
-    # it drops tuple entries from this cache directly. Entries written by
-    # use_materialized_fact are BARE DataFrames (no token): a deliberate
-    # pin that survives both the mtime guard and refresh_table, cleared
-    # only by its owner (sources/catalog_ddl.py).
-    token = tuple(source_mtime_ns(sf_dir, t) for t in FACT_SOURCE_TABLES)
-    entry = cache.get(sf_dir)
-    if entry is not None:
-        if not (isinstance(entry, tuple) and len(entry) == 2):
-            return entry  # materialized-fact pinned handle (bare frame)
-        built_token, df = entry
-        if built_token == token:
-            return df
-    prepare(spark)
-    df = fact_from(
-        table(spark, sf_dir, "lineitem"),
-        table(spark, sf_dir, "orders"),
-        table(spark, sf_dir, "part"),
-        table(spark, sf_dir, "supplier"),
-        table(spark, sf_dir, "nation"),
+    def build() -> DataFrame:
+        prepare(spark)
+        return fact_from(
+            table(spark, sf_dir, "lineitem"),
+            table(spark, sf_dir, "orders"),
+            table(spark, sf_dir, "part"),
+            table(spark, sf_dir, "supplier"),
+            table(spark, sf_dir, "nation"),
+        )
+
+    return session_state(spark).get(
+        "fact", sf_dir, "fact", FACT_SOURCE_TABLES, build
     )
-    cache[sf_dir] = (token, df)
-    return df
-
-
-def pin_fact(spark: SparkSession, sf_dir: str, df: DataFrame) -> DataFrame:
-    """Pin ``df`` as the fact handle for ``sf_dir`` — a bare-frame memo
-    entry with ``use_materialized_fact`` semantics (survives the mtime
-    guard and ``refresh_table``; cleared only by its owner, via
-    ``spark._dw_fact_cache.pop(sf_dir)``). Use case (bench.py r21): cache
-    a spread (well-partitioned) layout of the enriched fact and have
-    every OLAP builder's ``fact()`` plan BE the cached plan."""
-    cache = getattr(spark, "_dw_fact_cache", None)
-    if cache is None:
-        cache = {}
-        spark._dw_fact_cache = cache
-    cache[sf_dir] = df
-    return df
 
 
 def fact_from(

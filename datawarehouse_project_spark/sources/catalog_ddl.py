@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import TABLES
+from ..io import TABLES, pin
 from ..plans.star import fact_from
 from ..session import prepare
 
@@ -149,15 +149,10 @@ def use_materialized_fact(
     spark: SparkSession, sf_dir: str, path: str
 ) -> DataFrame:
     """Reroute every OLAP builder for ``sf_dir`` onto the materialized
-    fact: ``plans.star.fact`` memoizes its plan handle per (session,
-    sf_dir), so overriding that cache entry swaps the enrichment subtree
-    for a partitioned-parquet scan under EVERY registered query, with no
-    builder changes — CREATE VIEW repoint semantics. Callers that want
-    the computed plan back clear ``spark._dw_fact_cache[sf_dir]``."""
-    cache = getattr(spark, "_dw_fact_cache", None)
-    if cache is None:
-        cache = {}
-        spark._dw_fact_cache = cache
-    frame = materialized_fact(spark, path)
-    cache[sf_dir] = frame
-    return frame
+    fact: ``io.pin`` makes it the handle ``plans.star.fact`` returns, so
+    the enrichment subtree is swapped for a partitioned-parquet scan
+    under EVERY registered query, with no builder changes — CREATE VIEW
+    repoint semantics. The pin lasts until ``io.refresh_table`` or a
+    rewrite of a fact source table, after which ``fact()`` computes the
+    plan again."""
+    return pin(spark, sf_dir, "fact", materialized_fact(spark, path))

@@ -122,8 +122,8 @@ class IncrementalFactTable:
         repoint — no builder changes), closing the loop: bootstrap →
         incremental maintenance → the exact serving surface the one-shot
         materialization uses. Re-call after each applied batch to serve
-        the newest snapshot; clear ``spark._dw_fact_cache[sf_dir]`` to
-        revert to the computed plan."""
+        the newest snapshot; ``io.refresh_table(spark, sf_dir)`` reverts
+        to the computed plan, as does a rewrite of a fact source table."""
         from .catalog_ddl import use_materialized_fact
 
         path = self.table.current_path()

@@ -86,8 +86,7 @@ def test_materialized_fact_reroutes_olap_identically(spark, sf_dir, tmp_path):
     onto the partitioned materialized copy must leave every OLAP result
     value-identical (q01 + the rollup as witnesses), the rerouted plan
     must scan parquet directly with NO join anywhere (the enrichment ran
-    once, at write time), and clearing the cache restores the computed
-    plan."""
+    once, at write time), and refresh_table restores the computed plan."""
     from datawarehouse_project_spark.catalog import all_queries
     from datawarehouse_project_spark.sources.catalog_ddl import (
         FACT_COLUMNS,
@@ -95,6 +94,7 @@ def test_materialized_fact_reroutes_olap_identically(spark, sf_dir, tmp_path):
         materialized_fact,
         use_materialized_fact,
     )
+    from datawarehouse_project_spark.io import refresh_table
     from datawarehouse_project_spark.plans.star import fact
 
     path = str(tmp_path / "fact_mat")
@@ -119,7 +119,7 @@ def test_materialized_fact_reroutes_olap_identically(spark, sf_dir, tmp_path):
             == want_q07
         )
     finally:
-        spark._dw_fact_cache.pop(sf_dir, None)
+        refresh_table(spark, sf_dir, "lineitem")
     # computed path restored
     p = q["q01_top_revenue_products"](spark, sf_dir)._jdf.queryExecution(
     ).executedPlan().toString()

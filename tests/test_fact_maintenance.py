@@ -8,6 +8,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from datawarehouse_project_spark.io import refresh_table
 from datawarehouse_project_spark.sources.fact_maintenance import (
     IncrementalFactTable,
 )
@@ -64,10 +65,10 @@ def test_init_full_equals_computed_fact(spark, sf_dir, tmp_path):
         got = ift.read(spark).select(*fact(spark, sf_dir).columns)
         assert _canon(got) == _canon(fact(spark, sf_dir))
     finally:
-        # executing the shared memoized fact handle pins its adaptive
-        # plan; drop the cache entry so plan-shape tests (which assert on
-        # the PRE-execution plan) rebuild a fresh handle
-        spark._dw_fact_cache.pop(sf_dir, None)
+        # executing the shared fact handle pins its adaptive plan; drop
+        # it so plan-shape tests (which assert on the PRE-execution plan)
+        # rebuild a fresh handle
+        refresh_table(spark, sf_dir, "lineitem")
 
 
 def test_incremental_maintenance_matches_full_rebuild(spark, sf_dir, tmp_path):
@@ -120,7 +121,7 @@ def test_incremental_maintenance_matches_full_rebuild(spark, sf_dir, tmp_path):
     ift.apply_order_changes(spark, src, changed, batch_id=1)
     assert ift.table.current_version() == v0 + 1  # ONE commit for the batch
 
-    spark._dw_fact_cache.pop(src, None)  # drop the pre-mutation plan handle
+    refresh_table(spark, src)  # drop the pre-mutation plan handle
     rebuilt = fact(spark, src)
     maintained = ift.read(spark).select(*rebuilt.columns)
     assert _canon(maintained) == _canon(rebuilt)
@@ -184,11 +185,11 @@ def test_maintained_fact_serves_registered_olap_queries(spark, sf_dir, tmp_path)
     try:
         ift.serve(spark, src)
         served = sorted(map(repr, (tuple(r) for r in q03(spark, src).collect())))
-        spark._dw_fact_cache.pop(src, None)
+        refresh_table(spark, src)
         computed = sorted(map(repr, (tuple(r) for r in q03(spark, src).collect())))
         assert served == computed
     finally:
-        spark._dw_fact_cache.pop(src, None)
+        refresh_table(spark, src)
 
 
 def test_fact_maintenance_streaming_foreachbatch(spark, sf_dir, tmp_path):
@@ -234,7 +235,7 @@ def test_fact_maintenance_streaming_foreachbatch(spark, sf_dir, tmp_path):
         )
 
     run()
-    spark._dw_fact_cache.pop(src, None)
+    refresh_table(spark, src)
     from datawarehouse_project_spark.plans.star import fact
 
     rebuilt = fact(spark, src)
@@ -242,4 +243,4 @@ def test_fact_maintenance_streaming_foreachbatch(spark, sf_dir, tmp_path):
     v = ift.table.current_version()
     run()  # replay
     assert ift.table.current_version() == v
-    spark._dw_fact_cache.pop(src, None)
+    refresh_table(spark, src)

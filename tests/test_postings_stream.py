@@ -179,9 +179,9 @@ def test_streaming_shingle_store_serves_tfidf(spark, sf_dir, tmp_path):
 
 def test_registered_stream_row_equals_batch_and_reuses_memo(spark, sf_dir):
     """The r16 driver row: lexical_bm25_from_stream (a real availableNow
-    fold through StreamingPostingsStore under a ServingMemo) answers
+    fold through StreamingPostingsStore in a served root) answers
     identically to the compute-from-text operator, and a second call
-    serves from the memoized state without re-folding."""
+    serves from the session's state without re-folding."""
     from datawarehouse_project_spark.catalog import all_queries
     from datawarehouse_project_spark.operators import retrieval as R
 
@@ -190,11 +190,14 @@ def test_registered_stream_row_equals_batch_and_reuses_memo(spark, sf_dir):
     batch = _topk_set(qs["lexical_bm25_topk"](spark, sf_dir))
     assert first == batch and first
 
-    # memo hit: same root object, no rebuild (the memo dict is stable)
-    root_before = R._SERVED_STREAM_POSTINGS_MEMO.roots[sf_dir][0]
+    # state hit: same root, no rebuild
+    def root():
+        return R.served_stream_postings(spark, sf_dir).rollup.table.root
+
+    root_before = root()
     again = _topk_set(qs["lexical_bm25_from_stream"](spark, sf_dir))
     assert again == first
-    assert R._SERVED_STREAM_POSTINGS_MEMO.roots[sf_dir][0] == root_before
+    assert root() == root_before
 
 
 def test_streaming_postings_restart_recovery(spark, sf_dir, tmp_path):
@@ -555,9 +558,9 @@ def test_torn_read_update_batch_tear_is_bounded(spark, tmp_path):
 
 
 def test_streamed_stores_rebuild_on_source_rewrite(spark, tmp_path):
-    """ServingMemo lifecycle for BOTH streamed stores (the same
+    """Served-state lifecycle for BOTH streamed stores (the same
     rewrite-staleness contract every other store family carries): a
-    rewritten documents source invalidates the memo's mtime token and
+    rewritten documents source invalidates the entry's mtime token and
     the next query re-folds the stream over the new corpus."""
     from datawarehouse_project_spark.catalog import all_queries
 

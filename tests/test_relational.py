@@ -253,22 +253,25 @@ def test_overlap_shipping_windows_matches_duckdb(spark, sf_correct_dir):
 
 
 def test_overlap_bucket_tuning_memoized(spark, sf_dir, monkeypatch):
-    """The eager bucket-sizing pass runs once per (sf_dir, lineitem
-    mtime), not once per plan build (r13 review finding: the driver
-    sweep and bench reps rebuild the plan 4+ times)."""
+    """The eager bucket-sizing pass runs once per lineitem version, not
+    once per plan build (r13 review finding: the driver sweep and bench
+    reps rebuild the plan 4+ times), and refresh_table reruns it — the
+    only invalidation on a directory that cannot be stat'd."""
+    from datawarehouse_project_spark.io import refresh_table
     from datawarehouse_project_spark.operators import relational as rel
 
-    rel._TUNED_BUCKET_MEMO.clear()
-    calls = []
+    refresh_table(spark, sf_dir, "lineitem")
+    widths = []
     real = rel.tune_bucket_days
 
     def counting(*a, **kw):
-        calls.append(1)
-        return real(*a, **kw)
+        widths.append(real(*a, **kw))
+        return widths[-1]
 
     monkeypatch.setattr(rel, "tune_bucket_days", counting)
     rel.overlap_shipping_windows(spark, sf_dir)
     rel.overlap_shipping_windows(spark, sf_dir)
-    assert len(calls) == 1
-    key = next(iter(rel._TUNED_BUCKET_MEMO))
-    assert key[0] == sf_dir and rel._TUNED_BUCKET_MEMO[key] >= 1
+    assert len(widths) == 1 and widths[0] >= 1
+    refresh_table(spark, sf_dir, "lineitem")
+    rel.overlap_shipping_windows(spark, sf_dir)
+    assert len(widths) == 2

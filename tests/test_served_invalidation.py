@@ -2,21 +2,23 @@
 rewrite of the source table under an sf_dir that already has in-process
 serving state (the hourly rollup store, the vector index) must yield
 fresh results — via the mtime guard on the memo for implicit rewrites,
-and via the ``io.refresh_table`` hook for the explicit form."""
+and via ``io.refresh_table`` for the explicit form."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
+import gc
+import os
+import threading
 
 import pytest
+from pyspark.sql import functions as F
 
-# r22 fast-lane split, second pass (measured: the first fast lane still
-# ran 16.5 min on this box — over the driver-timeout safety margin):
-# this module's VALUE semantics are gated by the fast lane's sf0.001
-# oracle-parity sweep; its deeper coverage runs in the slow lane
-# (`pytest -m slow`, the round-end full sweep).
-pytestmark = pytest.mark.slow
+from datawarehouse_project_spark.io import SessionState, pin, refresh_table
+
+# The store-build tests run in the slow lane (`pytest -m slow`): their
+# VALUE semantics are gated by the fast lane's sf0.001 oracle-parity
+# sweep. The sub-second session-state lifecycle tests run in the fast
+# lane.
 
 
 def _write_events(spark, sf, n, value):
@@ -41,6 +43,7 @@ def _write_embeddings(spark, sf, n, shift):
     ).write.mode("overwrite").parquet(f"{sf}/embeddings.parquet")
 
 
+@pytest.mark.slow
 def test_served_hourly_rebuilds_on_source_rewrite(spark, tmp_path):
     from datawarehouse_project_spark.catalog import all_queries
 
@@ -54,67 +57,59 @@ def test_served_hourly_rebuilds_on_source_rewrite(spark, tmp_path):
     assert second == 250  # stale state would still say 100
 
 
-def test_refresh_table_hook_drops_served_hourly(spark, tmp_path):
-    from datawarehouse_project_spark.io import refresh_table
+@pytest.mark.slow
+def test_refresh_table_drops_served_hourly(spark, tmp_path):
     from datawarehouse_project_spark.operators.events import (
-        _SERVED_HOURLY_MEMO,
         served_hourly_rollup,
     )
 
-    _SERVED_HOURLY_ROOTS = _SERVED_HOURLY_MEMO.roots
+    def root():
+        return served_hourly_rollup(spark, sf).table.root
 
     sf = str(tmp_path / "sfb")
     _write_events(spark, sf, 10, 1.0)
-    served_hourly_rollup(spark, sf)
-    assert sf in _SERVED_HOURLY_ROOTS
+    root1 = root()
+    assert root() == root1
     refresh_table(spark, sf, "events")
-    assert sf not in _SERVED_HOURLY_ROOTS
+    root2 = root()
+    assert root2 != root1
     # an unrelated table name leaves the entry alone
-    served_hourly_rollup(spark, sf)
     refresh_table(spark, sf, "orders")
-    assert sf in _SERVED_HOURLY_ROOTS
+    assert root() == root2
     refresh_table(spark)  # wildcard drops everything
-    assert sf not in _SERVED_HOURLY_ROOTS
+    assert root() != root2
 
 
+@pytest.mark.slow
 def test_served_vector_index_rebuilds_on_source_rewrite(spark, tmp_path):
     from datawarehouse_project_spark.operators.similarity import (
-        _SERVED_INDEX_MEMO,
         served_vector_index,
     )
-
-    _SERVED_INDEX_ROOTS = _SERVED_INDEX_MEMO.roots
 
     sf = str(tmp_path / "sfc")
     _write_embeddings(spark, sf, 40, 0)
     idx1 = served_vector_index(spark, sf)
-    root1 = _SERVED_INDEX_ROOTS[sf][0]
     n1 = idx1.read(spark).count()
     assert n1 == 40
     # same mtime: second call serves the same root, no rebuild
-    served_vector_index(spark, sf)
-    assert _SERVED_INDEX_ROOTS[sf][0] == root1
+    assert served_vector_index(spark, sf).root == idx1.root
     _write_embeddings(spark, sf, 60, 5)
     idx2 = served_vector_index(spark, sf)
-    assert _SERVED_INDEX_ROOTS[sf][0] != root1
+    assert idx2.root != idx1.root
     assert idx2.read(spark).count() == 60
 
 
-def test_refresh_table_hook_drops_served_index(spark, tmp_path):
-    from datawarehouse_project_spark.io import refresh_table
+@pytest.mark.slow
+def test_refresh_table_drops_served_index(spark, tmp_path):
     from datawarehouse_project_spark.operators.similarity import (
-        _SERVED_INDEX_MEMO,
         served_vector_index,
     )
 
-    _SERVED_INDEX_ROOTS = _SERVED_INDEX_MEMO.roots
-
     sf = str(tmp_path / "sfd")
     _write_embeddings(spark, sf, 20, 0)
-    served_vector_index(spark, sf)
-    assert sf in _SERVED_INDEX_ROOTS
+    root1 = served_vector_index(spark, sf).root
     refresh_table(spark, sf, "embeddings")
-    assert sf not in _SERVED_INDEX_ROOTS
+    assert served_vector_index(spark, sf).root != root1
 
 
 def _write_fact_sources(spark, sf, n_orders, price):
@@ -149,6 +144,7 @@ def _write_fact_sources(spark, sf, n_orders, price):
     ).write.mode("overwrite").parquet(f"{sf}/lineitem.parquet")
 
 
+@pytest.mark.slow
 def test_q01_from_store_rebuilds_on_fact_source_rewrite(spark, tmp_path):
     """The product-rollup serving memo AND the fact() plan memo both
     carry mtime tokens: rewriting a fact source table in-process yields
@@ -165,6 +161,7 @@ def test_q01_from_store_rebuilds_on_fact_source_rewrite(spark, tmp_path):
     assert second and abs(second[0].total_sales - 1000.0) < 1e-9
 
 
+@pytest.mark.slow
 def test_q01_from_store_plan_is_state_topk_no_fact_scan(spark):
     """The serving pin: TakeOrderedAndProject over the rollup state;
     zero scans of any fact source table in the query plan."""
@@ -178,87 +175,79 @@ def test_q01_from_store_plan_is_state_topk_no_fact_scan(spark):
 
 
 def test_refresh_table_drops_fact_plan_memo(spark, tmp_path):
-    """refresh_table must reach the fact() PLAN memo too: on non-stat-able
-    dirs the memo's mtime token never changes, so the explicit refresh is
-    its only invalidation path (r13 review finding). Materialized-fact
-    pins (bare frames) are deliberate overrides and must survive."""
-    from datawarehouse_project_spark.io import refresh_table
+    """refresh_table must reach the fact() PLAN handle too: on
+    non-stat-able dirs its mtime token never changes, so the explicit
+    refresh is its only invalidation path (r13 review finding). A fact
+    pin is an ordinary entry and is dropped the same way."""
     from datawarehouse_project_spark.plans.star import fact
 
     sf = str(tmp_path / "sff")
     _write_fact_sources(spark, sf, 10, 100.0)
-    fact(spark, sf)
-    assert isinstance(spark._dw_fact_cache[sf], tuple)
-    # unrelated table name: the fact plan stays memoized
+    first = fact(spark, sf)
+    # unrelated table name: the fact plan stays
     refresh_table(spark, sf, "events")
-    assert sf in spark._dw_fact_cache
+    assert fact(spark, sf) is first
     # a fact source table: the derived plan is dropped with it
     refresh_table(spark, sf, "lineitem")
-    assert sf not in spark._dw_fact_cache
+    second = fact(spark, sf)
+    assert second is not first
     # wildcard refresh drops it too
-    fact(spark, sf)
     refresh_table(spark)
-    assert sf not in spark._dw_fact_cache
-    # a materialized-fact pin (bare frame, no token) survives refresh
-    pinned = fact(spark, sf)
-    spark._dw_fact_cache[sf] = pinned
+    assert fact(spark, sf) is not second
+    # so does a refresh of a source under a pin
+    pinned = pin(spark, sf, "fact", fact(spark, sf).limit(3))
+    assert fact(spark, sf) is pinned
     refresh_table(spark, sf, "lineitem")
-    assert spark._dw_fact_cache[sf] is pinned
-    del spark._dw_fact_cache[sf]
+    assert fact(spark, sf) is not pinned
 
 
-def test_serving_memo_retires_stale_roots_without_deleting(spark, tmp_path):
+def _touch(path, mtime_ns):
+    os.makedirs(path, exist_ok=True)
+    os.utime(path, ns=(mtime_ns, mtime_ns))
+
+
+def test_served_roots_retire_without_deleting(tmp_path):
     """A root displaced by staleness must NOT be rmtree'd immediately — a
     previously-returned handle may still hold lazy plans against it
     (deleting turns stale-but-consistent serving into FileNotFoundError
-    mid-use; r13 review finding). Displaced roots are retired and
-    reclaimed at reset()."""
-    import os
-
-    from datawarehouse_project_spark.io import ServingMemo, refresh_table
-
-    memo = ServingMemo("dwtest-retire-", ["events"])
+    mid-use; r13 review finding). Displaced roots are retired, and
+    reclaimed with the rest when the state is collected (or at exit)."""
+    state = SessionState()
     sf = str(tmp_path / "sfr")
-    _write_events(spark, sf, 10, 1.0)
-
-    built = []
+    _touch(f"{sf}/events.parquet", 10**18)
 
     def build(root):
         with open(os.path.join(root, "state.txt"), "w") as f:
-            f.write("v%d" % len(built))
-        built.append(root)
+            f.write("built")
 
-    root1 = memo.get_or_build(sf, build)
-    _write_events(spark, sf, 20, 2.0)  # stale token
-    root2 = memo.get_or_build(sf, build)
+    def served():
+        return state.served_root(sf, "test-retire", ["events"], build)
+
+    root1 = served()
+    assert served() == root1  # same token: no rebuild
+    _touch(f"{sf}/events.parquet", 2 * 10**18)  # stale token
+    root2 = served()
     assert root2 != root1
     # the displaced root is still intact for any live handle...
     assert os.path.exists(os.path.join(root1, "state.txt"))
-    assert root1 in memo.retired
-    # ...and the explicit-refresh path retires (not deletes) the same way
-    refresh_table(spark, sf, "events")
+    # ...and the refresh_table path retires (not deletes) the same way
+    state.drop(sf, "events")
+    root3 = served()
+    assert root3 not in (root1, root2)
     assert os.path.exists(os.path.join(root2, "state.txt"))
-    assert root2 in memo.retired
-    # reset() reclaims live and retired roots alike
-    memo.reset()
-    assert not os.path.exists(root1) and not os.path.exists(root2)
-    assert memo.retired == []
+    del state
+    gc.collect()
+    assert not any(os.path.exists(r) for r in (root1, root2, root3))
 
 
-def test_serving_memo_failed_build_root_is_retired(spark, tmp_path):
+def test_failed_served_build_root_is_retired(tmp_path):
     """A build() that raises must not LEAK its fresh temp root (advisor,
     r16): the dir is retired — still on disk for any handle the failed
     build handed out (the injected-crash restart tests resume on it) —
-    and reclaimed at reset() like every other displaced root."""
-    import os
-
-    import pytest
-
-    from datawarehouse_project_spark.io import ServingMemo
-
-    memo = ServingMemo("dwtest-failbuild-", ["events"])
+    and reclaimed with the state like every other displaced root."""
+    state = SessionState()
     sf = str(tmp_path / "sff")
-    _write_events(spark, sf, 10, 1.0)
+    _touch(f"{sf}/events.parquet", 10**18)
 
     seen = []
 
@@ -267,14 +256,70 @@ def test_serving_memo_failed_build_root_is_retired(spark, tmp_path):
         raise RuntimeError("injected build crash")
 
     with pytest.raises(RuntimeError, match="injected build crash"):
-        memo.get_or_build(sf, crash)
+        state.served_root(sf, "test-failbuild", ["events"], crash)
     (failed,) = seen
-    assert failed in memo.retired  # registered for reclamation...
-    assert os.path.isdir(failed)  # ...but not deleted out from under
-    assert sf not in memo.roots  # and never served as a built root
+    assert os.path.isdir(failed)  # not deleted out from under
 
     # a retry builds a FRESH root (no half-built state is ever reused)
-    ok = memo.get_or_build(sf, lambda root: None)
+    ok = state.served_root(sf, "test-failbuild", ["events"], lambda root: None)
     assert ok != failed
-    memo.reset()
+    del state
+    gc.collect()
     assert not os.path.exists(failed) and not os.path.exists(ok)
+
+
+def test_session_state_nested_builds_run_once_under_contention(tmp_path):
+    """Builds are serialized per key without a lock that nested lookups
+    also take: many threads asking for a served root whose build looks
+    up another key get one value, each build runs once, none deadlock."""
+    import sys
+    import time
+
+    state = SessionState()
+    sf = str(tmp_path / "sfc")
+    _touch(f"{sf}/events.parquet", 10**18)
+    builds = {"inner": 0, "outer": 0}
+
+    def inner():
+        builds["inner"] += 1
+        time.sleep(0.01)
+        return 7
+
+    def outer(root):
+        builds["outer"] += 1
+        assert state.get("tuned", sf, "inner", ["events"], inner) == 7
+
+    got = []
+
+    def worker():
+        got.append(state.served_root(sf, "test-nested", ["events"], outer))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(32)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 32 and len(set(got)) == 1
+    assert builds == {"inner": 1, "outer": 1}
+
+
+def test_session_carries_no_engine_attributes(spark, sf_dir):
+    """Engine state lives in io.SessionState, never in attributes
+    monkeypatched onto the SparkSession: building the fact-plan, served
+    and checkpointing rows leaves no ``_dw_`` attribute behind."""
+    from datawarehouse_project_spark.catalog import all_queries
+
+    qs = all_queries()
+    for name in (
+        "q01_top_revenue_products",
+        "q01_from_store",
+        "affinity_lift_rules",
+    ):
+        qs[name](spark, sf_dir)
+    assert [a for a in dir(spark) if a.startswith("_dw_")] == []

@@ -51,65 +51,3 @@ def test_running_user_totals_converges(spark, tmp_path):
     for uid, row in truth.items():
         assert final[uid].n_events == row.n_events, uid
         assert final[uid].last_seen_us == row.last_seen_us, uid
-
-
-def test_running_user_totals_v2_converges(spark, tmp_path):
-    """The transformWithStateInPandas twin must converge to the same
-    batch ground truth as the v1 operator, with RocksDB-backed state
-    carried across micro-batches. Skips where the state-v2 protobuf
-    wire protocol has no google.protobuf to speak with (this container);
-    the v1 test above pins the identical semantics unconditionally."""
-    import pytest
-
-    from datawarehouse_project_spark.streaming.stateful_v2 import (
-        HAVE_PROTOBUF,
-        run_stateful_stream_v2,
-    )
-
-    if not HAVE_PROTOBUF:
-        pytest.skip("google.protobuf absent: state-v2 protocol unavailable")
-
-    ev = table(spark, "/root/testdata/sf0.001", "events")
-    src = str(tmp_path / "chunks2")
-    ev.withColumn("part", (F.col("event_id") % 3).cast("int")).write.partitionBy(
-        "part"
-    ).mode("overwrite").parquet(src)
-
-    per_batch: dict[int, dict] = {}
-
-    def sink(df, bid):
-        per_batch[bid] = {r.user_id: r for r in df.collect()}
-
-    run_stateful_stream_v2(
-        spark,
-        src,
-        ev.schema,
-        sink,
-        files_per_trigger=1,
-        checkpoint_dir=str(tmp_path / "ckpt2"),
-    )
-    assert len(per_batch) >= 2, "state must be exercised across batches"
-
-    final: dict[int, object] = {}
-    for bid in sorted(per_batch):
-        final.update(per_batch[bid])
-
-    truth = {
-        r.user_id: r
-        for r in spark.read.schema(ev.schema)
-        .parquet(src)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("total_value"),
-            F.unix_micros(F.max("ts")).alias("last_seen_us"),
-        )
-        .collect()
-    }
-    assert set(final) == set(truth)
-    for uid, row in truth.items():
-        assert final[uid].n_events == row.n_events, uid
-        assert final[uid].last_seen_us == row.last_seen_us, uid
-        assert abs(final[uid].total_value - row.total_value) < 1e-9 * max(
-            abs(row.total_value), 1.0
-        ), uid
