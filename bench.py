@@ -306,8 +306,9 @@ def main() -> None:
     # 32-core warm fact-agg run 32-task waves over ~600k rows, slower
     # than the same queries at 8 cores (driver's own c8/c32 pair). Row
     # counts are metadata-only parquet count-stars (fact row count ==
-    # lineitem's by construction — inner joins on intact FKs, validated
-    # in tests); their cost lands here in cache_build_sec as always.
+    # lineitem's by construction — inner joins on intact FKs — and
+    # asserted on the fact's cached count below); their cost lands here
+    # in cache_build_sec as always.
     n_fact = table(spark, sf_dir, "lineitem").count()
     n_events = table(spark, sf_dir, "events").count()
     shared = [
@@ -318,7 +319,11 @@ def main() -> None:
     ]
     for fr in shared:
         fr.cache()
-        fr.count()
+    cached_rows = [fr.count() for fr in shared]
+    assert cached_rows[0] == n_fact, (
+        f"fact has {cached_rows[0]} rows, lineitem {n_fact}: the fact's "
+        "spread width used the wrong row count"
+    )
     pin(spark, sf_dir, "fact", shared[0])
     pin(spark, sf_dir, "events", shared[3])
     cache_build = round(time.perf_counter() - t0, 3)

@@ -614,8 +614,8 @@ EWMA_ALPHA = 0.125
 @register(
     "events_ewma_by_user",
     driver_facing=False,  # r12 rotation: driver-green r9–r11; the EWMA fold
-    # stays pinned by the pytest oracle, the SQL twin, and the grouped-map
-    # Pandas twin equality test. Slot ceded to the r10-crop promotions.
+    # stays pinned by the pytest oracle and the grouped-map Pandas twin
+    # equality test. Slot ceded to the r10-crop promotions.
     oracle=f"""
 WITH ordered AS (
     SELECT user_id,

@@ -372,15 +372,11 @@ def lexical_topk_served(
     return _score_and_rank(matched.join(doclens, "doc_id"), qterms, dfm, stats, k)
 
 
-def queries_rows_sql() -> str:
-    """The fixed query set as SQL VALUES rows — the single source for
-    the DuckDB oracle AND the Spark-SQL twin (plans/sql_twins.py), so
-    the two surfaces cannot drift."""
-    return ", ".join(f"({qid}, '{qt}')" for qid, qt in LEXICAL_QUERIES)
-
-
 def _queries_values_sql() -> str:
-    return f"(VALUES {queries_rows_sql()}) AS q(query_id, qtext)"
+    """The fixed query set as a SQL VALUES relation — the oracles' copy
+    of LEXICAL_QUERIES, so oracle and builders cannot drift."""
+    rows = ", ".join(f"({qid}, '{qt}')" for qid, qt in LEXICAL_QUERIES)
+    return f"(VALUES {rows}) AS q(query_id, qtext)"
 
 
 #: One oracle for both the compute-from-text and the serve-from-store

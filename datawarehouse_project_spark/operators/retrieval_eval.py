@@ -310,11 +310,11 @@ def eval_retrievers(
     return retrieval_metrics(lists, qrels)
 
 
-#: Dialect-neutral eval tail (lists -> qrels -> metrics) shared verbatim
-#: by the DuckDB oracle and the Spark-SQL twin (plans/sql_twins.py) —
-#: both engines run the SAME metric arithmetic; only the tokenizer CTEs
-#: above it differ by dialect.
-_EVAL_TAIL = f"""lists AS (
+#: The eval oracle: the hybrid retrievers' CTEs, then lists -> qrels ->
+#: metrics in the same integer arithmetic as the DataFrame builder.
+_EVAL_ORACLE = f"""
+WITH {_HYBRID_CTES},
+lists AS (
     SELECT 'bm25' AS retriever, query_id, doc_id,
            CAST(rnk_a AS BIGINT) AS rnk
     FROM bm25_ranked WHERE rnk_a <= {LEXICAL_K}
@@ -365,11 +365,7 @@ SELECT h.retriever, h.query_id,
             ELSE CAST(0 AS BIGINT) END AS recall_at_k_scaled
 FROM hits h
 LEFT JOIN nrel n ON n.query_id = h.query_id
-"""
 
-_EVAL_ORACLE = f"""
-WITH {_HYBRID_CTES},
-{_EVAL_TAIL}
 """
 
 
@@ -387,7 +383,7 @@ DISC_SCALED = {
 
 def _disc_case_sql(col: str) -> str:
     """The discount lookup as one CASE expression over ``col`` — the
-    same string builds the Spark expression and both SQL texts."""
+    same string builds the Spark expression and the oracle text."""
     whens = " ".join(
         f"WHEN {col} = {i} THEN CAST({v} AS BIGINT)"
         for i, v in DISC_SCALED.items()
@@ -472,9 +468,11 @@ def ndcg_retrievers(
     )
 
 
-#: Dialect-neutral nDCG tail — shared verbatim by the DuckDB oracle and
-#: the Spark-SQL twin, exactly like _EVAL_TAIL.
-_NDCG_TAIL = f"""lists AS (
+#: The nDCG oracle: gains, DCG and ideal DCG over the same scaled-integer
+#: discount literals as the DataFrame builder.
+_NDCG_ORACLE = f"""
+WITH {_HYBRID_CTES},
+lists AS (
     SELECT 'bm25' AS retriever, query_id, doc_id,
            CAST(rnk_a AS BIGINT) AS rnk
     FROM bm25_ranked WHERE rnk_a <= {LEXICAL_K}
@@ -530,11 +528,7 @@ SELECT d.retriever, d.query_id, d.dcg_scaled,
             ELSE CAST(0 AS BIGINT) END AS ndcg_at_k_scaled
 FROM dcg d
 LEFT JOIN idcg i ON i.query_id = d.query_id
-"""
 
-_NDCG_ORACLE = f"""
-WITH {_HYBRID_CTES},
-{_NDCG_TAIL}
 """
 
 
@@ -630,9 +624,11 @@ def leg_agreement(
     )
 
 
-#: Dialect-neutral agreement tail — shared by the DuckDB oracle and the
-#: Spark-SQL twin like the other eval tails.
-_AGREE_TAIL = f"""shared AS (
+#: The leg-agreement oracle: overlap@k and Kendall-tau pair counts of
+#: the two lexical legs.
+_AGREE_ORACLE = f"""
+WITH {_HYBRID_CTES},
+shared AS (
     SELECT a.query_id, a.doc_id,
            CAST(a.rnk_a AS BIGINT) AS rnk_a,
            CAST(b.rnk_b AS BIGINT) AS rnk_b
@@ -671,11 +667,7 @@ SELECT o.query_id, o.overlap_at_k,
             ELSE CAST(0 AS BIGINT) END AS tau_scaled
 FROM overlap o
 LEFT JOIN counts c ON c.query_id = o.query_id
-"""
 
-_AGREE_ORACLE = f"""
-WITH {_HYBRID_CTES},
-{_AGREE_TAIL}
 """
 
 

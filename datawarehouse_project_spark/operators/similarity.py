@@ -573,38 +573,6 @@ def _duck_ivf_probes(e: str, n_probes: int = N_PROBES) -> str:
     )
 
 
-def spark_ivf_probes_sql(e: str, n_probes: int = N_PROBES) -> str:
-    """Spark-SQL text twin of ``_ivf_probes_expr``."""
-    items = []
-    for cid, cent in enumerate(ivf_centroids()):
-        lit = "array(" + ", ".join(repr(v) for v in cent) + ")"
-        d = (
-            f"aggregate(zip_with({e}, {lit}, "
-            "(x, m) -> (CAST(x AS DOUBLE) - m) * (CAST(x AS DOUBLE) - m)), "
-            "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-        items.append(f"named_struct('d', {d}, 'c', {cid})")
-    return (
-        f"transform(slice(array_sort(array({', '.join(items)})), 1, {n_probes}), "
-        "s -> s.c)"
-    )
-
-
-def spark_ivf_cluster_sql(e: str) -> str:
-    """Spark-SQL text twin of ``_ivf_cluster_expr`` (used by the dual
-    SQL surface in plans/sql_twins.py)."""
-    items = []
-    for cid, cent in enumerate(ivf_centroids()):
-        lit = "array(" + ", ".join(repr(v) for v in cent) + ")"
-        d = (
-            f"aggregate(zip_with({e}, {lit}, "
-            "(x, m) -> (CAST(x AS DOUBLE) - m) * (CAST(x AS DOUBLE) - m)), "
-            "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-        items.append(f"named_struct('d', {d}, 'c', {cid})")
-    return f"array_min(array({', '.join(items)})).c"
-
-
 def _ivf_topk_oracle() -> str:
     """Lazy: interpolating the trained centroids must not run at import."""
     return f"""

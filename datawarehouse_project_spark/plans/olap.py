@@ -273,10 +273,7 @@ def q05_monthly_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Reference: olap_queries.sql:104-124. MySQL GROUP_CONCAT has no defined
 # order; we implement the *intent* form (sorted combination) so pairs are
 # order-insensitive — noted divergence (SURVEY §4.3.1).
-@register(
-    "q06_product_affinity",
-    headline=True,
-    oracle=f"""
+_Q06_ORACLE = f"""
 WITH {FACT_CTE},
 order_products AS (
     SELECT order_id,
@@ -295,8 +292,10 @@ SELECT product_combination, pair_count
 FROM pair_counts
 ORDER BY pair_count DESC, product_combination
 LIMIT 5
-""",
-)
+"""
+
+
+@register("q06_product_affinity", headline=True, oracle=_Q06_ORACLE)
 def q06_product_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     order_products = (
         fact(spark, sf_dir)
@@ -696,6 +695,18 @@ def q10_store_quarterly_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT store_name, sales_quarter, total_quarterly_sales "
         "FROM store_quarterly_sales"
     )
+
+
+#: The Spark-SQL text of the reference queries whose oracle uses DuckDB-only
+#: syntax (catalog.spark_sql_surface; the other eight run their oracle
+#: verbatim): the oracle with that one spelling swapped.
+SPARK_SQL = {
+    "q06_product_affinity": _Q06_ORACLE.replace(
+        "string_agg(product_name, ', ' ORDER BY product_name)",
+        "array_join(array_sort(collect_list(product_name)), ', ')",
+    ),
+    "q09_daily_spikes": _Q09_ORACLE.replace("AS VARCHAR)", "AS STRING)"),
+}
 
 
 # --------------------------------------------------------------------------

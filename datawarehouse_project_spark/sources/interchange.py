@@ -57,7 +57,8 @@ def register_orc_views(
     spark: SparkSession, out_dir: str, tables: list[str] | None = None
 ) -> None:
     """Register the ORC copies as temp views named like the engine
-    tables, so any ``spark_sql_surface()`` text or catalog query whose
-    builder resolves views runs unchanged over the interchange copies."""
+    tables, so a reference query's ``spark_sql_surface()`` text, or a
+    catalog query whose builder resolves views, runs unchanged over the
+    interchange copies."""
     for name in tables if tables is not None else TABLES:
         read_orc_table(spark, out_dir, name).createOrReplaceTempView(name)

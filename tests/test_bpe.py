@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from datawarehouse_project_spark.catalog import all_queries
@@ -17,15 +18,11 @@ from datawarehouse_project_spark.operators.bpe import (
     train_bpe_merges,
 )
 
-
-import pytest
-
-# r22 fast-lane split, second pass (measured: the first fast lane still
-# ran 16.5 min on this box — over the driver-timeout safety margin):
-# this module's VALUE semantics are gated by the fast lane's sf0.001
-# oracle-parity sweep; its deeper coverage runs in the slow lane
-# (`pytest -m slow`, the round-end full sweep).
-pytestmark = pytest.mark.slow
+# BPE has no DuckDB oracle (the trainer is iterative), so no oracle sweep
+# checks its values: the golden differentials below are its only value
+# gate. The ones that train over the test corpus run in the slow lane
+# (`pytest -m slow`); the pure-Python batch selection and the one-row
+# greedy-merge case run in the fast lane.
 
 
 def _py_bpe(word_counts: dict[str, int], n_merges: int):
@@ -79,6 +76,7 @@ def _word_counts(spark, sf_dir):
     }
 
 
+@pytest.mark.slow
 def test_bpe_matches_pure_python_reference(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
     got = train_bpe_merges(spark, docs, N_MERGES)
@@ -88,6 +86,7 @@ def test_bpe_matches_pure_python_reference(spark, sf_dir):
     assert any(len(left) > 1 or len(right) > 1 for left, right, _ in got)
 
 
+@pytest.mark.slow
 def test_bpe_registered_table_shape(spark, sf_dir):
     out = all_queries()["bpe_merge_rules"](spark, sf_dir).collect()
     assert len(out) == N_MERGES
@@ -120,6 +119,7 @@ def test_bpe_greedy_merge_on_repeats(spark):
     assert rules2[1][:2] == ("aa", EOW)
 
 
+@pytest.mark.slow
 def test_bpe_tokenize_matches_reference_segmentation(spark, sf_dir):
     """Segmenting the vocabulary with the learned rules must match the
     pure-Python application of the same rules word-for-word, and the
@@ -215,6 +215,7 @@ def _py_bpe_batched(word_counts: dict[str, int], n_merges: int, m: int):
     return rules
 
 
+@pytest.mark.slow
 def test_bpe_batched_matches_batched_reference(spark, sf_dir):
     """The rules_per_pass=M trainer must equal the independent pure-Python
     implementation of the same batched selection, bit-for-bit — the same
@@ -227,6 +228,7 @@ def test_bpe_batched_matches_batched_reference(spark, sf_dir):
         assert got == want, m
 
 
+@pytest.mark.slow
 def test_bpe_batched_m1_is_sequential(spark, sf_dir):
     """rules_per_pass=1 IS the sequential trainer (the default path the
     registered queries use): identical to the textbook reference."""
@@ -235,6 +237,7 @@ def test_bpe_batched_m1_is_sequential(spark, sf_dir):
     assert got == _py_bpe(_word_counts(spark, sf_dir), N_MERGES)
 
 
+@pytest.mark.slow
 def test_bpe_batched_k48_in_quarter_rounds(spark, sf_dir):
     """The VERDICT r9 #6 acceptance: K=48 rules in <= K/4 Spark passes
     with rules_per_pass=4, valid counts, no duplicate merged symbol."""

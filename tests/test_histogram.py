@@ -98,11 +98,9 @@ def test_histogram_percentile_boundary_is_exact_across_engines(spark, tmp_path):
     """Advisor r10: q·total evaluated in DOUBLE disagrees with DECIMAL on
     exact boundaries (0.9*10 → 9.000000000000002 rejects cum=9; DuckDB's
     DECIMAL product accepts it). Plant both boundary fixtures — cum=9 of
-    total=10 at p90, cum=99 of total=100 at p99 — and pin the builder,
-    the DuckDB oracle, and the Spark SQL twin to the SAME (correct) bin."""
+    total=10 at p90, cum=99 of total=100 at p99 — and pin the builder
+    and the DuckDB oracle to the SAME (correct) bin."""
     import duckdb
-
-    from datawarehouse_project_spark.plans.sql_twins import SPARK_SQL
 
     # 10 values: bins 0..9 one each → at p90 the boundary bin is 8
     # (cum=9 ≥ 0.9·10); 100 values: bins 0..99 → at p99 bin 98 (cum=99).
@@ -118,7 +116,7 @@ def test_histogram_percentile_boundary_is_exact_across_engines(spark, tmp_path):
     assert got["t10"]["p90_lo"] == 8.0
     assert got["t100"]["p99_lo"] == 98.0
 
-    # Same fixture through both SQL surfaces.
+    # Same fixture through the DuckDB oracle.
     pq = str(tmp_path / "events.parquet")
     df.write.parquet(pq)
     con = duckdb.connect()
@@ -133,19 +131,6 @@ def test_histogram_percentile_boundary_is_exact_across_engines(spark, tmp_path):
     }
     assert duck["t10"][1 + 1] == 8.0  # (event_type, p50, p90, p99)
     assert duck["t100"][3] == 98.0
-
-    df.createOrReplaceTempView("events")
-    try:
-        twin = {
-            r.event_type: r.asDict()
-            for r in spark.sql(
-                SPARK_SQL["events_value_histogram_percentiles"]
-            ).collect()
-        }
-    finally:
-        spark.catalog.dropTempView("events")
-    assert twin["t10"]["p90_lo"] == 8.0
-    assert twin["t100"]["p99_lo"] == 98.0
 
 
 def test_histogram_registered_query_matches_duckdb_exactly(spark, sf_correct_dir):

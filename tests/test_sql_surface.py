@@ -1,10 +1,11 @@
-"""The catalog is dual-surface: every query runs as a DataFrame chain AND
-as ``spark.sql`` text (SURVEY §2.11 — the reference's workload is SQL
-text). ``catalog.spark_sql_surface()`` maps each query to Spark-dialect
-SQL: dialect-neutral oracle strings verbatim, translated twins for the
-rest (plans/sql_twins.py). This test runs every entry through ``spark.sql``
-over registered temp views and asserts value-identity with the DataFrame
-builder — float folds share operand order, so identity is exact."""
+"""The reference's ten queries run as ``spark.sql`` text as well as
+DataFrame chains (SURVEY §2.11 — the reference's workload is SQL text,
+SQL/olap_queries.sql Q1-Q10). ``catalog.spark_sql_surface()`` maps each
+to Spark-dialect SQL: the DuckDB oracle verbatim, or for q06 and q09 the
+Spark spelling in ``plans.olap.SPARK_SQL``. This test runs every entry
+through ``spark.sql`` over registered temp views and asserts
+value-identity with the DataFrame builder — float folds share operand
+order, so identity is exact."""
 
 from __future__ import annotations
 
@@ -14,24 +15,22 @@ from datawarehouse_project_spark.catalog import all_queries, spark_sql_surface
 from datawarehouse_project_spark.io import TABLES, load_all
 from tests.oracle_check import canon_rows
 
-
-import pytest
-
-# r22 fast-lane split, second pass (measured: the first fast lane still
-# ran 16.5 min on this box — over the driver-timeout safety margin):
-# this module's VALUE semantics are gated by the fast lane's sf0.001
-# oracle-parity sweep; its deeper coverage runs in the slow lane
-# (`pytest -m slow`, the round-end full sweep).
-pytestmark = pytest.mark.slow
-
 SURFACE = spark_sql_surface()
 
 
-def test_sql_surface_covers_most_of_catalog():
-    """SURVEY §2.11 promise: the SQL text surface is the norm, not the
-    exception. (The remainder is rows-only sketches/streaming/stubs with
-    no SQL-expressible contract.)"""
-    assert len(SURFACE) >= 30, sorted(SURFACE)
+def test_sql_surface_is_the_ten_reference_queries():
+    assert list(SURFACE) == [
+        "q01_top_revenue_products",
+        "q02_quarterly_growth_store",
+        "q03_supplier_contribution",
+        "q04_seasonal_product_sales",
+        "q05_monthly_volatility",
+        "q06_product_affinity",
+        "q07_rollup_yearly",
+        "q08_halfyearly_vs_yearly",
+        "q09_daily_spikes",
+        "q10_store_quarterly_view",
+    ]
 
 
 @pytest.fixture(scope="module")
