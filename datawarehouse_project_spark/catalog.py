@@ -48,7 +48,7 @@ DRIVER_WINDOW = 50
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The driver-facing acceptance catalog (≤ DRIVER_WINDOW entries).
 
-    Exemplars / superseded variants / quadratic baselines stay registered
+    Exemplars / quadratic baselines stay registered
     with ``driver_facing=False`` — see :func:`all_queries` — and keep full
     pytest oracle coverage, but are excluded here so the driver's bounded
     sweep verifies every name this function returns.

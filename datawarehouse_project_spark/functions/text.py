@@ -9,7 +9,7 @@ Portability contract: every hash here is reproducible in ANSI SQL
     H(s) = first 15 hex chars of md5(s) as a BIGINT  (60 bits, positive)
 Spark:   CAST(CONV(SUBSTRING(MD5(s),1,15),16,10) AS BIGINT)
 DuckDB:  ('0x' || substr(md5(s),1,15))::BIGINT
-so minhash signatures, simhash values, LSH bucket ids and fingerprints are
+so minhash signatures, simhash values, LSH band keys and fingerprints are
 exact integers, identical across engines — and across cluster sizes, since
 none of them depend on partitioning.
 """
@@ -36,9 +36,6 @@ MINHASH_COEFFS: list[tuple[int, int]] = [
     (1588635695, 3611941),
     (1223106847, 9999999),
 ]
-
-#: Number of sign bits in the text simhash / embedding hyperplane LSH.
-SIMHASH_BITS = 16
 
 
 def portable_hash(c: Column) -> Column:
@@ -132,30 +129,6 @@ def minhash_signature(hashed: Column) -> list[Column]:
     return [F.array_min(F.transform(hashed, perm(a, b))) for a, b in MINHASH_COEFFS]
 
 
-def simhash(hashed: Column, bits: int = SIMHASH_BITS) -> Column:
-    """Frequency-weighted sign-bit simhash over pre-hashed words
-    (see ``hash_array``).
-
-    bit_j = 1 iff sum over words of (+1 if bit j of H(w) else -1) >= 0;
-    value = sum(bit_j << j). Integer arithmetic end-to-end => exact. The
-    bit test is modulo-based ((h % 2^(j+1)) >= 2^j) rather than shift/AND so
-    the identical expression runs on any ANSI engine.
-    """
-
-    def bit_sign(j: int):
-        return lambda h: F.when(
-            (h % F.lit(1 << (j + 1))) >= F.lit(1 << j), 1
-        ).otherwise(-1)
-
-    total = F.lit(0)
-    for j in range(bits):
-        contrib = F.aggregate(
-            F.transform(hashed, bit_sign(j)), F.lit(0), lambda acc, x: acc + x
-        )
-        total = total + F.when(contrib >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return total.cast("bigint")
-
-
 #: 64-bit simhash: the PRODUCTION signature width (Manku et al., WWW'07 —
 #: Google's web-scale layout). Bits 0..31 test the low word-hash, bits
 #: 32..63 the high word-hash (two 60-bit values from one md5). The value
@@ -173,8 +146,9 @@ def simhash64(hashed_lo: Column, hashed_hi: Column) -> Column:
     hashes (see ``portable_hash``/``portable_hash_hi`` — one md5 each
     element, two values). bit_j = 1 iff sum over words of (+1 if bit j'
     of the word-hash else -1) >= 0, with j' = j % 32 and the hash picked
-    by j // 32. Integer arithmetic end-to-end, modulo-based bit test —
-    exact and ANSI-portable, like the 16-bit form."""
+    by j // 32. Integer arithmetic end-to-end => exact. The bit test is
+    modulo-based ((h % 2^(j+1)) >= 2^j) rather than shift/AND so the
+    identical expression runs on any ANSI engine."""
 
     def bit_sign(j: int):
         return lambda h: F.when(
@@ -208,7 +182,6 @@ def rolling_fingerprint(ws: Column) -> Column:
 # DuckDB-side templates for the same primitives (used by oracle strings).
 
 DUCK_H = "(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
-DUCK_H_HI = "(('0x' || substr(md5({x}), 16, 15))::BIGINT)"
 
 
 def duck_minhash_exprs(shingle_col: str = "sg") -> list[str]:

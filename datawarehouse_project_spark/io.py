@@ -27,10 +27,6 @@ TABLES = [
     "embeddings",
 ]
 
-#: Dimensions that stay small at any scale factor (bounded real-world
-#: cardinality) and are always safe to broadcast.
-ALWAYS_BROADCAST = {"region", "nation"}
-
 
 def sf_from_dir(sf_dir: str) -> float:
     """Best-effort scale factor from a data dir's basename (``.../sf0.1``

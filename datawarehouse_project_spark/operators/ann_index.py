@@ -374,7 +374,7 @@ class IvfVectorIndex:
         bits, query side quantized inline (broadcast-sized). The corpus
         side never touches float embeddings or sign arithmetic — the
         measured 1.7×-faster / 15×-smaller scan. Integer-exact, so
-        results are bit-identical to the inline operator."""
+        results are bit-identical to the in-query quantization oracle."""
         words = self._stored_words(spark)
         q = sign_quantize(queries).select(
             F.col("vec_id").alias("query_id"),
@@ -413,7 +413,7 @@ class IvfVectorIndex:
         exact cosine re-ranks survivors against the float ``embeddings``
         table (point lookups of candidate_k × |Q| rows, never a corpus
         scan of float math). Scores use the repo's deterministic folds,
-        so results are bit-identical to the inline operator."""
+        so results are bit-identical to the in-query quantization oracle."""
         cand = self.query_hamming_topk(
             spark, queries, top_k=candidate_k
         ).select("query_id", "neighbor_id")

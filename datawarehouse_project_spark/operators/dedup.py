@@ -8,7 +8,8 @@ minhash/LSH oracle-checkable):
 * minhash + LSH    — 3-word-shingle minhash signatures computed per-row
                      (shuffle-free), banded into buckets, candidate pairs by
                      band-bucket equi-join
-* simhash          — 16-bit frequency-weighted sign hash per doc, per-row
+* simhash          — 64-bit frequency-weighted sign hash per doc, per-row,
+                     near-dup pairs by block-split bucket join
 * n-gram Jaccard   — exact overlap via a shingle inverted index (shuffle on
                      shingle), the verification stage after LSH candidates
 
@@ -33,7 +34,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import (
     DUCK_DOCWORDS,
-    DUCK_H,
     MINHASH_COEFFS,
     P,
     SIMHASH64_BITS,
@@ -41,7 +41,6 @@ from ..functions.text import (
     hash_array,
     hash_array_sql,
     minhash_signature_sql,
-    simhash,
     simhash64,
     word_shingles,
     word_shingles_sql,
@@ -151,8 +150,7 @@ def dedup_exact_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_minhash_signatures",
     driver_facing=False,  # signature listing: its integers feed (and are
     # transitively pinned by) the driver rows for the LSH pairs and
-    # components; the slot goes to the SCD2 history (same demotion
-    # precedent as the simhash signature listing below)
+    # components; the slot goes to the SCD2 history
     oracle=f"WITH {_DUCK_SIG} SELECT doc_id, {', '.join(_MH_COLS)} FROM sig",
 )
 def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,47 +242,6 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             match_count.cast("bigint").alias("n_matching_minhash"),
         )
         .distinct()
-    )
-
-
-# --------------------------------------------------------------------------
-# Bit tests run on H(w) % P (hash computed once per word, shared across all
-# 16 bits) — the Spark side does the same via hash_array.
-_DUCK_SIMHASH_BITS = " + ".join(
-    f"(CASE WHEN list_sum(list_transform(hw, h -> CASE WHEN "
-    f"(h % {1 << (j + 1)}) >= {1 << j} THEN 1 ELSE -1 END)) "
-    f">= 0 THEN {1 << j} ELSE 0 END)"
-    for j in range(16)
-)
-
-
-@register(
-    "dedup_simhash",
-    driver_facing=False,  # signature listing; dedup_simhash_pairs pins the same integers via its oracle
-    oracle=f"""
-WITH {DUCK_DOCWORDS},
-hashed AS (
-    SELECT doc_id,
-           list_transform(ws, w -> {DUCK_H.format(x="w")} % {P}) AS hw
-    FROM docwords
-    WHERE len(ws) >= 1
-)
-SELECT doc_id, ({_DUCK_SIMHASH_BITS})::BIGINT AS simhash_val
-FROM hashed
-""",
-)
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit simhash per document; near-dups share values at small hamming
-    distance. Per-row expression — no shuffle at any scale."""
-    prepare(spark)
-    docs = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    return (
-        docs.withColumn("ws", words("text"))
-        .filter(F.size("ws") >= 1)
-        .withColumn("hw", hash_array(F.col("ws")))
-        .select("doc_id", simhash(F.col("hw")).alias("simhash_val"))
     )
 
 
@@ -589,122 +546,15 @@ def dedup_minhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 #: Simhash near-dup search: emit pairs at hamming distance <= SIMHASH_HD_MAX.
 SIMHASH_HD_MAX = 3
-#: Candidate generation is the block-split of Manku et al. (WWW'07, the
-#: Google simhash dedup paper): split the b-bit value into HD_MAX+1
-#: blocks; by pigeonhole any pair within hamming distance HD_MAX agrees
-#: EXACTLY on at least one block, so an equi-join on (block, block_value)
-#: has guaranteed 100% recall — unlike probabilistic LSH banding — and
-#: exact bit_count(xor) verification removes false positives.
-_SH_BLOCKS = SIMHASH_HD_MAX + 1
-_SH_BLOCK_BITS = 16 // _SH_BLOCKS
-_SH_BLOCK_MASK = (1 << _SH_BLOCK_BITS) - 1
-
-
-def _duck_sh_blocks() -> str:
-    selects = [
-        f"SELECT doc_id, {j} AS block, "
-        f"(simhash_val >> {j * _SH_BLOCK_BITS}) & {_SH_BLOCK_MASK} AS bval FROM sig"
-        for j in range(_SH_BLOCKS)
-    ]
-    return " UNION ALL ".join(selects)
-
-
-@register(
-    "dedup_simhash_pairs",
-    driver_facing=False,  # 16-bit toy layout, superseded by the 64-bit
-    # production twin dedup_simhash64_pairs below; stays oracle-checked in
-    # pytest at both scale factors
-    oracle=f"""
-WITH {DUCK_DOCWORDS},
-hashed AS (
-    SELECT doc_id,
-           list_transform(ws, w -> {DUCK_H.format(x="w")} % {P}) AS hw
-    FROM docwords
-    WHERE len(ws) >= 1
-),
-sig AS (SELECT doc_id, ({_DUCK_SIMHASH_BITS})::BIGINT AS simhash_val FROM hashed),
-blocks AS ({_duck_sh_blocks()}),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM blocks a JOIN blocks b
-      ON a.block = b.block AND a.bval = b.bval AND a.doc_id < b.doc_id
-)
-SELECT c.doc_a, c.doc_b,
-       CAST(bit_count(xor(sa.simhash_val, sb.simhash_val)) AS BIGINT) AS hamming
-FROM cand c
-JOIN sig sa ON c.doc_a = sa.doc_id
-JOIN sig sb ON c.doc_b = sb.doc_id
-WHERE bit_count(xor(sa.simhash_val, sb.simhash_val)) <= {SIMHASH_HD_MAX}
-""",
-)
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simhash hamming-distance neighbors (hamming <= SIMHASH_HD_MAX) via
-    the Manku block-split bucket join — candidates from an EQUI-join on
-    (block, block_value), verified by exact popcount on the signature xor.
-    No nested loop anywhere (plan-asserted).
-
-    Scale posture: the signature is per-row/shuffle-free; the candidate
-    join shuffles on (block, bval). Bucket population is corpus_size /
-    2^block_bits per block, so block WIDTH (and hence total simhash width
-    = blocks x width) must grow with the corpus: the 16-bit/4x4 layout
-    here is pinned by the 16-bit oracle-checked simhash; a 100 TB corpus
-    runs the same plan at 64-bit signatures with 4x16-bit blocks (65k
-    buckets/block), which is exactly the production Google layout. A hot
-    bucket then means a true near-dup cluster, which AQE skew-split
-    handles like the minhash-LSH join above.
-
-    Round-8 scale measurement: at 50k docs this 16-bucket layout runs
-    ~38 s vs ~7 s for the 64-bit twin on identical data — the quadratic
-    bucket term dominating exactly as the math above predicts — so the
-    operator now refuses large corpora outright (``require_small``),
-    same contract as the O(N^2) ground-truth baselines."""
-    sig = require_small(
-        dedup_simhash(spark, sf_dir), 20_000, "dedup_simhash_pairs (16-bit)"
-    )
-    blocks = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("block"),
-                        F.shiftright(F.col("simhash_val"), j * _SH_BLOCK_BITS)
-                        .bitwiseAND(F.lit(_SH_BLOCK_MASK))
-                        .alias("bval"),
-                    )
-                    for j in range(_SH_BLOCKS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.block", "bk.bval")
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("simhash_val").alias("sh_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("simhash_val").alias("sh_b"))
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(hamming <= SIMHASH_HD_MAX)
-        .select("doc_a", "doc_b", hamming.cast("bigint").alias("hamming"))
-    )
-
-
-# --------------------------------------------------------------------------
 #: 64-bit simhash — the PRODUCTION layout (Manku et al. WWW'07, Google's
 #: web-scale configuration): 64 sign bits, hamming <= 3, candidates from a
-#: 4-block x 16-bit split. 16-bit block values give 65k buckets per block,
-#: so bucket population is corpus/65536 per block at any scale — the
-#: property the 16-bit toy layout (above) lacks.
+#: 4-block x 16-bit split. Candidate generation is the block-split: split
+#: the b-bit value into HD_MAX+1 blocks; by pigeonhole any pair within
+#: hamming distance HD_MAX agrees EXACTLY on at least one block, so an
+#: equi-join on (block, block_value) has guaranteed 100% recall — unlike
+#: probabilistic LSH banding — and exact bit_count(xor) verification
+#: removes false positives. 16-bit block values give 65k buckets per
+#: block, so bucket population is corpus/65536 per block at any scale.
 _SH64_BLOCKS = SIMHASH_HD_MAX + 1
 _SH64_BLOCK_BITS = SIMHASH64_BITS // _SH64_BLOCKS
 _SH64_BLOCK_MASK = (1 << _SH64_BLOCK_BITS) - 1
@@ -792,13 +642,20 @@ def dedup_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit simhash hamming neighbors (hamming <= SIMHASH_HD_MAX) — the
     PRODUCTION layout: 4 blocks x 16 bits, candidates from the (block,
     block_value) EQUI-join (pigeonhole guarantees 100% recall at hd <= 3),
-    exact popcount on the signature xor verifies. Same plan as the 16-bit
-    twin, but 65,536 buckets per block instead of 16: bucket population
-    is corpus/65k per block, so candidate fan-out stays bounded on a
-    100 TB corpus where the 16-bit layout would degenerate into 16
-    giant buckets. Signed-BIGINT packing (bit 63 = -2^63) keeps the
-    value, the xor and the popcount identical across Spark and DuckDB.
-    No nested loop anywhere (plan-asserted)."""
+    exact popcount on the signature xor verifies.
+
+    Scale posture: the signature is per-row/shuffle-free; the candidate
+    join shuffles on (block, bval). Bucket population is corpus_size /
+    2^block_bits per block, so block WIDTH (and hence total simhash width
+    = blocks x width) must grow with the corpus: 65,536 buckets per block
+    keep candidate fan-out bounded on a 100 TB corpus, where a 16-bit
+    signature (4x4-bit blocks) would degenerate into 16 giant buckets
+    (measured at 50k docs: ~38 s for that layout vs ~7 s for this one,
+    PERFORMANCE.md). A hot bucket then means a true near-dup cluster,
+    which AQE skew-split handles like the minhash-LSH join above.
+    Signed-BIGINT packing (bit 63 = -2^63) keeps the value, the xor and
+    the popcount identical across Spark and DuckDB. No nested loop
+    anywhere (plan-asserted)."""
     sig = simhash64_frame(spark, sf_dir)
     blocks = sig.select(
         "doc_id",

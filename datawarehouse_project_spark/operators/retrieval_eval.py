@@ -275,21 +275,6 @@ def _lists_and(
     return lists, (out[2] if extra is not None else None)
 
 
-def tagged_lists(
-    counts: DataFrame,
-    doclens: DataFrame,
-    queries: DataFrame,
-    k: int = LEXICAL_K,
-) -> DataFrame:
-    """All three retrievers' truncated rankings served from the same
-    maintained state, tagged ``(retriever, query_id, doc_id, rnk)`` —
-    the shared input of both eval rows (MRR/recall and nDCG). Each leg
-    is materialized once (:func:`_materialize_many`) so the union
-    branch and the fused leg read ONE execution per probe."""
-    lists, _ = _lists_and(counts, doclens, queries, k)
-    return lists
-
-
 def eval_retrievers(
     counts: DataFrame,
     doclens: DataFrame,

@@ -240,7 +240,23 @@ def sample_lang_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pass 1 aggregates one dictionary-encoded column (map-side
     partial agg); the 5-row rate map broadcasts back onto the scan, so
-    the row filter adds zero shuffle at any corpus size."""
+    the row filter adds zero shuffle at any corpus size.
+
+    The rate map is a lazy ``localCheckpoint``: it feeds BOTH the
+    kept-filter broadcast and the final census join, and without it each
+    consumer re-runs the lang-counting pass (3 documents scans per run;
+    2 with it). Caveats, all acceptable for a language-cardinality frame
+    that rebuilds in seconds:
+
+    1. FRESHNESS — the checkpoint materializes once per BUILT frame, so a
+       caller that holds the returned frame across a source rewrite
+       re-reads stale rates; rebuild it via the catalog.
+    2. RELIABILITY — the checkpoint blocks have no lineage: executor loss
+       between materialization and the census join's read fails the
+       query instead of recomputing.
+    3. ACCRUAL — each build checkpoints a fresh RDD, released only when
+       the JVM Dataset is GC'd (``io.release_checkpoint`` releases
+       eagerly)."""
     prepare(spark)
     docs = table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_total"))
@@ -257,20 +273,7 @@ def sample_lang_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("keep_permille"),
-        # lazy localCheckpoint (r22): `rates` feeds BOTH the kept-filter
-        # broadcast and the final census join — without it each consumer
-        # re-runs the full lang-counting pass (3 documents scans per run;
-        # 2 after). Caveats: (1) FRESHNESS — the checkpoint materializes
-        # once per BUILT frame, so a caller that holds this frame across
-        # a source rewrite re-reads stale rates; rebuild via the catalog.
-        # (2) RELIABILITY — the blocks have no lineage: executor loss
-        # between materialization and the census join's read fails the
-        # query instead of recomputing. (3) ACCRUAL — each build
-        # checkpoints a fresh RDD, released only when the JVM Dataset is
-        # GC'd (io.release_checkpoint releases eagerly). All three are
-        # acceptable for a language-cardinality frame that rebuilds in
-        # seconds.
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)  # lazy; caveats in the docstring
     h = portable_hash(F.concat(F.lit(_TEMP_SALT), F.col("doc_id").cast("string")))
     kept = (
         docs.select("lang", "doc_id")

@@ -1,22 +1,22 @@
 """Similarity search over the ``embeddings`` table (array<float> column).
 
-Three operators, all expression-only (zip_with/aggregate folds — JVM-side,
-no Python UDFs):
+Operators are expression-only (zip_with/aggregate folds — JVM-side, no
+Python UDFs) unless a docstring says otherwise:
 
 * brute-force cosine top-k   — the exact baseline: broadcast the (small)
   query set against all candidates, in-order fold for the dot product,
   window top-k per query;
-* random-hyperplane LSH buckets — deterministic hyperplanes derived from
-  md5 (computed once in Python, injected as literal arrays on both
-  engines), 8 sign bits -> 256 buckets;
-* LSH-bucketed top-k          — the scale path: candidates restricted to
-  the query's bucket, then exact cosine rank within it.
+* banded random-hyperplane LSH near-dup pairs — deterministic hyperplanes
+  derived from md5 (computed once in Python, injected as literal arrays
+  on both engines), sign bits grouped into bands, equi-join on band keys;
+* IVF top-k                  — the scale path: candidates restricted to
+  the query's coarse-quantizer cell(s), then exact cosine rank within.
 
 Scale posture (billions of vectors): brute force is O(N·|Q|) but perfectly
 parallel — broadcast queries, no shuffle until the final per-query top-k
-(tiny). The LSH variant cuts N to N/256 per query at the cost of recall;
-more planes / multi-probe / IVF(k-means coarse quantizer) are the standard
-upgrades and slot into the same bucket-join shape.
+(tiny). The bucketed variants cut N per query at the cost of recall;
+more bands / multi-probe are the standard upgrades and slot into the same
+bucket-join shape.
 
 Cross-engine determinism: all dot products are left folds in array order
 with a 0.0 init on both engines => bit-identical IEEE sums (see
@@ -38,7 +38,7 @@ from ..session import prepare
 
 #: Embedding dimensionality of the driver's table (asserted in tests).
 DIM = 64
-#: Number of random-hyperplane sign bits (=> 2^8 = 256 buckets).
+#: Number of random hyperplanes in HYPERPLANES (plane 0 scores the pandas-UDF row).
 N_PLANES = 8
 #: Query set for the top-k operators: the first QUERY_IDS vectors.
 N_QUERIES = 5
@@ -125,15 +125,6 @@ def _dot_lit(emb, weights) -> F.Column:
     )
 
 
-def _bucket_expr(emb) -> F.Column:
-    """8 hyperplane sign bits packed into a BIGINT bucket id."""
-    total = F.lit(0)
-    for j, weights in enumerate(HYPERPLANES):
-        dot = _dot_lit(emb, weights)
-        total = total + F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return total.cast("bigint")
-
-
 # -- DuckDB oracle templates -------------------------------------------------
 
 _DUCK_NORM = (
@@ -149,20 +140,12 @@ _DUCK_DOT = (
 def _duck_dot_lit(e: str, weights) -> str:
     """DuckDB left-fold dot product of column ``e`` against a weights
     literal — the single source for every weights-literal oracle
-    (bucket keys, band keys, pandas-scoring oracle)."""
+    (band keys, pandas-scoring oracle)."""
     lit = "[" + ", ".join(str(w) for w in weights) + "]"
     return (
         f"list_reduce(list_prepend(0.0, list_transform(generate_series(1, {DIM}), "
         f"i -> {e}[i]::DOUBLE * ({lit})[i])), (x, y) -> x + y)"
     )
-
-
-def _duck_bucket(e: str) -> str:
-    parts = []
-    for j, weights in enumerate(HYPERPLANES):
-        dot = _duck_dot_lit(e, weights)
-        parts.append(f"(CASE WHEN {dot} >= 0 THEN {1 << j} ELSE 0 END)")
-    return "(" + " + ".join(parts) + ")::BIGINT"
 
 
 # --------------------------------------------------------------------------
@@ -206,89 +189,6 @@ def similarity_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = c.crossJoin(F.broadcast(q)).filter(
         F.col("neighbor_id") != F.col("query_id")
-    )
-    cos = (
-        _dot(F.col("q_emb"), F.col("c_emb"))
-        / (F.col("q_nrm") * F.col("c_nrm"))
-    ).alias("cosine")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        pairs.select("query_id", "neighbor_id", cos)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-    )
-
-
-# --------------------------------------------------------------------------
-@register(
-    "similarity_lsh_buckets",
-    driver_facing=False,  # hyperplane hashing stays driver-checked via
-    # similarity_near_dup_pairs' band keys; the slot goes to hash sampling
-    oracle=f"""
-SELECT vec_id, label, {_duck_bucket("embedding")} AS bucket
-FROM embeddings
-""",
-)
-def similarity_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH bucket assignment (SimHash for vectors)."""
-    prepare(spark)
-    emb = spread(spark, table(spark, sf_dir, "embeddings"))
-    return emb.select(
-        "vec_id", "label", _bucket_expr(F.col("embedding")).alias("bucket")
-    )
-
-
-# --------------------------------------------------------------------------
-@register(
-    "similarity_lsh_topk",
-    driver_facing=False,  # superseded by similarity_ivf_topk / similarity_near_dup_pairs
-    oracle=f"""
-WITH b AS (
-    SELECT vec_id, embedding, {_duck_bucket("embedding")} AS bucket
-    FROM embeddings
-),
-q AS (SELECT * FROM b WHERE vec_id < {N_QUERIES}),
-pairs AS (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           {_DUCK_DOT.format(a="q.embedding", b="c.embedding", dim=DIM)}
-             / ({_DUCK_NORM.format(e="q.embedding")} * {_DUCK_NORM.format(e="c.embedding")})
-             AS cosine
-    FROM q JOIN b c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id, cosine,
-           CAST(ROW_NUMBER() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
-           ) AS INT) AS rank
-    FROM pairs
-)
-SELECT query_id, neighbor_id, cosine, rank
-FROM ranked WHERE rank <= {TOP_K}
-""",
-)
-def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-k: exact cosine rank restricted to the query's LSH
-    bucket — the join is an equi-join on bucket, so at scale candidates are
-    co-partitioned and the 1/256 selectivity replaces the full scan."""
-    prepare(spark)
-    emb = spread(spark, table(spark, sf_dir, "embeddings"))
-    b = emb.select("vec_id", "embedding", _bucket_expr(F.col("embedding")).alias("bucket"))
-    q = b.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    c = b.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        _norm(F.col("embedding")).alias("c_nrm"),
-        "bucket",
-    )
-    pairs = c.join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("q_bucket"))
-        & (F.col("neighbor_id") != F.col("query_id")),
     )
     cos = (
         _dot(F.col("q_emb"), F.col("c_emb"))
@@ -1698,50 +1598,6 @@ FROM ranked WHERE rank <= {TOP_K}
 """
 
 
-@register(
-    "similarity_binary_hamming_inline",
-    # Self-contained inline twin of the stored serving form below —
-    # quantizes the corpus inside the query plan. Kept as the pytest
-    # cross-check (stored == inline bit-for-bit) and the one-shot
-    # analytical shape; the driver-facing row serves from the index.
-    driver_facing=False,
-    oracle=_binary_hamming_oracle,
-)
-def similarity_binary_hamming_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k by hamming distance over sign-quantized embeddings: the
-    bit-packed linear scan (broadcast query words, xor+popcount per
-    candidate — integer-exact cross-engine, ties to the lower
-    neighbor_id). Recall vs the exact cosine baseline is pytest-pinned;
-    the production composition re-ranks these survivors with exact
-    scores, which is ``similarity_ann_cosine_topk``'s machinery applied
-    to a candidate set instead of the corpus."""
-    prepare(spark)
-    emb = spread(spark, table(spark, sf_dir, "embeddings"))
-    words = sign_quantize(emb)
-    q = words.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("w_lo").alias("q_lo"),
-        F.col("w_hi").alias("q_hi"),
-    )
-    pairs = words.crossJoin(F.broadcast(q)).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    ham = (
-        F.bit_count(F.col("w_lo").bitwiseXOR(F.col("q_lo")))
-        + F.bit_count(F.col("w_hi").bitwiseXOR(F.col("q_hi")))
-    ).cast("int")
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        pairs.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            ham.alias("hamming"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-    )
-
-
 #: Binary-prefilter width: survivors re-ranked exactly. 64 of ~500 at
 #: sf0.01; at scale candidate_k stays constant while the corpus grows.
 BINARY_CANDIDATE_K = 64
@@ -1789,78 +1645,14 @@ FROM ranked WHERE rank <= {TOP_K}
 """
 
 
-@register(
-    "similarity_binary_rerank_inline",
-    # Inline twin of the stored serving form (see hamming twin above).
-    driver_facing=False,
-    oracle=_binary_rerank_oracle,
-)
-def similarity_binary_rerank_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production binary-ANN composition, inline form: hamming
-    prefilter over the packed sign words keeps BINARY_CANDIDATE_K
-    survivors per query (xor+popcount linear scan — the cheap pass),
-    exact cosine re-ranks only the survivors (the expensive pass runs on
-    candidate_k rows per query, never the corpus). Same deterministic
-    folds as the exact baseline, so scores and ranks are bit-identical
-    cross-engine; recall recovery over the raw hamming top-k is
-    pytest-pinned."""
-    prepare(spark)
-    emb = spread(spark, table(spark, sf_dir, "embeddings"))
-    words = sign_quantize(emb)
-    q = words.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("w_lo").alias("q_lo"),
-        F.col("w_hi").alias("q_hi"),
-    )
-    ham = (
-        F.bit_count(F.col("w_lo").bitwiseXOR(F.col("q_lo")))
-        + F.bit_count(F.col("w_hi").bitwiseXOR(F.col("q_hi")))
-    )
-    hw = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    cand = (
-        words.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            ham.alias("hamming"),
-        )
-        .withColumn("hrank", F.row_number().over(hw))
-        .filter(F.col("hrank") <= BINARY_CANDIDATE_K)
-        .select("query_id", "neighbor_id")
-    )
-    qe = emb.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"),
-    )
-    ce = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        _norm(F.col("embedding")).alias("c_nrm"),
-    )
-    scored = cand.join(F.broadcast(qe), "query_id").join(ce, "neighbor_id")
-    cos = (
-        _dot(F.col("q_emb"), F.col("c_emb"))
-        / (F.col("q_nrm") * F.col("c_nrm"))
-    ).alias("cosine")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.select("query_id", "neighbor_id", cos)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
-    )
-
-
 # --------------------------------------------------------------------------
-# Stored-form binary ANN (VERDICT r10 #2): the driver-facing rows serve
-# from a PERSISTED index — packed sign words written once per vector by
+# Stored-form binary ANN (VERDICT r10 #2): the binary rows serve from a
+# PERSISTED index — packed sign words written once per vector by
 # IvfVectorIndex._index_rows — instead of re-quantizing the corpus inside
 # every query plan. PERFORMANCE.md measured the stored-words scan at 1.7×
-# the inline speed and 15× smaller than the float table; the inline twins
-# above remain registered (same oracles) as the self-contained pytest
-# cross-check, and stored == inline is pinned bit-for-bit in
-# tests/test_ann_index.py.
+# the speed of in-plan quantization and 15× smaller than the float table.
+# The oracles above quantize the corpus in SQL, so the stored words are
+# checked against an independent in-query quantization.
 
 
 def served_vector_index(spark: SparkSession, sf_dir: str):
@@ -1893,17 +1685,19 @@ def served_vector_index(spark: SparkSession, sf_dir: str):
     "similarity_binary_hamming_topk",
     # Stored serving form — reads packed words from the persisted index;
     # no sign arithmetic over the corpus in the query plan (plan-pinned).
-    # Integer-exact, so the inline twin's oracle applies verbatim.
+    # Integer-exact, so the in-query quantization oracle applies verbatim.
     driver_facing=False,  # r12 rotation: driver-green r11; the binary path
     # stays driver-checked via similarity_binary_rerank_topk and the
     # composed IVF+binary funnel row. Slot ceded to the r10-crop promotions.
     oracle=_binary_hamming_oracle,
 )
 def similarity_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k by hamming distance served from STORED packed sign words
-    (the index scan reads 2 BIGINTs per corpus row; only the broadcast
-    query side touches float embeddings). Bit-identical to
-    ``similarity_binary_hamming_inline`` — same oracle."""
+    """Top-k by hamming distance served from STORED packed sign words:
+    the bit-packed linear scan (the index scan reads 2 BIGINTs per corpus
+    row; only the broadcast query side touches float embeddings;
+    xor+popcount per candidate — integer-exact cross-engine, ties to the
+    lower neighbor_id). Recall vs the exact cosine baseline is
+    pytest-pinned."""
     prepare(spark)
     idx = served_vector_index(spark, sf_dir)
     emb = spread(spark, table(spark, sf_dir, "embeddings"))
@@ -1915,17 +1709,20 @@ def similarity_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFram
 @register(
     "similarity_binary_rerank_topk",
     # Stored serving form of the hamming-prefilter + exact-re-rank
-    # composition (see the inline twin's docstring for the algorithm).
+    # composition.
     driver_facing=False,  # r12 rotation: driver-green r11; superseded in
     # the window by similarity_ivf_binary_funnel_topk, which runs this
     # row's two stages PLUS the IVF cell restriction in one query.
     oracle=_binary_rerank_oracle,
 )
 def similarity_binary_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary prefilter from the STORED index + exact cosine re-rank of
-    the survivors against the float table (candidate_k × |Q| point
-    lookups, never a corpus float scan). Bit-identical to
-    ``similarity_binary_rerank_inline`` — same oracle."""
+    """The production binary-ANN composition: hamming prefilter over the
+    STORED packed sign words keeps BINARY_CANDIDATE_K survivors per query
+    (xor+popcount linear scan — the cheap pass), exact cosine re-ranks
+    only the survivors against the float table (candidate_k × |Q| point
+    lookups, never a corpus float scan). Same deterministic folds as the
+    exact baseline, so scores and ranks are bit-identical cross-engine;
+    recall recovery over the raw hamming top-k is pytest-pinned."""
     prepare(spark)
     idx = served_vector_index(spark, sf_dir)
     emb = spread(spark, table(spark, sf_dir, "embeddings"))

@@ -144,32 +144,6 @@ def q03_supplier_contribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# O2 served form, driver-proven: the registered q03 builder routed through
-# ``catalog.ordered_query`` — the reference's trailing ORDER BY
-# (olap_queries.sql:48) applied as the presentation sort. The driver's
-# value-hash is order-insensitive, so this row verifies that the ordered
-# SURFACE (QuerySpec.order_by + catalog.ordered_query) executes and is
-# value-identical to the unsorted hot-path form; pytest separately pins
-# that the output is actually sorted (tests/test_oracle_parity.py).
-@register(
-    "q03_supplier_contribution_ordered",
-    driver_facing=False,  # r12 rotation: O2 surface driver-proven r10+r11;
-    # slot ceded to the r10-crop promotions (VERDICT r11 next-round #1).
-    oracle=f"""
-WITH {FACT_CTE}
-SELECT store_name, supplier_name, product_name,
-       CAST(SUM(sale) AS DOUBLE) AS total_sales
-FROM fact
-GROUP BY 1, 2, 3
-ORDER BY store_name, supplier_name, product_name
-""",
-)
-def q03_supplier_contribution_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .. import catalog as _catalog
-
-    return _catalog.ordered_query("q03_supplier_contribution")(spark, sf_dir)
-
-
 def _season_expr(col: str):
     m = F.month(col)
     return (
@@ -574,7 +548,7 @@ def q08_halfyearly_vs_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # twice) before a join on product_name; the window form is one pipeline:
 # fact build once, daily agg, one exchange on product_name. Values are
 # bit-identical (same decimal sum / count operands). The reference's
-# agg⋈agg shape stays registered below (J6 exemplar).
+# agg⋈agg shape is q09's Spark-SQL text (``SPARK_SQL`` below, J6 exemplar).
 _Q09_ORACLE = f"""
 WITH {FACT_CTE},
 daily AS (
@@ -597,25 +571,6 @@ FROM daily d JOIN avg_daily a ON d.product_name = a.product_name
 """
 
 
-def _q09_finish(daily: DataFrame, avg_col) -> DataFrame:
-    d = daily.withColumn("daily_revenue", F.col("daily_revenue_dec").cast("double"))
-    # Date leaves as an ISO string: unambiguous across Spark/DuckDB/pandas
-    # canonicalizations (a DATE round-trips as midnight Timestamp in pandas).
-    return d.select(
-        "product_name",
-        F.col("order_date").cast("string").alias("order_date"),
-        "daily_revenue",
-        avg_col.alias("avg_daily_revenue"),
-    ).select(
-        "*",
-        F.when(
-            F.col("daily_revenue") > 2 * F.col("avg_daily_revenue"), "Outlier"
-        )
-        .otherwise("Normal")
-        .alias("outlier_flag"),
-    )
-
-
 @register(
     "q09_daily_spikes",
     headline=True,
@@ -633,27 +588,21 @@ def q09_daily_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("daily_revenue_dec").over(w).cast("double")
         / F.count("*").over(w)
     )
-    return _q09_finish(daily, avg_col)
-
-
-@register("q09j_spikes_aggjoin", oracle=_Q09_ORACLE, driver_facing=False)
-def q09j_spikes_aggjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's literal two-CTE shape: daily agg joined with a
-    re-aggregate of itself (J6 agg⋈agg exemplar). Same oracle and values
-    as the headline window form; slower because the avg branch recomputes
-    the fact build."""
-    daily = (
-        fact(spark, sf_dir)
-        .groupBy("product_name", "order_date")
-        .agg(F.sum("sale").alias("daily_revenue_dec"))
-    )
-    avg_daily = daily.groupBy("product_name").agg(
-        (F.sum("daily_revenue_dec").cast("double") / F.count("*")).alias(
-            "avg_daily_revenue"
+    d = daily.withColumn("daily_revenue", F.col("daily_revenue_dec").cast("double"))
+    # Date leaves as an ISO string: unambiguous across Spark/DuckDB/pandas
+    # canonicalizations (a DATE round-trips as midnight Timestamp in pandas).
+    return d.select(
+        "product_name",
+        F.col("order_date").cast("string").alias("order_date"),
+        "daily_revenue",
+        avg_col.alias("avg_daily_revenue"),
+    ).select(
+        "*",
+        F.when(
+            F.col("daily_revenue") > 2 * F.col("avg_daily_revenue"), "Outlier"
         )
-    )
-    return _q09_finish(
-        daily.join(avg_daily, "product_name"), F.col("avg_daily_revenue")
+        .otherwise("Normal")
+        .alias("outlier_flag"),
     )
 
 

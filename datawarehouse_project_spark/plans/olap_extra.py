@@ -217,7 +217,6 @@ def pivot_store_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # INCLUDING the zero cells the pivot materialized, so the pair
 # pivot -> unpivot is lossless; the oracle states that directly by
 # unioning the pivot oracle's columns.
-_UNPIV_SELECTS = None  # built below from _PIV_COLS
 
 
 def _unpivot_oracle() -> str:

@@ -46,9 +46,8 @@ class QuerySpec:
     #: correctness harness sweeps (it covers at most 50 names, sorted).
     #: ``driver_facing=False`` keeps a query fully registered — pytest
     #: runs its oracle at both scale factors — but out of that window.
-    #: Used for reference-bug-compat exemplars, superseded variants,
-    #: O(N^2) recall baselines, and sketch twins whose exact counterpart
-    #: already holds a driver row.
+    #: Used for reference-bug-compat exemplars, O(N^2) recall baselines,
+    #: and sketch twins whose exact counterpart already holds a driver row.
     driver_facing: bool = True
 
 

@@ -331,35 +331,6 @@ def test_train_centroids_rejects_sample_smaller_than_k(spark):
     assert len(cents) == 3
 
 
-def _canon_ham(df):
-    return sorted(
-        (r.query_id, r.neighbor_id, r.hamming, r.rank) for r in df.collect()
-    )
-
-
-def _canon_cos(df):
-    return sorted(
-        (r.query_id, r.neighbor_id, round(r.cosine, 12), r.rank)
-        for r in df.collect()
-    )
-
-
-def test_stored_binary_ann_equals_inline(spark, sf_dir, tmp_path):
-    """VERDICT r10 #2: the stored serving forms (packed words read from
-    the index parquet) must be BIT-IDENTICAL to the inline twins that
-    quantize inside the plan — both the raw hamming top-k and the
-    hamming-prefilter + exact-re-rank composition."""
-    from datawarehouse_project_spark.catalog import all_queries
-
-    aq = all_queries()
-    assert _canon_ham(
-        aq["similarity_binary_hamming_topk"](spark, sf_dir)
-    ) == _canon_ham(aq["similarity_binary_hamming_inline"](spark, sf_dir))
-    assert _canon_cos(
-        aq["similarity_binary_rerank_topk"](spark, sf_dir)
-    ) == _canon_cos(aq["similarity_binary_rerank_inline"](spark, sf_dir))
-
-
 def test_stored_binary_plan_has_no_corpus_side_quantization(spark, sf_dir):
     """The serving pin (mirrors the IVF no-embedding pin): in the stored
     hamming plan, the corpus side scans the INDEX parquet — ReadSchema
@@ -393,8 +364,8 @@ def test_stored_binary_plan_has_no_corpus_side_quantization(spark, sf_dir):
 
 
 def test_stored_binary_ann_matches_duckdb(spark, sf_correct_dir):
-    """The stored forms against the SAME DuckDB oracles as the inline
-    twins (integer-exact sign words => identical answers)."""
+    """The stored forms against DuckDB oracles that quantize the corpus
+    in SQL (integer-exact sign words => identical answers)."""
     from datawarehouse_project_spark.catalog import all_oracle_sql, all_queries
 
     from tests.oracle_check import compare

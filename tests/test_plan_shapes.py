@@ -116,13 +116,11 @@ def test_jdbc_scan_is_partitioned(spark, sf_dir):
 
 
 def test_simhash_pairs_is_block_bucketed_not_nested_loop(spark, sf_dir):
-    """Simhash candidates (both the 16-bit twin and the 64-bit production
-    layout) must come from the block-split EQUI-join, never a nested loop
-    over the corpus."""
-    for name in ["dedup_simhash_pairs", "dedup_simhash64_pairs"]:
-        p = plan_of(all_queries()[name](spark, sf_dir))
-        assert "BroadcastNestedLoopJoin" not in p, name
-        assert "CartesianProduct" not in p, name
+    """Simhash candidates (the 64-bit production layout) must come from
+    the block-split EQUI-join, never a nested loop over the corpus."""
+    p = plan_of(all_queries()["dedup_simhash64_pairs"](spark, sf_dir))
+    assert "BroadcastNestedLoopJoin" not in p
+    assert "CartesianProduct" not in p
 
 
 def test_ivf_multiprobe_is_cluster_equi_join(spark, sf_dir):

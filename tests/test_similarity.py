@@ -16,7 +16,6 @@ from datawarehouse_project_spark.operators.similarity import (
     similarity_cosine_pairs,
     similarity_ivf_multiprobe_topk,
     similarity_ivf_topk,
-    similarity_lsh_topk,
     similarity_near_dup_pairs,
 )
 
@@ -71,21 +70,6 @@ def test_near_dup_pairs_recall_vs_brute_force(spark, sf_correct_dir):
         assert brute[k] == v
     assert brute, "test data should contain qualifying pairs"
     assert len(banded) / len(brute) >= 0.8, (len(banded), len(brute))
-
-
-def test_lsh_topk_is_subset_of_exact_neighbors(spark, sf_dir):
-    """LSH-bucketed results are a subset of the candidate pool ranked by
-    the same cosine — every returned neighbor must appear in the exact
-    ranking with the same cosine value."""
-    exact = {
-        (r.query_id, r.neighbor_id): r.cosine
-        for r in similarity_ann_cosine_topk(spark, sf_dir).collect()
-    }
-    lsh = similarity_lsh_topk(spark, sf_dir).collect()
-    assert lsh, "bucketed top-k should return some neighbors"
-    for r in lsh:
-        if (r.query_id, r.neighbor_id) in exact:
-            assert exact[(r.query_id, r.neighbor_id)] == r.cosine
 
 
 def test_ivf_multiprobe_recall_vs_single_probe(spark, sf_correct_dir):
