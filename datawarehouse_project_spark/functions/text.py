@@ -43,14 +43,6 @@ def portable_hash(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
-def portable_hash_hi(c: Column) -> Column:
-    """H_hi(s): a SECOND independent 60-bit value from the SAME md5 digest
-    (hex chars 16-30) — 120 portable hash bits per string for one md5,
-    which is what the 64-bit simhash needs (the digest's 128 bits are
-    i.i.d., so any disjoint substring is an independent hash)."""
-    return F.conv(F.substring(F.md5(c), 16, 15), 16, 10).cast("bigint")
-
-
 def words(c: Column | str) -> Column:
     """Lowercased whitespace tokenization (array<string>)."""
     c = F.col(c) if isinstance(c, str) else c
@@ -85,17 +77,26 @@ def words_sql(col: str = "text") -> str:
 
 def word_shingles_sql(ws: str = "ws", n: int = 3) -> str:
     """SQL-text form of :func:`word_shingles` (same expression tree)."""
-    return f"array_distinct({word_grams_sql(ws, n)})"
-
-
-def word_grams_sql(ws: str = "ws", n: int = 3) -> str:
-    """Rolling (NON-distinct) word n-grams as SQL text — the term unit
-    for frequency-weighted indexes (TF-IDF cosine), where per-doc
-    occurrence counts carry signal that array_distinct would erase."""
     parts = ", ".join(f"element_at({ws}, i + {j})" for j in range(n))
     return (
-        f"transform(sequence(1, size({ws}) - {n - 1}), "
-        f"i -> concat_ws(' ', {parts}))"
+        f"array_distinct(transform(sequence(1, size({ws}) - {n - 1}), "
+        f"i -> concat_ws(' ', {parts})))"
+    )
+
+
+def word_gram_rows_sql(src: str, n: int = 3) -> str:
+    """A SELECT over relation ``src`` (``doc_id``, ``text``) giving one
+    row ``(doc_id, g)`` per rolling (non-distinct) word n-gram of each
+    row with >= n words. The grams come from an explode of
+    ``sequence(0, size(ws) - n)`` and a ``ws[i]`` projection: a
+    codegen'd Generate and projection, where the array form above runs
+    an interpreted lambda per gram."""
+    parts = ", ".join(f"ws[i + {j}]" if j else "ws[i]" for j in range(n))
+    return (
+        f"SELECT doc_id, concat_ws(' ', {parts}) AS g FROM ("
+        f"SELECT doc_id, ws, explode(sequence(0, size(ws) - {n})) AS i FROM ("
+        f"SELECT doc_id, {words_sql('text')} AS ws FROM {src}) "
+        f"WHERE size(ws) >= {n})"
     )
 
 
@@ -142,9 +143,9 @@ SIMHASH64_BITS = 64
 def simhash64(hashed_lo: Column, hashed_hi: Column) -> Column:
     """Frequency-weighted 64-bit sign-hash over pre-hashed words.
 
-    ``hashed_lo``/``hashed_hi`` are arrays of the two 60-bit per-word
-    hashes (see ``portable_hash``/``portable_hash_hi`` — one md5 each
-    element, two values). bit_j = 1 iff sum over words of (+1 if bit j'
+    ``hashed_lo``/``hashed_hi`` are arrays of two independent 60-bit
+    per-word hashes, hex chars 1-15 and 16-30 of one md5 per element
+    (see ``portable_hash``). bit_j = 1 iff sum over words of (+1 if bit j'
     of the word-hash else -1) >= 0, with j' = j % 32 and the hash picked
     by j // 32. Integer arithmetic end-to-end => exact. The bit test is
     modulo-based ((h % 2^(j+1)) >= 2^j) rather than shift/AND so the

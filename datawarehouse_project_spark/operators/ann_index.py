@@ -420,16 +420,16 @@ class IvfVectorIndex:
         qe = queries.select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
-            _norm(F.col("embedding")).alias("q_nrm"),
+            _norm("embedding").alias("q_nrm"),
         )
         ce = embeddings.select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("c_emb"),
-            _norm(F.col("embedding")).alias("c_nrm"),
+            _norm("embedding").alias("c_nrm"),
         )
         scored = cand.join(F.broadcast(qe), "query_id").join(ce, "neighbor_id")
         cos = (
-            _dot(F.col("q_emb"), F.col("c_emb"))
+            _dot("q_emb", "c_emb")
             / (F.col("q_nrm") * F.col("c_nrm"))
         ).alias("cosine")
         w = Window.partitionBy("query_id").orderBy(
@@ -565,16 +565,16 @@ class IvfVectorIndex:
         qe = queries.select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
-            _norm(F.col("embedding")).alias("q_nrm"),
+            _norm("embedding").alias("q_nrm"),
         )
         ce = embeddings.select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("c_emb"),
-            _norm(F.col("embedding")).alias("c_nrm"),
+            _norm("embedding").alias("c_nrm"),
         )
         scored = cand.join(F.broadcast(qe), "query_id").join(ce, "neighbor_id")
         cos = (
-            _dot(F.col("q_emb"), F.col("c_emb"))
+            _dot("q_emb", "c_emb")
             / (F.col("q_nrm") * F.col("c_nrm"))
         ).alias("cosine")
         w = Window.partitionBy("query_id").orderBy(

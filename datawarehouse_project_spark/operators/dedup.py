@@ -38,17 +38,16 @@ from ..functions.text import (
     P,
     SIMHASH64_BITS,
     duck_minhash_exprs,
-    hash_array,
     hash_array_sql,
     minhash_signature_sql,
     simhash64,
-    word_shingles,
+    word_gram_rows_sql,
     word_shingles_sql,
     words,
     words_sql,
 )
 from ..io import require_small, table
-from .skew import validate_guard
+from .skew import hot_key_guard_sql, validate_guard
 from ..session import prepare
 from ..plans.registry import register
 
@@ -588,7 +587,7 @@ sig AS (SELECT doc_id, ({_DUCK_SIMHASH64_BITS})::BIGINT AS simhash_val FROM hh)
 def simhash64_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc_id + 64-bit simhash (signed-BIGINT packing). Per-row expression,
     shuffle-free; md5 is materialized once per word and both 60-bit hash
-    views are sliced from it (see functions/text.py portable_hash_hi)."""
+    views are sliced from it (hex chars 1-15 and 16-30)."""
     prepare(spark)
     docs = table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
@@ -703,6 +702,49 @@ def dedup_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 DF_CAP = 10
 
 
+def _shingle_pairs_sql(df_cap: int | None, bounded: bool, guard: str) -> str:
+    """The CTEs both posting-list kernels share, over relation ``{docs}``,
+    ending in ``pairs(d1, d2)``: every ordered pair of posting entries
+    ``struct(doc_id, n_sg)`` that share a shingle.
+
+    One exchange per key: the grams are hash-partitioned on ``sgh`` once,
+    and the per-doc distinct, the df guard and the posting regroup all
+    run on that partitioning; the post-cap shingle count ``n_sg`` is a
+    COUNT window over ``doc_id`` that rides inside the posting structs,
+    so no sizes aggregate or sizes join exists. The capped paths:
+    ``bounded`` runs :func:`~.skew.hot_key_guard_sql` (rows above the cap
+    never reach a collect buffer); unbounded collects each full list and
+    drops those longer than the cap, then re-explodes the survivors."""
+    if df_cap is None:
+        kept = "SELECT doc_id, sgh FROM inv"
+    elif bounded:
+        kept = hot_key_guard_sql("inv", "doc_id, sgh", "sgh", df_cap, guard)
+    else:
+        kept = (
+            "SELECT explode(ds) AS doc_id, sgh FROM (SELECT sgh, "
+            "collect_list(doc_id) AS ds FROM inv GROUP BY sgh "
+            f"HAVING size(ds) <= {df_cap})"
+        )
+    return f"""
+grams AS (
+    SELECT /*+ REPARTITION(sgh) */ doc_id, xxhash64(g) AS sgh
+    FROM ({word_gram_rows_sql('{docs}')})
+),
+inv AS (SELECT DISTINCT doc_id, sgh FROM grams),
+kept AS ({kept}),
+sized AS (
+    SELECT doc_id, sgh, count(*) OVER (PARTITION BY doc_id) AS n_sg FROM kept
+),
+posting AS (
+    SELECT sgh, collect_list(struct(doc_id, n_sg)) AS docs
+    FROM sized GROUP BY sgh
+),
+pairs AS (
+    SELECT d1, explode(docs) AS d2
+    FROM (SELECT explode(docs) AS d1, docs FROM posting)
+)"""
+
+
 def ngram_jaccard_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -724,24 +766,27 @@ def ngram_jaccard_pairs(
     cap BEFORE any list is collected — every collect buffer is bounded
     by df_cap entries instead of one buffer per shingle at its full
     (pre-cap) document frequency, while the window's spillable row
-    buffer carries the hot keys safely. One scan; the window's
-    exchange is reused by the regroup. Bit-identical results
-    (equality-tested), measured free vs one-scan — the registered query
-    passes bounded=True unconditionally (PERFORMANCE r14).
+    buffer carries the hot keys safely. The window runs on the gram
+    exchange. Bit-identical results (equality-tested) — the registered
+    query passes bounded=True unconditionally (PERFORMANCE r14).
+
+    MEMORY SHAPE of the exact form (``df_cap=None``): collect_list
+    materializes each shingle's FULL posting list in one aggregation
+    buffer, so an ultra-common shingle is a single-key executor OOM —
+    which is why the exact form is gated behind require_small at its
+    registered entry point and is never the production path.
+
+    The whole plan is one SQL statement (:func:`_shingle_pairs_sql`).
+    Posting-list formulation: ONE groupBy on the shingle hash builds the
+    inverted index as arrays, and pair counting explodes each posting
+    list twice PARTITION-LOCALLY (Generate, codegen'd) — no self-join.
+    The index is keyed on a 64-bit hash of the shingle, not the string:
+    smaller shuffle rows, integer grouping. Collision risk is
+    ~|shingles|^2 / 2^65 (~1e-10 here, still <1e-3 at a billion
+    distinct shingles) and a collision only perturbs one pair's overlap
+    count by 1. [History: SMJ string self-join 13.8s -> SHJ on xxhash64
+    9.5s -> posting-list explode 1.3s at sf0.1.]
     """
-    # Posting-list formulation: ONE groupBy on the shingle hash builds the
-    # inverted index as arrays, and pair counting explodes each posting
-    # list twice PARTITION-LOCALLY (Generate — codegen'd, unlike array
-    # lambdas) — no self-join, no second full-index shuffle. The index is
-    # keyed on a 64-bit hash of the shingle, not the string: smaller
-    # shuffle rows, integer grouping. Collision risk is
-    # ~|shingles|^2 / 2^65 (~1e-10 here, still <1e-3 at a billion distinct
-    # shingles) and a collision only perturbs one pair's overlap count
-    # by 1. [History: SMJ string self-join 13.8s -> SHJ on xxhash64 9.5s
-    # -> posting-list explode 1.3s at sf0.1 (the round-1 posting-list
-    # attempt used interpreted array lambdas and lost; double-explode is
-    # the codegen'd form). The dominant round-1 cost was the
-    # InferFiltersFromGenerate pathology — see session.py.]
     validate_guard(guard)
     if guard != "window" and (df_cap is None or not bounded):
         # the knob only exists on the capped bounded guard path; silently
@@ -749,108 +794,21 @@ def ngram_jaccard_pairs(
         # run the exact single-key buffer hazard it was passed to avoid
         # (r15 review)
         raise ValueError("guard='salted' requires df_cap and bounded=True")
-    sh = doc_shingle_frame(spark, sf_dir)
-    if df_cap is None:
-        # Exact: per-doc size is len(sgs), known at explode time — it
-        # rides along INSIDE the posting-list structs, so no sizes join
-        # exists at all (the round-1 n_sg-as-groupBy-key trick, carried
-        # into the posting-list formulation).
-        #
-        # MEMORY SHAPE (not just time): collect_list materializes each
-        # shingle's FULL posting list in one aggregation buffer, so an
-        # ultra-common shingle is a single-key executor OOM here — a
-        # sharper failure mode than the old self-join's merely-slow
-        # fan-out. That is why this exact form is (a) gated behind
-        # require_small at the registered entry point and (b) never the
-        # production path: the capped branch below bounds every buffer
-        # to df_cap entries by filtering AFTER the agg, and at true scale
-        # the df-cap is the only defensible semantic anyway (a shingle
-        # shared by millions of docs carries no near-dup signal).
-        inv = (
-            sh.select(
-                "doc_id",
-                F.size("sgs").cast("bigint").alias("n_sg"),
-                F.explode("sgs").alias("sg"),
-            )
-            .withColumn("sgh", F.xxhash64("sg"))
-            .drop("sg")
-        )
-        posting = inv.groupBy("sgh").agg(
-            F.collect_list(F.struct("doc_id", "n_sg")).alias("docs")
-        )
-        shared = (
-            posting.select(F.explode("docs").alias("d1"), "docs")
-            .select("d1", F.explode("docs").alias("d2"))
-            .filter(F.col("d1.doc_id") < F.col("d2.doc_id"))
-            .groupBy(
-                F.col("d1.doc_id").alias("doc_a"),
-                F.col("d2.doc_id").alias("doc_b"),
-                F.col("d1.n_sg").alias("n_a"),
-                F.col("d2.n_sg").alias("n_b"),
-            )
-            .agg(F.count("*").alias("shared"))
-        )
-        jac = F.col("shared").cast("double") / (
-            F.col("n_a") + F.col("n_b") - F.col("shared")
-        )
-        return shared.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= threshold
-        )
-    # Capped: the cap bounds every posting list, so pair fan-out is
-    # <= df_cap(df_cap-1)/2 per shingle REGARDLESS of corpus size. Sizes
-    # are an aggregate OF the capped index (cannot ride along), joined
-    # back onto the post-aggregation pair frame with SHUFFLE_HASH hints:
-    # without them the optimizer may elect to BROADCAST the pair frame
-    # (the bigger side — measured 11s vs 2s at sf0.1), and at 100 TB
-    # neither side of a pairs⋈sizes join is broadcastable anyway.
-    inv = (
-        sh.select("doc_id", F.explode("sgs").alias("sg"))
-        .withColumn("sgh", F.xxhash64("sg"))
-        .drop("sg")
-    )
-    if bounded:
-        # df-first bounded buffers via the shared one-pass window guard
-        # (skew.cap_hot_keys): rows above the cap never reach a
-        # collect_list buffer (WindowExec's COUNT state is constant per
-        # key and its row buffer spills), and the window's sgh
-        # partitioning is reused by the regroup — ONE shingling scan,
-        # one exchange, unlike a count-then-(semi-)join form, which
-        # replans the interpreted shingle subtree twice (r14 review).
-        from .skew import hot_key_guard
-
-        posting = (
-            hot_key_guard(inv, ["sgh"], df_cap, guard=guard)
-            .groupBy("sgh")
-            .agg(F.collect_list("doc_id").alias("docs"))
-        )
-    else:
-        posting = (
-            inv.groupBy("sgh")
-            .agg(F.collect_list("doc_id").alias("docs"))
-            .filter(F.size("docs") <= df_cap)
-        )
-    shared = (
-        posting.select(F.explode("docs").alias("d1"), "docs")
-        .select("d1", F.explode("docs").alias("d2"))
-        .filter(F.col("d1") < F.col("d2"))
-        .groupBy(F.col("d1").alias("doc_a"), F.col("d2").alias("doc_b"))
-        .agg(F.count("*").alias("shared"))
-    )
-    sizes = (
-        posting.select(F.explode("docs").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_sg"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sg").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sg").alias("n_b"))
-    jac = F.col("shared").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("shared")
-    )
-    return (
-        shared.join(sa.hint("SHUFFLE_HASH"), "doc_a")
-        .join(sb.hint("SHUFFLE_HASH"), "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    prepare(spark)
+    return spark.sql(
+        f"""WITH {_shingle_pairs_sql(df_cap, bounded, guard)},
+shared AS (
+    SELECT d1.doc_id AS doc_a, d2.doc_id AS doc_b, d1.n_sg AS n_a,
+           d2.n_sg AS n_b, count(*) AS shared
+    FROM pairs WHERE d1.doc_id < d2.doc_id
+    GROUP BY d1.doc_id, d2.doc_id, d1.n_sg, d2.n_sg
+)
+SELECT doc_a, doc_b, jaccard FROM (
+    SELECT doc_a, doc_b,
+           CAST(shared AS DOUBLE) / (n_a + n_b - shared) AS jaccard
+    FROM shared
+) WHERE jaccard >= CAST({threshold!r} AS DOUBLE)""",
+        docs=table(spark, sf_dir, "documents"),
     )
 
 
@@ -965,46 +923,21 @@ def ngram_containment_pairs(
         # exact single-key buffer hazard it was passed to avoid (r15
         # review)
         raise ValueError("guard='salted' requires bounded=True")
-    sh = doc_shingle_frame(spark, sf_dir)
-    inv = (
-        sh.select("doc_id", F.explode("sgs").alias("sg"))
-        .withColumn("sgh", F.xxhash64("sg"))
-        .drop("sg")
-    )
-    if bounded:
-        from .skew import hot_key_guard
-
-        posting = (
-            hot_key_guard(inv, ["sgh"], df_cap, guard=guard)
-            .groupBy("sgh")
-            .agg(F.collect_list("doc_id").alias("docs"))
-        )
-    else:
-        posting = (
-            inv.groupBy("sgh")
-            .agg(F.collect_list("doc_id").alias("docs"))
-            .filter(F.size("docs") <= df_cap)
-        )
-    shared = (
-        posting.select(F.explode("docs").alias("d1"), "docs")
-        .select("d1", F.explode("docs").alias("d2"))
-        .filter(F.col("d1") != F.col("d2"))  # directed: both orders kept
-        .groupBy(F.col("d1").alias("src_doc"), F.col("d2").alias("dst_doc"))
-        .agg(F.count("*").alias("shared"))
-    )
-    sizes = (
-        posting.select(F.explode("docs").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_sg"))
-    )
-    ssz = sizes.select(
-        F.col("doc_id").alias("src_doc"), F.col("n_sg").alias("n_src")
-    )
-    cont = F.col("shared").cast("double") / F.col("n_src")
-    return (
-        shared.join(ssz.hint("SHUFFLE_HASH"), "src_doc")
-        .select("src_doc", "dst_doc", "n_src", cont.alias("containment"))
-        .filter(F.col("containment") >= threshold)
+    prepare(spark)
+    return spark.sql(
+        f"""WITH {_shingle_pairs_sql(df_cap, bounded, guard)},
+shared AS (
+    SELECT d1.doc_id AS src_doc, d2.doc_id AS dst_doc, d1.n_sg AS n_src,
+           count(*) AS shared
+    FROM pairs WHERE d1.doc_id != d2.doc_id
+    GROUP BY d1.doc_id, d2.doc_id, d1.n_sg
+)
+SELECT src_doc, dst_doc, n_src, containment FROM (
+    SELECT src_doc, dst_doc, n_src,
+           CAST(shared AS DOUBLE) / n_src AS containment
+    FROM shared
+) WHERE containment >= CAST({threshold!r} AS DOUBLE)""",
+        docs=table(spark, sf_dir, "documents"),
     )
 
 

@@ -460,46 +460,38 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-key drop while n_viewed keeps counting the NULL-user group,
     exactly as the reference's GROUP BY does."""
     prepare(spark)
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id")
-    is_click = (F.col("event_type") == "click") & F.col("user_id").isNotNull()
-    is_buy = (F.col("event_type") == "purchase") & F.col("user_id").isNotNull()
-    staged = (
-        ev.filter(F.col("event_type").isin("view", "click", "purchase"))
-        .select("user_id", "ts", "event_type")
-        .withColumn(
-            "t1",
-            F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
-        )
-        .withColumn(
-            "t2",
-            F.min(
-                F.when(is_click & (F.col("ts") > F.col("t1")), F.col("ts"))
-            ).over(w),
-        )
-        .withColumn(
-            "t3",
-            F.min(
-                F.when(is_buy & (F.col("ts") > F.col("t2")), F.col("ts"))
-            ).over(w),
-        )
-    )
-    per_user = staged.groupBy("user_id").agg(
-        F.max("t1").alias("t1"),  # constant within the partition
-        F.max("t2").alias("t2"),
-        F.max("t3").alias("t3"),
-    )
-    return per_user.agg(
-        *[
-            F.coalesce(F.sum(F.when(F.col(c).isNotNull(), 1)), F.lit(0))
-            .cast("bigint")
-            .alias(name)
-            for c, name in [
-                ("t1", "n_viewed"),
-                ("t2", "n_clicked_after_view"),
-                ("t3", "n_purchased_after_click"),
-            ]
-        ]
+    return spark.sql(
+        """WITH t1 AS (
+    SELECT user_id, ts, event_type,
+           min(CASE WHEN event_type = 'view' THEN ts END)
+               OVER (PARTITION BY user_id) AS t1
+    FROM {events} WHERE event_type IN ('view', 'click', 'purchase')
+),
+t2 AS (
+    SELECT *, min(CASE WHEN event_type = 'click' AND user_id IS NOT NULL
+                        AND ts > t1 THEN ts END)
+                  OVER (PARTITION BY user_id) AS t2
+    FROM t1
+),
+t3 AS (
+    SELECT *, min(CASE WHEN event_type = 'purchase' AND user_id IS NOT NULL
+                        AND ts > t2 THEN ts END)
+                  OVER (PARTITION BY user_id) AS t3
+    FROM t2
+),
+per_user AS (
+    -- t1..t3 are constant within a user's partition
+    SELECT user_id, max(t1) AS t1, max(t2) AS t2, max(t3) AS t3
+    FROM t3 GROUP BY user_id
+)
+SELECT
+    CAST(coalesce(sum(CASE WHEN t1 IS NOT NULL THEN 1 END), 0) AS BIGINT) AS n_viewed,
+    CAST(coalesce(sum(CASE WHEN t2 IS NOT NULL THEN 1 END), 0) AS BIGINT)
+        AS n_clicked_after_view,
+    CAST(coalesce(sum(CASE WHEN t3 IS NOT NULL THEN 1 END), 0) AS BIGINT)
+        AS n_purchased_after_click
+FROM per_user""",
+        events=table(spark, sf_dir, "events"),
     )
 
 

@@ -49,9 +49,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import words
+from ..functions.text import word_gram_rows_sql, words, words_sql
 from ..io import session_state, spread, table
-from .skew import validate_guard
+from .skew import hot_key_guard_sql, validate_guard
 from ..plans.registry import register
 from ..session import prepare
 
@@ -880,38 +880,129 @@ TFIDF_COSINE = (
 TFIDF_THRESHOLD = 0.35
 
 
+#: The word 3-gram frequency postings of relation ``{docs}`` (``doc_id``,
+#: ``text``) as CTEs ending in ``counts(doc_id, w, tf)``. The grams are
+#: hash-partitioned on ``w`` before the tf aggregate, so the aggregate,
+#: the df window and the salted guard all run on that one exchange.
+_SHINGLE_COUNTS_CTES = f"""
+grams AS (
+    SELECT /*+ REPARTITION(w) */ doc_id, xxhash64(g) AS w
+    FROM ({word_gram_rows_sql('{docs}')})
+),
+counts AS (
+    SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf FROM grams GROUP BY doc_id, w
+)"""
+
+
 def shingle_counts_of(docs: DataFrame) -> DataFrame:
     """Frequency postings over rolling word 3-grams for a ``(doc_id,
     text)`` frame: ``(doc_id, w=xxhash64(gram), tf)`` for docs with
     >= 3 words. The per-batch builder — also the streaming fold's unit
     (gram tf is additive across appended batches exactly like unigram
     tf)."""
-    from ..functions.text import word_grams_sql, words_sql
-
-    grams = (
-        docs.filter(F.col("text").isNotNull())
-        .selectExpr("doc_id", f"{words_sql('text')} AS ws")
-        .filter("size(ws) >= 3")
-        .selectExpr("doc_id", f"explode({word_grams_sql('ws')}) AS sg")
-    )
-    return (
-        grams.select("doc_id", F.xxhash64("sg").alias("w"))
-        .groupBy("doc_id", "w")
-        .agg(F.count("*").cast("bigint").alias("tf"))
+    return docs.sparkSession.sql(
+        f"WITH {_SHINGLE_COUNTS_CTES} SELECT doc_id, w, tf FROM counts", docs=docs
     )
 
 
 def shingle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`shingle_counts_of` over ``sf_dir``'s documents table.
-
-    Same parallelism posture as dedup.doc_shingle_frame: repartition
-    before the interpreted higher-order gram lambda, SQL-text expression
-    construction (one parser call, no per-node py4j round-trips)."""
+    """:func:`shingle_counts_of` over ``sf_dir``'s documents table."""
     prepare(spark)
-    return shingle_counts_of(
-        table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
+    return shingle_counts_of(table(spark, sf_dir, "documents"))
+
+
+def _tfidf_flat_ctes(
+    counts: str, n_docs: str, df_cap: int, bounded: bool, guard: str
+) -> str:
+    """CTEs ending in ``flat(doc_id, w, tf, df, n_docs)``: the postings of
+    relation ``counts`` whose term df is at most ``df_cap``, each with its
+    df and the 1-row corpus size of relation ``n_docs``."""
+    if bounded:
+        base = counts
+        if guard == "salted":
+            # hybrid (see tfidf_cosine_pairs): the salted guard drops the
+            # hot keys, then the window values df over the cold mass; the
+            # cap filter below is then vacuous but keeps one downstream plan
+            base = f"({hot_key_guard_sql(counts, 'doc_id, w, tf', 'w', df_cap, guard)})"
+        valued = (
+            "SELECT doc_id, w, tf, count(*) OVER (PARTITION BY w) AS df "
+            f"FROM {base}"
         )
+    else:
+        valued = (
+            "SELECT e.doc_id AS doc_id, w, e.tf AS tf, df FROM (SELECT w, "
+            "CAST(size(entries) AS BIGINT) AS df, explode(entries) AS e FROM ("
+            "SELECT w, collect_list(struct(doc_id, tf)) AS entries "
+            f"FROM {counts} GROUP BY w HAVING size(entries) <= {df_cap}))"
+        )
+    return f"""
+flat AS (
+    SELECT /*+ BROADCAST(nd) */ doc_id, w, tf, df, n_docs
+    FROM ({valued}) CROSS JOIN {n_docs} nd WHERE df <= {df_cap}
+)"""
+
+
+def _tfidf_pairs(
+    spark: SparkSession,
+    ctes: str,
+    frames: dict,
+    threshold: float,
+    quantizer: int,
+    idf_cap: float | None,
+    checked: bool,
+) -> DataFrame:
+    """The TF-IDF pairs statement over ``ctes`` (which end in ``flat``),
+    with ``frames`` as the statement's DataFrame arguments."""
+    if checked:
+        # eager envelope assertion: max per-doc Σwgt² in DOUBLE (cannot
+        # overflow) vs 2⁶² — one bounded agg, 1 collected row. Opt-in
+        # because it is an extra pass over the capped postings. The
+        # check's weight is the PURE-DOUBLE form (integer=False): the
+        # integer form's BIGINT cast would itself raise the opaque ANSI
+        # ArithmeticException on a single >int64 weight — exactly the
+        # failure the pre-flight exists to pre-empt (advisor, r15).
+        check_weight_sql = tfidf_weight_sql(quantizer, idf_cap, integer=False)
+        row = spark.sql(
+            f"""WITH {ctes}
+SELECT max(n2) AS max_n2 FROM (
+    SELECT doc_id, sum(wd * wd) AS n2
+    FROM (SELECT doc_id, {check_weight_sql} AS wd FROM flat) GROUP BY doc_id
+)""",
+            **frames,
+        ).collect()[0]
+        max_n2 = row["max_n2"] or 0.0
+        if max_n2 >= float(2**62):
+            raise ValueError(
+                f"tfidf int64 envelope exceeded: max per-doc sum(wgt^2) "
+                f"= {max_n2:.3e} >= 2^62; Spark would wrap silently "
+                f"(DuckDB raises) — pass idf_cap to bound sqrt(N/df) "
+                f"or lower quantizer (currently {quantizer})"
+            )
+    return spark.sql(
+        f"""WITH {ctes},
+weighted AS (
+    SELECT doc_id, w, wgt,
+           CAST(sum(wgt * wgt) OVER (PARTITION BY doc_id) AS BIGINT) AS nrm2
+    FROM (SELECT doc_id, w, {tfidf_weight_sql(quantizer, idf_cap)} AS wgt FROM flat)
+),
+posting AS (
+    SELECT w, collect_list(struct(doc_id, wgt, nrm2)) AS docs
+    FROM weighted GROUP BY w HAVING size(docs) >= 2
+),
+dots AS (
+    SELECT d1.doc_id AS doc_a, d2.doc_id AS doc_b, d1.nrm2 AS na2,
+           d2.nrm2 AS nb2, CAST(sum(d1.wgt * d2.wgt) AS BIGINT) AS dot
+    FROM (
+        SELECT d1, explode(docs) AS d2
+        FROM (SELECT explode(docs) AS d1, docs FROM posting)
+    )
+    WHERE d1.doc_id < d2.doc_id
+    GROUP BY d1.doc_id, d2.doc_id, d1.nrm2, d2.nrm2
+)
+SELECT doc_a, doc_b, cosine
+FROM (SELECT doc_a, doc_b, {TFIDF_COSINE} AS cosine FROM dots)
+WHERE cosine >= CAST({threshold!r} AS DOUBLE)""",
+        **frames,
     )
 
 
@@ -929,10 +1020,10 @@ def tfidf_cosine_pairs(
     """Document pairs (doc_a < doc_b) with TF-IDF cosine >= ``threshold``
     over postings ``(doc_id, w, tf)``.
 
-    ONE pass over the postings (and so one corpus scan upstream): df is
-    the SIZE of each term's posting list (the capped-jaccard trick — no
-    separate df-map join), weights are computed on the exploded capped
-    entries, per-doc squared norms are a window over them and ride
+    ONE SQL statement and ONE pass over the postings (and so one corpus
+    scan upstream): df is a COUNT window over the term key (no separate
+    df-map join), weights are computed on the capped entries, per-doc
+    squared norms are a window over them and ride
     INSIDE the rebuilt posting-list structs (the uncapped-jaccard
     "sizes ride along" trick — no pairs x norms join; the naive
     dfm-join + two-norms-join form replans the weighted subtree three
@@ -950,9 +1041,9 @@ def tfidf_cosine_pairs(
     df and filters rows above the cap BEFORE any list is collected —
     every collect buffer is bounded by df_cap entries, the window's
     spillable row buffer carries hot keys safely, and the postings are
-    still scanned once (the window's exchange on w is reused by the
-    pairing regroup). Measured FREE-to-faster vs the one-scan form
-    (0.90–0.97× at sf0.1/sf1), so it is unconditional at the registered
+    still scanned once (from text, the window runs on the gram exchange
+    that also feeds the tf aggregate). Measured FREE-to-faster vs the
+    one-scan form (0.90–0.97× at sf0.1/sf1), so it is unconditional at the registered
     entries — an earlier count-then-join draft cost 1.17–1.51× and was
     gated behind a source-size chooser, both superseded (PERFORMANCE
     r14 entries). The one-scan form stays as the measured alternative
@@ -1017,107 +1108,20 @@ def tfidf_cosine_pairs(
         # accepting the knob would run the exact single-key buffer
         # hazard it was passed to avoid
         raise ValueError("guard='salted' requires bounded=True")
+    frames = {"counts": counts}
+    ctes = ""
     if n_docs is None:
-        n_docs = counts.select("doc_id").distinct().agg(
-            F.count("*").cast("bigint").alias("n_docs")
+        ctes = (
+            "n_docs AS (SELECT CAST(count(*) AS BIGINT) AS n_docs "
+            "FROM (SELECT DISTINCT doc_id FROM {counts})),"
         )
-    if bounded:
-        # df-first via a COUNT window over the term key (the shared
-        # guard shape, skew.cap_hot_keys' form, kept inline because the
-        # df VALUE is needed downstream): rows above the cap never
-        # reach a collect buffer, the window's spillable row buffer
-        # carries hot keys safely, and — unlike a count-then-join form,
-        # which replans the counts subtree twice (r14 review) — the
-        # postings are scanned ONCE, with the window's exchange on w
-        # reused by the pairing regroup.
-        base = counts
-        if guard == "salted":
-            # hybrid (docstring above): pre-drop hot keys under the
-            # salted guard, then let the window value the cold mass —
-            # the cap filter below is then vacuous but kept so both
-            # forms share the identical downstream plan
-            from .skew import cap_hot_keys_salted
-
-            base = cap_hot_keys_salted(counts, ["w"], df_cap)
-        flat = (
-            base.withColumn(
-                "df",
-                F.count("*").over(Window.partitionBy("w")).cast("bigint"),
-            )
-            .filter(F.col("df") <= df_cap)
-            .crossJoin(F.broadcast(n_docs))
-        )
+        nd = "n_docs"
     else:
-        capped = counts.groupBy("w").agg(
-            F.collect_list(F.struct("doc_id", "tf")).alias("entries")
-        ).filter(F.size("entries") <= df_cap)
-        flat = (
-            capped.select(
-                "w",
-                F.size("entries").cast("bigint").alias("df"),
-                F.explode("entries").alias("e"),
-            )
-            .crossJoin(F.broadcast(n_docs))
-            .select(
-                "w",
-                F.col("e.doc_id").alias("doc_id"),
-                F.col("e.tf").alias("tf"),
-                "df",
-                "n_docs",
-            )
-        )
-    weight_sql = tfidf_weight_sql(quantizer, idf_cap)
-    if checked:
-        # eager envelope assertion: max per-doc Σwgt² in DOUBLE (cannot
-        # overflow) vs 2⁶² — one bounded agg, 1 collected row. Opt-in
-        # because it is an extra pass over the capped postings. The
-        # check's weight is the PURE-DOUBLE form (integer=False): the
-        # integer form's BIGINT cast would itself raise the opaque ANSI
-        # ArithmeticException on a single >int64 weight — exactly the
-        # failure the pre-flight exists to pre-empt (advisor, r15).
-        check_weight_sql = tfidf_weight_sql(quantizer, idf_cap, integer=False)
-        row = (
-            flat.select("doc_id", F.expr(check_weight_sql).alias("wd"))
-            .groupBy("doc_id")
-            .agg(F.sum(F.col("wd") * F.col("wd")).alias("n2"))
-            .agg(F.max("n2").alias("max_n2"))
-            .collect()[0]
-        )
-        max_n2 = row["max_n2"] or 0.0
-        if max_n2 >= float(2**62):
-            raise ValueError(
-                f"tfidf int64 envelope exceeded: max per-doc sum(wgt^2) "
-                f"= {max_n2:.3e} >= 2^62; Spark would wrap silently "
-                f"(DuckDB raises) — pass idf_cap to bound sqrt(N/df) "
-                f"or lower quantizer (currently {quantizer})"
-            )
-    weighted = flat.withColumn("wgt", F.expr(weight_sql)).withColumn(
-        "nrm2",
-        F.sum(F.col("wgt") * F.col("wgt"))
-        .over(Window.partitionBy("doc_id"))
-        .cast("bigint"),
-    )
-    posting = (
-        weighted.groupBy("w")
-        .agg(F.collect_list(F.struct("doc_id", "wgt", "nrm2")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    dots = (
-        posting.select(F.explode("docs").alias("d1"), "docs")
-        .select("d1", F.explode("docs").alias("d2"))
-        .filter(F.col("d1.doc_id") < F.col("d2.doc_id"))
-        .groupBy(
-            F.col("d1.doc_id").alias("doc_a"),
-            F.col("d2.doc_id").alias("doc_b"),
-            F.col("d1.nrm2").alias("na2"),
-            F.col("d2.nrm2").alias("nb2"),
-        )
-        .agg(F.sum(F.col("d1.wgt") * F.col("d2.wgt")).cast("bigint").alias("dot"))
-    )
-    return (
-        dots.withColumn("cosine", F.expr(TFIDF_COSINE))
-        .filter(F.col("cosine") >= threshold)
-        .select("doc_a", "doc_b", "cosine")
+        frames["n_docs"] = n_docs
+        nd = "{n_docs}"
+    ctes += _tfidf_flat_ctes("{counts}", nd, df_cap, bounded, guard)
+    return _tfidf_pairs(
+        counts.sparkSession, ctes, frames, threshold, quantizer, idf_cap, checked
     )
 
 
@@ -1186,18 +1190,18 @@ def lexical_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-scaled integer TF-IDF shingle vectors via the df-capped
     inverted index (see tfidf_cosine_pairs; bounded guard-window build
     — the always-safe default)."""
-    from ..functions.text import words_sql
-
     prepare(spark)
     # n_docs == docs with >= 1 gram == docs with >= 3 words: countable
-    # from the raw text without evaluating the interpreted gram lambda.
-    n_docs = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .filter(F.expr(f"size({words_sql('text')}) >= 3"))
-        .agg(F.count("*").cast("bigint").alias("n_docs"))
+    # from the raw text without making the grams.
+    ctes = f"""{_SHINGLE_COUNTS_CTES},
+n_docs AS (
+    SELECT CAST(count(*) AS BIGINT) AS n_docs FROM {{docs}}
+    WHERE size({words_sql('text')}) >= 3
+),{_tfidf_flat_ctes("counts", "n_docs", TFIDF_DF_CAP, True, "window")}"""
+    return _tfidf_pairs(
+        spark, ctes, {"docs": table(spark, sf_dir, "documents")},
+        TFIDF_THRESHOLD, 100, None, False,
     )
-    return tfidf_cosine_pairs(shingle_counts(spark, sf_dir), n_docs=n_docs)
 
 
 # --------------------------------------------------------------------------

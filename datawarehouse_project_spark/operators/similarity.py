@@ -38,8 +38,6 @@ from ..session import prepare
 
 #: Embedding dimensionality of the driver's table (asserted in tests).
 DIM = 64
-#: Number of random hyperplanes in HYPERPLANES (plane 0 scores the pandas-UDF row).
-N_PLANES = 8
 #: Query set for the top-k operators: the first QUERY_IDS vectors.
 N_QUERIES = 5
 TOP_K = 10
@@ -50,7 +48,7 @@ TOP_K = 10
 BASELINE_ROW_LIMIT = 20_000
 
 
-def _hyperplanes(n_planes: int = N_PLANES) -> list[list[int]]:
+def _hyperplanes(n_planes: int) -> list[list[int]]:
     """Deterministic pseudo-random hyperplanes: weight[j][i] derived from
     md5(f"hp{j}_{i}") — reproducible anywhere, no RNG state, and identical
     to what an ANSI engine would compute from the same recipe."""
@@ -64,7 +62,8 @@ def _hyperplanes(n_planes: int = N_PLANES) -> list[list[int]]:
     return planes
 
 
-HYPERPLANES = _hyperplanes()
+#: The one hyperplane the pandas-UDF scoring row reads (plane 0).
+HYPERPLANES = _hyperplanes(1)
 
 #: Banded LSH for the near-dup pair join: N_BANDS bands of BAND_BITS sign
 #: bits each (OR across bands). Band width sets precision (2^bits buckets
@@ -95,22 +94,27 @@ ND_PLANES = _hyperplanes(N_BANDS * BAND_BITS)
 # the q_nrm/c_nrm columns at each call site).
 
 
-def _norm(emb) -> F.Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(emb, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+#: The vector folds as SQL text: one parser call per use instead of a py4j
+#: round trip per Column node, and the form the one-statement builders
+#: splice in directly.
+_NORM_SQL = (
+    "sqrt(aggregate(transform({e}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
+    "CAST(0 AS DOUBLE), (acc, x) -> acc + x))"
+)
+_DOT_SQL = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+    "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
+)
 
 
-def _dot(a, b) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _norm(emb: str) -> F.Column:
+    """L2 norm of array column ``emb``: an in-order left fold from 0.0."""
+    return F.expr(_NORM_SQL.format(e=emb))
+
+
+def _dot(a: str, b: str) -> F.Column:
+    """Dot product of array columns ``a`` and ``b``, folded like :func:`_norm`."""
+    return F.expr(_DOT_SQL.format(a=a, b=b))
 
 
 def _dot_lit(emb, weights) -> F.Column:
@@ -174,31 +178,35 @@ FROM ranked WHERE rank <= {TOP_K}
 )
 def similarity_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-k: the ANN baseline every approximate
-    variant is measured against."""
+    variant is measured against. One statement; the vector folds run
+    interpreted, so the scan is spread over the cores first."""
     prepare(spark)
-    emb = spread(spark, table(spark, sf_dir, "embeddings"))
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        _norm(F.col("embedding")).alias("c_nrm"),
-    )
-    pairs = c.crossJoin(F.broadcast(q)).filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    cos = (
-        _dot(F.col("q_emb"), F.col("c_emb"))
-        / (F.col("q_nrm") * F.col("c_nrm"))
-    ).alias("cosine")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        pairs.select("query_id", "neighbor_id", cos)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= TOP_K)
+    return spark.sql(
+        f"""WITH emb AS (
+    SELECT /*+ REPARTITION({spark.sparkContext.defaultParallelism}) */ vec_id, embedding
+    FROM {{emb}}
+),
+q AS (
+    SELECT vec_id AS query_id, embedding AS q_emb, {_NORM_SQL.format(e="embedding")} AS q_nrm
+    FROM emb WHERE vec_id < {N_QUERIES}
+),
+c AS (
+    SELECT vec_id AS neighbor_id, embedding AS c_emb, {_NORM_SQL.format(e="embedding")} AS c_nrm
+    FROM emb
+),
+pairs AS (
+    SELECT /*+ BROADCAST(q) */ query_id, neighbor_id,
+           {_DOT_SQL.format(a="q_emb", b="c_emb")} / (q_nrm * c_nrm) AS cosine
+    FROM c CROSS JOIN q WHERE neighbor_id != query_id
+)
+SELECT query_id, neighbor_id, cosine, rank FROM (
+    SELECT query_id, neighbor_id, cosine,
+           CAST(row_number() OVER (
+               PARTITION BY query_id ORDER BY cosine DESC, neighbor_id
+           ) AS INT) AS rank
+    FROM pairs
+) WHERE rank <= {TOP_K}""",
+        emb=table(spark, sf_dir, "embeddings"),
     )
 
 
@@ -524,13 +532,13 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"),
+        _norm("embedding").alias("q_nrm"),
         F.col("cluster_id").alias("q_cluster"),
     )
     c = assigned.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"),
-        _norm(F.col("embedding")).alias("c_nrm"),
+        _norm("embedding").alias("c_nrm"),
         "cluster_id",
     )
     pairs = c.join(
@@ -539,7 +547,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("neighbor_id") != F.col("query_id")),
     )
     cos = (
-        _dot(F.col("q_emb"), F.col("c_emb"))
+        _dot("q_emb", "c_emb")
         / (F.col("q_nrm") * F.col("c_nrm"))
     ).alias("cosine")
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
@@ -609,14 +617,14 @@ def similarity_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFram
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
-            _norm(F.col("embedding")).alias("q_nrm"),
+            _norm("embedding").alias("q_nrm"),
             F.explode(_ivf_probes_expr(F.col("embedding"))).alias("probe"),
         )
     )
     c = assigned.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"),
-        _norm(F.col("embedding")).alias("c_nrm"),
+        _norm("embedding").alias("c_nrm"),
         "cluster_id",
     )
     pairs = c.join(
@@ -625,7 +633,7 @@ def similarity_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFram
         & (F.col("neighbor_id") != F.col("query_id")),
     )
     cos = (
-        _dot(F.col("q_emb"), F.col("c_emb"))
+        _dot("q_emb", "c_emb")
         / (F.col("q_nrm") * F.col("c_nrm"))
     ).alias("cosine")
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
@@ -958,16 +966,16 @@ def similarity_cosine_pairs(
     a = emb.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("a_emb"),
-        _norm(F.col("embedding")).alias("a_nrm"),
+        _norm("embedding").alias("a_nrm"),
     )
     b = emb.select(
         F.col("vec_id").alias("vec_b"),
         F.col("embedding").alias("b_emb"),
-        _norm(F.col("embedding")).alias("b_nrm"),
+        _norm("embedding").alias("b_nrm"),
     )
     pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
     cos = (
-        _dot(F.col("a_emb"), F.col("b_emb"))
+        _dot("a_emb", "b_emb")
         / (F.col("a_nrm") * F.col("b_nrm"))
     ).alias("cosine")
     return pairs.select("vec_a", "vec_b", cos).filter(F.col("cosine") >= 0.45)
@@ -1077,15 +1085,15 @@ def similarity_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ea = emb.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("a_emb"),
-        _norm(F.col("embedding")).alias("a_nrm"),
+        _norm("embedding").alias("a_nrm"),
     )
     eb = emb.select(
         F.col("vec_id").alias("vec_b"),
         F.col("embedding").alias("b_emb"),
-        _norm(F.col("embedding")).alias("b_nrm"),
+        _norm("embedding").alias("b_nrm"),
     )
     cos = (
-        _dot(F.col("a_emb"), F.col("b_emb"))
+        _dot("a_emb", "b_emb")
         / (F.col("a_nrm") * F.col("b_nrm"))
     ).alias("cosine")
     return (
@@ -1252,15 +1260,15 @@ def near_dup_pairs_scaled(
     ea = emb.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("a_emb"),
-        _norm(F.col("embedding")).alias("a_nrm"),
+        _norm("embedding").alias("a_nrm"),
     )
     eb = emb.select(
         F.col("vec_id").alias("vec_b"),
         F.col("embedding").alias("b_emb"),
-        _norm(F.col("embedding")).alias("b_nrm"),
+        _norm("embedding").alias("b_nrm"),
     )
     cos = (
-        _dot(F.col("a_emb"), F.col("b_emb"))
+        _dot("a_emb", "b_emb")
         / (F.col("a_nrm") * F.col("b_nrm"))
     ).alias("cosine")
     return (

@@ -220,6 +220,26 @@ def cap_hot_keys_salted(
     return df.join(F.broadcast(hot) if broadcast else hot, cond, "left_anti")
 
 
+def hot_key_guard_sql(rel: str, cols: str, key: str, cap: int, guard: str) -> str:
+    """SQL-text form of :func:`hot_key_guard` for one ``key`` of relation
+    ``rel``: a SELECT of ``cols`` over the rows whose key frequency is
+    at most ``cap``. ``"window"`` filters on a COUNT window over the key
+    (:func:`cap_hot_keys`); ``"salted"`` drops the hot keys through a
+    null-safe broadcast anti-join against their partial-counted set
+    (:func:`cap_hot_keys_salted`)."""
+    validate_guard(guard)
+    if guard == "window":
+        return (
+            f"SELECT {cols} FROM (SELECT *, count(*) OVER (PARTITION BY {key}) "
+            f"AS __dw_kf FROM {rel}) WHERE __dw_kf <= {cap}"
+        )
+    return (
+        f"SELECT /*+ BROADCAST(hot) */ {cols} FROM {rel} r LEFT ANTI JOIN "
+        f"(SELECT {key} FROM {rel} GROUP BY {key} HAVING count(*) > {cap}) hot "
+        f"ON r.{key} <=> hot.{key}"
+    )
+
+
 def validate_guard(guard: str) -> None:
     """Shared up-front check for every ``guard=`` knob entry point
     (jaccard, containment, both fuzzy blockers, the TF-IDF build, and

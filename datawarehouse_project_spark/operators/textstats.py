@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import DUCK_DOCWORDS, rolling_fingerprint, words
+from ..functions.text import DUCK_DOCWORDS, rolling_fingerprint, words, words_sql
 from ..io import spread, table
 from ..plans.registry import register
 from ..session import prepare
@@ -64,23 +64,21 @@ GROUP BY 1
 """,
 )
 def text_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus statistics per language: token/char/punctuation profile."""
+    """Corpus statistics per language: token/char/punctuation profile.
+    All per-row work is codegen'd, so the scan feeds the partial
+    aggregate directly, with no spread."""
     prepare(spark)
-    docs = spread(spark, table(spark, sf_dir, "documents"))
-    per_doc = docs.select(
-        "lang",
-        F.size(words("text")).alias("n_tokens"),
-        F.length("text").alias("n_ch"),
-        F.length(F.regexp_replace(F.lower("text"), r"[a-z0-9\s]", "")).alias(
-            "n_punct"
-        ),
-    )
-    return per_doc.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-        (F.sum("n_tokens").cast("double") / F.count("*")).alias("avg_tokens"),
-        F.sum("n_ch").alias("total_chars"),
-        (F.sum("n_punct").cast("double") / F.sum("n_ch")).alias("punct_ratio"),
+    return spark.sql(
+        f"""SELECT lang, count(*) AS n_docs, sum(n_tokens) AS total_tokens,
+       CAST(sum(n_tokens) AS DOUBLE) / count(*) AS avg_tokens,
+       sum(n_ch) AS total_chars,
+       CAST(sum(n_punct) AS DOUBLE) / sum(n_ch) AS punct_ratio
+FROM (
+    SELECT lang, size({words_sql('text')}) AS n_tokens, length(text) AS n_ch,
+           length(regexp_replace(lower(text), '[a-z0-9\\\\s]', '')) AS n_punct
+    FROM {{docs}}
+) GROUP BY lang""",
+        docs=table(spark, sf_dir, "documents"),
     )
 
 

@@ -62,13 +62,6 @@ _RUNTIME_CONFS = {
     "spark.sql.optimizer.excludedRules": (
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     ),
-    # PySpark's DataFrame-debugging call-site capture walks the Python stack
-    # and makes 3 extra py4j round trips on EVERY DataFrame/Column API call
-    # (origin set/clear + conf read). That is ~40% of driver-side plan
-    # construction time per query (profiled: 0.5s of a 1.3s build). It only
-    # enriches error messages with Python call sites — turn it off in the
-    # engine; re-enable interactively when debugging a broken query.
-    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # Whole-stage codegen names each generated class after its codegen
     # stage id (GeneratedIteratorForCodegenStage<N>), and the class source
     # is the codegen cache's key. Under AQE the ids are handed out in the
@@ -88,7 +81,10 @@ def prepare(spark: SparkSession) -> SparkSession:
     Static confs cannot be set on a live session, so a driver-provided
     session keeps Spark's 100-entry codegen class cache
     (``spark.sql.codegen.cache.maxEntries``) and recompiles interleaved
-    queries; only sessions built by :func:`get_spark` get the sized one.
+    queries, and keeps DataFrame-debugging call-site capture on; only
+    sessions built by :func:`get_spark` get both static confs. Every key
+    set here is runtime-modifiable (pinned by tests/test_session.py), so
+    a call costs a few py4j round trips and raises nothing.
     """
     for k, v in _RUNTIME_CONFS.items():
         try:
@@ -135,6 +131,14 @@ def get_spark(
         # the caller, and a static conf cannot change once the session
         # exists (see prepare()).
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # static conf — PySpark's DataFrame-debugging call-site capture
+        # walks the Python stack and makes 3 extra py4j round trips on
+        # EVERY DataFrame/Column API call (origin set/clear + conf read).
+        # That is ~40% of driver-side plan construction time per query
+        # (profiled: 0.5s of a 1.3s build). It only enriches error
+        # messages with Python call sites — off in the engine; re-enable
+        # interactively when debugging a broken query.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -520,3 +520,41 @@ def test_feed_upsert_shape_and_jobless_snapshot_reads(spark, feed_dir, tmp_path,
     assert above.count("Exchange") == 1 and "Exchange hashpartitioning(order_id" in above
     assert "FileScan parquet" in incumbent and "Exchange" not in incumbent
     assert len(re.findall(r"Exchange hashpartitioning\(order_id#\d+, \d+\)", incoming)) == 1
+
+
+#: The LLM-pipeline operator rows of the benchmark's query mix, each built
+#: as one SQL statement.
+OPERATOR_ROWS = [
+    "dedup_ngram_jaccard_capped",
+    "lexical_tfidf_cosine_pairs",
+    "similarity_ann_cosine_topk",
+    "text_stats_by_lang",
+    "events_funnel_conversion",
+]
+_SHUFFLE = re.compile(
+    r"(?<!Broadcast)Exchange (hashpartitioning|SinglePartition|RoundRobinPartitioning|rangepartitioning)"
+)
+
+
+def test_operator_rows_build_jobless_and_shuffle_once_per_key(spark, sf_dir):
+    """The operator rows build without launching a job. The posting-list
+    kernels make their grams with a codegen'd explode (no interpreted
+    lambda), take no round-robin pre-shuffle, and shuffle once per key:
+    dedup on shingle, doc, shingle and pair (4); tfidf on term, doc,
+    term and pair, plus the 1-row corpus count (5). text_stats runs its
+    codegen'd per-row work straight off the scan."""
+    builders = all_queries()
+    for name in OPERATOR_ROWS:
+        builders[name](spark, sf_dir)  # first touch resolves the table memos
+    sc = spark.sparkContext
+    sc.setJobGroup("operator-build", "operator rows build")
+    try:
+        plans = {n: plan_of(builders[n](spark, sf_dir)) for n in OPERATOR_ROWS}
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup("operator-build") == []
+    for name in OPERATOR_ROWS[:2] + ["text_stats_by_lang"]:
+        assert "RoundRobinPartitioning" not in plans[name], name
+        assert "lambdafunction" not in plans[name], name
+    assert len(_SHUFFLE.findall(plans["dedup_ngram_jaccard_capped"])) <= 4
+    assert len(_SHUFFLE.findall(plans["lexical_tfidf_cosine_pairs"])) <= 5
