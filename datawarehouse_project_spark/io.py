@@ -69,11 +69,20 @@ def _remove_dirs(dirs: list[str]) -> None:
 
 
 class SessionState:
-    """One session's derived state: table and fact handles, pins, served
-    store roots, checkpoints and tuned sizes. An entry is keyed by
-    ``(kind, sf_dir, name)`` and records the source tables it derives
-    from; its token is their :func:`source_mtime_ns` tuple, so a local
-    source rewritten in-session re-derives it on the next lookup, and
+    """One session's derived state. An entry is keyed by
+    ``(kind, sf_dir, name)``; the kinds are:
+
+    * ``table``: a resolved table handle, or a pin (:func:`pin`);
+    * ``fact``: the enriched fact plan, or a pin of it;
+    * ``served``: a served store's root directory;
+    * ``checkpoint``: a builder's live ``localCheckpoint``;
+    * ``tuned``: a size tuned on the data (a bucket width);
+    * ``plan``: a registered query's analyzed plan
+      (``plans.registry.prepared``), kept per ``(sf_dir, name)``.
+
+    An entry records the source tables it derives from; its token is
+    their :func:`source_mtime_ns` tuple, so a local source rewritten
+    in-session re-derives it on the next lookup, and
     :func:`refresh_table` drops it by source name — the only path on
     non-local dirs, where the token never changes. A displaced entry's
     ``release`` action (if any) runs once it is out of the store.
@@ -92,21 +101,36 @@ class SessionState:
         self._build_locks: dict[tuple, threading.Lock] = {}
         self._dirs: list[str] = []
         weakref.finalize(self, _remove_dirs, self._dirs)
+        #: the session's runtime SQL confs as ``session.prepare`` last
+        #: pinned them: a JVM map copy that is replaced only when they
+        #: change, so one snapshot object means one set of confs
+        self.confs = None
+        #: the session's live JVM SQL conf map, which ``confs`` copies
+        self.live_confs = None
 
-    def get(self, kind, sf_dir, name, sources, build):
+    def get(self, kind, sf_dir, name, sources, build, fresh=None):
         """The value at ``(kind, sf_dir, name)``; ``build()`` makes it on
-        first lookup and whenever a source has changed since."""
+        first lookup and whenever a source has changed since, or when
+        ``fresh(value)`` (if given) no longer holds. A ``build()`` that
+        returns None keeps nothing and drops the stale entry."""
         key = (kind, sf_dir, name)
         token = tuple(source_mtime_ns(sf_dir, t) for t in sources)
-        with self._lock:
-            entry = self._entries.get(key)
-            if entry is not None and entry[1] == token:
-                return entry[2]
-            build_lock = self._build_locks.setdefault(key, threading.Lock())
-        with build_lock:
+
+        def stored():
             with self._lock:
                 entry = self._entries.get(key)
-            if entry is not None and entry[1] == token:
+            if entry is None or entry[1] != token:
+                return None
+            return entry if fresh is None or fresh(entry[2]) else None
+
+        entry = stored()
+        if entry is not None:
+            return entry[2]
+        with self._lock:
+            build_lock = self._build_locks.setdefault(key, threading.Lock())
+        with build_lock:
+            entry = stored()
+            if entry is not None:
                 return entry[2]  # built by another thread meanwhile
             return self._put(key, sources, token, build(), None)
 
@@ -118,20 +142,27 @@ class SessionState:
 
     def _put(self, key, sources, token, value, release):
         with self._lock:
-            old = self._entries.get(key)
-            self._entries[key] = (tuple(sources), token, value, release)
+            old = self._entries.pop(key, None)
+            if value is not None:
+                self._entries[key] = (tuple(sources), token, value, release)
         if old is not None and old[3] is not None:
             old[3](old[2])
         return value
 
-    def drop(self, sf_dir: str | None = None, name: str | None = None) -> None:
-        """Drop every entry under ``sf_dir`` that derives from table
-        ``name``; either argument None matches all."""
+    def drop(
+        self,
+        sf_dir: str | None = None,
+        name: str | None = None,
+        kind: str | None = None,
+    ) -> None:
+        """Drop every entry of ``kind`` under ``sf_dir`` that derives
+        from table ``name``; any argument None matches all."""
         with self._lock:
             dropped = [
                 self._entries.pop(k)
                 for k, (sources, *_) in list(self._entries.items())
-                if (sf_dir is None or k[1] == sf_dir)
+                if (kind is None or k[0] == kind)
+                and (sf_dir is None or k[1] == sf_dir)
                 and (name is None or name in sources)
             ]
         for _, _, value, release in dropped:
@@ -158,6 +189,29 @@ class SessionState:
         with self._lock:
             self._entries.pop(("served", sf_dir, name), None)
         return self.get("served", sf_dir, name, sources, make)
+
+    def live_roots(self, sf_dir: str) -> tuple[str, ...]:
+        """The served roots under ``sf_dir`` that are on disk."""
+        import os
+
+        with self._lock:
+            roots = [
+                entry[2]
+                for key, entry in self._entries.items()
+                if key[0] == "served" and key[1] == sf_dir
+            ]
+        return tuple(r for r in roots if os.path.isdir(r))
+
+    def inventory(self) -> list[dict]:
+        """One record per entry: its kind, sf_dir, name, source tables
+        and token."""
+        with self._lock:
+            entries = list(self._entries.items())
+        return [
+            {"kind": kind, "sf_dir": sf_dir, "name": name,
+             "sources": sources, "token": token}
+            for (kind, sf_dir, name), (sources, token, _, _) in entries
+        ]
 
 
 _STATES: "weakref.WeakKeyDictionary[SparkSession, SessionState]" = (
@@ -209,16 +263,17 @@ def pin(
     """Make ``df`` the handle :func:`table` returns for ``name`` — or,
     with ``name="fact"``, the plan ``plans.star.fact`` returns — under
     ``sf_dir``. The pin takes the sources' current token like any entry,
-    so :func:`refresh_table` or a source rewrite drops it. Use cases: a
-    cached, better-partitioned layout of a hot table or of the fact
-    (Spark cache substitution matches by logical plan, so caching a
-    repartitioned copy without re-pointing the handle would never hit),
-    and a materialized fact (``sources.catalog_ddl``)."""
+    so :func:`refresh_table` or a source rewrite drops it; the pin drops
+    the query plans kept under ``sf_dir``, which read the handle it
+    replaces. Use cases: a cached, better-partitioned layout of a hot
+    table or of the fact (Spark cache substitution matches by logical
+    plan, so caching a repartitioned copy without re-pointing the handle
+    would never hit), and a materialized fact (``sources.catalog_ddl``)."""
+    state = session_state(spark)
+    state.drop(sf_dir, kind="plan")
     if name == "fact":
-        return session_state(spark).put(
-            "fact", sf_dir, name, FACT_SOURCE_TABLES, df
-        )
-    return session_state(spark).put("table", sf_dir, name, (name,), df)
+        return state.put("fact", sf_dir, name, FACT_SOURCE_TABLES, df)
+    return state.put("table", sf_dir, name, (name,), df)
 
 
 def refresh_table(
@@ -227,10 +282,10 @@ def refresh_table(
     """Drop the session state derived from table ``name`` under
     ``sf_dir`` — the ``REFRESH TABLE`` analog for this path-based
     catalog: table handles and pins, the fact plan, served stores,
-    checkpoints and tuned sizes. Call after overwriting a table
-    directory that was previously resolved in this session: the pinned
-    file listing otherwise serves deleted-file reads or stale rows.
-    Either argument None matches all."""
+    checkpoints, tuned sizes and kept query plans. Call after
+    overwriting a table directory that was previously resolved in this
+    session: the pinned file listing otherwise serves deleted-file reads
+    or stale rows. Either argument None matches all."""
     session_state(spark).drop(sf_dir, name)
 
 

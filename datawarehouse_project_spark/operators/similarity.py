@@ -179,20 +179,21 @@ FROM ranked WHERE rank <= {TOP_K}
 def similarity_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-k: the ANN baseline every approximate
     variant is measured against. One statement; the vector folds run
-    interpreted, so the scan is spread over the cores first."""
+    interpreted, so the candidate scan is spread over the cores first.
+    The few query rows are read straight from the table and broadcast."""
     prepare(spark)
     return spark.sql(
-        f"""WITH emb AS (
+        f"""WITH spread AS (
     SELECT /*+ REPARTITION({spark.sparkContext.defaultParallelism}) */ vec_id, embedding
     FROM {{emb}}
 ),
 q AS (
     SELECT vec_id AS query_id, embedding AS q_emb, {_NORM_SQL.format(e="embedding")} AS q_nrm
-    FROM emb WHERE vec_id < {N_QUERIES}
+    FROM {{emb}} WHERE vec_id < {N_QUERIES}
 ),
 c AS (
     SELECT vec_id AS neighbor_id, embedding AS c_emb, {_NORM_SQL.format(e="embedding")} AS c_nrm
-    FROM emb
+    FROM spread
 ),
 pairs AS (
     SELECT /*+ BROADCAST(q) */ query_id, neighbor_id,

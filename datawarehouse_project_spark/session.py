@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .io import session_state
+
 #: Confs that are safe to set on a live session (runtime-settable) and that
 #: query semantics or scale posture depend on.
 _RUNTIME_CONFS = {
@@ -26,6 +28,12 @@ _RUNTIME_CONFS = {
     # (LTZ) under the pinned UTC session timezone gives identical values
     # batch-side and makes the same column watermarkable stream-side.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # events.ts is INT64 TIMESTAMP(NANOS), which Spark reads only as raw
+    # nanos under this conf (io.table truncates them to microseconds).
+    # io.table sets it too, but pinned here it is set before any build,
+    # so loading events never changes the session's confs and never
+    # invalidates the query plans kept under the old ones.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Write timestamps as TIMESTAMP_MICROS, not Spark's INT96 default:
     # parquet writers emit NO min/max statistics for INT96 (deprecated as
     # unreliable), so every INT96 time column is unprunable — no
@@ -83,14 +91,28 @@ def prepare(spark: SparkSession) -> SparkSession:
     (``spark.sql.codegen.cache.maxEntries``) and recompiles interleaved
     queries, and keeps DataFrame-debugging call-site capture on; only
     sessions built by :func:`get_spark` get both static confs. Every key
-    set here is runtime-modifiable (pinned by tests/test_session.py), so
-    a call costs a few py4j round trips and raises nothing.
+    set here is runtime-modifiable (pinned by tests/test_session.py).
+
+    The confs as last pinned are kept in the session's state as a JVM map
+    copy (``io.SessionState.confs``); while the session's confs still
+    equal it, a call is one py4j round trip (the map comparison runs in
+    the JVM) and sets nothing. Any change, by anyone, re-pins all keys;
+    the snapshot is replaced only if the confs then differ from it, which
+    is what a kept query plan checks (``plans.registry.prepared``).
     """
+    state = session_state(spark)
+    if state.live_confs is None:
+        state.live_confs = spark._jsparkSession.sessionState().conf().settings()
+    snapshot = state.confs
+    if snapshot is not None and snapshot.equals(state.live_confs):
+        return spark
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - conf locked by the host
             pass
+    if snapshot is None or not snapshot.equals(state.live_confs):
+        state.confs = spark._jvm.java.util.HashMap(state.live_confs)
     return spark
 
 

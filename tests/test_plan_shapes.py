@@ -542,7 +542,9 @@ def test_operator_rows_build_jobless_and_shuffle_once_per_key(spark, sf_dir):
     lambda), take no round-robin pre-shuffle, and shuffle once per key:
     dedup on shingle, doc, shingle and pair (4); tfidf on term, doc,
     term and pair, plus the 1-row corpus count (5). text_stats runs its
-    codegen'd per-row work straight off the scan."""
+    codegen'd per-row work straight off the scan. The similarity row
+    spreads only its candidate side: the few query rows it broadcasts
+    are read straight from the table, not round-robin shuffled first."""
     builders = all_queries()
     for name in OPERATOR_ROWS:
         builders[name](spark, sf_dir)  # first touch resolves the table memos
@@ -558,3 +560,23 @@ def test_operator_rows_build_jobless_and_shuffle_once_per_key(spark, sf_dir):
         assert "lambdafunction" not in plans[name], name
     assert len(_SHUFFLE.findall(plans["dedup_ngram_jaccard_capped"])) <= 4
     assert len(_SHUFFLE.findall(plans["lexical_tfidf_cosine_pairs"])) <= 5
+    broadcast = _subtrees(plans["similarity_ann_cosine_topk"], "BroadcastExchange")
+    assert broadcast and not any("RoundRobinPartitioning" in b for b in broadcast)
+
+
+def _subtrees(plan: str, node: str) -> list[str]:
+    """The lines below each ``node`` line of an explain tree, one string
+    per occurrence."""
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        if line.lstrip(" :+-").startswith(node):
+            end = i + 1
+            while end < len(lines) and depth(lines[end]) > depth(line):
+                end += 1
+            out.append("\n".join(lines[i + 1 : end]))
+    return out
