@@ -327,7 +327,7 @@ class IvfVectorIndex:
         (replay stays idempotent across the compaction), same query
         answers — parity pytest-pinned."""
         return self.table.compact(
-            spark, target_files=target_files, cluster_keys=["cluster_id"]
+            spark, target_files=target_files, cluster_key="cluster_id"
         )
 
     def remove(

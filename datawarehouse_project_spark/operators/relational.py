@@ -701,10 +701,9 @@ def bigjoin_order_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFram
     """Fact⨝fact join: neither side is broadcast-able at 100 TB, so this
     is THE query shape that shuffles both inputs on the key. On plain
     parquet Catalyst/AQE picks the strategy (locally it broadcasts the
-    smaller side; at scale it sort-merge-joins); the zero-shuffle
-    production path for a repeated join like this is the bucketed layout
-    in sources/bucketed.py, which plans this exact join with no Exchange
-    (asserted in tests/test_bucketed.py)."""
+    smaller side; at scale it sort-merge-joins). A join repeated at scale
+    would bucket both sides on the key once (``bucketBy``) so that later
+    runs plan it with no Exchange; the engine keeps no such layout."""
     prepare(spark)
     orders = table(spark, sf_dir, "orders")
     lineitem = table(spark, sf_dir, "lineitem")

@@ -565,7 +565,7 @@ class StreamingPostingsStore:
     ones.
     MAINTENANCE: a long-lived streamed store accumulates interleaved
     term layouts across commits; ``store.rollup.table.compact(spark,
-    cluster_keys=["w"])`` range-clusters the state so the probe's
+    cluster_key="w")`` range-clusters the state so the probe's
     pushed In(w) filter skips whole FILES — rows, serving answer, and
     the replay ledger survive the rewrite (composition-pinned in
     tests/test_postings_stream.py)."""

@@ -37,10 +37,9 @@ _RUNTIME_CONFS = {
     # Write timestamps as TIMESTAMP_MICROS, not Spark's INT96 default:
     # parquet writers emit NO min/max statistics for INT96 (deprecated as
     # unreliable), so every INT96 time column is unprunable — no
-    # row-group skipping on time-range scans, ever, regardless of layout
-    # (sources/clustered.py is the evidence). INT64 micros is also what
-    # DuckDB/pyarrow read natively. Affects writes only; reads of either
-    # encoding are unchanged.
+    # row-group skipping on time-range scans, ever, regardless of layout.
+    # INT64 micros is also what DuckDB/pyarrow read natively. Affects
+    # writes only; reads of either encoding are unchanged.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     # Adaptive execution: coalesce post-shuffle partitions, convert to
     # broadcast joins at runtime, split skewed partitions. This is the
@@ -136,7 +135,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # static conf — settable only at session build; keeps managed
-        # (bucketed) tables out of the repo working dir
+        # tables out of the repo working dir
         .config("spark.sql.warehouse.dir", "/tmp/dwspark-warehouse")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # static conf — the JVM-wide cache of compiled codegen classes

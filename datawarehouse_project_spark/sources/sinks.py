@@ -1,4 +1,4 @@
-"""Write paths: partitioned parquet, bucketed tables, and upsert-merge.
+"""Write paths: partitioned parquet and upsert-merge.
 
 The reference's only sink is per-row JDBC upsert (MeshJoin.java:79,145,207,
 374 — one round-trip per row, the dominant cost of its ETL). The Spark
@@ -7,9 +7,6 @@ equivalents:
 * ``write_partitioned`` — columnar parquet laid out by partition columns
   (date is the natural choice for the fact table: enables partition
   pruning for every year/quarter/month query in the catalog);
-* ``write_bucketed`` — hash-bucketed by join key so repeated fact⨝fact or
-  fact⨝bigdim joins co-locate without a shuffle (SURVEY §4: the
-  pre-shuffle trade);
 * ``upsert_parquet`` — the S7 PK upsert as a deterministic read-merge-write
   (last-write-wins vs the incumbent rows). On a mutable table format
   (Delta/Iceberg — not in this container) this is ``MERGE INTO``; the
@@ -45,24 +42,6 @@ def write_partitioned(
     the classic failure; AQE coalescing keeps file counts sane per
     partition."""
     df.write.partitionBy(*partition_cols).mode(mode).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Hash-bucketed managed table: both sides of a future equi-join on
-    ``bucket_col`` bucketed with the same count join shuffle-free."""
-    (
-        df.write.bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .mode(mode)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
 
 
 def upsert_parquet(
@@ -496,7 +475,7 @@ class VersionedParquetTable:
         spark: SparkSession,
         target_files: int | None = None,
         target_bytes: int = 128 << 20,
-        cluster_keys: list[str] | None = None,
+        cluster_key: str | None = None,
         max_retries: int = 10,
     ) -> int | None:
         """OPTIMIZE: rewrite the CURRENT snapshot into few large files as
@@ -512,13 +491,11 @@ class VersionedParquetTable:
         makes the rewrite stale, so it re-reads and retries. Returns the
         committed version (None on an empty table).
 
-        ``cluster_keys`` is the OPTIMIZE-ZORDER-BY form: one key
-        range-clusters the rewrite (disjoint per-file key ranges, rows
-        sorted within files), 2+ keys sort along the equi-depth z-curve
-        (``sources/clustered.py``) so range predicates on ANY key prune
-        the compacted files' row groups. Costs the one range exchange +
-        local sort a clustered write always pays; plain compaction stays
-        a shuffle-free coalesce."""
+        ``cluster_key`` range-clusters the rewrite: disjoint per-file key
+        ranges, rows sorted within files, so range and IN predicates on
+        the key prune the compacted files' row groups. Costs one range
+        exchange and a local sort; plain compaction stays a shuffle-free
+        coalesce."""
 
         def rewrite(base_path: str | None) -> DataFrame | None:
             if base_path is None:
@@ -533,19 +510,10 @@ class VersionedParquetTable:
                 )
                 n_out = max(1, -(-total // target_bytes))
             df = _snapshot(spark, base_path)
-            if not cluster_keys:
+            if cluster_key is None:
                 return df.coalesce(n_out)
-            if len(cluster_keys) == 1:
-                return df.repartitionByRange(
-                    n_out, cluster_keys[0]
-                ).sortWithinPartitions(cluster_keys[0])
-            from .clustered import zorder_column
-
-            zdf, zcol = zorder_column(df, cluster_keys, method="depth")
-            return (
-                zdf.repartitionByRange(n_out, zcol)
-                .sortWithinPartitions(zcol)
-                .drop(zcol)
+            return df.repartitionByRange(n_out, cluster_key).sortWithinPartitions(
+                cluster_key
             )
 
         return self._commit("compact", rewrite, max_retries)

@@ -398,7 +398,7 @@ if mode == "resume":
 
 def test_postings_store_optimize_clusters_for_the_probe(spark, sf_dir, tmp_path):
     """Maintenance composition (r16): OPTIMIZE the postings state with
-    cluster_keys=["w"] and the probe-proportional serving plan's pushed
+    cluster_key="w" and the probe-proportional serving plan's pushed
     In(w, ...) filter gets DISJOINT per-file term ranges to skip — the
     file-level pruning a probe over a many-commit streamed store needs
     at corpus scale. Rows, serving answer, and the replay ledger are
@@ -422,7 +422,7 @@ def test_postings_store_optimize_clusters_for_the_probe(spark, sf_dir, tmp_path)
     assert before == _topk_set(all_queries()["lexical_bm25_topk"](spark, sf_dir))
 
     t = store.rollup.table
-    t.compact(spark, target_files=4, cluster_keys=["w"])
+    t.compact(spark, target_files=4, cluster_key="w")
 
     # per-file w ranges disjoint => the pushed In(w) filter skips files
     files = sorted(

@@ -1,5 +1,5 @@
-"""Sink tests: partition pruning actually prunes, bucketed joins skip the
-shuffle, upsert is last-write-wins and idempotent."""
+"""Sink tests: partition pruning actually prunes, upsert is
+last-write-wins and idempotent."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from datawarehouse_project_spark.io import table
 from datawarehouse_project_spark.sources.sinks import (
     upsert_parquet,
-    write_bucketed,
     write_partitioned,
 )
 
@@ -32,39 +31,6 @@ def test_write_partitioned_prunes(spark, sf_dir, tmp_path):
     assert pruned.count() == li.filter(F.col("order_year") == 1997).count()
     # partition filter present => only the 1997 directory is scanned
     assert "order_year" in plan
-
-
-@pytest.mark.slow
-def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
-    # managed tables land in the session warehouse dir (/tmp, set in
-    # get_spark — a static conf, unsettable at runtime)
-    spark.sql("DROP TABLE IF EXISTS orders_b")
-    spark.sql("DROP TABLE IF EXISTS lineitem_b")
-    import shutil
-
-    for t in ("orders_b", "lineitem_b"):
-        shutil.rmtree(f"/tmp/dwspark-warehouse/{t}", ignore_errors=True)
-    orders = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    write_bucketed(orders, "orders_b", "o_orderkey", 8)
-    write_bucketed(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"), "lineitem_b", "o_orderkey", 8
-    )
-    # at test scale the planner would broadcast (and skip bucketing
-    # entirely); force the shuffle-join path to observe bucket co-location
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("orders_b").join(spark.table("lineitem_b"), "o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Exchange hashpartitioning" not in plan, (
-            "bucketed join must not reshuffle"
-        )
-        assert "Bucketed: true" in plan
-        assert joined.count() == li.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 @pytest.mark.slow
@@ -525,7 +491,7 @@ def test_versioned_upsert_additive_schema_evolution(spark, tmp_path):
 
 @pytest.mark.slow
 def test_clustered_compaction_produces_disjoint_key_ranges(spark, tmp_path):
-    """OPTIMIZE ZORDER/range form: compact(cluster_keys=[k]) must leave
+    """OPTIMIZE range form: compact(cluster_key=k) must leave
     per-file key ranges disjoint (the property row-group pruning needs)
     while preserving rows and the ledger."""
     import os
@@ -543,7 +509,7 @@ def test_clustered_compaction_produces_disjoint_key_ranges(spark, tmp_path):
     t.upsert(spark, rows, pk=["k"], txn=("w", 0))
     pre = sorted((r.k, r.v) for r in t.read(spark).collect())
 
-    v = t.compact(spark, target_files=4, cluster_keys=["k"])
+    v = t.compact(spark, target_files=4, cluster_key="k")
     assert v == 2
     files = sorted(
         e.path
