@@ -288,37 +288,6 @@ def events_enrich_meshjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 @register(
-    "events_click_attribution",
-    driver_facing=False,  # rotated out r9: driver-green since <=r7;
-    # window slot ceded to the round-8 operator crop (pytest oracle still runs)
-    oracle="""
-SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-       epoch_us(c.ts) AS click_ts_us, epoch_us(p.ts) AS purchase_ts_us,
-       CAST(epoch_us(p.ts) - epoch_us(c.ts) AS DOUBLE) / 1000000.0
-           AS latency_s,
-       p.value AS purchase_value
-FROM events c JOIN events p
-  ON c.user_id = p.user_id
- AND c.event_type = 'click' AND p.event_type = 'purchase'
- AND p.ts >= c.ts AND p.ts < c.ts + INTERVAL 30 MINUTE
-""",
-)
-def events_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Click→purchase attribution pairs, batch form: same-user purchases
-    within 30 minutes after a click. This is the batch twin of the
-    watermarked stream-stream join (streaming/stream_join.py) — the
-    capability one step beyond the reference's stream⨝static MESHJOIN
-    (MeshJoin.java:216-284): both inputs unbounded. The streaming runner
-    must reproduce these rows exactly (tests/test_streaming.py)."""
-    from ..streaming.stream_join import click_attribution, split_clicks_purchases
-
-    prepare(spark)
-    clicks, purchases = split_clicks_purchases(table(spark, sf_dir, "events"))
-    return click_attribution(clicks, purchases)
-
-
-# --------------------------------------------------------------------------
-@register(
     "events_gapfill_hourly",
     driver_facing=False,  # r12 rotation: driver-green r10+r11; slot ceded
     # to the r10-crop promotions (VERDICT r11 next-round #1).

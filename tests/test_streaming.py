@@ -13,11 +13,6 @@ from datawarehouse_project_spark.streaming.meshjoin import (
     enrich_batch,
     run_meshjoin_stream,
 )
-from datawarehouse_project_spark.streaming.stream_join import (
-    click_attribution,
-    run_stream_stream_join,
-    split_clicks_purchases,
-)
 from datawarehouse_project_spark.streaming.windows import (
     run_windowed_stream,
     windowed_counts,
@@ -99,484 +94,6 @@ def test_windowed_stream_equals_batch(spark, chunked_events, tmp_path):
     assert len(streamed) > 10
 
 
-def test_stream_stream_join_equals_batch(spark, chunked_events, tmp_path):
-    """The watermarked stream-stream inner join must emit exactly the
-    batch join's pairs. The chunk fixture splits by event_id, so a chunk
-    spans the full month — an unordered backfill — and the documented
-    contract is that the watermark must cover the source's event-time
-    disorder; hence the full-span watermark here. Eager emission (inner
-    joins don't wait for the watermark) is asserted via rows arriving
-    across multiple micro-batches."""
-    src, schema = chunked_events
-
-    got = []
-    run_stream_stream_join(
-        spark,
-        src,
-        schema,
-        sink=lambda df, bid: got.append(df.collect()),
-        watermark="40 days",
-        files_per_trigger=1,
-        checkpoint_dir=str(tmp_path / "ckpt3"),
-    )
-    batches_with_rows = [b for b in got if b]
-    assert len(batches_with_rows) >= 2, "pairs must be emitted incrementally"
-    streamed = sorted(str(r) for batch in got for r in batch)
-
-    ev = spark.read.schema(schema).parquet(src)
-    batch = click_attribution(*split_clicks_purchases(ev))
-    assert streamed == _collect_sorted(batch)
-    assert len(streamed) > 0
-
-
-def test_stream_stream_join_reports_metrics(spark, chunked_events, tmp_path):
-    """With a watermark covering all disorder: observed pairs_emitted ==
-    batch pair count and zero watermark drops."""
-    src, schema = chunked_events
-    got = []
-    metrics = run_stream_stream_join(
-        spark,
-        src,
-        schema,
-        sink=lambda df, bid: got.append(df.count()),
-        watermark="40 days",
-        checkpoint_dir=str(tmp_path / "ckpt_m"),
-    )
-    batch_pairs = click_attribution(
-        *split_clicks_purchases(spark.read.schema(schema).parquet(src))
-    ).count()
-    assert metrics["pairs_emitted"] == sum(got) == batch_pairs
-    assert metrics["rows_dropped_by_watermark"] == 0
-
-
-def test_stream_stream_join_observes_late_drops(spark, tmp_path):
-    """VERDICT r2 #9: deliberately late purchases must surface in the
-    returned metrics (rows_dropped_by_watermark > 0) instead of vanishing
-    silently. Chunk 0 carries clicks up to t+60min (advancing the
-    watermark); chunk 1 delivers purchases at t+1..3min — far older than
-    the 1-minute watermark horizon by the time they arrive."""
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    base = 1_600_000_000
-    # Three chunks, because two watermark mechanics must fire BEFORE the
-    # late rows arrive: (a) with the default min-of-watermarks policy both
-    # sides' watermarks must advance (chunk 0 carries a high-ts purchase
-    # for that), and (b) state eviction happens at the END of the batch
-    # that advances the watermark — so chunk 1 is a quiet batch whose
-    # processing evicts the old clicks, and only chunk 2's purchases meet
-    # an already-evicted state and count as droppedByWatermark.
-    chunk0 = [(i, 1, "click", i * 60, 0.0) for i in range(61)]  # t+0..60min
-    chunk0.append((99, 2, "purchase", 60 * 60, 1.0))
-    chunk1 = [(200, 2, "click", 3660, 0.0), (201, 2, "purchase", 3665, 1.0)]
-    late_purchases = [(100 + i, 1, "purchase", i * 60 + 30, 9.9) for i in (1, 2, 3)]
-    src = str(tmp_path / "late_src")
-
-    import datetime
-    import time
-
-    def write_chunk(rows):
-        data = [
-            (e, u, k, datetime.datetime.utcfromtimestamp(base + s), v)
-            for e, u, k, s, v in rows
-        ]
-        spark.createDataFrame(data, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        time.sleep(1.1)  # distinct mtimes keep the file-source chunk order
-
-    write_chunk(chunk0)
-    write_chunk(chunk1)
-    write_chunk(late_purchases)
-
-    got = []
-    metrics = run_stream_stream_join(
-        spark,
-        src,
-        schema,
-        sink=lambda df, bid: got.append(df.count()),
-        watermark="1 minute",
-        files_per_trigger=1,
-        checkpoint_dir=str(tmp_path / "ckpt_late"),
-    )
-    assert metrics["rows_dropped_by_watermark"] > 0
-    # the batch twin WOULD have attributed those purchases — the metric is
-    # exactly the observability of that divergence
-    ev = spark.read.schema(schema).parquet(src)
-    batch_pairs = click_attribution(*split_clicks_purchases(ev)).count()
-    assert batch_pairs > sum(got)
-
-
-# --------------------------------------------------------------------------
-# Late-event dead-letter routing (r10): allowed-lateness with evidence.
-
-
-def test_late_dlq_routes_and_conserves_rows(spark, tmp_path):
-    from datawarehouse_project_spark.streaming.late_dlq import LateEventRouter
-
-    router = LateEventRouter(
-        str(tmp_path / "main"),
-        str(tmp_path / "late"),
-        str(tmp_path / "state"),
-        allowed_lateness_s=3600,
-    )
-    b0 = spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00"), (2, "2024-01-01 12:00:00")],
-        "event_id long, ts string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    router.apply_batch(spark, b0, ["event_id"], batch_id=0)
-    # first batch: no prior watermark, nothing can be late
-    assert router.late.read(spark).count() == 0
-    assert router.watermark_us(spark) is not None
-
-    b1 = spark.createDataFrame(
-        [
-            (3, "2024-01-01 12:30:00"),  # fresh
-            (4, "2024-01-01 11:30:00"),  # within lateness (wm 12:00 - 1h)
-            (5, "2024-01-01 09:00:00"),  # LATE: 2h before the 12:00 wm
-        ],
-        "event_id long, ts string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    router.apply_batch(spark, b1, ["event_id"], batch_id=1)
-    late = {r.event_id: r for r in router.late.read(spark).collect()}
-    assert set(late) == {5}
-    assert late[5].late_batch_id == 1
-    assert late[5].late_by_s == 7200.0
-    main_ids = {r.event_id for r in router.main.read(spark).collect()}
-    assert main_ids == {1, 2, 3, 4}
-    # conservation: main ∪ late == every input row exactly once
-    assert router.main.read(spark).count() + router.late.read(spark).count() == 5
-    # watermark advanced to b1's max
-    assert router.watermark_us(spark) == int(
-        b1.agg(F.max(F.unix_micros(F.col("ts")))).first()[0]
-    )
-
-    # replay of the whole batch: all three ledgers absorb it
-    versions = (
-        router.main.current_version(),
-        router.late.current_version(),
-        router.state.current_version(),
-    )
-    router.apply_batch(spark, b1, ["event_id"], batch_id=1)
-    assert versions == (
-        router.main.current_version(),
-        router.late.current_version(),
-        router.state.current_version(),
-    )
-
-
-def test_late_dlq_streaming_foreachbatch(spark, tmp_path):
-    """The router as a writeStream sink: chunked replayed input still
-    yields exactly-once routing (ledger), and the watermark only ever
-    advances."""
-    from datawarehouse_project_spark.streaming.late_dlq import LateEventRouter
-
-    rows = [
-        (i, f"2024-01-01 {8 + i:02d}:00:00", i % 3) for i in range(6)
-    ]
-    src_df = spark.createDataFrame(
-        rows, "event_id long, ts string, part int"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    src = str(tmp_path / "src")
-    src_df.write.partitionBy("part").mode("overwrite").parquet(src)
-    router = LateEventRouter(
-        str(tmp_path / "m"),
-        str(tmp_path / "l"),
-        str(tmp_path / "s"),
-        allowed_lateness_s=1800,
-    )
-
-    def run():
-        (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(
-                lambda bdf, bid: router.apply_batch(
-                    spark, bdf.drop("part"), ["event_id"], batch_id=bid
-                )
-            )
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    run()
-    total = router.main.read(spark).count() + (
-        router.late.read(spark) or spark.createDataFrame([], "x int")
-    ).count()
-    assert total == 6
-    wm1 = router.watermark_us(spark)
-    vs = (router.main.current_version(), router.late.current_version())
-    run()  # full replay
-    assert (router.main.current_version(), router.late.current_version()) == vs
-    assert router.watermark_us(spark) == wm1
-
-
-def test_late_dlq_composes_with_incremental_rollup(spark, tmp_path):
-    """Composition: the router's ON-TIME stream feeds the incremental
-    rollup inside the SAME foreachBatch — exactly the allowed-lateness
-    windowed aggregation Structured Streaming does internally, but with
-    the dropped rows preserved in the DLQ. Invariants: rollup == exact
-    aggregate over the main table (late rows excluded), main ∪ late ==
-    input, full replay changes nothing anywhere."""
-    from datawarehouse_project_spark.operators.incremental import (
-        IncrementalRollup,
-    )
-    from datawarehouse_project_spark.streaming.late_dlq import LateEventRouter
-
-    router = LateEventRouter(
-        str(tmp_path / "m"),
-        str(tmp_path / "l"),
-        str(tmp_path / "s"),
-        allowed_lateness_s=3600,
-    )
-    rollup = IncrementalRollup(
-        str(tmp_path / "roll"), keys=["etype"], sum_cols=["value"]
-    )
-    batches = [
-        [(1, "2024-01-01 10:00:00", "a", 1.0), (2, "2024-01-01 12:00:00", "b", 2.0)],
-        [
-            (3, "2024-01-01 12:30:00", "a", 4.0),
-            (4, "2024-01-01 09:00:00", "b", 8.0),  # LATE -> DLQ, not rollup
-        ],
-    ]
-
-    def apply(bid, rows):
-        bdf = spark.createDataFrame(
-            rows, "event_id long, ts string, etype string, value double"
-        ).withColumn("ts", F.to_timestamp("ts"))
-        router.apply_batch(spark, bdf, ["event_id"], batch_id=bid)
-        # the on-time half of THIS batch feeds the rollup: recompute the
-        # routing deterministically from the router's pre-batch watermark
-        # is what apply_batch did; the main table's NEW rows are exactly
-        # that half, so fold the batch MINUS the DLQ'd ids
-        late_ids = {
-            r.event_id
-            for r in router.late.read(spark).collect()
-        }
-        ontime = bdf.filter(~F.col("event_id").isin(*late_ids) if late_ids else F.lit(True))
-        rollup.apply_batch(spark, ontime.select("etype", "value"), batch_id=bid)
-
-    for bid, rows in enumerate(batches):
-        apply(bid, rows)
-
-    main = router.main.read(spark)
-    state = {
-        r.etype: (r.sum_value, r.n_rows)
-        for r in rollup.read(spark).collect()
-    }
-    exact = {
-        r.etype: (r.s, r.n)
-        for r in main.groupBy("etype")
-        .agg(F.sum("value").alias("s"), F.count("*").alias("n"))
-        .collect()
-    }
-    assert state == exact
-    assert state["b"] == (2.0, 1)  # the late 8.0 never entered the rollup
-    assert {r.event_id for r in router.late.read(spark).collect()} == {4}
-    # conservation + replay
-    assert main.count() + router.late.read(spark).count() == 4
-    versions = (
-        router.main.current_version(),
-        router.late.current_version(),
-        rollup.table.current_version(),
-    )
-    for bid, rows in enumerate(batches):
-        apply(bid, rows)
-    assert versions == (
-        router.main.current_version(),
-        router.late.current_version(),
-        rollup.table.current_version(),
-    )
-
-
-# --------------------------------------------------------------------------
-# r12 (VERDICT r11 #6): the composed pipeline as ONE class — route + fold
-# into the maintained hourly rollup + watermark, crash-anywhere replay.
-
-
-_HRR_BATCHES = [
-    [
-        (1, "2024-01-01 10:10:00", "view", 1.25),
-        (2, "2024-01-01 12:20:00", "click", 2.5),
-        (3, "2024-01-01 12:40:00", "view", 0.75),
-    ],
-    [
-        (4, "2024-01-01 13:05:00", "view", 4.0),
-        (5, "2024-01-01 09:00:00", "click", 8.0),  # LATE -> DLQ only
-        (6, "2024-01-01 12:55:00", "click", 1.0),  # within lateness
-    ],
-    [
-        (7, "2024-01-01 13:45:00", "view", 3.0),
-        (8, "2024-01-01 10:30:00", "view", 16.0),  # LATE vs 13:05 wm - 1h
-    ],
-]
-
-
-def _hrr(spark, base):
-    from datawarehouse_project_spark.streaming.late_dlq import (
-        HourlyRollupRouter,
-    )
-
-    return HourlyRollupRouter(
-        str(base / "main"),
-        str(base / "late"),
-        str(base / "state"),
-        str(base / "rollup"),
-        allowed_lateness_s=3600,
-    )
-
-
-def _hrr_batch_df(spark, rows):
-    return spark.createDataFrame(
-        rows, "event_id long, ts string, event_type string, value double"
-    ).withColumn("ts", F.to_timestamp("ts"))
-
-
-def _hrr_run_all(spark, pipe):
-    for bid, rows in enumerate(_HRR_BATCHES):
-        pipe.apply_batch(
-            spark, _hrr_batch_df(spark, rows), ["event_id"], batch_id=bid
-        )
-
-
-def _hrr_state(spark, pipe):
-    main = sorted(
-        (r.event_id, r.event_type) for r in pipe.main.read(spark).collect()
-    )
-    late = sorted(r.event_id for r in pipe.late.read(spark).collect())
-    roll = sorted(
-        (r.event_type, r.window_start_us, r.n_events, r.total_value)
-        for r in pipe.serve_hourly(spark).collect()
-    )
-    return main, late, roll, pipe.watermark_us(spark)
-
-
-def test_hourly_rollup_router_composes_exactly(spark, tmp_path):
-    """One apply_batch maintains all four tables: main ∪ late == input
-    exactly once, the rollup equals the exact hourly GROUP BY over the
-    main table bit-for-bit (late rows excluded), and whole-batch replay
-    is a no-op on every ledger."""
-    pipe = _hrr(spark, tmp_path)
-    _hrr_run_all(spark, pipe)
-
-    main, late, roll, wm = _hrr_state(spark, pipe)
-    n_in = sum(len(b) for b in _HRR_BATCHES)
-    assert len(main) + len(late) == n_in
-    assert late == [5, 8]
-
-    exact = sorted(
-        (r.event_type, r.window_start_us, r.n_events, r.total_value)
-        for r in pipe.main.read(spark)
-        .groupBy(
-            "event_type",
-            F.unix_micros(F.date_trunc("hour", "ts")).alias(
-                "window_start_us"
-            ),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-        .collect()
-    )
-    assert roll == exact
-
-    versions = (
-        pipe.main.current_version(),
-        pipe.late.current_version(),
-        pipe.rollup.table.current_version(),
-        pipe.state.current_version(),
-    )
-    _hrr_run_all(spark, pipe)  # full replay: every ledger absorbs it
-    assert versions == (
-        pipe.main.current_version(),
-        pipe.late.current_version(),
-        pipe.rollup.table.current_version(),
-        pipe.state.current_version(),
-    )
-
-
-def test_hourly_rollup_router_crash_anywhere_replays_exactly_once(
-    spark, tmp_path, monkeypatch
-):
-    """Kill the pipeline after EACH of its per-batch commits (late,
-    main, rollup — the watermark is last), replay the batch, finish the
-    stream: the final four-table state must equal the no-crash run's,
-    for every crash point. The watermark committing last is what makes
-    the replayed routing deterministic."""
-    from datawarehouse_project_spark.sources import sinks as sinks_mod
-
-    class Boom(RuntimeError):
-        pass
-
-    reference = _hrr(spark, tmp_path / "ref")
-    _hrr_run_all(spark, reference)
-    want = _hrr_state(spark, reference)
-
-    real_upsert = sinks_mod.VersionedParquetTable.upsert
-    for crash_after in (1, 2, 3):
-        pipe = _hrr(spark, tmp_path / f"c{crash_after}")
-        # batch 0 lands cleanly; batch 1 crashes mid-commit
-        pipe.apply_batch(
-            spark,
-            _hrr_batch_df(spark, _HRR_BATCHES[0]),
-            ["event_id"],
-            batch_id=0,
-        )
-        calls = {"n": 0}
-
-        def exploding(self, *a, **kw):
-            calls["n"] += 1
-            if calls["n"] > crash_after:
-                raise Boom()
-            return real_upsert(self, *a, **kw)
-
-        monkeypatch.setattr(
-            sinks_mod.VersionedParquetTable, "upsert", exploding
-        )
-        try:
-            pipe.apply_batch(
-                spark,
-                _hrr_batch_df(spark, _HRR_BATCHES[1]),
-                ["event_id"],
-                batch_id=1,
-            )
-        except Boom:
-            pass
-        else:  # crash point beyond this batch's commit count
-            pass
-        finally:
-            monkeypatch.setattr(
-                sinks_mod.VersionedParquetTable, "upsert", real_upsert
-            )
-        # restart: replay the crashed batch, then the rest of the stream
-        pipe.apply_batch(
-            spark,
-            _hrr_batch_df(spark, _HRR_BATCHES[1]),
-            ["event_id"],
-            batch_id=1,
-        )
-        pipe.apply_batch(
-            spark,
-            _hrr_batch_df(spark, _HRR_BATCHES[2]),
-            ["event_id"],
-            batch_id=2,
-        )
-        assert _hrr_state(spark, pipe) == want, f"crash_after={crash_after}"
-
-
 def test_events_hourly_from_store_equals_batch_twin(spark, sf_dir):
     """The serving twin (maintained-store read) answers exactly the
     batch twin's rows — same grain, same DECIMAL-exact sums."""
@@ -594,8 +111,8 @@ def test_session_stream_equals_batch_native(spark, chunked_events, tmp_path):
     events_session_window_native, made a tested fact). The chunk fixture
     splits by event_id, so every micro-batch spans the month — sessions
     MERGE across batches as their members arrive out of order, which is
-    exactly the state machinery under test; the watermark covers the
-    disorder like the stream-stream join test."""
+    exactly the state machinery under test; the 40-day watermark covers
+    the whole month's disorder."""
     from datawarehouse_project_spark.catalog import all_queries
     from datawarehouse_project_spark.operators.events import SESSION_GAP_S
     from datawarehouse_project_spark.streaming.windows import (
