@@ -22,11 +22,11 @@ from datawarehouse_project_spark.operators.similarity import (
 
 import pytest
 
-# r22 fast-lane split (VERDICT r21 #2: the driver's default pytest run
-# timed out at 30-80 min on the drifting box): this module is stateful /
-# property / streaming coverage whose VALUE semantics are already gated
-# by the fast lane's sf0.001 oracle-parity sweep — the whole module runs
-# in the slow lane (`pytest -m slow`, the round-end full sweep).
+# The whole module runs in the slow lane (`pytest -m slow`).
+# The fast lane checks the `similarity_*` rows against their sf0.001
+# oracles and the near-dup and IVF plan shapes; the pandas-UDF scoring
+# path and the measured recall of the approximate rows are checked only
+# here.
 pytestmark = pytest.mark.slow
 
 
