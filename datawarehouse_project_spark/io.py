@@ -11,6 +11,7 @@ from __future__ import annotations
 import threading
 import weakref
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,8 +45,8 @@ def sf_from_dir(sf_dir: str) -> float:
         return 0.0
 
 
-#: The tables the enriched fact view (``plans.star.fact``) joins: the
-#: sources of its plan handle, of a fact pin, and of state built from it.
+#: The tables the enriched fact (``plans.star.fact``) joins: the sources
+#: of its served handle, of a fact pin, and of state built from it.
 FACT_SOURCE_TABLES = ("lineitem", "orders", "part", "supplier", "nation")
 
 
@@ -73,7 +74,8 @@ class SessionState:
     ``(kind, sf_dir, name)``; the kinds are:
 
     * ``table``: a resolved table handle, or a pin (:func:`pin`);
-    * ``fact``: the enriched fact plan, or a pin of it;
+    * ``fact``: the served enriched fact (a persisted join plan), or a
+      pin of it;
     * ``served``: a served store's root directory;
     * ``checkpoint``: a builder's live ``localCheckpoint``;
     * ``tuned``: a size tuned on the data (a bucket width);
@@ -84,8 +86,10 @@ class SessionState:
     their :func:`source_mtime_ns` tuple, so a local source rewritten
     in-session re-derives it on the next lookup, and
     :func:`refresh_table` drops it by source name — the only path on
-    non-local dirs, where the token never changes. A displaced entry's
-    ``release`` action (if any) runs once it is out of the store.
+    non-local dirs, where the token never changes. An entry's
+    ``release`` action (if any) runs once it is out of the store: when
+    it is dropped or replaced, and for a stale entry before its
+    successor is built, so a build never meets the state it replaces.
 
     Builds run outside the store lock, serialized per key, so a build
     may look up other keys (a served store reads ``fact()``, which reads
@@ -108,11 +112,15 @@ class SessionState:
         #: the session's live JVM SQL conf map, which ``confs`` copies
         self.live_confs = None
 
-    def get(self, kind, sf_dir, name, sources, build, fresh=None):
+    def get(
+        self, kind, sf_dir, name, sources, build, fresh=None, release=None
+    ):
         """The value at ``(kind, sf_dir, name)``; ``build()`` makes it on
         first lookup and whenever a source has changed since, or when
         ``fresh(value)`` (if given) no longer holds. A ``build()`` that
-        returns None keeps nothing and drops the stale entry."""
+        returns None keeps nothing. A stale entry is dropped, and its
+        ``release`` run, before ``build()`` starts; ``release(value)``
+        (if given) is the built value's own release action."""
         key = (kind, sf_dir, name)
         token = tuple(source_mtime_ns(sf_dir, t) for t in sources)
 
@@ -132,7 +140,8 @@ class SessionState:
             entry = stored()
             if entry is not None:
                 return entry[2]  # built by another thread meanwhile
-            return self._put(key, sources, token, build(), None)
+            self._put(key, sources, token, None, None)  # release the stale
+            return self._put(key, sources, token, build(), release)
 
     def put(self, kind, sf_dir, name, sources, value, release=None):
         """Set ``(kind, sf_dir, name)`` to ``value`` under the sources'
@@ -145,7 +154,7 @@ class SessionState:
             old = self._entries.pop(key, None)
             if value is not None:
                 self._entries[key] = (tuple(sources), token, value, release)
-        if old is not None and old[3] is not None:
+        if old is not None and old[3] is not None and old[2] is not value:
             old[3](old[2])
         return value
 
@@ -204,14 +213,39 @@ class SessionState:
 
     def inventory(self) -> list[dict]:
         """One record per entry: its kind, sf_dir, name, source tables
-        and token."""
+        and token; a ``fact`` record adds the :func:`cache_status` of
+        its handle."""
         with self._lock:
             entries = list(self._entries.items())
-        return [
-            {"kind": kind, "sf_dir": sf_dir, "name": name,
-             "sources": sources, "token": token}
-            for (kind, sf_dir, name), (sources, token, _, _) in entries
-        ]
+        records = []
+        for (kind, sf_dir, name), (sources, token, value, _) in entries:
+            records.append({"kind": kind, "sf_dir": sf_dir, "name": name,
+                            "sources": sources, "token": token})
+            if kind == "fact":
+                records[-1].update(cache_status(value))
+        return records
+
+
+def cache_status(df: DataFrame) -> dict:
+    """How Spark's cache holds ``df``'s plan: ``served`` (a cache entry
+    answers reads of it), ``storage_level``, ``materialized`` (every
+    partition of the entry is stored) and ``cached_bytes`` (what its
+    stored partitions take). Several py4j calls: for inspection, not for
+    a request path."""
+    spark = df.sparkSession
+    entry = (
+        spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    )
+    if entry.isEmpty():
+        return {"served": False, "storage_level": str(StorageLevel.NONE),
+                "materialized": False, "cached_bytes": 0}
+    builder = entry.get().cachedRepresentation().cacheBuilder()
+    return {
+        "served": True,
+        "storage_level": str(df.storageLevel),
+        "materialized": builder.isCachedColumnBuffersLoaded(),
+        "cached_bytes": builder.sizeInBytesStats().value(),
+    }
 
 
 _STATES: "weakref.WeakKeyDictionary[SparkSession, SessionState]" = (
@@ -261,14 +295,16 @@ def pin(
     spark: SparkSession, sf_dir: str, name: str, df: DataFrame
 ) -> DataFrame:
     """Make ``df`` the handle :func:`table` returns for ``name`` — or,
-    with ``name="fact"``, the plan ``plans.star.fact`` returns — under
+    with ``name="fact"``, the handle ``plans.star.fact`` returns — under
     ``sf_dir``. The pin takes the sources' current token like any entry,
     so :func:`refresh_table` or a source rewrite drops it; the pin drops
     the query plans kept under ``sf_dir``, which read the handle it
-    replaces. Use cases: a cached, better-partitioned layout of a hot
-    table or of the fact (Spark cache substitution matches by logical
-    plan, so caching a repartitioned copy without re-pointing the handle
-    would never hit), and a materialized fact (``sources.catalog_ddl``)."""
+    replaces, and unpersists the served fact it replaces (the pin itself
+    is never unpersisted here: its caching is the caller's). Use cases: a
+    cached, better-partitioned layout of a hot table or of the fact
+    (Spark cache substitution matches by logical plan, so caching a
+    repartitioned copy without re-pointing the handle would never hit),
+    and a materialized fact (``sources.catalog_ddl``)."""
     state = session_state(spark)
     state.drop(sf_dir, kind="plan")
     if name == "fact":
@@ -281,11 +317,11 @@ def refresh_table(
 ) -> None:
     """Drop the session state derived from table ``name`` under
     ``sf_dir`` — the ``REFRESH TABLE`` analog for this path-based
-    catalog: table handles and pins, the fact plan, served stores,
-    checkpoints, tuned sizes and kept query plans. Call after
-    overwriting a table directory that was previously resolved in this
-    session: the pinned file listing otherwise serves deleted-file reads
-    or stale rows. Either argument None matches all."""
+    catalog: table handles and pins, the served fact (its cached data is
+    unpersisted), served stores, checkpoints, tuned sizes and kept query
+    plans. Call after overwriting a table directory that was previously
+    resolved in this session: the pinned file listing otherwise serves
+    deleted-file reads or stale rows. Either argument None matches all."""
     session_state(spark).drop(sf_dir, name)
 
 

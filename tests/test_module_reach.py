@@ -13,8 +13,16 @@ PKG = "datawarehouse_project_spark"
 
 #: Modules kept although nothing below imports them, and why.
 KEPT_UNREACHED = {
-    "sources.catalog_ddl": "ROADMAP item 8 serves the reference queries from it",
-    "sources.fact_maintenance": "ROADMAP item 8 serves the reference queries from it",
+    "sources.catalog_ddl": (
+        "catalog-resolved star tables and a durable parquet copy of the "
+        "fact; ROADMAP item 8 serves the fact from Spark's cache instead "
+        "and keeps this for a fact that outlives the session"
+    ),
+    "sources.fact_maintenance": (
+        "delta maintenance of a durable fact; ROADMAP item 8 recomputes the "
+        "cached fact on a source change instead and keeps this for when "
+        "that recompute costs too much"
+    ),
     "streaming.windows": "SURVEY §2.8's sanctioned upgrade path",
 }
 

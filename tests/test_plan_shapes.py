@@ -11,8 +11,13 @@ import re
 import pytest
 
 from datawarehouse_project_spark.catalog import all_queries, queries
+from datawarehouse_project_spark.io import pin, refresh_table, table
 from datawarehouse_project_spark.operators.dedup import signature_frame
-from datawarehouse_project_spark.plans.star import FACT_SOURCE_TABLES, fact
+from datawarehouse_project_spark.plans.star import (
+    FACT_SOURCE_TABLES,
+    fact,
+    fact_from,
+)
 
 
 def plan_of(df) -> str:
@@ -23,9 +28,39 @@ def optimized_of(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_fact_build_is_shuffle_free(spark, sf_dir):
+@pytest.fixture()
+def joined_fact(spark, sf_dir):
+    """The fact as the plain join plan (``star.fact_from`` over the
+    ``io.table`` handles), pinned in place of the served fact: the plan
+    an untracked ``sf_dir`` reads, and the one the execution that
+    materializes a served fact runs. The pin unpersists the served fact,
+    so Spark's cache does not substitute for the join."""
+    joined = fact_from(*(table(spark, sf_dir, t) for t in FACT_SOURCE_TABLES))
+    yield pin(spark, sf_dir, "fact", joined)
+    refresh_table(spark, sf_dir, "lineitem")
+
+
+def local_bytes_read(spark) -> int:
+    """Bytes read so far through Hadoop's local file system (every
+    parquet scan of a local table; cached blocks and shuffle files do
+    not pass through it)."""
+    stats = spark._jvm.org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics()
+    return stats.get("file").getLong("bytesRead")
+
+
+def test_fact_build_is_shuffle_free(joined_fact):
     """Dim enrichment must be a broadcast chain — zero exchanges."""
+    p = plan_of(joined_fact)
+    assert "Exchange hashpartitioning" not in p
+    assert p.count("BroadcastHashJoin") == 4
+    assert "InMemoryTableScan" not in p
+
+
+def test_served_fact_reads_from_the_cache(spark, sf_dir):
+    """The served fact is that join, persisted: its plan reads an
+    in-memory relation whose cached plan is the same broadcast chain."""
     p = plan_of(fact(spark, sf_dir))
+    assert p.split("\n")[1].startswith("+- InMemoryTableScan")
     assert "Exchange hashpartitioning" not in p
     assert p.count("BroadcastHashJoin") == 4
 
@@ -36,9 +71,12 @@ def test_q01_plans_topk_not_full_sort(spark, sf_dir):
     assert "Sort " not in p.replace("TakeOrderedAndProject", "")
 
 
-def test_q01_scan_prunes_columns_and_pushes_filter(spark, sf_dir):
+def test_q01_scan_prunes_columns_and_pushes_filter(spark, sf_dir, joined_fact):
+    """On the joined fact (the served fact's first execution runs that
+    join whole, so its scans read every fact column)."""
     df = queries()["q01_top_revenue_products"](spark, sf_dir)
     p = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in p
     # lineitem scan reads only the 4 needed of 11 columns
     m = re.search(r"ReadSchema: struct<([^>]*l_extendedprice[^>]*)>", p)
     assert m, "lineitem scan not found"
@@ -47,12 +85,14 @@ def test_q01_scan_prunes_columns_and_pushes_filter(spark, sf_dir):
     assert re.search(r"PushedFilters: \[[^\]]*GreaterThanOrEqual\(o_orderdate", p)
 
 
-def test_q08_builds_without_jobs_and_scans_each_source_once(spark, sf_dir):
+def test_q08_builds_without_jobs_and_scans_each_source_once(
+    spark, sf_dir, joined_fact
+):
     """q08's yearly totals are window sums over its half-year aggregate,
     not a join of that aggregate with a checkpointed copy of itself:
     building the frame launches no Spark job (the checkpoint form ran the
-    whole fact join at build time) and the plan reads each fact source
-    exactly once."""
+    whole fact join at build time) and the plan over the joined fact
+    reads each fact source exactly once."""
     build = queries()["q08_halfyearly_vs_yearly"]
     build(spark, sf_dir)  # first touch resolves the table memos
     sc = spark.sparkContext
@@ -66,6 +106,34 @@ def test_q08_builds_without_jobs_and_scans_each_source_once(spark, sf_dir):
     scans = re.findall(r"FileScan parquet .*?/(\w+)\.parquet[,\]]", p)
     assert sorted(scans) == sorted(FACT_SOURCE_TABLES)
     assert "Scan ExistingRDD" not in p
+    assert "InMemoryTableScan" not in p
+
+
+@pytest.mark.parametrize(
+    "name, max_jobs",
+    [("q01_top_revenue_products", 2), ("q08_halfyearly_vs_yearly", 3)],
+)
+def test_served_fact_rows_read_no_source_after_first_run(
+    spark, sf_dir, name, max_jobs
+):
+    """Served form: the row reads the fact through an in-memory scan,
+    builds without jobs, and once the fact is materialized an execution
+    reads no parquet at all and runs at most ``max_jobs`` jobs."""
+    build = queries()[name]
+    build(spark, sf_dir).collect()  # materializes the fact
+    sc = spark.sparkContext
+    group = f"served-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        df = build(spark, sf_dir)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert "InMemoryTableScan" in plan_of(df)
+        before = local_bytes_read(spark)
+        df.collect()
+        assert local_bytes_read(spark) == before
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs
 
 
 def test_signature_frame_has_no_shuffle(spark, sf_dir):

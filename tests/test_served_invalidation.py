@@ -13,12 +13,20 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
-from datawarehouse_project_spark.io import SessionState, pin, refresh_table
+from pyspark import StorageLevel
 
-# The store-build tests run in the slow lane (`pytest -m slow`): their
-# VALUE semantics are gated by the fast lane's sf0.001 oracle-parity
-# sweep. The sub-second session-state lifecycle tests run in the fast
-# lane.
+from datawarehouse_project_spark.io import (
+    SessionState,
+    cache_status,
+    pin,
+    refresh_table,
+    session_state,
+)
+
+# The store-build tests run in the slow lane (`pytest -m slow`). The fast
+# lane's sf0.001 oracle-parity sweep never rewrites a source, so it gates
+# none of their semantics. The fast lane runs the session-state lifecycle
+# tests and the served fact's freshness tests.
 
 
 def _write_events(spark, sf, n, value):
@@ -199,6 +207,139 @@ def test_refresh_table_drops_fact_plan_memo(spark, tmp_path):
     assert fact(spark, sf) is pinned
     refresh_table(spark, sf, "lineitem")
     assert fact(spark, sf) is not pinned
+
+
+def _swap_fact_sources(spark, sf, n_orders, price):
+    """Rewrite the five sources in place the way another writer would:
+    built beside ``sf`` and moved in. A Spark write into ``sf`` itself
+    would refresh Spark's cache over the written path, which a writer
+    outside the session does not."""
+    import shutil
+
+    staged = f"{sf}.staged"
+    _write_fact_sources(spark, staged, n_orders, price)
+    for name in os.listdir(staged):
+        shutil.rmtree(f"{sf}/{name}")
+        os.rename(f"{staged}/{name}", f"{sf}/{name}")
+    os.rmdir(staged)
+
+
+def _q01_sales(spark, sf):
+    """q01's top total: 2 lines per part at the fixture's price."""
+    from datawarehouse_project_spark.catalog import all_queries
+
+    return all_queries()["q01_top_revenue_products"](spark, sf).collect()[0].total_sales
+
+
+def _served(df) -> bool:
+    return df.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+
+
+def test_served_fact_reads_rewritten_sources(spark, tmp_path):
+    """The served fact is a cache entry matched by canonical plan, and a
+    source rewritten in place re-resolves to an equal plan: q01 after a
+    rewrite must read the new rows, and the new handle must be served
+    (a release run after the rebuild would unpersist the entry the new
+    handle shares)."""
+    from datawarehouse_project_spark.plans.star import fact
+
+    sf = str(tmp_path / "sfw")
+    _write_fact_sources(spark, sf, 40, 100.0)
+    assert _q01_sales(spark, sf) == 200.0
+    assert cache_status(fact(spark, sf))["materialized"]
+    _swap_fact_sources(spark, sf, 40, 500.0)
+    assert _q01_sales(spark, sf) == 1000.0
+    assert _q01_sales(spark, sf) == 1000.0  # the warm read of the new entry
+    assert _served(fact(spark, sf))
+
+
+def test_served_fact_is_fresh_across_sessions(spark, tmp_path):
+    """Spark's cache is shared by the sessions of an application: a
+    session that first builds the fact after another session served it
+    and a source was rewritten must not reuse the old entry."""
+    sf = str(tmp_path / "sfs")
+    other = spark.newSession()
+    _write_fact_sources(spark, sf, 40, 100.0)
+    assert _q01_sales(spark, sf) == 200.0
+    _swap_fact_sources(spark, sf, 40, 300.0)
+    assert _q01_sales(other, sf) == 600.0
+    assert _q01_sales(spark, sf) == 600.0
+
+
+def test_refresh_and_pin_unpersist_the_served_fact(spark, tmp_path):
+    from datawarehouse_project_spark.plans.star import fact
+
+    sf = str(tmp_path / "sfu")
+    _write_fact_sources(spark, sf, 10, 100.0)
+    old = fact(spark, sf)
+    old.count()
+    assert _served(old)
+    refresh_table(spark, sf, "lineitem")
+    assert old.storageLevel == StorageLevel.NONE
+    served = fact(spark, sf)
+    assert served is not old and _served(served)
+    pinned = pin(spark, sf, "fact", served.limit(3))
+    assert served.storageLevel == StorageLevel.NONE
+    assert fact(spark, sf) is pinned
+    refresh_table(spark, sf)
+    # pinning the served handle itself keeps it persisted
+    again = fact(spark, sf)
+    assert pin(spark, sf, "fact", again) is again and _served(again)
+    refresh_table(spark, sf)
+    again.unpersist()
+
+
+def test_untracked_fact_sources_are_not_persisted(spark, tmp_path, monkeypatch):
+    """Without an mtime token nothing notices a rewrite, so the fact of
+    such an ``sf_dir`` stays the plain join plan."""
+    import datawarehouse_project_spark.io as io
+    import datawarehouse_project_spark.plans.star as star
+
+    sf = str(tmp_path / "sfn")
+    _write_fact_sources(spark, sf, 10, 100.0)
+    monkeypatch.setattr(io, "source_mtime_ns", lambda sf_dir, name: None)
+    monkeypatch.setattr(star, "source_mtime_ns", lambda sf_dir, name: None)
+    df = star.fact(spark, sf)
+    assert df.count() == 10
+    assert df.storageLevel == StorageLevel.NONE
+    assert not cache_status(df)["served"]
+    refresh_table(spark, sf)
+
+
+def test_inventory_reports_the_served_fact(spark, tmp_path):
+    from datawarehouse_project_spark.plans.star import fact
+
+    sf = str(tmp_path / "sfi")
+    _write_fact_sources(spark, sf, 10, 100.0)
+
+    def record():
+        (rec,) = [
+            e for e in session_state(spark).inventory()
+            if e["kind"] == "fact" and e["sf_dir"] == sf
+        ]
+        return {k: rec[k] for k in ("served", "storage_level", "materialized")}, rec
+
+    fact(spark, sf)
+    fields, rec = record()
+    assert fields == {
+        "served": True,
+        "storage_level": str(StorageLevel.MEMORY_AND_DISK_DESER),
+        "materialized": False,
+    }
+    assert rec["cached_bytes"] == 0
+    _q01_sales(spark, sf)
+    fields, rec = record()
+    assert fields["served"] and fields["materialized"]
+    assert rec["cached_bytes"] > 0
+    pin(spark, sf, "fact", fact(spark, sf).limit(3))
+    fields, rec = record()
+    assert fields == {
+        "served": False,
+        "storage_level": str(StorageLevel.NONE),
+        "materialized": False,
+    }
+    assert rec["cached_bytes"] == 0
+    refresh_table(spark, sf)
 
 
 def _touch(path, mtime_ns):
