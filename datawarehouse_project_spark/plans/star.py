@@ -51,12 +51,12 @@ def fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     FACT_TRANSACTIONS (metro.sql:42-59) and every query reads that table:
     the handle, kept in the session state per ``sf_dir``, is the join
     plan ``persist()``ed at Spark's MEMORY_AND_DISK (PySpark's
-    ``MEMORY_AND_DISK_DESER``, the level of ``DataFrame.cache``; the
-    cached batches are columnar either way). Persisting runs no
-    job; the first execution that reads the fact materializes it, and
-    every later execution of a plan over it (kept query plans included)
-    reads the cached data through Spark's cache substitution. Blocks that
-    are lost are recomputed from the join's lineage.
+    ``MEMORY_AND_DISK_DESER``, the level of ``DataFrame.cache``).
+    Persisting runs no job; the first execution that reads the fact
+    materializes it, and every later execution of a plan over it (kept
+    query plans included) reads the cached data through Spark's cache
+    substitution. Blocks that are lost are recomputed from the join's
+    lineage.
 
     Freshness: a rewrite of any of the five source tables re-derives the
     handle, as does ``io.refresh_table``; an ``io.pin(spark, sf_dir,
