@@ -11,9 +11,8 @@ import os
 import threading
 
 import pytest
-from pyspark.sql import functions as F
-
 from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
 from datawarehouse_project_spark.io import (
     SessionState,
@@ -228,7 +227,8 @@ def _q01_sales(spark, sf):
     """q01's top total: 2 lines per part at the fixture's price."""
     from datawarehouse_project_spark.catalog import all_queries
 
-    return all_queries()["q01_top_revenue_products"](spark, sf).collect()[0].total_sales
+    q01 = all_queries()["q01_top_revenue_products"]
+    return q01(spark, sf).collect()[0].total_sales
 
 
 def _served(df) -> bool:
@@ -317,28 +317,26 @@ def test_inventory_reports_the_served_fact(spark, tmp_path):
             e for e in session_state(spark).inventory()
             if e["kind"] == "fact" and e["sf_dir"] == sf
         ]
-        return {k: rec[k] for k in ("served", "storage_level", "materialized")}, rec
+        fields = ("served", "storage_level", "materialized", "cached_bytes")
+        return {k: rec[k] for k in fields}
 
     fact(spark, sf)
-    fields, rec = record()
-    assert fields == {
+    assert record() == {
         "served": True,
         "storage_level": str(StorageLevel.MEMORY_AND_DISK_DESER),
         "materialized": False,
+        "cached_bytes": 0,
     }
-    assert rec["cached_bytes"] == 0
     _q01_sales(spark, sf)
-    fields, rec = record()
-    assert fields["served"] and fields["materialized"]
-    assert rec["cached_bytes"] > 0
+    rec = record()
+    assert rec["served"] and rec["materialized"] and rec["cached_bytes"] > 0
     pin(spark, sf, "fact", fact(spark, sf).limit(3))
-    fields, rec = record()
-    assert fields == {
+    assert record() == {
         "served": False,
         "storage_level": str(StorageLevel.NONE),
         "materialized": False,
+        "cached_bytes": 0,
     }
-    assert rec["cached_bytes"] == 0
     refresh_table(spark, sf)
 
 
