@@ -47,7 +47,7 @@ from ..functions.text import (
     words_sql,
 )
 from ..io import require_small, table
-from .skew import hot_key_guard_sql, validate_guard
+from .skew import hot_key_guard_sql
 from ..session import prepare
 from ..plans.registry import register
 
@@ -702,7 +702,7 @@ def dedup_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 DF_CAP = 10
 
 
-def _shingle_pairs_sql(df_cap: int | None, bounded: bool, guard: str) -> str:
+def _shingle_pairs_sql(df_cap: int | None) -> str:
     """The CTEs both posting-list kernels share, over relation ``{docs}``,
     ending in ``pairs(d1, d2)``: every ordered pair of posting entries
     ``struct(doc_id, n_sg)`` that share a shingle.
@@ -711,20 +711,13 @@ def _shingle_pairs_sql(df_cap: int | None, bounded: bool, guard: str) -> str:
     and the per-doc distinct, the df guard and the posting regroup all
     run on that partitioning; the post-cap shingle count ``n_sg`` is a
     COUNT window over ``doc_id`` that rides inside the posting structs,
-    so no sizes aggregate or sizes join exists. The capped paths:
-    ``bounded`` runs :func:`~.skew.hot_key_guard_sql` (rows above the cap
-    never reach a collect buffer); unbounded collects each full list and
-    drops those longer than the cap, then re-explodes the survivors."""
+    so no sizes aggregate or sizes join exists. A cap runs
+    :func:`~.skew.hot_key_guard_sql`, so rows above it never reach a
+    collect buffer."""
     if df_cap is None:
         kept = "SELECT doc_id, sgh FROM inv"
-    elif bounded:
-        kept = hot_key_guard_sql("inv", "doc_id, sgh", "sgh", df_cap, guard)
     else:
-        kept = (
-            "SELECT explode(ds) AS doc_id, sgh FROM (SELECT sgh, "
-            "collect_list(doc_id) AS ds FROM inv GROUP BY sgh "
-            f"HAVING size(ds) <= {df_cap})"
-        )
+        kept = hot_key_guard_sql("inv", "doc_id, sgh", "sgh", df_cap)
     return f"""
 grams AS (
     SELECT /*+ REPARTITION(sgh) */ doc_id, xxhash64(g) AS sgh
@@ -750,8 +743,6 @@ def ngram_jaccard_pairs(
     sf_dir: str,
     threshold: float = 0.6,
     df_cap: int | None = None,
-    bounded: bool = False,
-    guard: str = "window",
 ) -> DataFrame:
     """N-gram Jaccard near-dup pairs via a shingle inverted index.
 
@@ -761,14 +752,12 @@ def ngram_jaccard_pairs(
     post-cap) — the standard stop-phrase guard that bounds the self-join
     fan-out to df_cap per posting list at any corpus size. None = exact.
 
-    ``bounded`` (capped path only) selects the df-first build (VERDICT
-    r13 #2): a COUNT window over the shingle key filters rows above the
-    cap BEFORE any list is collected — every collect buffer is bounded
-    by df_cap entries instead of one buffer per shingle at its full
-    (pre-cap) document frequency, while the window's spillable row
-    buffer carries the hot keys safely. The window runs on the gram
-    exchange. Bit-identical results (equality-tested) — the registered
-    query passes bounded=True unconditionally (PERFORMANCE r14).
+    A cap runs the df-first build (VERDICT r13 #2): a COUNT window over
+    the shingle key filters rows above the cap BEFORE any list is
+    collected — every collect buffer is bounded by df_cap entries
+    instead of one buffer per shingle at its full (pre-cap) document
+    frequency, while the window's spillable row buffer carries the hot
+    keys safely. The window runs on the gram exchange.
 
     MEMORY SHAPE of the exact form (``df_cap=None``): collect_list
     materializes each shingle's FULL posting list in one aggregation
@@ -787,16 +776,9 @@ def ngram_jaccard_pairs(
     count by 1. [History: SMJ string self-join 13.8s -> SHJ on xxhash64
     9.5s -> posting-list explode 1.3s at sf0.1.]
     """
-    validate_guard(guard)
-    if guard != "window" and (df_cap is None or not bounded):
-        # the knob only exists on the capped bounded guard path; silently
-        # accepting it on the uncapped or unbounded one-scan builds would
-        # run the exact single-key buffer hazard it was passed to avoid
-        # (r15 review)
-        raise ValueError("guard='salted' requires df_cap and bounded=True")
     prepare(spark)
     return spark.sql(
-        f"""WITH {_shingle_pairs_sql(df_cap, bounded, guard)},
+        f"""WITH {_shingle_pairs_sql(df_cap)},
 shared AS (
     SELECT d1.doc_id AS doc_a, d2.doc_id AS doc_b, d1.n_sg AS n_a,
            d2.n_sg AS n_b, count(*) AS shared
@@ -882,10 +864,8 @@ def dedup_ngram_jaccard_capped_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     DF_CAP docs, so the self-join fan-out is <= DF_CAP(DF_CAP-1)/2 per
     shingle REGARDLESS of corpus size — the property that makes this the
     100 TB-safe registered form, with the guard-window bounded build
-    (measured free vs one-scan; PERFORMANCE r14)."""
-    return ngram_jaccard_pairs(
-        spark, sf_dir, threshold=0.6, df_cap=DF_CAP, bounded=True
-    )
+    (PERFORMANCE r14)."""
+    return ngram_jaccard_pairs(spark, sf_dir, threshold=0.6, df_cap=DF_CAP)
 
 
 # --------------------------------------------------------------------------
@@ -900,8 +880,6 @@ def ngram_containment_pairs(
     sf_dir: str,
     threshold: float = CONTAINMENT_T,
     df_cap: int = DF_CAP,
-    bounded: bool = False,
-    guard: str = "window",
 ) -> DataFrame:
     """DIRECTED near-dup: containment(src→dst) = |src ∩ dst| / |src| over
     the df-capped shingle universe — the asymmetric signal Jaccard
@@ -912,20 +890,11 @@ def ngram_containment_pairs(
     fan-out ≤ df_cap(df_cap−1)/2 per shingle at any corpus size; emits
     BOTH directions of each sharing pair so the consumer filters per
     side. Integer/integer division keeps the score bit-identical
-    cross-engine. ``bounded`` selects the guard-window df-first build
-    exactly as in :func:`ngram_jaccard_pairs` (same single-key buffer
-    hazard, same bit-identical results; unconditional at the registered
-    entry)."""
-    validate_guard(guard)
-    if guard != "window" and not bounded:
-        # the knob only exists on the bounded guard path; silently
-        # accepting it on the unbounded one-scan build would run the
-        # exact single-key buffer hazard it was passed to avoid (r15
-        # review)
-        raise ValueError("guard='salted' requires bounded=True")
+    cross-engine. The cap runs the guard-window df-first build exactly
+    as in :func:`ngram_jaccard_pairs`."""
     prepare(spark)
     return spark.sql(
-        f"""WITH {_shingle_pairs_sql(df_cap, bounded, guard)},
+        f"""WITH {_shingle_pairs_sql(df_cap)},
 shared AS (
     SELECT d1.doc_id AS src_doc, d2.doc_id AS dst_doc, d1.n_sg AS n_src,
            count(*) AS shared
@@ -969,7 +938,7 @@ WHERE CAST(s.shared AS DOUBLE) / sz.n_sg >= {CONTAINMENT_T}
 """,
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_containment_pairs(spark, sf_dir, bounded=True)
+    return ngram_containment_pairs(spark, sf_dir)
 
 
 # --------------------------------------------------------------------------

@@ -29,9 +29,10 @@ pattern of ``dedup.ngram_jaccard_capped``). Killing the key on one side
 kills its join output, so the per-key join product drops from
 segfreq×subfreq (quadratic on a boilerplate key) to <= cap×subfreq
 (linear), and the frequency is counted via a WINDOW over the segment
-side — whose partitioning on the join key is exactly what the join
-needs next, so the guard adds NO extra scan or exchange (r14 review:
-an earlier count-then-anti-join draft re-executed a blocking subtree).
+side (``skew.cap_hot_keys``) — whose partitioning on the join key is
+exactly what the join needs next, so the guard adds NO extra scan or
+exchange (plan-pinned in tests/test_fuzzy.py; an earlier
+count-then-anti-join draft re-executed a blocking subtree).
 The recall cost: a true pair is lost only when EVERY untouched segment
 it could block on is popular (edits in the discriminative region while
 only boilerplate stays intact). Measured on a planted hot-suffix corpus
@@ -55,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import table
-from .skew import validate_guard
+from .skew import cap_hot_keys
 from ..plans.registry import register
 from ..session import prepare
 
@@ -155,22 +156,7 @@ def _substring_side(s: DataFrame, d: int, id_alias: str) -> DataFrame:
     )
 
 
-def _drop_hot_keys(
-    seg: DataFrame, seg_cap: int, guard: str = "window"
-) -> DataFrame:
-    """The hot-segment guard: drop blocking keys whose segment-side
-    frequency exceeds ``seg_cap`` — the shared one-pass window guard
-    (``skew.cap_hot_keys``); its (l, i, seg) partitioning is exactly
-    the clustering the blocking equi-join consumes next, so the guard
-    adds no extra scan or exchange (plan-pinned in tests/test_fuzzy.py)."""
-    from .skew import hot_key_guard
-
-    return hot_key_guard(seg, ["l", "i", "seg"], seg_cap, guard=guard)
-
-
-def candidate_pairs(
-    s: DataFrame, d: int, seg_cap: int | None = None, guard: str = "window"
-) -> DataFrame:
+def candidate_pairs(s: DataFrame, d: int, seg_cap: int | None = None) -> DataFrame:
     """The candidate set: distinct unordered ``(a_id, b_id)`` pairs
     sharing at least one ``(len, seg_idx, segment)`` key between the
     segment and substring sides. With ``seg_cap=None`` (default) this is
@@ -179,15 +165,12 @@ def candidate_pairs(
     module docstring for the recall contract). Exposed separately so
     tests can measure the pruning ratio the module docstring claims.
     ``s``: (id, s) with non-null strings."""
-    validate_guard(guard)
-    if seg_cap is None and guard != "window":
-        raise ValueError("guard= has no effect without seg_cap (r15 review)")
     slen = s.withColumn("l", F.length("s"))
 
     seg_side = _segment_side(s, d, "a_id")
     sub_side = _substring_side(s, d, "b_id")
     if seg_cap is not None:
-        seg_side = _drop_hot_keys(seg_side, seg_cap, guard=guard)
+        seg_side = cap_hot_keys(seg_side, ["l", "i", "seg"], seg_cap)
     main = (
         seg_side.join(sub_side, ["l", "i", "seg"])
         .filter(F.col("a_id") != F.col("b_id"))
@@ -242,7 +225,6 @@ def edit_distance_pairs(
     id_col: str = "id",
     s_col: str = "s",
     seg_cap: int | None = None,
-    guard: str = "window",
 ) -> DataFrame:
     """All unordered pairs ``(a_id < b_id)`` with ``levenshtein ≤ d``,
     plus the exact distance. Lossless by default: candidate generation
@@ -252,7 +234,7 @@ def edit_distance_pairs(
     s = df.select(F.col(id_col).alias("id"), F.col(s_col).alias("s")).filter(
         F.col("s").isNotNull()
     )
-    cand = candidate_pairs(s, d, seg_cap=seg_cap, guard=guard)
+    cand = candidate_pairs(s, d, seg_cap=seg_cap)
     sa = s.select(F.col("id").alias("a_id"), F.col("s").alias("a_s"))
     sb = s.select(F.col("id").alias("b_id"), F.col("s").alias("b_s"))
     return (
@@ -416,7 +398,6 @@ def candidate_pairs_two_table(
     right: DataFrame,
     d: int,
     seg_cap: int | None = None,
-    guard: str = "window",
 ) -> DataFrame:
     """Lossless candidates for the two-table join: distinct
     ``(a_id, b_id)`` with a_id from ``left``, b_id from ``right``.
@@ -426,14 +407,11 @@ def candidate_pairs_two_table(
     pigeonhole has no non-empty untouched segment) pairs DISTINCT
     values <= d against the other table's values <= 2d via a broadcast
     nested-loop, both directions, exactly like the self-join."""
-    validate_guard(guard)
-    if seg_cap is None and guard != "window":
-        raise ValueError("guard= has no effect without seg_cap (r15 review)")
     seg1, sub1 = _segment_side(left, d, "a_id"), _substring_side(right, d, "b_id")
     seg2, sub2 = _segment_side(right, d, "b_id"), _substring_side(left, d, "a_id")
     if seg_cap is not None:
-        seg1 = _drop_hot_keys(seg1, seg_cap, guard=guard)
-        seg2 = _drop_hot_keys(seg2, seg_cap, guard=guard)
+        seg1 = cap_hot_keys(seg1, ["l", "i", "seg"], seg_cap)
+        seg2 = cap_hot_keys(seg2, ["l", "i", "seg"], seg_cap)
     c1 = seg1.join(sub1, ["l", "i", "seg"]).select("a_id", "b_id")
     c2 = seg2.join(sub2, ["l", "i", "seg"]).select("a_id", "b_id")
 
@@ -475,7 +453,6 @@ def edit_distance_join(
     id_col: str = "id",
     s_col: str = "s",
     seg_cap: int | None = None,
-    guard: str = "window",
 ) -> DataFrame:
     """All ``(a_id, b_id, dist)`` with a_id from ``left``, b_id from
     ``right`` and ``levenshtein <= d`` — the record-linkage form of
@@ -488,7 +465,7 @@ def edit_distance_join(
     rs = right.select(F.col(id_col).alias("id"), F.col(s_col).alias("s")).filter(
         F.col("s").isNotNull()
     )
-    cand = candidate_pairs_two_table(ls, rs, d, seg_cap=seg_cap, guard=guard)
+    cand = candidate_pairs_two_table(ls, rs, d, seg_cap=seg_cap)
     sa = ls.select(F.col("id").alias("a_id"), F.col("s").alias("a_s"))
     sb = rs.select(F.col("id").alias("b_id"), F.col("s").alias("b_s"))
     return (

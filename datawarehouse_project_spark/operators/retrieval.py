@@ -51,7 +51,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import word_gram_rows_sql, words, words_sql
 from ..io import session_state, spread, table
-from .skew import hot_key_guard_sql, validate_guard
 from ..plans.registry import register
 from ..session import prepare
 
@@ -92,29 +91,14 @@ def term_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-def term_postings(docs: DataFrame) -> DataFrame:
-    """Postings with per-doc length: (doc_id, w, tf, dl)."""
-    return with_doc_length(term_counts(docs))
-
-
-def with_doc_length(postings: DataFrame) -> DataFrame:
-    """Attach dl (total tokens per doc) to (doc_id, w, tf) postings —
-    one window exchange over the postings, never the corpus."""
-    return postings.withColumn(
-        "dl", F.sum("tf").over(Window.partitionBy("doc_id")).cast("bigint")
-    )
-
-
 def lexical_topk(
     docs: DataFrame,
     queries: DataFrame,
     k: int = LEXICAL_K,
-    bounded_queries: bool = True,
 ) -> DataFrame:
     """Top-``k`` documents per query under the scaled-integer BM25
     score, computed from the corpus text. ``queries``: (query_id BIGINT,
-    qtext STRING) — a bounded set, broadcast to the postings probe (by
-    default — see ``bounded_queries`` below for the unbounded path).
+    qtext STRING) — a bounded set, broadcast to the postings probe.
 
     PROBE-PROPORTIONAL (r17, VERDICT r16 #2): the query-term
     restriction is applied to the exploded tokens BEFORE any aggregate,
@@ -128,8 +112,7 @@ def lexical_topk(
     scan — the plan's only full pass. Same restriction-first layout
     that made the store form win (:func:`lexical_topk_served`) —
     bit-identical scores, same oracle (tf/df/dl/n_docs/sum_dl values
-    are unchanged; only the plan is). The pre-r17 window form survives
-    as :func:`lexical_topk_from_postings` for already-built state.
+    are unchanged; only the plan is).
 
     Contract: one row per doc_id (the documents-PK shape every caller
     has). Duplicate ids in the OLD form merged into one synthetic doc
@@ -138,30 +121,17 @@ def lexical_topk(
 
     Null-text rows contribute nothing either way (explode of the null
     token array drops them) — the stats branch filters them explicitly
-    so n_docs/sum_dl agree with the postings-derived values.
-
-    ``bounded_queries=False`` is the UNBOUNDED-workload escape hatch
-    (the salted-guard knob pattern): the default broadcast hints on the
-    query-side joins assume the broadcast-query contract; a batch-
-    scoring workload with millions of queries would OOM the driver
-    shipping them. With the knob off, the same plan carries no hints —
-    AQE picks the join strategy (shuffle join on w for a genuinely
-    large query set, auto-broadcast when it measures small) — and
-    results are bit-identical (plan-only knob, equality- and
-    hint-pinned). The 1-row stats frame stays broadcast either way."""
+    so n_docs/sum_dl agree with the postings-derived values."""
     live = docs.filter(F.col("text").isNotNull())
     qterms = _qterms(queries)
-    hint = F.broadcast if bounded_queries else (lambda df: df)
-    matched = _matched_from_text(live, qterms, hint, with_dl=True)
+    matched = _matched_from_text(live, qterms, with_dl=True)
     stats = live.select(
         F.size(words("text")).cast("bigint").alias("dl")
     ).agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum("dl").cast("bigint").alias("sum_dl"),
     )
-    return _score_and_rank(
-        matched, qterms, None, stats, k, bounded_queries=bounded_queries
-    )
+    return _score_and_rank(matched, qterms, None, stats, k)
 
 
 def _qterms(queries: DataFrame) -> DataFrame:
@@ -178,7 +148,7 @@ def _qterms(queries: DataFrame) -> DataFrame:
     )
 
 
-def _matched_from_text(live, qterms, hint, with_dl: bool = True) -> DataFrame:
+def _matched_from_text(live, qterms, with_dl: bool = True) -> DataFrame:
     """The shared probe-proportional matched-postings builder of both
     text-form retrievers (r17 review — one definition so the
     restrict-before-aggregate layout cannot drift between them):
@@ -199,7 +169,7 @@ def _matched_from_text(live, qterms, hint, with_dl: bool = True) -> DataFrame:
         toks = live.select("doc_id", F.explode(words("text")).alias("w"))
         keys = ["doc_id", "w"]
     return (
-        toks.join(hint(qterms.select("w").distinct()), "w")
+        toks.join(F.broadcast(qterms.select("w").distinct()), "w")
         .groupBy(*keys)
         .agg(F.count("*").cast("bigint").alias("tf"))
         .withColumn(
@@ -215,17 +185,14 @@ def _score_and_rank(
     dfm: DataFrame | None,
     stats: DataFrame,
     k: int,
-    bounded_queries: bool = True,
     contrib_sql: str = BM25_CONTRIB,
 ) -> DataFrame:
     """The shared scoring tail of every plan: probe the postings (which
     must carry tf — and df already riding when ``dfm`` is None; dl too
     when the contribution formula reads it), sum the scaled-integer
     per-term contributions per (query, doc), two-stage rank-filter to
-    top-k. ``bounded_queries`` keeps the broadcast hints on the
-    query-side joins (the default contract); False drops them so AQE
-    picks the strategy for an unbounded query set — the 1-row stats
-    frame stays broadcast regardless. ``contrib_sql`` is the per-term
+    top-k. The query-side joins and the 1-row stats frame are
+    broadcast (the broadcast-query contract). ``contrib_sql`` is the per-term
     scoring formula (default ``BM25_CONTRIB``; the unnormalized dot
     retriever passes ``TFIDF_WEIGHT`` — r17 review: one tail for both
     retrievers, so a tiebreak or cast-recipe change can never drift
@@ -233,10 +200,9 @@ def _score_and_rank(
     over the same column names either way, so the bit-identity contract
     cannot drift on WHERE df was computed or HOW the probe was
     joined."""
-    hint = F.broadcast if bounded_queries else (lambda df: df)
-    probe = postings.join(hint(qterms), "w")
+    probe = postings.join(F.broadcast(qterms), "w")
     if dfm is not None:
-        probe = probe.join(hint(dfm), "w")
+        probe = probe.join(F.broadcast(dfm), "w")
     scored = (
         probe.crossJoin(F.broadcast(stats))
         .withColumn("contrib", F.expr(contrib_sql) * F.col("qtf"))
@@ -253,52 +219,13 @@ def _score_and_rank(
     )
 
 
-def lexical_topk_from_postings(
-    counts: DataFrame,
-    queries: DataFrame,
-    k: int = LEXICAL_K,
-) -> DataFrame:
-    """The scoring plan over ALREADY-BUILT postings ``(doc_id, w, tf)``
-    when no doc-length table exists: df map, corpus stats, and dl all
-    derive from the postings (vocabulary × doc-sized), so no corpus
-    text is touched — but dl costs a window over the WHOLE state, which
-    is why serving paths with a doclen table use
-    :func:`lexical_topk_served` (probe-proportional) and the text form
-    (:func:`lexical_topk`) derives dl from the corpus scan it already
-    pays for; this form remains for bare IncrementalRollup postings
-    (e.g. the batch-additivity pin).
-
-    Tokenization note: both engines split ''/'   ' to ``['']`` (one
-    empty token — verified against DuckDB regexp_split_to_array), so
-    empty-text docs contribute identically on both sides; no filter
-    needed for cross-engine exactness."""
-    postings = with_doc_length(counts)
-    per_doc = postings.select("doc_id", "dl").distinct()
-    stats = per_doc.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("sum_dl"),
-    )
-    qterms = _qterms(queries)
-    # df is the TRUE corpus document frequency, but only the (bounded)
-    # query terms' rows are ever probed — semi-restrict the postings to
-    # those terms BEFORE the vocab-wide agg, so the broadcast below
-    # ships |query terms| rows, not the vocabulary (which at corpus
-    # scale would blow the broadcast limit).
-    dfm = (
-        postings.join(F.broadcast(qterms.select("w").distinct()), "w")
-        .groupBy("w")
-        .agg(F.count("*").cast("bigint").alias("df"))
-    )
-    return _score_and_rank(postings, qterms, dfm, stats, k)
-
-
 #: Loud-contract bound on the served probe's distinct query-term set
 #: (advisor, r16): the serving plan collects the terms to the driver and
 #: inlines them as a pushed ``In(w, …)`` literal — correct ONLY while the
 #: query set is bounded. Past this many distinct terms the caller is
 #: violating the broadcast-query contract and gets a descriptive error
 #: instead of an unbounded driver collect + megabyte ``In()`` predicate
-#: (the ``max_hot_keys`` pattern).
+#: (the loud-contract pattern of ``tfidf_cosine_pairs(checked=True)``).
 MAX_PROBE_TERMS = 10_000
 
 
@@ -337,12 +264,12 @@ def lexical_topk_served(
     per query from a maintained postings state ``(doc_id, w, tf)`` plus
     the doc-length state ``(doc_id, dl)``.
 
-    Why a second table instead of :func:`lexical_topk_from_postings`:
-    that plan re-derives dl with a window over the WHOLE postings state
-    — a sort + exchange of every (doc, term) row to answer a 4-term
-    probe, which is why the store row converged to 1.3× DuckDB at sf10
-    instead of winning (profiled: execution, not dispatch). Here the
-    probe's cost is proportional to the rows it touches:
+    Why a second table: without it, dl is a window over the WHOLE
+    postings state — a sort + exchange of every (doc, term) row to
+    answer a 4-term probe, which is why the store row once converged to
+    1.3× DuckDB at sf10 instead of winning (profiled: execution, not
+    dispatch). Here the probe's cost is proportional to the rows it
+    touches:
 
     * the query TERMS (a bounded set by the broadcast-query contract)
       are collected and applied as an ``isin`` LITERAL filter, which
@@ -354,9 +281,9 @@ def lexical_topk_served(
     * dl joins from the doc-sized table; corpus stats (n_docs, sum_dl)
       are one tiny agg over it — never a postings-wide window.
 
-    Scores are bit-identical to the window form: same formula string
-    over the same (tf, df, dl, n_docs, sum_dl) values (the probe side
-    and scoring tail are literally shared — :func:`_qterms` /
+    Scores are bit-identical to :func:`lexical_topk`: same formula
+    string over the same (tf, df, dl, n_docs, sum_dl) values (the probe
+    side and scoring tail are literally shared — :func:`_qterms` /
     :func:`_score_and_rank`), so the shared DuckDB oracle pins both
     plans."""
     qterms = _qterms(queries)
@@ -882,8 +809,8 @@ TFIDF_THRESHOLD = 0.35
 
 #: The word 3-gram frequency postings of relation ``{docs}`` (``doc_id``,
 #: ``text``) as CTEs ending in ``counts(doc_id, w, tf)``. The grams are
-#: hash-partitioned on ``w`` before the tf aggregate, so the aggregate,
-#: the df window and the salted guard all run on that one exchange.
+#: hash-partitioned on ``w`` before the tf aggregate, so the aggregate
+#: and the df window both run on that one exchange.
 _SHINGLE_COUNTS_CTES = f"""
 grams AS (
     SELECT /*+ REPARTITION(w) */ doc_id, xxhash64(g) AS w
@@ -911,30 +838,15 @@ def shingle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shingle_counts_of(table(spark, sf_dir, "documents"))
 
 
-def _tfidf_flat_ctes(
-    counts: str, n_docs: str, df_cap: int, bounded: bool, guard: str
-) -> str:
+def _tfidf_flat_ctes(counts: str, n_docs: str, df_cap: int) -> str:
     """CTEs ending in ``flat(doc_id, w, tf, df, n_docs)``: the postings of
     relation ``counts`` whose term df is at most ``df_cap``, each with its
-    df and the 1-row corpus size of relation ``n_docs``."""
-    if bounded:
-        base = counts
-        if guard == "salted":
-            # hybrid (see tfidf_cosine_pairs): the salted guard drops the
-            # hot keys, then the window values df over the cold mass; the
-            # cap filter below is then vacuous but keeps one downstream plan
-            base = f"({hot_key_guard_sql(counts, 'doc_id, w, tf', 'w', df_cap, guard)})"
-        valued = (
-            "SELECT doc_id, w, tf, count(*) OVER (PARTITION BY w) AS df "
-            f"FROM {base}"
-        )
-    else:
-        valued = (
-            "SELECT e.doc_id AS doc_id, w, e.tf AS tf, df FROM (SELECT w, "
-            "CAST(size(entries) AS BIGINT) AS df, explode(entries) AS e FROM ("
-            "SELECT w, collect_list(struct(doc_id, tf)) AS entries "
-            f"FROM {counts} GROUP BY w HAVING size(entries) <= {df_cap}))"
-        )
+    df (a COUNT window over the term key) and the 1-row corpus size of
+    relation ``n_docs``."""
+    valued = (
+        "SELECT doc_id, w, tf, count(*) OVER (PARTITION BY w) AS df "
+        f"FROM {counts}"
+    )
     return f"""
 flat AS (
     SELECT /*+ BROADCAST(nd) */ doc_id, w, tf, df, n_docs
@@ -1011,11 +923,9 @@ def tfidf_cosine_pairs(
     threshold: float = TFIDF_THRESHOLD,
     df_cap: int = TFIDF_DF_CAP,
     n_docs: DataFrame | None = None,
-    bounded: bool = True,
     quantizer: int = 100,
     idf_cap: float | None = None,
     checked: bool = False,
-    guard: str = "window",
 ) -> DataFrame:
     """Document pairs (doc_a < doc_b) with TF-IDF cosine >= ``threshold``
     over postings ``(doc_id, w, tf)``.
@@ -1032,23 +942,17 @@ def tfidf_cosine_pairs(
     partition-local double-explode -> integer dot per pair with the
     norms emerging as grouping keys -> cosine filter.
 
-    MEMORY SHAPE (same trade as dedup.ngram_jaccard_pairs' posting
-    build): the default one-scan form's collect_list agg buffer for a
-    single ultra-common gram materializes its FULL posting list BEFORE
-    the cap filter drops it — a web-boilerplate gram in 1e9 docs is a
-    single-key buffer hazard. ``bounded=True`` (the DEFAULT — VERDICT
-    r13 #2, final r14 form): a COUNT window over the term key computes
+    MEMORY SHAPE (same build as dedup.ngram_jaccard_pairs' capped
+    postings, VERDICT r13 #2): a COUNT window over the term key computes
     df and filters rows above the cap BEFORE any list is collected —
     every collect buffer is bounded by df_cap entries, the window's
     spillable row buffer carries hot keys safely, and the postings are
     still scanned once (from text, the window runs on the gram exchange
-    that also feeds the tf aggregate). Measured FREE-to-faster vs the
-    one-scan form (0.90–0.97× at sf0.1/sf1), so it is unconditional at the registered
-    entries — an earlier count-then-join draft cost 1.17–1.51× and was
-    gated behind a source-size chooser, both superseded (PERFORMANCE
-    r14 entries). The one-scan form stays as the measured alternative
-    (df = list size, no window sort); results are bit-identical between
-    the forms (equality-tested).
+    that also feeds the tf aggregate). Collecting each full list first
+    would put a web-boilerplate gram in 1e9 docs into one agg buffer;
+    the window form measured 0.90–0.97× of that collect-then-cap form
+    at sf0.1/sf1, and an earlier count-then-join draft 1.17–1.51×
+    (PERFORMANCE r14 entries).
 
     INT64 ENVELOPE (a correctness contract, not a perf note): the
     integer norms and dots require per-doc Σwgt² < 2^63, i.e. with the
@@ -1076,38 +980,16 @@ def tfidf_cosine_pairs(
     defaults; the registered rows sit ~9 orders inside the envelope
     (boundary test: tests/test_retrieval.py).
 
-    STRAGGLER GUARD (``guard=``, VERDICT r15 #2): the window form
-    routes ALL rows of a key through one task before the cap filter
-    drops them — bounded memory (WindowExec spills) but a df=10⁹
-    boilerplate gram still serializes 10⁹ rows through one straggler.
-    This build needs the df VALUE downstream, so it cannot simply swap
-    in :func:`~.skew.cap_hot_keys_salted` (and re-joining counted
-    values is the subtree-replan shape r14 measured and rejected) —
-    but the HYBRID works because hot keys are DROPPED, not valued:
-    ``guard="salted"`` first removes every above-cap key's rows via the
-    salted count + broadcast anti-join (no task ever owns a hot key),
-    then runs the SAME count window over the cold mass only — where
-    every key has ≤ df_cap rows by construction, so the per-task skew
-    of the value-producing window is bounded by the cap. df values for
-    surviving keys are unchanged (whole keys drop, never partial
-    rows), so results are bit-identical (equality-tested). MEASURED
-    (scripts/bench_straggler.py --tfidf, PERFORMANCE r16): on local[32]
-    the window form wins at every size up to 32 M docs (1.71× → 1.44×,
-    trending to the hybrid) because the hybrid's two extra balanced
-    passes cost more than the single straggler sort when cores ≈
-    grams/doc; the crossover criterion is cores ≫ grams-per-doc — the
-    1000-executor regime — so the default stays "window" by
-    measurement and the knob is the cluster-scale opt-in.
+    STRAGGLER: the window routes ALL rows of a key through one task
+    before the cap filter drops them — bounded memory (WindowExec
+    spills), but a df=10⁹ boilerplate gram still serializes 10⁹ rows
+    through one task (see :func:`~.skew.cap_hot_keys`). A salted
+    pre-drop of the hot keys lost to this form at every size up to
+    32 M docs on local[32] (1.71× → 1.44×, PERFORMANCE r16).
 
     ``n_docs``: optional 1-row (n_docs BIGINT) frame; callers that know
     a cheaper equivalent (docs with >= 3 words needs no shingling)
     should pass it. Default derives it from ``counts``."""
-    validate_guard(guard)
-    if guard != "window" and not bounded:
-        # the unbounded one-scan build has no guard to salt; silently
-        # accepting the knob would run the exact single-key buffer
-        # hazard it was passed to avoid
-        raise ValueError("guard='salted' requires bounded=True")
     frames = {"counts": counts}
     ctes = ""
     if n_docs is None:
@@ -1119,7 +1001,7 @@ def tfidf_cosine_pairs(
     else:
         frames["n_docs"] = n_docs
         nd = "{n_docs}"
-    ctes += _tfidf_flat_ctes("{counts}", nd, df_cap, bounded, guard)
+    ctes += _tfidf_flat_ctes("{counts}", nd, df_cap)
     return _tfidf_pairs(
         counts.sparkSession, ctes, frames, threshold, quantizer, idf_cap, checked
     )
@@ -1197,7 +1079,7 @@ def lexical_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 n_docs AS (
     SELECT CAST(count(*) AS BIGINT) AS n_docs FROM {{docs}}
     WHERE size({words_sql('text')}) >= 3
-),{_tfidf_flat_ctes("counts", "n_docs", TFIDF_DF_CAP, True, "window")}"""
+),{_tfidf_flat_ctes("counts", "n_docs", TFIDF_DF_CAP)}"""
     return _tfidf_pairs(
         spark, ctes, {"docs": table(spark, sf_dir, "documents")},
         TFIDF_THRESHOLD, 100, None, False,
@@ -1255,7 +1137,7 @@ def lexical_tfidf_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, plus a direct store==text equality test."""
     prepare(spark)
     store = served_shingle_postings(spark, sf_dir)
-    return tfidf_cosine_pairs(state_counts(store.read(spark)), bounded=True)
+    return tfidf_cosine_pairs(state_counts(store.read(spark)))
 
 
 @register(
@@ -1283,7 +1165,7 @@ def lexical_tfidf_from_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_counts_of,
         with_doclen=False,
     )
-    return tfidf_cosine_pairs(store.counts(spark), bounded=True)
+    return tfidf_cosine_pairs(store.counts(spark))
 
 
 # --------------------------------------------------------------------------
@@ -1320,7 +1202,6 @@ def tfidf_dot_topk(
     docs: DataFrame,
     queries: DataFrame,
     k: int = LEXICAL_K,
-    bounded_queries: bool = True,
 ) -> DataFrame:
     """Top-``k`` documents per query under the UNNORMALIZED
     scaled-integer TF-IDF dot product Σ_t qtf·floor(100·tf·sqrt(N/df))
@@ -1329,27 +1210,13 @@ def tfidf_dot_topk(
     (:func:`_matched_from_text` / :func:`_score_and_rank`, r17 review),
     minus dl — this scorer has no length normalization BY DESIGN, which
     is exactly what makes its ranking diverge from BM25's and the
-    fusion informative.
-
-    ``bounded_queries=False`` is the same unbounded-workload escape
-    hatch as :func:`lexical_topk`'s (VERDICT r17 #5 — previously only
-    the BM25 leg had it, so batch-scoring RRF against a query set too
-    large to broadcast had no story): hints dropped on the query-side
-    joins, AQE picks, the 1-row stats frame stays broadcast,
-    bit-identical results."""
+    fusion informative."""
     live = docs.filter(F.col("text").isNotNull())
     qterms = _qterms(queries)
-    hint = F.broadcast if bounded_queries else (lambda df: df)
-    matched = _matched_from_text(live, qterms, hint, with_dl=False)
+    matched = _matched_from_text(live, qterms, with_dl=False)
     stats = live.agg(F.count("*").cast("bigint").alias("n_docs"))
     return _score_and_rank(
-        matched,
-        qterms,
-        None,
-        stats,
-        k,
-        bounded_queries=bounded_queries,
-        contrib_sql=TFIDF_WEIGHT,
+        matched, qterms, None, stats, k, contrib_sql=TFIDF_WEIGHT
     )
 
 

@@ -110,11 +110,11 @@ def cap_hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
     SCALE RESIDUAL (VERDICT r14 #1): the window partitioning routes ALL
     rows of a key through one task before the filter drops them —
     bounded MEMORY (WindowExec spills) but a df=10⁹ key still
-    serializes 10⁹ rows through one straggler task. For adversarially
-    hot distributions use :func:`cap_hot_keys_salted`, the two-phase
-    variant that counts under a salt and anti-joins a broadcast hot-key
-    list instead (bit-identical output; trade ledgered in
-    scripts/bench_straggler.py)."""
+    serializes 10⁹ rows through one straggler task. A salted two-phase
+    form (partial count, broadcast anti-join of the hot keys) won only
+    on a planted 8 M-row corpus with one 30 %-hot key (0.74×,
+    PERFORMANCE r15) and lost on the TF-IDF build at every size; no
+    caller has that shape, so the window is the one form."""
     from pyspark.sql import Window
 
     # collision-resistant working column: this is a shared helper
@@ -134,143 +134,14 @@ def cap_hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
     )
 
 
-def cap_hot_keys_salted(
-    df: DataFrame,
-    keys: list[str],
-    cap: int,
-    max_hot_keys: int | None = None,
-    broadcast: bool = True,
-) -> DataFrame:
-    """Straggler-bounded twin of :func:`cap_hot_keys` (VERDICT r14 #2):
-    identical output (drop rows whose key-group frequency exceeds
-    ``cap``) with NO task ever owning a hot key's full row set. Two
-    phases: (1) an exact per-key count whose FIRST phase is Spark's
-    map-side partial aggregation — each task emits ONE partial counter
-    per key it sees, which is precisely the "count by (key, salt)"
-    decomposition with salt = input partition, realized without an
-    extra salt column or exchange; the final agg for even a df=10⁹ key
-    receives ≤ num-input-tasks fixed-width partial rows, never data
-    rows. (2) keys whose total exceeds ``cap`` — at most Σrows/cap of
-    them, tiny by construction — are broadcast and null-safe
-    anti-joined. The data rows themselves never hash-partition by the
-    bare key, so the adversarial distribution costs each task only its
-    local counters.
-
-    Trade vs the window form: the count is a SECOND pass over the frame
-    (a count-agg and a join over the same un-exchanged subtree do not
-    get ReuseExchange — children differ). Measured on the planted
-    30%-hot corpus (scripts/bench_straggler.py, local[32], cap=100):
-    1.05× at 2M rows (free), **0.74× — wins — at 8M**, 0.94× at 32M
-    (the window task owning the hot key is the stage's critical path;
-    the at-scale argument is the bound — the straggler grows linearly
-    in the hot key's df, this form's per-task work stays N/cores at
-    any df). Registered posting builds keep the window form
-    because their df distributions are cap-bounded by construction
-    (grams above df_cap are the minority mass); this is the opt-in for
-    distributions where one key dominates. Envelope: the broadcast hot
-    set holds ≤ Σrows/cap keys — at 10⁹ rows and cap=100 that is up to
-    10⁷ keys. ``max_hot_keys`` GUARDS that envelope (VERDICT r15 #6):
-    when set, the hot-set cardinality is counted eagerly (one agg over
-    the already-fixed-width count rows — the same loud-contract shape
-    as the TF-IDF envelope ``checked=True`` pre-flight) and a
-    descriptive error names the mitigations instead of letting the
-    broadcast OOM the driver opaquely. Opt-in because it is an eager
-    extra job; None (default) keeps the call fully lazy.
-    ``broadcast=False`` is the escape hatch the error names (VERDICT
-    r16 #3 — the message used to advise a knob that didn't exist):
-    the hint is dropped and AQE picks the anti-join strategy from the
-    hot set's runtime size — shuffled if it is genuinely too big to
-    broadcast, broadcast anyway if AQE's own threshold admits it.
-    Same null-safe condition, bit-identical output either way.
-    Equality is pinned bit-identical (incl. NULL-key groups and
-    on-the-cap boundaries) in tests/test_bounded_postings.py."""
-    # collision-resistant working columns, mirroring cap_hot_keys' __dw_kf
-    # guard (advisor finding, r15): an input frame already carrying a
-    # __dw_hot_<key> column would make the anti-join condition reference
-    # an ambiguous/wrong attribute.
-    taken = {"__dw_kf", *(f"__dw_hot_{k}" for k in keys)}
-    clash = sorted(taken.intersection(df.columns))
-    if clash:
-        raise ValueError(
-            f"cap_hot_keys_salted: input already has {clash} column(s); rename"
-        )
-    hot = (
-        df.groupBy(*keys)
-        .agg(F.count("*").alias("__dw_kf"))
-        .filter(F.col("__dw_kf") > cap)
-        .select(*[F.col(k).alias(f"__dw_hot_{k}") for k in keys])
-    )
-    if max_hot_keys is not None:
-        n_hot = hot.count()
-        if n_hot > max_hot_keys:
-            raise ValueError(
-                f"cap_hot_keys_salted broadcast envelope exceeded: {n_hot} "
-                f"hot keys > max_hot_keys={max_hot_keys}; raise cap "
-                f"(currently {cap}) or pass broadcast=False to let AQE "
-                f"pick the anti-join strategy from the hot set's runtime "
-                f"size"
-            )
-    # null-safe condition: the window form groups NULL keys together, so
-    # a hot NULL group must drop here too — a bare equi-anti-join would
-    # keep every NULL-keyed row
-    cond = None
-    for k in keys:
-        c = F.col(k).eqNullSafe(F.col(f"__dw_hot_{k}"))
-        cond = c if cond is None else (cond & c)
-    return df.join(F.broadcast(hot) if broadcast else hot, cond, "left_anti")
-
-
-def hot_key_guard_sql(rel: str, cols: str, key: str, cap: int, guard: str) -> str:
-    """SQL-text form of :func:`hot_key_guard` for one ``key`` of relation
+def hot_key_guard_sql(rel: str, cols: str, key: str, cap: int) -> str:
+    """SQL-text form of :func:`cap_hot_keys` for one ``key`` of relation
     ``rel``: a SELECT of ``cols`` over the rows whose key frequency is
-    at most ``cap``. ``"window"`` filters on a COUNT window over the key
-    (:func:`cap_hot_keys`); ``"salted"`` drops the hot keys through a
-    null-safe broadcast anti-join against their partial-counted set
-    (:func:`cap_hot_keys_salted`)."""
-    validate_guard(guard)
-    if guard == "window":
-        return (
-            f"SELECT {cols} FROM (SELECT *, count(*) OVER (PARTITION BY {key}) "
-            f"AS __dw_kf FROM {rel}) WHERE __dw_kf <= {cap}"
-        )
+    at most ``cap``, filtered on a COUNT window over the key."""
     return (
-        f"SELECT /*+ BROADCAST(hot) */ {cols} FROM {rel} r LEFT ANTI JOIN "
-        f"(SELECT {key} FROM {rel} GROUP BY {key} HAVING count(*) > {cap}) hot "
-        f"ON r.{key} <=> hot.{key}"
+        f"SELECT {cols} FROM (SELECT *, count(*) OVER (PARTITION BY {key}) "
+        f"AS __dw_kf FROM {rel}) WHERE __dw_kf <= {cap}"
     )
-
-
-def validate_guard(guard: str) -> None:
-    """Shared up-front check for every ``guard=`` knob entry point
-    (jaccard, containment, both fuzzy blockers, the TF-IDF build, and
-    :func:`hot_key_guard` itself): a typo'd value must be reported AS an
-    invalid value, never misdirected to a path-compatibility message
-    (advisor finding, r15; single definition so a future guard mode is
-    one edit, r16 review)."""
-    if guard not in ("window", "salted"):
-        raise ValueError(f"guard must be 'window' or 'salted', got {guard!r}")
-
-
-def hot_key_guard(
-    df: DataFrame, keys: list[str], cap: int, guard: str = "window"
-) -> DataFrame:
-    """The guard chooser consumers thread their ``guard=`` knob to:
-    ``"window"`` (default — one pass, exchange reused downstream,
-    single-task hot-key residual) or ``"salted"`` (two passes, no task
-    ever owns a hot key — the adversarial-distribution opt-in). Both
-    drop exactly the rows whose key-group frequency exceeds ``cap``.
-    Consumers that need the per-key COUNT value downstream (the TF-IDF
-    posting build) cannot swap this chooser in directly — re-joining
-    counted values is the subtree-replan shape r14 measured and
-    rejected — but DO get straggler protection via the hybrid in
-    :func:`~.retrieval.tfidf_cosine_pairs` (``guard="salted"``):
-    salted pre-drop of the hot keys, then the value-producing window
-    over the cold mass only, where per-key row counts are ≤ cap by
-    construction (VERDICT r15 #2)."""
-    validate_guard(guard)
-    if guard == "window":
-        return cap_hot_keys(df, keys, cap)
-    return cap_hot_keys_salted(df, keys, cap)
 
 
 def detect_hot_keys(

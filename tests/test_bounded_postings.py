@@ -1,83 +1,27 @@
 """The df-first bounded-buffer posting builds (VERDICT r13 #2).
 
-The one-scan posting build (collect_list then cap-filter) materializes an
-ultra-common term's FULL posting list in a single agg buffer before the
-cap drops it. The bounded form filters rows above the
-cap through a COUNT window over the term key BEFORE any list is
-collected — every collect buffer bounded by df_cap, hot keys riding the
-window's spillable row buffer, and the term subtree scanned once.
-These tests pin (a) bit-identical results between the forms, (b) the
-bounded plan's shape (guard window, no df join), and (c) that the
-registered queries run the guard unconditionally (measured free).
+Every df-capped posting build (capped jaccard, containment, TF-IDF)
+filters rows above the cap through a COUNT window over the term key
+BEFORE any list is collected — every collect buffer bounded by df_cap,
+hot keys riding the window's spillable row buffer, and the term subtree
+scanned once. These tests pin the plan's shape (guard window, no df
+join), that the registered queries run the guard, and the shared
+guard's working-column contract. They only plan at sf0.001, so they run
+in the fast lane. The registered rows' values are checked against their
+DuckDB oracles by the oracle-parity sweep (tests/test_oracle_parity.py).
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
-
 import pytest
-
-# r22 fast-lane split, second pass (measured: the first fast lane still
-# ran 16.5 min on this box — over the driver-timeout safety margin):
-# this module's VALUE semantics are gated by the fast lane's sf0.001
-# oracle-parity sweep; its deeper coverage runs in the slow lane
-# (`pytest -m slow`, the round-end full sweep).
-pytestmark = pytest.mark.slow
 
 
 def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_tfidf_bounded_equals_onescan(spark, sf_dir):
-    from datawarehouse_project_spark.operators.retrieval import (
-        shingle_counts,
-        tfidf_cosine_pairs,
-    )
-
-    counts = shingle_counts(spark, sf_dir)
-    base = {
-        (r.doc_a, r.doc_b): r.cosine
-        for r in tfidf_cosine_pairs(counts, bounded=False).collect()
-    }
-    bounded = {
-        (r.doc_a, r.doc_b): r.cosine
-        for r in tfidf_cosine_pairs(counts, bounded=True).collect()
-    }
-    assert base, "fixture plants a near-dup cluster"
-    assert bounded.keys() == base.keys()
-    for k in base:
-        assert bounded[k] == base[k], (k, bounded[k], base[k])  # bit-exact
-
-
-def test_ngram_jaccard_bounded_equals_onescan(spark, sf_dir):
-    from datawarehouse_project_spark.operators.dedup import (
-        DF_CAP,
-        ngram_jaccard_pairs,
-    )
-
-    base = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            spark, sf_dir, threshold=0.6, df_cap=DF_CAP, bounded=False
-        ).collect()
-    }
-    bounded = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            spark, sf_dir, threshold=0.6, df_cap=DF_CAP, bounded=True
-        ).collect()
-    }
-    assert base, "fixture plants near-dups"
-    assert bounded.keys() == base.keys()
-    for k in base:
-        assert bounded[k] == base[k], (k, bounded[k], base[k])  # bit-exact
-
-
 #: The bounded build's plan signature: a COUNT window over the term key
-#: (the guard runs BEFORE any list is collected). Also the discriminator
-#: the auto-select pin uses — the one-scan plans have no such window.
+#: (the guard runs BEFORE any list is collected).
 TFIDF_GUARD = "count(1) windowspecdefinition(w#"
 NGRAM_GUARD = "count(1) windowspecdefinition(sgh#"
 
@@ -93,7 +37,7 @@ def test_tfidf_bounded_plan_guard_window_no_join(spark, sf_dir):
         tfidf_cosine_pairs,
     )
 
-    plan = _plan(tfidf_cosine_pairs(shingle_counts(spark, sf_dir), bounded=True))
+    plan = _plan(tfidf_cosine_pairs(shingle_counts(spark, sf_dir)))
     assert TFIDF_GUARD in plan
     for j in ("ShuffledHashJoin [w", "SortMergeJoin [w", "BroadcastHashJoin [w",
               "LeftSemi"):
@@ -108,11 +52,7 @@ def test_jaccard_bounded_plan_guard_window_no_join(spark, sf_dir):
         ngram_jaccard_pairs,
     )
 
-    plan = _plan(
-        ngram_jaccard_pairs(
-            spark, sf_dir, threshold=0.6, df_cap=DF_CAP, bounded=True
-        )
-    )
+    plan = _plan(ngram_jaccard_pairs(spark, sf_dir, threshold=0.6, df_cap=DF_CAP))
     assert NGRAM_GUARD in plan
     for j in ("ShuffledHashJoin [sgh", "SortMergeJoin [sgh",
               "BroadcastHashJoin [sgh", "LeftSemi"):
@@ -121,10 +61,9 @@ def test_jaccard_bounded_plan_guard_window_no_join(spark, sf_dir):
 
 
 def test_registered_queries_always_run_the_guard_window(spark, sf_dir):
-    """The bounded guard-window build measured FREE vs one-scan (r14
-    final form), so the registered queries run it UNCONDITIONALLY — no
-    size chooser, no unsafe plan at any scale. Pinned via the guard's
-    plan signature. (History: a count-then-join bounded draft cost
+    """The registered capped queries run the guard window — no size
+    chooser, no unsafe plan at any scale. Pinned via the guard's plan
+    signature. (History: a count-then-join bounded draft cost
     1.17–1.51× and hid behind an os.stat size chooser; both superseded
     and removed — PERFORMANCE r14.)"""
     from datawarehouse_project_spark.catalog import all_queries
@@ -137,384 +76,11 @@ def test_registered_queries_always_run_the_guard_window(spark, sf_dir):
     assert NGRAM_GUARD in plan
 
 
-def test_containment_bounded_equals_onescan(spark, sf_dir):
-    from datawarehouse_project_spark.operators.dedup import (
-        CONTAINMENT_T,
-        DF_CAP,
-        ngram_containment_pairs,
-    )
-
-    base = {
-        (r.src_doc, r.dst_doc): (r.n_src, r.containment)
-        for r in ngram_containment_pairs(
-            spark, sf_dir, CONTAINMENT_T, DF_CAP, bounded=False
-        ).collect()
-    }
-    bounded = {
-        (r.src_doc, r.dst_doc): (r.n_src, r.containment)
-        for r in ngram_containment_pairs(
-            spark, sf_dir, CONTAINMENT_T, DF_CAP, bounded=True
-        ).collect()
-    }
-    assert base, "fixture plants containment pairs"
-    assert bounded == base  # bit-exact
-
-
-def test_cap_hot_keys_salted_bit_identical(spark):
-    """VERDICT r14 #2: the straggler-bounded two-phase guard drops the
-    SAME row set as the window form — including a hot NULL key group
-    (the anti-join must be null-safe or NULL rows are never dropped)
-    and keys sitting exactly ON the cap (kept: the contract is
-    freq <= cap survives)."""
-    from datawarehouse_project_spark.operators.skew import (
-        cap_hot_keys,
-        cap_hot_keys_salted,
-    )
-
-    rows = (
-        [("hot", i) for i in range(50)]
-        + [("edge", i) for i in range(5)]      # exactly cap → kept
-        + [("cold", 0), ("cold", 1)]
-        + [(None, i) for i in range(9)]        # hot NULL group → dropped
-    )
-    df = spark.createDataFrame(rows, "k string, v int").repartition(8)
-    want = sorted(
-        (r.k, r.v) for r in cap_hot_keys(df, ["k"], cap=5).collect()
-    )
-    got = sorted(
-        (r.k, r.v) for r in cap_hot_keys_salted(df, ["k"], cap=5).collect()
-    )
-    assert want == got
-    assert ("edge", 0) in want  # on-the-cap group survives
-    assert all(k != "hot" and k is not None for k, _ in got)
-
-    # multi-key form agrees too
-    df2 = spark.createDataFrame(
-        [(a, b, i) for a in ("x", "y") for b in ("p", None) for i in range(3)]
-        + [("x", "p", i) for i in range(10)],
-        "a string, b string, v int",
-    )
-    key = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
-    w2 = sorted(
-        ((r.a, r.b, r.v)
-         for r in cap_hot_keys(df2, ["a", "b"], cap=4).collect()),
-        key=key,
-    )
-    g2 = sorted(
-        ((r.a, r.b, r.v)
-         for r in cap_hot_keys_salted(df2, ["a", "b"], cap=4).collect()),
-        key=key,
-    )
-    assert w2 == g2
-
-
 def test_cap_hot_keys_rejects_working_column_collision(spark):
     """The shared guard refuses an input that already carries its temp
     column instead of silently clobbering it (advisor r14)."""
-    import pytest
-
     from datawarehouse_project_spark.operators.skew import cap_hot_keys
 
     df = spark.createDataFrame([("a", 1)], "k string, __dw_kf int")
     with pytest.raises(ValueError, match="__dw_kf"):
         cap_hot_keys(df, ["k"], cap=5)
-
-
-def test_cap_hot_keys_salted_plan_shape(spark):
-    """The salted form's defining plan properties: the data rows NEVER
-    hash-partition by the bare key (no window over k — the straggler
-    fix), the hot-key list arrives via a BROADCAST anti-join, and the
-    count side carries a partial_count (map-side combine = the salted
-    phase realized by Spark's partial aggregation)."""
-    from datawarehouse_project_spark.operators.skew import cap_hot_keys_salted
-
-    df = spark.createDataFrame(
-        [("k%d" % (i % 7), i) for i in range(100)], "k string, v int"
-    ).repartition(8)
-    plan = cap_hot_keys_salted(df, ["k"], cap=5)._jdf.queryExecution().executedPlan().toString()
-    assert "windowspecdefinition" not in plan
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert "partial_count" in plan
-
-
-def test_guard_knob_salted_equals_window_through_consumers(spark, sf_dir):
-    """The guard= knob threaded through the filter-only consumers
-    (fuzzy seg_cap, jaccard/containment posting builds) is
-    result-identical between forms — the salted opt-in changes the
-    physical shape only."""
-    from datawarehouse_project_spark.operators.dedup import (
-        CONTAINMENT_T,
-        DF_CAP,
-        ngram_containment_pairs,
-        ngram_jaccard_pairs,
-    )
-    from datawarehouse_project_spark.operators.fuzzy import (
-        edit_distance_pairs,
-    )
-    jw = sorted(map(tuple, ngram_jaccard_pairs(
-        spark, sf_dir, threshold=0.6, df_cap=DF_CAP, bounded=True
-    ).collect()))
-    js = sorted(map(tuple, ngram_jaccard_pairs(
-        spark, sf_dir, threshold=0.6, df_cap=DF_CAP, bounded=True,
-        guard="salted",
-    ).collect()))
-    assert jw == js and jw
-
-    cw = sorted(map(tuple, ngram_containment_pairs(
-        spark, sf_dir, CONTAINMENT_T, DF_CAP, bounded=True
-    ).collect()))
-    cs = sorted(map(tuple, ngram_containment_pairs(
-        spark, sf_dir, CONTAINMENT_T, DF_CAP, bounded=True, guard="salted",
-    ).collect()))
-    assert cw == cs and cw
-
-    # planted corpus: the 40 filler strings (len 23) share a hot suffix
-    # segment "MONTAIL" at frequency 40 > cap — really dropped by the
-    # guard — while the planted pairs (len 22, a DIFFERENT length key)
-    # block on their "pairhead" segment at frequency 10 <= cap and
-    # survive. Both guard forms must keep the same survivors. (First
-    # draft put the planted pairs' every untouched segment above the
-    # cap, so BOTH forms returned empty and `and fw` failed — caught by
-    # the round's code review, verified by running the test.)
-    import hashlib
-
-    rows = [
-        (i, hashlib.md5(f"f{i}".encode()).hexdigest()[:12] + " COMMONTAIL")
-        for i in range(40)
-    ]
-    rows += [(100 + 2 * j, f"pairhead{j:02d}q COMMONTAIL") for j in range(5)]
-    rows += [(101 + 2 * j, f"pairhead{j:02d}x COMMONTAIL") for j in range(5)]
-    src = spark.createDataFrame(rows, "id bigint, s string")
-    cap = 25  # filler seg freq 40 dropped; planted seg freq 10 kept
-    fw = sorted(map(tuple, edit_distance_pairs(src, d=2, seg_cap=cap).collect()))
-    fl = sorted(map(tuple, edit_distance_pairs(src, d=2).collect()))
-    fs = sorted(map(tuple, edit_distance_pairs(
-        src, d=2, seg_cap=cap, guard="salted"
-    ).collect()))
-    assert fw == fs and fw
-    # and the cap really dropped hot keys without losing these pairs
-    # (the planted pairs' blocking segment is cold): capped == lossless
-    # on this geometry while the filler suffix segment was dropped
-    assert fw == fl
-
-    import pytest
-    with pytest.raises(ValueError, match="window.*salted|salted.*window"):
-        from datawarehouse_project_spark.operators.skew import hot_key_guard
-        hot_key_guard(src, ["id"], 5, guard="bogus")
-
-
-def test_guard_knob_raises_when_it_cannot_take_effect(spark, sf_dir):
-    """guard='salted' on a path that would not run any guard (unbounded
-    posting build, capless fuzzy) errors loudly instead of silently
-    running the hazard it was passed to avoid (r15 review)."""
-    import pytest
-
-    from datawarehouse_project_spark.operators.dedup import (
-        CONTAINMENT_T,
-        DF_CAP,
-        ngram_containment_pairs,
-        ngram_jaccard_pairs,
-    )
-    from datawarehouse_project_spark.operators.fuzzy import candidate_pairs
-
-    with pytest.raises(ValueError, match="bounded=True"):
-        ngram_jaccard_pairs(
-            spark, sf_dir, threshold=0.6, df_cap=DF_CAP, bounded=False,
-            guard="salted",
-        )
-    with pytest.raises(ValueError, match="bounded=True"):
-        ngram_containment_pairs(
-            spark, sf_dir, CONTAINMENT_T, DF_CAP, bounded=False,
-            guard="salted",
-        )
-    s = spark.createDataFrame([(1, "abcdef")], "id bigint, s string")
-    with pytest.raises(ValueError, match="seg_cap"):
-        candidate_pairs(s, 2, seg_cap=None, guard="salted")
-
-
-def test_guard_knob_invalid_value_reported_up_front(spark, sf_dir):
-    """A typo'd guard value is reported as an invalid value on EVERY
-    path — including the uncapped/unbounded ones, where the old order
-    of checks misdirected it to the 'requires df_cap and bounded=True'
-    path-compatibility message (advisor finding, r15)."""
-    import pytest
-
-    from datawarehouse_project_spark.operators.dedup import (
-        ngram_containment_pairs,
-        ngram_jaccard_pairs,
-    )
-    from datawarehouse_project_spark.operators.fuzzy import candidate_pairs
-
-    # uncapped jaccard: the real problem is the value, not the path
-    with pytest.raises(ValueError, match="must be 'window' or 'salted'"):
-        ngram_jaccard_pairs(spark, sf_dir, threshold=0.6, guard="slated")
-    with pytest.raises(ValueError, match="must be 'window' or 'salted'"):
-        ngram_containment_pairs(
-            spark, sf_dir, bounded=False, guard="slated"
-        )
-    s = spark.createDataFrame([(1, "abcdef")], "id bigint, s string")
-    with pytest.raises(ValueError, match="must be 'window' or 'salted'"):
-        candidate_pairs(s, 2, seg_cap=None, guard="slated")
-    # the capped+bounded path still rejects it too (via hot_key_guard)
-    with pytest.raises(ValueError, match="window.*salted|salted.*window"):
-        ngram_jaccard_pairs(
-            spark, sf_dir, threshold=0.6, df_cap=50, bounded=True,
-            guard="slated",
-        )
-
-
-def test_cap_hot_keys_salted_rejects_working_column_collision(spark):
-    """The salted twin mirrors cap_hot_keys' collision contract
-    (advisor finding, r15): an input already carrying __dw_hot_<key> or
-    __dw_kf would make the null-safe anti-join condition reference an
-    ambiguous/wrong attribute, so it is refused loudly."""
-    import pytest
-
-    from datawarehouse_project_spark.operators.skew import cap_hot_keys_salted
-
-    df = spark.createDataFrame([("a", 1)], "k string, __dw_hot_k int")
-    with pytest.raises(ValueError, match="__dw_hot_k"):
-        cap_hot_keys_salted(df, ["k"], cap=5)
-    df2 = spark.createDataFrame([("a", 1)], "k string, __dw_kf int")
-    with pytest.raises(ValueError, match="__dw_kf"):
-        cap_hot_keys_salted(df2, ["k"], cap=5)
-
-
-def test_cap_hot_keys_salted_broadcast_envelope_guard(spark):
-    """VERDICT r15 #6: max_hot_keys= promotes the broadcast envelope
-    from disclosed to guarded — on the boundary the call succeeds
-    unchanged; one past it, a descriptive error names the mitigations
-    (raise cap / drop the hint) instead of an opaque broadcast OOM."""
-    import pytest
-
-    from datawarehouse_project_spark.operators.skew import (
-        cap_hot_keys,
-        cap_hot_keys_salted,
-    )
-
-    # 3 hot keys (freq 4 > cap=2), 2 cold
-    rows = [(f"h{i}", j) for i in range(3) for j in range(4)]
-    rows += [("c1", 0), ("c2", 0)]
-    df = spark.createDataFrame(rows, "k string, v int").repartition(4)
-
-    # exactly on the threshold: guarded call == unguarded == window form
-    want = sorted((r.k, r.v) for r in cap_hot_keys(df, ["k"], 2).collect())
-    got = sorted(
-        (r.k, r.v)
-        for r in cap_hot_keys_salted(df, ["k"], 2, max_hot_keys=3).collect()
-    )
-    assert got == want and got == [("c1", 0), ("c2", 0)]
-
-    # one past it: loud contract error naming the knobs — and the
-    # mitigation it names must EXIST on the signature (VERDICT r16 #3)
-    with pytest.raises(ValueError, match="broadcast=False"):
-        cap_hot_keys_salted(df, ["k"], 2, max_hot_keys=2)
-
-
-def test_cap_hot_keys_salted_broadcast_false_drops_the_hint(spark):
-    """VERDICT r16 #3: ``broadcast=False`` is the escape hatch the
-    envelope error names — the hint is genuinely dropped (with auto-
-    broadcast disabled the anti-join plans as a shuffle join, where the
-    hinted form still forces BroadcastHashJoin) and the output stays
-    bit-identical to the window form, hot NULL group included."""
-    from datawarehouse_project_spark.operators.skew import (
-        cap_hot_keys,
-        cap_hot_keys_salted,
-    )
-
-    rows = (
-        [("hot", i) for i in range(40)]
-        + [("cold", 0), ("cold", 1)]
-        + [(None, i) for i in range(7)]
-    )
-    df = spark.createDataFrame(rows, "k string, v int").repartition(8)
-
-    keep = {
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", ""
-        ),
-    }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        # frames built AFTER the conf change (a DataFrame pins its
-        # QueryExecution at first plan access)
-        hinted = cap_hot_keys_salted(df, ["k"], cap=5)
-        free = cap_hot_keys_salted(df, ["k"], cap=5, broadcast=False)
-        hplan = hinted._jdf.queryExecution().executedPlan().toString()
-        fplan = free._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in hplan  # the hint still forces it
-        assert "BroadcastHashJoin" not in fplan  # the knob really drops it
-        assert "LeftAnti" in fplan
-        want = sorted(
-            ((r.k is None, r.k, r.v)
-             for r in cap_hot_keys(df, ["k"], cap=5).collect()),
-        )
-        got = sorted(((r.k is None, r.k, r.v) for r in free.collect()))
-        assert want == got
-    finally:
-        for k, v in keep.items():
-            if v:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
-
-
-def test_tfidf_guard_salted_hybrid_equals_window(spark, sf_dir):
-    """VERDICT r15 #2: the count-consuming TF-IDF build gets straggler
-    protection via the hybrid — salted pre-drop of hot keys, then the
-    df-valuing window over the cold mass only. Bit-identical to the
-    window form on the registered fixture AND on a planted corpus with
-    an above-cap hot gram; the salted plan carries the anti-join and
-    never windows the full key set before the drop."""
-    import pytest
-
-    from datawarehouse_project_spark.operators.retrieval import (
-        shingle_counts,
-        tfidf_cosine_pairs,
-    )
-
-    counts = shingle_counts(spark, sf_dir)
-    base = sorted(map(tuple, tfidf_cosine_pairs(counts).collect()))
-    salted = sorted(
-        map(tuple, tfidf_cosine_pairs(counts, guard="salted").collect())
-    )
-    assert base == salted and base
-
-    # planted: a hot gram above the cap shared by EVERY doc (dropped by
-    # both forms — its df must not contaminate surviving keys), plus a
-    # genuine near-dup pair on cold grams
-    rows = []
-    for d in range(30):
-        rows.append((d, 999, 1))            # hot gram, df=30 > cap=20
-        rows.append((d, 1000 + d, 2))       # unique cold gram
-    rows += [(100, 1, 3), (100, 2, 1), (101, 1, 3), (101, 2, 1),
-             (100, 999, 1), (101, 999, 1)]  # the pair shares cold grams 1,2
-    pc = spark.createDataFrame(rows, "doc_id bigint, w bigint, tf bigint")
-    w_form = sorted(map(tuple, tfidf_cosine_pairs(pc, threshold=0.9).collect()))
-    s_form = sorted(map(tuple, tfidf_cosine_pairs(
-        pc, threshold=0.9, guard="salted"
-    ).collect()))
-    assert w_form == s_form
-    assert [(a, b) for a, b, _ in w_form] == [(100, 101)]
-
-    # knob contract: invalid value up front; no effect on the unbounded
-    # build is an error, not a silent hazard
-    with pytest.raises(ValueError, match="must be 'window' or 'salted'"):
-        tfidf_cosine_pairs(counts, guard="slated")
-    with pytest.raises(ValueError, match="bounded=True"):
-        tfidf_cosine_pairs(counts, bounded=False, guard="salted")
-
-    # plan shape: the salted form pre-drops via broadcast anti-join with
-    # map-side partial counts; the window still exists (it VALUES df
-    # over the cold mass) — that is the hybrid's defining shape
-    plan = (
-        tfidf_cosine_pairs(pc, guard="salted")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert "partial_count" in plan
-    assert "windowspecdefinition" in plan  # the df-valuing window remains

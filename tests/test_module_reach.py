@@ -1,6 +1,7 @@
 """Regrowth guard: every module under ``sources/`` and ``streaming/`` is
 part of what the engine serves, or is named below with the reason it is
-kept. A module that only its own tests import is deleted, not kept."""
+kept. A module that only its own tests import is deleted, not kept.
+And every engine import in the scripts and entry points still resolves."""
 
 from __future__ import annotations
 
@@ -86,3 +87,58 @@ def test_every_source_and_streaming_module_is_reached():
         f"reached by no engine module, entry point or perfbench: {unreached}; "
         "delete them, or name them in KEPT_UNREACHED with a reason"
     )
+
+
+def _top_level_names(tree: ast.Module) -> set[str]:
+    """Names a module binds outside its function and class bodies."""
+    names, stack = set(), list(tree.body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        else:
+            stack.extend(c for c in ast.iter_child_nodes(node) if isinstance(c, ast.stmt))
+    return names
+
+
+def test_script_and_entry_imports_resolve():
+    """Every ``from datawarehouse_project_spark… import name`` in
+    ``scripts/``, ``bench.py`` and ``__spark_entry__.py`` names an engine
+    module that exists and a name it defines (or a submodule), so a
+    deletion in the engine cannot leave a script that fails on import."""
+    entries = glob.glob(f"{ROOT}/scripts/*.py") + [
+        f"{ROOT}/bench.py",
+        f"{ROOT}/__spark_entry__.py",
+    ]
+    dangling = []
+    for path in entries:
+        for node in ast.walk(_tree(path)):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and not node.level
+                and (node.module or "").split(".")[0] == PKG
+            ):
+                continue
+            base = os.path.join(ROOT, *node.module.split("."))
+            src = next(
+                (p for p in (f"{base}.py", f"{base}/__init__.py") if os.path.exists(p)),
+                None,
+            )
+            where = f"{os.path.relpath(path, ROOT)}:{node.lineno}"
+            if src is None:
+                dangling.append(f"{where} {node.module}")
+                continue
+            defined = _top_level_names(_tree(src))
+            for a in node.names:
+                sub = os.path.join(base, a.name)
+                if a.name not in defined and not (
+                    os.path.exists(f"{sub}.py") or os.path.isdir(sub)
+                ):
+                    dangling.append(f"{where} {node.module}.{a.name}")
+    assert dangling == [], f"imports that no longer resolve: {dangling}"

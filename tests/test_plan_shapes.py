@@ -648,3 +648,22 @@ def _subtrees(plan: str, node: str) -> list[str]:
                 end += 1
             out.append("\n".join(lines[i + 1 : end]))
     return out
+
+
+def test_text_retrievers_broadcast_the_query_side(spark, sf_dir):
+    """Both text retrievers hint three broadcasts: the query-term
+    restriction of the corpus tokens, the qterms probe and the 1-row
+    corpus stats (the broadcast-query contract)."""
+    from pyspark.sql import functions as F
+
+    from datawarehouse_project_spark.operators.retrieval import (
+        LEXICAL_QUERIES,
+        lexical_topk,
+        tfidf_dot_topk,
+    )
+
+    docs = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    q = spark.createDataFrame(LEXICAL_QUERIES, "query_id bigint, qtext string")
+    for retriever in (lexical_topk, tfidf_dot_topk):
+        analyzed = retriever(docs, q)._jdf.queryExecution().analyzed().toString()
+        assert analyzed.count("ResolvedHint") == 3, retriever.__name__

@@ -146,7 +146,7 @@ def test_streaming_shingle_store_serves_tfidf(spark, sf_dir, tmp_path):
     run()
     streamed = sorted(
         (r.doc_a, r.doc_b, r.cosine)
-        for r in tfidf_cosine_pairs(store.counts(spark), bounded=True).collect()
+        for r in tfidf_cosine_pairs(store.counts(spark)).collect()
     )
     batch = sorted(
         (r.doc_a, r.doc_b, r.cosine)

@@ -11,7 +11,7 @@ from datawarehouse_project_spark.io import table
 from datawarehouse_project_spark.operators.retrieval import (
     LEXICAL_K,
     lexical_topk,
-    term_postings,
+    term_counts,
 )
 
 
@@ -70,7 +70,7 @@ def test_returned_docs_contain_a_query_term(spark, sf_dir):
     hits = {r.doc_id for r in rows}
     with_term = {
         r.doc_id
-        for r in term_postings(_docs(spark, sf_dir))
+        for r in term_counts(_docs(spark, sf_dir))
         .filter(F.col("w") == "dup")
         .select("doc_id")
         .collect()
@@ -124,25 +124,16 @@ def test_from_store_plan_touches_no_corpus_text(spark, sf_correct_dir):
 
 
 def test_postings_rollup_is_batch_additive(spark, sf_dir, tmp_path):
-    """Two-batch ingest == one-batch ingest == direct computation: tf is
-    additive, so the folded state answers identically however the corpus
-    arrived."""
+    """Two-batch ingest == direct computation: tf is additive, so the
+    folded state holds the same postings however the corpus arrived."""
     from datawarehouse_project_spark.operators.incremental import (
         IncrementalRollup,
-    )
-    from datawarehouse_project_spark.operators.retrieval import (
-        LEXICAL_K,
-        LEXICAL_QUERIES,
-        lexical_topk,
-        lexical_topk_from_postings,
-        term_counts,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
         F.col("text").isNotNull()
     )
-    q = spark.createDataFrame(LEXICAL_QUERIES, "query_id bigint, qtext string")
-    direct = sorted(map(tuple, lexical_topk(docs, q, k=LEXICAL_K).collect()))
+    direct = sorted(map(tuple, term_counts(docs).collect()))
 
     roll = IncrementalRollup(
         str(tmp_path / "postings"), keys=["doc_id", "w"], sum_cols=["tf"]
@@ -156,10 +147,8 @@ def test_postings_rollup_is_batch_additive(spark, sf_dir, tmp_path):
     counts = roll.read(spark).select(
         "doc_id", "w", F.col("sum_tf").cast("bigint").alias("tf")
     )
-    served = sorted(
-        map(tuple, lexical_topk_from_postings(counts, q, k=LEXICAL_K).collect())
-    )
-    assert served == direct
+    folded = sorted(map(tuple, counts.collect()))
+    assert folded == direct and folded
 
 
 def test_served_postings_rebuild_on_source_rewrite(spark, tmp_path):
@@ -591,58 +580,6 @@ def test_rrf_registered_query_covers_both_retrievers(spark, sf_dir):
         assert [r.rnk for r in rs] == list(range(1, len(rs) + 1))
         assert len(rs) <= LEXICAL_K
         assert rs == sorted(rs, key=lambda r: (-r.rrf_score, r.doc_id))
-
-
-def test_bounded_queries_knob_drops_hints_and_preserves_results(spark, sf_dir):
-    """The unbounded-workload escape hatch (the salted-guard knob
-    pattern): bounded_queries=False must change ONLY the plan — no
-    broadcast hints on the query-side joins (AQE picks the strategy for
-    a query set too large to ship to every executor), the 1-row stats
-    broadcast retained — with bit-identical results."""
-    from datawarehouse_project_spark.operators.retrieval import (
-        LEXICAL_K,
-        LEXICAL_QUERIES,
-        lexical_topk,
-    )
-
-    docs = _docs(spark, sf_dir)
-    q = spark.createDataFrame(LEXICAL_QUERIES, "query_id bigint, qtext string")
-    dflt = lexical_topk(docs, q, k=LEXICAL_K)
-    knob = lexical_topk(docs, q, k=LEXICAL_K, bounded_queries=False)
-    assert sorted(map(tuple, dflt.collect())) == sorted(
-        map(tuple, knob.collect())
-    )
-    # term-restrict + qterms probe + stats = 3 hints; knob keeps stats only
-    pa = dflt._jdf.queryExecution().analyzed().toString()
-    pb = knob._jdf.queryExecution().analyzed().toString()
-    assert pa.count("ResolvedHint") == 3
-    assert pb.count("ResolvedHint") == 1
-
-
-def test_tfidf_dot_bounded_queries_knob(spark, sf_dir):
-    """VERDICT r17 #5: the unbounded-workload escape hatch now covers
-    the dot leg too — bounded_queries=False drops the query-side
-    broadcast hints (term restrict + qterms probe; the 1-row stats
-    broadcast is retained) with bit-identical results, so batch-scoring
-    RRF against a query set too large to broadcast has a story on BOTH
-    retrievers."""
-    from datawarehouse_project_spark.operators.retrieval import (
-        LEXICAL_K,
-        LEXICAL_QUERIES,
-        tfidf_dot_topk,
-    )
-
-    docs = _docs(spark, sf_dir)
-    q = spark.createDataFrame(LEXICAL_QUERIES, "query_id bigint, qtext string")
-    dflt = tfidf_dot_topk(docs, q, k=LEXICAL_K)
-    knob = tfidf_dot_topk(docs, q, k=LEXICAL_K, bounded_queries=False)
-    assert sorted(map(tuple, dflt.collect())) == sorted(
-        map(tuple, knob.collect())
-    )
-    pa = dflt._jdf.queryExecution().analyzed().toString()
-    pb = knob._jdf.queryExecution().analyzed().toString()
-    assert pa.count("ResolvedHint") == 3
-    assert pb.count("ResolvedHint") == 1
 
 
 def test_rrf_from_store_equals_text_form(spark, sf_correct_dir):
