@@ -98,7 +98,7 @@ def _top_level_names(tree: ast.Module) -> set[str]:
             names.add(node.name)
         elif isinstance(node, (ast.Import, ast.ImportFrom)):
             names.update((a.asname or a.name).split(".")[0] for a in node.names)
-        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
             targets = node.targets if isinstance(node, ast.Assign) else [node.target]
             for t in targets:
                 names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
@@ -121,7 +121,6 @@ def test_script_and_entry_imports_resolve():
         for node in ast.walk(_tree(path)):
             if not (
                 isinstance(node, ast.ImportFrom)
-                and not node.level
                 and (node.module or "").split(".")[0] == PKG
             ):
                 continue
