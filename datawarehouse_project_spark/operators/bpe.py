@@ -1,5 +1,5 @@
 """BPE merge-rule training — the tokenizer-building step of a training
-pipeline, Spark-first.
+pipeline.
 
 Byte-pair encoding trains on the WORD-FREQUENCY table, not the raw
 corpus: one corpus-wide aggregation produces (word, count), and every
@@ -8,22 +8,17 @@ makes BPE tractable at 100 TB (the corpus pass is O(corpus) once; the
 K merge rounds are O(vocabulary) each, and a real vocabulary is
 10³–10⁷ rows no matter how big the corpus is).
 
-Per round, entirely in Catalyst expressions:
-
-* adjacent symbol pairs explode from each word's symbol array,
-  weighted by word count; a two-level aggregate finds the max-count
-  pair (deterministic tie-break: count DESC, then pair ASC — pinned,
-  because real BPE implementations differ exactly here);
-* the winning pair returns to the driver (ONE tiny row per round — the
-  same bounded-driver-action pattern as the IVF centroids and RFM
-  cuts) and re-enters the plan as literals;
-* the merge itself is a left-to-right greedy fold over each word's
-  symbol array via the ``aggregate`` higher-order function (state =
-  (rebuilt array, pending symbol); 'aaa' under merge (a,a) becomes
-  ['aa','a'] — the standard greedy semantics, pinned against a pure
-  Python reference);
-* the word table is ``localCheckpoint``'d per round (same star-rounds
-  lineage-truncation discipline as the connected-components loop).
+The trainer is one lazy plan: the word table feeds a single-group
+grouped map (``groupBy().applyInPandas``), and its Python worker runs
+plain sequential BPE over the whole vocabulary, which that one worker
+holds in memory. Per round it recounts the adjacent symbol pairs
+weighted by word count, takes the max-count pair (deterministic
+tie-break: count DESC, then pair ASC — pinned, because real BPE
+implementations differ exactly here) and merges it greedily left to
+right in every word ('aaa' under merge (a,a) becomes ['aa','a'] — the
+standard greedy semantics). The stage emits either the merge rules or
+each word's final segmentation, so building either row launches no
+Spark job and a rewritten corpus retrains on the next execution.
 
 No DuckDB oracle — the loop is genuinely iterative (the round-N input
 depends on round-N-1's argmax), which SQL cannot state; the gate is a
@@ -33,17 +28,19 @@ tests/test_bpe.py, plus symbol-conservation invariants.
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import words
-from ..io import release_checkpoint, spread, table
+from ..io import table
 from ..plans.registry import register
 from ..session import prepare
 
 #: Merge rounds for the registered exemplar — enough to produce
-#: multi-character subwords on the test corpora while keeping the
-#: round-trip fast; the API takes any K.
+#: multi-character subwords on the test corpora; the API takes any K.
 N_MERGES = 12
 
 #: End-of-word marker (the classic sentinel): distinguishes "t h e </w>"
@@ -61,150 +58,82 @@ def word_freq_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def _initial_symbols(word_col) -> F.Column:
-    """Characters + the end-of-word sentinel."""
-    return F.concat(
-        F.split(word_col, ""), F.array(F.lit(EOW))
-    )
+def _trainer(n_merges: int):
+    """Sequential BPE over a word table ``wf`` (word, n) as a function
+    ``wf -> (rules, segs)``: the rules [(left, right,
+    weighted_pair_count), ...] in training order, and each word's
+    symbols after the last rule. Stops early if no adjacent pair
+    remains. Built from closures so that a Python worker unpickles it
+    without importing this package."""
 
+    def merge(syms: list[str], left: str, right: str) -> list[str]:
+        """Greedy left-to-right merge of adjacent (left, right)."""
+        out, i = [], 0
+        while i < len(syms):
+            if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
+                out.append(left + right)
+                i += 2
+            else:
+                out.append(syms[i])
+                i += 1
+        return out
 
-def _merge_expr(left: str, right: str) -> F.Column:
-    """Greedy left-to-right merge of adjacent (left, right) in ``syms``
-    as a Catalyst fold: state is (rebuilt array, pending symbol)."""
-    merged = left + right
-    step = lambda acc, s: F.when(  # noqa: E731
-        acc["pend"].isNull(),
-        F.struct(acc["out"].alias("out"), s.alias("pend")),
-    ).when(
-        (acc["pend"] == F.lit(left)) & (s == F.lit(right)),
-        F.struct(
-            F.concat(acc["out"], F.array(F.lit(merged))).alias("out"),
-            F.lit(None).cast("string").alias("pend"),
-        ),
-    ).otherwise(
-        F.struct(
-            F.concat(acc["out"], F.array(acc["pend"])).alias("out"),
-            s.alias("pend"),
-        )
-    )
-    init = F.struct(
-        F.array().cast("array<string>").alias("out"),
-        F.lit(None).cast("string").alias("pend"),
-    )
-    finish = lambda acc: F.when(  # noqa: E731
-        acc["pend"].isNull(), acc["out"]
-    ).otherwise(F.concat(acc["out"], F.array(acc["pend"])))
-    return F.aggregate(F.col("syms"), init, step, finish)
-
-
-def select_disjoint_batch(
-    candidates: list[tuple[str, str, int]], want: int
-) -> list[tuple[str, str, int]]:
-    """Greedily keep up to ``want`` pairwise-independent pairs from the
-    (count DESC, pair ASC)-ordered candidate head. Independence means no
-    kept pair's LEFT, RIGHT, **or CONCATENATION** collides with another
-    kept pair's left/right/concatenation: if ('a','b') and ('ab','c')
-    were both kept when symbol 'ab' already exists in the vocab,
-    applying ('a','b') first would create NEW 'ab' occurrences that the
-    ('ab','c') fold would then merge — so its recorded count would no
-    longer be the exact pre-pass count (advisor finding, round 10)."""
-    used: set[str] = set()
-    batch: list[tuple[str, str, int]] = []
-    for left, right, c in candidates:
-        if left in used or right in used or (left + right) in used:
-            continue
-        used.update((left, right, left + right))
-        batch.append((left, right, c))
-        if len(batch) == want:
-            break
-    return batch
-
-
-def train_bpe_merges(
-    spark: SparkSession,
-    docs: DataFrame,
-    n_merges: int,
-    rules_per_pass: int = 1,
-    stats: dict | None = None,
-) -> list[tuple[str, str, int]]:
-    """Learn ``n_merges`` BPE merge rules; returns
-    [(left, right, weighted_pair_count), ...] in training order.
-    Stops early if no adjacent pair remains.
-
-    ``rules_per_pass=M`` batches the driver round-trips (the standard
-    batched-BPE trick, VERDICT r9 #6): each Spark pass counts pairs
-    ONCE, fetches the top candidates in (count DESC, pair ASC) order,
-    and greedily keeps up to M that are pairwise INDEPENDENT (no kept
-    pair's left, right, or concatenation collides with another kept
-    pair's — see :func:`select_disjoint_batch`). Independent merges
-    cannot change each other's occurrence counts, so every recorded
-    count is the exact pre-pass count and the kept rules apply in one
-    composed fold — K merges cost ~K/M driver round-trips instead of K.
-
-    Greedy-semantics caveat (documented, inherent to ALL batched BPE):
-    merging a pair creates NEW pairs involving the merged symbol (e.g.
-    (t,h)→'th' creates ('th',e)); sequential BPE may pick such a
-    created pair as its very next rule, while the batch — selected
-    before any merge of this pass applied — cannot. When that happens
-    the batched rule LIST diverges from M=1 (usually in order, at a
-    lower-count margin). M=1 reproduces the sequential form exactly;
-    the golden differential in tests/test_bpe.py pins both the M=1
-    equivalence and the batched form's invariants. Real 30k-vocab
-    tokenizers accept exactly this trade (they train with merge
-    batches); pick M by how much rule-order fidelity is worth per
-    driver round-trip."""
-    vocab = (
-        word_freq_table(docs)
-        .select(_initial_symbols(F.col("word")).alias("syms"), "n")
-        .localCheckpoint(eager=True)
-    )
-    rules: list[tuple[str, str, int]] = []
-    passes = 0
-    try:
-        while len(rules) < n_merges:
-            passes += 1
-            want = min(rules_per_pass, n_merges - len(rules))
-            pairs = vocab.select(
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("syms"), 1, F.size("syms") - 1),
-                        F.slice(F.col("syms"), 2, F.size("syms") - 1),
-                        lambda a, b: F.struct(
-                            a.alias("l"), b.alias("r")
-                        ),
-                    )
-                ).alias("p"),
-                "n",
-            ).filter(F.size("syms") >= 2)
-            counted = pairs.groupBy("p").agg(F.sum("n").alias("c"))
-            # Bounded driver action: one small sorted head per PASS
-            # (50×M rows ≈ a few KB), not one per rule.
-            top = (
-                counted.orderBy(F.desc("c"), F.col("p.l"), F.col("p.r"))
-                .limit(max(50 * want, 50))
-                .collect()
-            )
-            if not top:
+    def train(wf: pd.DataFrame):
+        segs = [list(w) + [EOW] for w in wf["word"]]
+        counts = [int(n) for n in wf["n"]]
+        rules = []
+        for _ in range(n_merges):
+            pairs = Counter()
+            for syms, n in zip(segs, counts):
+                for pair in zip(syms, syms[1:]):
+                    pairs[pair] += n
+            if not pairs:
                 break
-            batch = select_disjoint_batch(
-                [
-                    (row["p"]["l"], row["p"]["r"], int(row["c"]))
-                    for row in top
-                ],
-                want,
-            )
-            rules.extend(batch)
-            sel = vocab
-            for left, right, _ in batch:
-                sel = sel.select(_merge_expr(left, right).alias("syms"), "n")
-            nxt = sel.localCheckpoint(eager=True)
-            release_checkpoint(vocab)
-            vocab = nxt
-    finally:
-        release_checkpoint(vocab)
-    if stats is not None:
-        stats["passes"] = passes
-    return rules
+            (left, right), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+            rules.append((left, right, c))
+            segs = [merge(syms, left, right) for syms in segs]
+        return rules, segs
+
+    return train
+
+
+def train_bpe_merges(docs: DataFrame, n_merges: int) -> DataFrame:
+    """The ``n_merges`` learned merge rules as (rank, left, right,
+    merged, pair_count) — what a tokenizer ships as its merges.txt."""
+    train = _trainer(n_merges)
+
+    def rules(wf: pd.DataFrame) -> pd.DataFrame:
+        learned, _ = train(wf)
+        return pd.DataFrame(
+            {
+                "rank": range(1, len(learned) + 1),
+                "left": [left for left, _, _ in learned],
+                "right": [right for _, right, _ in learned],
+                "merged": [left + right for left, right, _ in learned],
+                "pair_count": [c for _, _, c in learned],
+            }
+        )
+
+    return word_freq_table(docs).groupBy().applyInPandas(
+        rules,
+        "rank int, left string, right string, merged string, pair_count long",
+    )
+
+
+def bpe_segment_words(docs: DataFrame, n_merges: int) -> DataFrame:
+    """Every DISTINCT word with its subwords after ``n_merges`` learned
+    merges: (word, subwords array). Segmentation costs O(vocabulary ×
+    K), never O(corpus); the corpus only ever joins against this table
+    by word."""
+    train = _trainer(n_merges)
+
+    def segments(wf: pd.DataFrame) -> pd.DataFrame:
+        _, segs = train(wf)
+        return pd.DataFrame({"word": wf["word"], "subwords": segs})
+
+    return word_freq_table(docs).groupBy().applyInPandas(
+        segments, "word string, subwords array<string>"
+    )
 
 
 @register("bpe_merge_rules")  # r12: promoted (rows-only gate). No oracle: the loop
@@ -212,33 +141,9 @@ def train_bpe_merges(
 # cannot state — golden-differential-gated against a pure-Python BPE in
 # tests/test_bpe.py instead
 def bpe_merge_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The learned merge table as a DataFrame: (rank, left, right,
-    merged, pair_count) — what a tokenizer ships as its merges.txt."""
+    """The learned merge table of the corpus."""
     prepare(spark)
-    docs = spread(spark, table(spark, sf_dir, "documents"))
-    rules = train_bpe_merges(spark, docs, N_MERGES)
-    return spark.createDataFrame(
-        [
-            (i + 1, left, right, left + right, c)
-            for i, (left, right, c) in enumerate(rules)
-        ],
-        "rank int, left string, right string, merged string, pair_count long",
-    )
-
-
-def bpe_segment_words(
-    spark: SparkSession, docs: DataFrame, rules: list[tuple[str, str, int]]
-) -> DataFrame:
-    """Apply learned merges to every DISTINCT word: (word, subwords
-    array). The scale asymmetry again — segmentation costs O(vocabulary
-    × K), never O(corpus); the corpus only ever joins against this
-    table by word."""
-    seg = word_freq_table(docs).select(
-        "word", _initial_symbols(F.col("word")).alias("syms")
-    )
-    for left, right, _ in rules:
-        seg = seg.select("word", _merge_expr(left, right).alias("syms"))
-    return seg.select("word", F.col("syms").alias("subwords"))
+    return train_bpe_merges(table(spark, sf_dir, "documents"), N_MERGES)
 
 
 @register("bpe_token_counts")  # r10 rotation: driver-facing as a rows-only
@@ -247,14 +152,13 @@ def bpe_segment_words(
 def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize the corpus with the learned BPE: per document, the
     subword-token count before vs after merging (the compression a
-    tokenizer buys). Plan: train on the word table, segment the
-    VOCABULARY once, then one explode + broadcast-ish equi-join of
-    corpus words against the segmentation table and a per-doc
-    re-aggregation — the corpus is never touched by the merge loop."""
+    tokenizer buys). Plan: segment the VOCABULARY once, then one explode
+    + equi-join of corpus words against the segmentation table and a
+    per-doc re-aggregation — the corpus is never touched by the
+    trainer."""
     prepare(spark)
-    docs = spread(spark, table(spark, sf_dir, "documents"))
-    rules = train_bpe_merges(spark, docs, N_MERGES)
-    seg = bpe_segment_words(spark, docs, rules).select(
+    docs = table(spark, sf_dir, "documents")
+    seg = bpe_segment_words(docs, N_MERGES).select(
         "word", F.size("subwords").alias("n_subwords")
     )
     doc_words = docs.select(

@@ -1,12 +1,14 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from datawarehouse_project_spark.io import TABLES  # noqa: E402
 from datawarehouse_project_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
@@ -50,6 +52,17 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_correct_dir():
     return SF_CORRECT
+
+
+@pytest.fixture()
+def sf_copy(sf_dir, tmp_path):
+    """A writable copy of the smoke tables: its session state is this
+    test's own."""
+    dst = tmp_path / "sf0.001"
+    dst.mkdir()
+    for t in TABLES:
+        shutil.copyfile(f"{sf_dir}/{t}.parquet", dst / f"{t}.parquet")
+    return str(dst)
 
 
 @pytest.fixture()

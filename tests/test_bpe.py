@@ -1,28 +1,30 @@
 """BPE merge training: golden differential against an independent
-pure-Python reference, greedy-merge semantics, and conservation
-invariants."""
+pure-Python reference, greedy-merge semantics, conservation invariants,
+and the one-stage trainer's kept plans over a rewritten corpus."""
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from datawarehouse_project_spark.catalog import all_queries
-from datawarehouse_project_spark.io import table
-from datawarehouse_project_spark.functions.text import words  # noqa: F401
+from datawarehouse_project_spark.functions.text import words
+from datawarehouse_project_spark.io import session_state, table
 from datawarehouse_project_spark.operators.bpe import (
     EOW,
     N_MERGES,
+    bpe_segment_words,
     train_bpe_merges,
 )
 
 # BPE has no DuckDB oracle (the trainer is iterative), so no oracle sweep
 # checks its values: the golden differentials below are its only value
-# gate. The ones that train over the test corpus run in the slow lane
-# (`pytest -m slow`); the pure-Python batch selection and the one-row
-# greedy-merge case run in the fast lane.
+# gate.
 
 
 def _py_bpe(word_counts: dict[str, int], n_merges: int):
@@ -76,19 +78,23 @@ def _word_counts(spark, sf_dir):
     }
 
 
-@pytest.mark.slow
-def test_bpe_matches_pure_python_reference(spark, sf_dir):
+def _rules(df):
+    """A rules frame as [(left, right, pair_count), ...] in rank order."""
+    return [(r.left, r.right, r.pair_count) for r in df.orderBy("rank").collect()]
+
+
+@pytest.mark.parametrize("k", [N_MERGES, 48])
+def test_bpe_matches_pure_python_reference(spark, sf_dir, k):
     docs = table(spark, sf_dir, "documents")
-    got = train_bpe_merges(spark, docs, N_MERGES)
-    want = _py_bpe(_word_counts(spark, sf_dir), N_MERGES)
-    assert got == want
+    got = _rules(train_bpe_merges(docs, k))
+    assert len(got) == k
+    assert got == _py_bpe(_word_counts(spark, sf_dir), k)
     # multi-character subwords actually emerged
     assert any(len(left) > 1 or len(right) > 1 for left, right, _ in got)
 
 
-@pytest.mark.slow
 def test_bpe_registered_table_shape(spark, sf_dir):
-    out = all_queries()["bpe_merge_rules"](spark, sf_dir).collect()
+    out = all_queries()["bpe_merge_rules"](spark, sf_dir).orderBy("rank").collect()
     assert len(out) == N_MERGES
     assert [r.rank for r in out] == list(range(1, N_MERGES + 1))
     for r in out:
@@ -111,29 +117,24 @@ def test_bpe_greedy_merge_on_repeats(spark):
     ['aa','aa',EOW] — the overlap case every BPE implementation must
     pin down."""
     df = spark.createDataFrame([(1, "aaaa")], "doc_id long, text string")
-    rules = train_bpe_merges(spark, df, 1)
-    assert rules[0][:2] == ("a", "a") and rules[0][2] == 3
-    rules2 = train_bpe_merges(spark, df, 2)
+    rules = _rules(train_bpe_merges(df, 1))
+    assert rules == [("a", "a", 3)]
+    assert bpe_segment_words(df, 1).collect()[0].subwords == ["aa", "aa", EOW]
+    rules2 = _rules(train_bpe_merges(df, 2))
     # round 2 ties at count 1: ('aa','</w>') vs ('aa','aa') — the ASC
     # pair tie-break picks '</w>' ('<' sorts below 'a' in UTF-8)
     assert rules2[1][:2] == ("aa", EOW)
 
 
-@pytest.mark.slow
 def test_bpe_tokenize_matches_reference_segmentation(spark, sf_dir):
     """Segmenting the vocabulary with the learned rules must match the
     pure-Python application of the same rules word-for-word, and the
     per-doc token counts must shrink vs the character baseline."""
-    from datawarehouse_project_spark.operators.bpe import (
-        bpe_segment_words,
-        train_bpe_merges,
-    )
-
     docs = table(spark, sf_dir, "documents")
-    rules = train_bpe_merges(spark, docs, N_MERGES)
+    rules = _rules(train_bpe_merges(docs, N_MERGES))
     got = {
         r.word: tuple(r.subwords)
-        for r in bpe_segment_words(spark, docs, rules).collect()
+        for r in bpe_segment_words(docs, N_MERGES).collect()
     }
 
     def apply_rules(word):
@@ -168,118 +169,54 @@ def test_bpe_tokenize_matches_reference_segmentation(spark, sf_dir):
         assert r.n_words <= r.n_bpe_tokens <= r.n_char_tokens
 
 
-def _py_bpe_batched(word_counts: dict[str, int], n_merges: int, m: int):
-    """Independent reference for the BATCHED trainer: per pass, rank all
-    pairs by (count DESC, pair ASC), greedily keep up to m pairwise
-    symbol-disjoint pairs, apply them (order within a pass is immaterial
-    for disjoint pairs), repeat."""
-    vocab = {tuple(list(w) + [EOW]): n for w, n in word_counts.items()}
-    rules = []
-    while len(rules) < n_merges:
-        want = min(m, n_merges - len(rules))
-        counts = Counter()
-        for syms, n in vocab.items():
-            for a, b in zip(syms, syms[1:]):
-                counts[(a, b)] += n
-        if not counts:
-            break
-        ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        used, batch = set(), []
-        for (left, right), c in ranked:
-            if left in used or right in used:
-                continue
-            used.update((left, right))
-            batch.append((left, right, c))
-            if len(batch) == want:
-                break
-        rules.extend(batch)
-        for left, right, _ in batch:
-            merged = left + right
-            new_vocab = {}
-            for syms, n in vocab.items():
-                out, pend = [], None
-                for s in syms:
-                    if pend is None:
-                        pend = s
-                    elif pend == left and s == right:
-                        out.append(merged)
-                        pend = None
-                    else:
-                        out.append(pend)
-                        pend = s
-                if pend is not None:
-                    out.append(pend)
-                key = tuple(out)
-                new_vocab[key] = new_vocab.get(key, 0) + n
-            vocab = new_vocab
-    return rules
-
-
-@pytest.mark.slow
-def test_bpe_batched_matches_batched_reference(spark, sf_dir):
-    """The rules_per_pass=M trainer must equal the independent pure-Python
-    implementation of the same batched selection, bit-for-bit — the same
-    golden-differential gate the sequential form has."""
-    docs = table(spark, sf_dir, "documents")
-    wc = _word_counts(spark, sf_dir)
-    for m in (2, 4):
-        got = train_bpe_merges(spark, docs, N_MERGES, rules_per_pass=m)
-        want = _py_bpe_batched(wc, N_MERGES, m)
-        assert got == want, m
-
-
-@pytest.mark.slow
-def test_bpe_batched_m1_is_sequential(spark, sf_dir):
-    """rules_per_pass=1 IS the sequential trainer (the default path the
-    registered queries use): identical to the textbook reference."""
-    docs = table(spark, sf_dir, "documents")
-    got = train_bpe_merges(spark, docs, N_MERGES, rules_per_pass=1)
-    assert got == _py_bpe(_word_counts(spark, sf_dir), N_MERGES)
-
-
-@pytest.mark.slow
-def test_bpe_batched_k48_in_quarter_rounds(spark, sf_dir):
-    """The VERDICT r9 #6 acceptance: K=48 rules in <= K/4 Spark passes
-    with rules_per_pass=4, valid counts, no duplicate merged symbol."""
-    docs = table(spark, sf_dir, "documents")
-    stats: dict = {}
-    rules = train_bpe_merges(
-        spark, docs, 48, rules_per_pass=4, stats=stats
+def _rewrite_documents(sf: str, texts: list[str]) -> set[int]:
+    """Replace the corpus behind ``sf`` with ``texts`` (same schema);
+    returns the new corpus' doc ids."""
+    path = f"{sf}/documents.parquet"
+    docs = pq.read_table(path).slice(0, len(texts))
+    docs = docs.set_column(
+        docs.schema.get_field_index("text"), "text", pa.array(texts, pa.string())
     )
-    assert len(rules) == 48
-    assert stats["passes"] <= 12, stats
-    assert len({left + right for left, right, _ in rules}) == 48
-    assert all(c > 0 for _, _, c in rules)
+    pq.write_table(docs, f"{path}.tmp")
+    os.replace(f"{path}.tmp", path)
+    return set(docs.column("doc_id").to_pylist())
 
 
-def test_bpe_batch_selection_rejects_concatenation_collisions():
-    """Advisor r10: a kept pair's MERGED symbol must also be treated as
-    occupied. ('a','b') admitted => ('ab','c') and ('c','ab') must be
-    rejected even though their operand symbols are disjoint from
-    {'a','b'}, because applying ('a','b') first creates new 'ab'
-    occurrences the later fold would merge (counts would no longer be
-    exact pre-pass counts). Plain collisions still rejected; independent
-    pairs still admitted; `want` still caps the batch."""
-    from datawarehouse_project_spark.operators.bpe import select_disjoint_batch
+def test_bpe_rows_are_kept_plans_that_retrain_on_a_rewritten_corpus(spark, sf_copy):
+    """Both rows build with no Spark job and are kept as prepared plans;
+    a rewritten corpus retrains on the next request (the rules are those
+    of the new corpus, not of the first build), and an empty corpus
+    gives no rules and no token counts."""
+    names = ["bpe_merge_rules", "bpe_token_counts"]
+    builders = all_queries()
+    for name in names:
+        builders[name](spark, sf_copy)
+    sc = spark.sparkContext
+    sc.setJobGroup("bpe-build", "second builds")
+    try:
+        rules, counts = (builders[name](spark, sf_copy) for name in names)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup("bpe-build") == []
+    assert set(names) <= {
+        e["name"]
+        for e in session_state(spark).inventory()
+        if e["kind"] == "plan" and e["sf_dir"] == sf_copy
+    }
+    before = _rules(rules)
+    assert before == _py_bpe(_word_counts(spark, sf_copy), N_MERGES)
+    assert len(counts.collect()) > 0
 
-    cands = [
-        ("a", "b", 100),   # kept
-        ("ab", "c", 90),   # rejected: left == 'a'+'b' of kept pair
-        ("c", "ab", 85),   # rejected: right == 'a'+'b' of kept pair
-        ("b", "d", 80),    # rejected: operand 'b' used
-        ("x", "y", 70),    # kept (independent)
-        ("w", "xy", 60),   # rejected: right == 'x'+'y'
-        ("p", "q", 50),    # kept
-        ("r", "s", 40),    # would be kept, but want=3 caps first
-    ]
-    assert select_disjoint_batch(cands, 3) == [
-        ("a", "b", 100),
-        ("x", "y", 70),
-        ("p", "q", 50),
-    ]
-    # The concatenation itself occupies: a later pair whose operand IS a
-    # kept pair's concatenation string from either side is rejected.
-    assert select_disjoint_batch([("a", "b", 10), ("ab", "ab", 9)], 5) == [
-        ("a", "b", 10)
-    ]
-    assert select_disjoint_batch([], 4) == []
+    doc_ids = _rewrite_documents(
+        sf_copy, ["lower lowest newer newest", "wider wide low"] * 3
+    )
+    after = _rules(builders["bpe_merge_rules"](spark, sf_copy))
+    assert after == _py_bpe(_word_counts(spark, sf_copy), N_MERGES)
+    assert after != before
+    counts = builders["bpe_token_counts"](spark, sf_copy).collect()
+    assert {r.doc_id for r in counts} == doc_ids
+    assert sorted(r.n_words for r in counts) == [3, 3, 3, 4, 4, 4]
+
+    _rewrite_documents(sf_copy, [])
+    assert builders["bpe_merge_rules"](spark, sf_copy).collect() == []
+    assert builders["bpe_token_counts"](spark, sf_copy).collect() == []

@@ -11,10 +11,9 @@ import sys
 import threading
 
 import pyarrow.parquet as pq
-import pytest
 
 from datawarehouse_project_spark.catalog import all_oracle_sql, all_queries
-from datawarehouse_project_spark.io import TABLES, pin, refresh_table, session_state, table
+from datawarehouse_project_spark.io import pin, refresh_table, session_state, table
 from tests.oracle_check import compare
 
 #: The benchmark's query mix: the star-fact OLAP rows and one operator
@@ -29,17 +28,6 @@ QUERY_MIX = [
     "text_stats_by_lang",
     "events_funnel_conversion",
 ]
-
-
-@pytest.fixture()
-def sf_copy(sf_dir, tmp_path):
-    """A writable copy of the smoke tables: its session state is this
-    test's own."""
-    dst = tmp_path / "sf0.001"
-    dst.mkdir()
-    for t in TABLES:
-        shutil.copyfile(f"{sf_dir}/{t}.parquet", dst / f"{t}.parquet")
-    return str(dst)
 
 
 def analysis_of(spark, df) -> int:

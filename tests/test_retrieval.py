@@ -124,8 +124,10 @@ def test_from_store_plan_touches_no_corpus_text(spark, sf_correct_dir):
 
 
 def test_postings_rollup_is_batch_additive(spark, sf_dir, tmp_path):
-    """Two-batch ingest == direct computation: tf is additive, so the
-    folded state holds the same postings however the corpus arrived."""
+    """tf is additive across batches: the even documents arrive in the
+    first batch and again inside the whole corpus in the second, so
+    each of their postings folds to twice its direct tf while the odd
+    documents' postings fold to theirs."""
     from datawarehouse_project_spark.operators.incremental import (
         IncrementalRollup,
     )
@@ -134,6 +136,9 @@ def test_postings_rollup_is_batch_additive(spark, sf_dir, tmp_path):
         F.col("text").isNotNull()
     )
     direct = sorted(map(tuple, term_counts(docs).collect()))
+    want = sorted((d, w, tf * 2 if d % 2 == 0 else tf) for d, w, tf in direct)
+    assert any(d % 2 == 0 for d, _, _ in direct)  # keys summed across batches
+    assert any(d % 2 == 1 for d, _, _ in direct)
 
     roll = IncrementalRollup(
         str(tmp_path / "postings"), keys=["doc_id", "w"], sum_cols=["tf"]
@@ -141,14 +146,12 @@ def test_postings_rollup_is_batch_additive(spark, sf_dir, tmp_path):
     roll.apply_batch(
         spark, term_counts(docs.filter(F.col("doc_id") % 2 == 0)), 0, "t"
     )
-    roll.apply_batch(
-        spark, term_counts(docs.filter(F.col("doc_id") % 2 == 1)), 1, "t"
-    )
+    roll.apply_batch(spark, term_counts(docs), 1, "t")
     counts = roll.read(spark).select(
         "doc_id", "w", F.col("sum_tf").cast("bigint").alias("tf")
     )
     folded = sorted(map(tuple, counts.collect()))
-    assert folded == direct and folded
+    assert folded == want
 
 
 def test_served_postings_rebuild_on_source_rewrite(spark, tmp_path):
