@@ -1,27 +1,21 @@
-"""Multimodal columns: opaque binary payloads + typed metadata.
+"""Multimodal audio: a pure-python WAV/PCM codec over one Arrow stage.
 
-Design (the 100 TB pattern): media lives as a ``binary`` column with typed
-metadata beside it; decode / feature-extraction / resize / frame-sampling
-run as Arrow-batched ``mapInPandas`` stages so each executor processes
-columnar batches without JVM<->Python per-row overhead. Partitioning is by
-``media_id`` (uniform), and decoded features are fixed-width arrays so
-downstream similarity operators apply unchanged.
+Media lives as a ``binary`` payload; the codec (RIFF container, 8/16-bit
+PCM, no external libraries) turns it into integer-exact energy features.
+Foreign formats (mp3/ogg/flac) fall back to a deterministic stub row, and
+a decode that raises becomes a stub row too, never a task failure: that
+is the quarantine contract.
 
-The actual codec step is STUBBED (image/audio libraries are not in this
-container): ``stub_decoder`` produces deterministic fake dimensions/features
-derived from the payload bytes, and a real decoder drops in via the
-``decoder=`` parameter without touching the Spark plumbing — the schema,
-batch iteration, and partitioning here are real and tested.
-
-``multimodal_binary_features`` registers the expression-only subset (byte
-length, content hash, deterministic dims) with a DuckDB oracle, treating
-document text bytes as the stand-in payload.
+The registered row ``multimodal_audio_features`` runs as ONE ``mapInPandas``
+that synthesizes each document's WAV and decodes it in the same batch.
+The codec and the stage are built from closures (as
+``operators/bpe.py::_trainer`` is), so cloudpickle ships them by value
+and a Python worker needs no import of this package.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 
@@ -29,513 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.text import DUCK_H
 from ..io import table
 from ..plans.registry import register
 from ..session import prepare
-
-#: Canonical multimodal table schema: payload is opaque; kind selects the
-#: decoder; meta carries source-specific attributes without schema churn.
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("n_bytes", T.IntegerType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-        T.StructField("feature", T.ArrayType(T.FloatType()), True),
-    ]
-)
-
-FEATURE_DIM = 16
-_KINDS = {"image", "audio", "video"}
-
-
-def stub_decoder(payload: bytes, kind: str) -> dict:
-    """Deterministic fake decode: dimensions and a FEATURE_DIM-float feature
-    vector derived from the payload's md5. A real decoder (PIL/ffmpeg/
-    torchaudio) replaces this function only — same signature, same schema.
-    """
-    if kind not in _KINDS:
-        raise NotImplementedError(f"no decoder for kind={kind!r}")
-    h = int(hashlib.md5(payload).hexdigest()[:15], 16)
-    feature = [
-        float(int(hashlib.md5(payload + bytes([i])).hexdigest()[:8], 16) % 1000)
-        / 1000.0
-        for i in range(FEATURE_DIM)
-    ]
-    return {
-        "n_bytes": len(payload),
-        "width": h % 1920,
-        "height": h % 1080,
-        "n_frames": 1 if kind == "image" else len(payload) % 240,
-        "feature": feature,
-    }
-
-
-def pil_decoder(payload: bytes, kind: str) -> dict:
-    """Real image decode via PIL (optional dependency — not in this
-    container's baseline, so import lives inside the call): dimensions and
-    frame count from the codec, feature = FEATURE_DIM-bin normalized
-    grayscale histogram. Non-image kinds fall through to the stub (PIL is
-    an image library). Same signature and schema as ``stub_decoder`` —
-    the drop-in contract the module docstring promises, golden-tested
-    when PIL is importable (tests/test_multimodal.py)."""
-    if kind != "image":
-        return stub_decoder(payload, kind)
-    import io
-
-    from PIL import Image
-
-    with Image.open(io.BytesIO(payload)) as im:
-        n_frames = int(getattr(im, "n_frames", 1))
-        gray = im.convert("L")
-        w, h = gray.size
-        hist = gray.histogram()  # 256 bins
-    step = 256 // FEATURE_DIM
-    total = float(w * h) or 1.0
-    feature = [
-        float(sum(hist[i * step : (i + 1) * step])) / total
-        for i in range(FEATURE_DIM)
-    ]
-    return {
-        "n_bytes": len(payload),
-        "width": w,
-        "height": h,
-        "n_frames": n_frames,
-        "feature": feature,
-    }
-
-
-def _parse_netpbm(data: bytes) -> tuple[int, int, list[int]] | None:
-    """Binary netpbm header+raster parse (P5 grayscale / P6 RGB, maxval
-    <= 255). Returns (width, height, gray_values) or None on foreign
-    magic. Comments (#...) and arbitrary whitespace in the header are
-    handled per the spec; RGB converts to luma with PIL's ITU-R 601-2
-    integer formula so either decoder yields the same histogram."""
-    magic = data[:2]
-    if magic not in (b"P5", b"P6"):
-        return None
-    tokens: list[int] = []
-    i = 2
-    while len(tokens) < 3 and i < len(data):
-        c = data[i : i + 1]
-        if c in b" \t\r\n":
-            i += 1
-        elif c == b"#":
-            while i < len(data) and data[i : i + 1] != b"\n":
-                i += 1
-        else:
-            j = i
-            while j < len(data) and data[j : j + 1] not in b" \t\r\n#":
-                j += 1
-            tokens.append(int(data[i:j]))
-            i = j
-    if len(tokens) < 3:
-        return None
-    i += 1  # exactly one whitespace byte separates maxval from the raster
-    w, h, maxval = tokens
-    if w <= 0 or h <= 0 or not 0 < maxval <= 255:
-        return None
-    channels = 3 if magic == b"P6" else 1
-    raster = data[i : i + w * h * channels]
-    if len(raster) < w * h * channels:
-        return None
-    if channels == 1:
-        gray = [g * 255 // maxval for g in raster]
-    else:
-        gray = [
-            (
-                raster[k] * 299 + raster[k + 1] * 587 + raster[k + 2] * 114
-            ) // 1000 * 255 // maxval
-            for k in range(0, len(raster), 3)
-        ]
-    return w, h, gray
-
-
-def _parse_bmp(data: bytes) -> tuple[int, int, list[int]] | None:
-    """Uncompressed 24-bit BMP (BITMAPINFOHEADER) parse. Returns
-    (width, height, gray_values) or None for foreign magic/unsupported
-    variants. Rows are bottom-up and padded to 4 bytes; pixels are BGR."""
-    import struct
-
-    if data[:2] != b"BM" or len(data) < 54:
-        return None
-    pixel_off = struct.unpack_from("<I", data, 10)[0]
-    w, h_raw = struct.unpack_from("<ii", data, 18)
-    bpp = struct.unpack_from("<H", data, 28)[0]
-    compression = struct.unpack_from("<I", data, 30)[0]
-    if bpp != 24 or compression != 0 or w <= 0 or h_raw == 0:
-        return None
-    h = abs(h_raw)
-    row_bytes = (w * 3 + 3) & ~3
-    if len(data) < pixel_off + row_bytes * h:
-        return None
-    gray = []
-    for r in range(h):
-        base = pixel_off + r * row_bytes
-        for c in range(w):
-            b, g, rr = data[base + 3 * c : base + 3 * c + 3]
-            gray.append((rr * 299 + g * 587 + b * 114) // 1000)
-    return w, h, gray
-
-
-def _parse_png(data: bytes) -> tuple[int, int, list[int]] | None:
-    """Pure-python PNG decode (stdlib ``zlib`` only — VERDICT r9 #5): the
-    first COMPRESSED image format that works without PIL. Supported
-    subset: 8-bit depth, color types 0 (grayscale), 2 (truecolor RGB) and
-    6 (RGBA — alpha ignored for luma), non-interlaced. Concatenates IDAT
-    chunks, inflates, applies the five scanline filters (None/Sub/Up/
-    Average/Paeth) per the spec, and converts to the same ITU-R 601-2
-    integer luma as the netpbm/BMP paths so every decoder yields one
-    histogram definition. Returns None on foreign magic or an unsupported
-    variant (→ stub fallback, never a crash)."""
-    import struct
-    import zlib
-
-    if data[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
-    pos = 8
-    w = h = depth = ctype = None
-    idat = bytearray()
-    while pos + 8 <= len(data):
-        ln, typ = struct.unpack_from(">I4s", data, pos)
-        chunk = data[pos + 8 : pos + 8 + ln]
-        if len(chunk) < ln:
-            return None
-        if typ == b"IHDR":
-            if ln != 13:
-                return None
-            w, h, depth, ctype, comp, filt, interlace = struct.unpack(
-                ">IIBBBBB", chunk
-            )
-            if comp != 0 or filt != 0 or interlace != 0:
-                return None
-        elif typ == b"IDAT":
-            idat += chunk
-        elif typ == b"IEND":
-            break
-        pos += 12 + ln  # length + type + payload + crc
-    if not w or not h or depth != 8 or ctype not in (0, 2, 6):
-        return None
-    nch = {0: 1, 2: 3, 6: 4}[ctype]
-    try:
-        raw = zlib.decompress(bytes(idat))
-    except zlib.error:
-        return None
-    stride = w * nch
-    if len(raw) < (stride + 1) * h:
-        return None
-    prev = bytearray(stride)
-    gray: list[int] = []
-    rpos = 0
-    for _ in range(h):
-        ftype = raw[rpos]
-        rpos += 1
-        line = bytearray(raw[rpos : rpos + stride])
-        rpos += stride
-        if ftype == 1:  # Sub
-            for i in range(nch, stride):
-                line[i] = (line[i] + line[i - nch]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                a = line[i - nch] if i >= nch else 0
-                line[i] = (line[i] + ((a + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                a = line[i - nch] if i >= nch else 0
-                b = prev[i]
-                c = prev[i - nch] if i >= nch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[i] = (line[i] + pr) & 0xFF
-        elif ftype != 0:
-            return None
-        prev = line
-        if nch == 1:
-            gray.extend(line)
-        else:
-            for k in range(0, stride, nch):
-                gray.append(
-                    (line[k] * 299 + line[k + 1] * 587 + line[k + 2] * 114)
-                    // 1000
-                )
-    return w, h, gray
-
-
-def netpbm_decoder(payload: bytes, kind: str) -> dict:
-    """Zero-dependency REAL image codec: binary netpbm (P5/P6),
-    uncompressed 24-bit BMP, and 8-bit non-interlaced PNG (stdlib zlib
-    inflate + scanline unfilter), parsed byte-for-byte in pure Python — so
-    the real-codec path, including a compressed format, executes even in
-    environments without PIL (this container). Routing is by magic bytes.
-    Same signature/schema/feature definition as
-    ``pil_decoder`` (FEATURE_DIM-bin normalized grayscale histogram);
-    non-image kinds and foreign magic fall through to the stub, matching
-    the drop-in contract."""
-    if kind != "image":
-        return stub_decoder(payload, kind)
-    data = bytes(payload)
-    parsed = _parse_netpbm(data) or _parse_bmp(data) or _parse_png(data)
-    if parsed is None:
-        return stub_decoder(payload, kind)
-    w, h, gray = parsed
-    hist = [0] * 256
-    for g in gray:
-        hist[g] += 1
-    step = 256 // FEATURE_DIM
-    total = float(w * h) or 1.0
-    feature = [
-        float(sum(hist[i * step : (i + 1) * step])) / total
-        for i in range(FEATURE_DIM)
-    ]
-    return {
-        "n_bytes": len(data),
-        "width": w,
-        "height": h,
-        "n_frames": 1,
-        "feature": feature,
-    }
-
-
-def default_decoder() -> Callable[[bytes, str], dict]:
-    """The best decoder this environment supports: PIL when importable
-    (every mainstream format), else the pure-python netpbm/BMP codec
-    (which itself stubs foreign formats). Tests run against whichever is
-    active, so the same suite passes with either."""
-    try:
-        import PIL  # noqa: F401
-
-        return pil_decoder
-    except ImportError:
-        return netpbm_decoder
-
-
-def decode_media(
-    media: DataFrame,
-    decoder: Callable[[bytes, str], dict] = stub_decoder,
-) -> DataFrame:
-    """Arrow-batched decode: mapInPandas over columnar batches — the hot
-    path never crosses JVM<->Python per row. Decode failures surface as
-    NULL-featured rows rather than killing the task (quarantine pattern,
-    like the CSV ingest)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                row = {"media_id": media_id, "kind": kind}
-                try:
-                    row.update(decoder(bytes(payload), kind))
-                except Exception:
-                    row.update(
-                        n_bytes=None, width=None, height=None, n_frames=None,
-                        feature=None,
-                    )
-                out.append(row)
-            yield pd.DataFrame(out, columns=[f.name for f in DECODED_SCHEMA])
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        run, schema=DECODED_SCHEMA
-    )
-
-
-def netpbm_resampler(
-    payload: bytes, kind: str, new_w: int, new_h: int
-) -> bytes | None:
-    """REAL pixel resample for every format the pure-python codec
-    decodes (netpbm/BMP/PNG): parse to grayscale, nearest-neighbor
-    sample, emit binary P5 — so the resized output is itself decodable
-    by the same codec (decode → resize → re-decode closes). Returns
-    None for undecodable payloads or non-image kinds; the caller falls
-    back to the digest stand-in, keeping the plumbing contract."""
-    if kind != "image":
-        return None
-    data = bytes(payload)
-    parsed = _parse_netpbm(data) or _parse_bmp(data) or _parse_png(data)
-    if parsed is None:
-        return None
-    w, h, gray = parsed
-    out = bytearray()
-    for y in range(new_h):
-        sy = min(h - 1, (y * h) // new_h)
-        row_base = sy * w
-        for x in range(new_w):
-            out.append(gray[row_base + min(w - 1, (x * w) // new_w)])
-    return b"P5\n%d %d\n255\n" % (new_w, new_h) + bytes(out)
-
-
-def resize_media(
-    media: DataFrame,
-    target_width: int,
-    target_height: int,
-    decoder: Callable[[bytes, str], dict] = stub_decoder,
-    resampler: Callable[[bytes, str, int, int], bytes | None] | None = None,
-) -> DataFrame:
-    """Resize plumbing: decode -> scale metadata -> re-encoded payload.
-    With ``resampler`` (e.g. :func:`netpbm_resampler`) the output payload
-    carries REAL resampled pixels for decodable formats; without it — or
-    for payloads the resampler declines — the payload is a deterministic
-    digest stand-in. Aspect-ratio math, schema, and Arrow batching are
-    identical on both paths."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                try:
-                    d = decoder(bytes(payload), kind)
-                    scale = min(
-                        target_width / max(d["width"], 1),
-                        target_height / max(d["height"], 1),
-                    )
-                    new_w = max(1, int(d["width"] * scale))
-                    new_h = max(1, int(d["height"] * scale))
-                    real = (
-                        resampler(bytes(payload), kind, new_w, new_h)
-                        if resampler is not None
-                        else None
-                    )
-                    body = (
-                        real
-                        if real is not None
-                        else hashlib.md5(
-                            bytes(payload) + f"{new_w}x{new_h}".encode()
-                        ).digest()
-                    )
-                    out.append(
-                        {"media_id": media_id, "kind": kind, "width": new_w,
-                         "height": new_h, "payload": body}
-                    )
-                except Exception:
-                    out.append(
-                        {"media_id": media_id, "kind": kind, "width": None,
-                         "height": None, "payload": None}
-                    )
-            yield pd.DataFrame(
-                out, columns=["media_id", "kind", "width", "height", "payload"]
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    return media.select("media_id", "kind", "payload").mapInPandas(run, schema)
-
-
-def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling plumbing: one output row per sampled frame index.
-    Frame *extraction* is the decoder's job (stubbed); the fan-out schema
-    and deterministic sampling grid are real."""
-    decoded = decode_media(media)
-    return decoded.select(
-        "media_id",
-        "kind",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n))
-        ).alias("frame_index"),
-    )
-
-
-# --------------------------------------------------------------------------
-@register(
-    "multimodal_binary_features",
-    # r10 rotation: driver-green r≤9; multimodal_audio_features takes the
-    # family's window slot this round.
-    driver_facing=False,
-    oracle=f"""
-WITH media AS (
-    -- md5 over the VARCHAR: this DuckDB build lacks md5(BLOB), and the
-    -- payload bytes ARE the utf-8 text, so the digests are identical.
-    SELECT doc_id AS media_id, encode(text) AS payload, text FROM documents
-)
-SELECT media_id,
-       octet_length(payload) AS n_bytes,
-       md5(text) AS content_md5,
-       CAST({DUCK_H.format(x="text")} % 1920 AS INT) AS width,
-       CAST({DUCK_H.format(x="text")} % 1080 AS INT) AS height,
-       CAST(octet_length(payload) % 240 AS INT) AS n_frames
-FROM media
-""",
-)
-def multimodal_binary_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expression-only multimodal metadata over binary payloads (document
-    text bytes as the stand-in): byte length, content hash, deterministic
-    decode dims — this is the JVM-side part of the decode pipeline; the
-    Python-side decoder is ``decode_media`` (rows-only checked)."""
-    prepare(spark)
-    docs = table(spark, sf_dir, "documents")
-    payload = F.encode("text", "UTF-8")
-    h = F.conv(F.substring(F.md5(payload), 1, 15), 16, 10).cast("bigint")
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.octet_length(payload).alias("n_bytes"),
-        F.md5(payload).alias("content_md5"),
-        (h % 1920).cast("int").alias("width"),
-        (h % 1080).cast("int").alias("height"),
-        (F.octet_length(payload) % 240).cast("int").alias("n_frames"),
-    )
-
-
-# --------------------------------------------------------------------------
-@register("multimodal_decode_stub", driver_facing=False)  # no oracle: Python decode path,
-# rows-only check — the decoder output is pinned by tests instead.
-def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end mapInPandas decode over synthetic media built from
-    document bytes; returns decoded metadata + feature checksum."""
-    prepare(spark)
-    docs = table(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.when(F.col("doc_id") % 3 == 0, "image")
-        .when(F.col("doc_id") % 3 == 1, "audio")
-        .otherwise("video")
-        .alias("kind"),
-        F.encode("text", "UTF-8").alias("payload"),
-        F.create_map(F.lit("source"), F.col("source")).alias("meta"),
-    )
-    decoded = decode_media(media)
-    return decoded.select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        "width",
-        "height",
-        "n_frames",
-        F.aggregate(
-            F.col("feature"), F.lit(0.0), lambda acc, x: acc + x.cast("double")
-        ).alias("feature_sum"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Audio: a REAL pure-python WAV/PCM codec (RIFF container, 8/16-bit PCM),
-# the audio analog of the netpbm/BMP image path — no external libraries,
-# foreign formats (mp3/ogg/flac) fall back to the deterministic stub so
-# the pipeline knows their bytes without pretending to decode them.
 
 AUDIO_DECODED_SCHEMA = T.StructType(
     [
@@ -555,270 +45,162 @@ AUDIO_DECODED_SCHEMA = T.StructType(
 )
 
 
-def _parse_wav(data: bytes) -> dict | None:
-    """Minimal RIFF/WAVE reader: PCM format code 1, 8- or 16-bit.
-    Returns None on anything that is not a well-formed PCM WAV (the
-    caller falls back to the stub) — never raises on truncation."""
+def _wav_codec():
+    """The codec as ``(synth_wav, parse_wav, wav_decoder)``, built from
+    closures so that a Python worker unpickles it without importing this
+    package."""
+    import hashlib
     import struct as st
 
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        return None
-    pos, fmt, raw = 12, None, None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (csize,) = st.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + csize]
-        if len(body) < csize:
-            return None  # truncated chunk
-        if cid == b"fmt " and csize >= 16:
-            audio_format, n_ch, rate = st.unpack("<HHI", body[:8])
-            bits = st.unpack("<H", body[14:16])[0]
-            if audio_format != 1 or n_ch < 1 or bits not in (8, 16):
-                return None  # compressed / exotic PCM: not ours
-            fmt = (n_ch, rate, bits)
-        elif cid == b"data":
-            raw = body
-        pos += 8 + csize + (csize & 1)  # chunks are word-aligned
-    if fmt is None or raw is None:
-        return None
-    n_ch, rate, bits = fmt
-    if bits == 16:
-        n = len(raw) // 2
-        samples = list(st.unpack(f"<{n}h", raw[: 2 * n]))
-    else:  # 8-bit WAV is UNSIGNED, centered at 128
-        samples = [b - 128 for b in raw]
-    frames = len(samples) // n_ch
-    samples = samples[: frames * n_ch]
-    return {
-        "n_channels": n_ch,
-        "sample_rate": rate,
-        "bits": bits,
-        "samples": samples,
-        "n_samples": frames,
-    }
+    def synth_wav(
+        samples: list[int], sample_rate: int = 8000, n_channels: int = 1
+    ) -> bytes:
+        """Deterministic 16-bit PCM WAV writer (the parser's inverse)."""
+        raw = st.pack(f"<{len(samples)}h", *samples)
+        byte_rate = sample_rate * n_channels * 2
+        fmt = st.pack("<HHIIHH", 1, n_channels, sample_rate, byte_rate,
+                      n_channels * 2, 16)
+        body = b"WAVE" + b"fmt " + st.pack("<I", len(fmt)) + fmt
+        body += b"data" + st.pack("<I", len(raw)) + raw
+        return b"RIFF" + st.pack("<I", len(body)) + body
 
+    def parse_wav(data: bytes) -> dict | None:
+        """Minimal RIFF/WAVE reader: PCM format code 1, 8- or 16-bit.
+        Returns None on anything that is not a well-formed PCM WAV (the
+        caller falls back to the stub) — never raises on truncation."""
+        if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
+            return None
+        pos, fmt, raw = 12, None, None
+        while pos + 8 <= len(data):
+            cid = data[pos : pos + 4]
+            (csize,) = st.unpack("<I", data[pos + 4 : pos + 8])
+            body = data[pos + 8 : pos + 8 + csize]
+            if len(body) < csize:
+                return None  # truncated chunk
+            if cid == b"fmt " and csize >= 16:
+                audio_format, n_ch, rate = st.unpack("<HHI", body[:8])
+                bits = st.unpack("<H", body[14:16])[0]
+                if audio_format != 1 or n_ch < 1 or bits not in (8, 16):
+                    return None  # compressed / exotic PCM: not ours
+                fmt = (n_ch, rate, bits)
+            elif cid == b"data":
+                raw = body
+            pos += 8 + csize + (csize & 1)  # chunks are word-aligned
+        if fmt is None or raw is None:
+            return None
+        n_ch, rate, bits = fmt
+        if bits == 16:
+            n = len(raw) // 2
+            samples = list(st.unpack(f"<{n}h", raw[: 2 * n]))
+        else:  # 8-bit WAV is UNSIGNED, centered at 128
+            samples = [b - 128 for b in raw]
+        frames = len(samples) // n_ch
+        samples = samples[: frames * n_ch]
+        return {
+            "n_channels": n_ch,
+            "sample_rate": rate,
+            "bits": bits,
+            "samples": samples,
+            "n_samples": frames,
+        }
 
-def wav_decoder(payload: bytes, kind: str) -> dict:
-    """Audio feature extraction: integer-exact energy (sum of squares in
-    int64 — |s| <= 32768 so even hour-long audio stays far inside range),
-    peak, RMS over all channels interleaved, and mono zero-crossings
-    (first channel, sign changes ignoring zeros). Non-WAV payloads get
-    the deterministic stub treatment (decoded=False, digest-derived
-    pseudo-features) — same contract as the image path's foreign
-    formats."""
-    parsed = _parse_wav(payload) if kind == "audio" else None
-    if parsed is None:
-        digest = hashlib.md5(payload).digest()
-        h = int.from_bytes(digest[:8], "big")
+    def wav_decoder(payload: bytes, kind: str) -> dict:
+        """Audio feature extraction: integer-exact energy (sum of squares
+        in int64 — |s| <= 32768 so even hour-long audio stays far inside
+        range), peak, RMS over all channels interleaved, and mono
+        zero-crossings (first channel, sign changes ignoring zeros).
+        Non-WAV payloads get the deterministic stub (decoded=False,
+        digest-derived peak)."""
+        parsed = parse_wav(payload) if kind == "audio" else None
+        if parsed is None:
+            digest = hashlib.md5(payload).digest()
+            h = int.from_bytes(digest[:8], "big")
+            return {
+                "n_bytes": len(payload),
+                "n_channels": None,
+                "sample_rate": None,
+                "n_samples": None,
+                "duration_ms": None,
+                "peak": int(h % 32768),
+                "sum_sq": None,
+                "rms": None,
+                "zero_crossings": None,
+                "decoded": False,
+            }
+        samples = parsed["samples"]
+        n = len(samples)
+        sum_sq = sum(s * s for s in samples)
+        peak = max((abs(s) for s in samples), default=0)
+        ch0 = samples[:: parsed["n_channels"]]
+        zc = 0
+        prev = 0
+        for s in ch0:
+            if s != 0:
+                if prev != 0 and (s > 0) != (prev > 0):
+                    zc += 1
+                prev = s
+        rate = parsed["sample_rate"]
         return {
             "n_bytes": len(payload),
-            "n_channels": None,
-            "sample_rate": None,
-            "n_samples": None,
-            "duration_ms": None,
-            "peak": int(h % 32768),
-            "sum_sq": None,
-            "rms": None,
-            "zero_crossings": None,
-            "decoded": False,
+            "n_channels": parsed["n_channels"],
+            "sample_rate": rate,
+            "n_samples": parsed["n_samples"],
+            "duration_ms": int(parsed["n_samples"] * 1000 // rate) if rate else None,
+            "peak": int(peak),
+            "sum_sq": int(sum_sq),
+            "rms": (sum_sq / n) ** 0.5 if n else None,
+            "zero_crossings": int(zc),
+            "decoded": True,
         }
-    samples = parsed["samples"]
-    n = len(samples)
-    sum_sq = sum(s * s for s in samples)
-    peak = max((abs(s) for s in samples), default=0)
-    ch0 = samples[:: parsed["n_channels"]]
-    zc = 0
-    prev = 0
-    for s in ch0:
-        if s != 0:
-            if prev != 0 and (s > 0) != (prev > 0):
-                zc += 1
-            prev = s
-    rate = parsed["sample_rate"]
-    return {
-        "n_bytes": len(payload),
-        "n_channels": parsed["n_channels"],
-        "sample_rate": rate,
-        "n_samples": parsed["n_samples"],
-        "duration_ms": int(parsed["n_samples"] * 1000 // rate) if rate else None,
-        "peak": int(peak),
-        "sum_sq": int(sum_sq),
-        "rms": (sum_sq / n) ** 0.5 if n else None,
-        "zero_crossings": int(zc),
-        "decoded": True,
-    }
+
+    return synth_wav, parse_wav, wav_decoder
 
 
-def decode_audio(
-    media: DataFrame,
-    decoder: Callable[[bytes, str], dict] = wav_decoder,
-) -> DataFrame:
-    """Arrow-batched audio decode — same mapInPandas shape as
-    ``decode_media``; decode failures become stub rows, never task
-    failures."""
+synth_wav, _parse_wav, wav_decoder = _wav_codec()
+
+
+def _audio_stage():
+    """The row's ``mapInPandas`` function over ``(media_id, text)``
+    batches: each document's utf-8 bytes become 8 kHz PCM samples (every
+    third document keeps its raw bytes, a foreign payload that takes the
+    stub fallback), and the payload is decoded in the same batch. A
+    decode that raises gives a stub row."""
+    synth, _, decode = _wav_codec()
+    columns = [f.name for f in AUDIO_DECODED_SCHEMA]
+    failed = dict.fromkeys(columns[2:], None) | {"decoded": False}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                row = {"media_id": media_id, "kind": kind}
-                try:
-                    row.update(decoder(bytes(payload), kind))
-                except Exception:
-                    row.update(
-                        n_bytes=None, n_channels=None, sample_rate=None,
-                        n_samples=None, duration_ms=None, peak=None,
-                        sum_sq=None, rms=None, zero_crossings=None,
-                        decoded=False,
-                    )
-                out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in AUDIO_DECODED_SCHEMA]
-            )
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        run, schema=AUDIO_DECODED_SCHEMA
-    )
-
-
-def synth_wav(
-    samples: list[int], sample_rate: int = 8000, n_channels: int = 1
-) -> bytes:
-    """Deterministic 16-bit PCM WAV writer (the codec's inverse) — used
-    by the synthetic-media exemplar and the golden tests."""
-    import struct as st
-
-    raw = st.pack(f"<{len(samples)}h", *samples)
-    byte_rate = sample_rate * n_channels * 2
-    fmt = st.pack("<HHIIHH", 1, n_channels, sample_rate, byte_rate,
-                  n_channels * 2, 16)
-    body = b"WAVE" + b"fmt " + st.pack("<I", len(fmt)) + fmt
-    body += b"data" + st.pack("<I", len(raw)) + raw
-    return b"RIFF" + st.pack("<I", len(body)) + body
-
-
-@register("multimodal_audio_features")  # r10 rotation: driver-facing as a
-# rows-only row (no oracle: Python codec path); the codec itself is pinned
-# by golden tests in tests/test_multimodal.py
-def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end audio pipeline over synthetic WAV media: a first
-    mapInPandas stage 'ingests' deterministic PCM waveforms (samples
-    derived from document bytes — the stand-in for reading real audio
-    blobs), the second decodes them back through the REAL wav codec and
-    emits integer-exact energy features. Every third document ships a
-    deliberately foreign payload (its raw utf-8 bytes) to exercise the
-    stub fallback inline."""
-    prepare(spark)
-    docs = table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"), "text"
-    )
-
-    ingest_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def ingest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
             for media_id, text in zip(pdf["media_id"], pdf["text"]):
                 data = text.encode("utf-8")
                 if media_id % 3 == 0:
-                    payload = data  # foreign bytes -> stub fallback
+                    payload = data
                 else:
-                    samples = [
-                        ((b - 128) * 256) for b in data[:256]
-                    ] or [0]
-                    payload = synth_wav(samples, sample_rate=8000)
-                out.append(
-                    {"media_id": media_id, "kind": "audio", "payload": payload}
-                )
-            yield pd.DataFrame(out, columns=["media_id", "kind", "payload"])
-
-    media = docs.mapInPandas(ingest, schema=ingest_schema)
-    return decode_audio(media)
-
-
-# --------------------------------------------------------------------------
-# Frame-level audio energy (r10): the VAD / silence-trim building block.
-
-
-def audio_frame_energy(
-    payload: bytes, frame_len: int = 256
-) -> list[int] | None:
-    """Per-frame energy of the FIRST channel: sum of squared samples over
-    consecutive ``frame_len``-sample windows (the last, partial frame
-    included). Pure integers — |s| <= 32768 keeps even an hour of audio
-    far inside int64 — so the profile is exactly reproducible anywhere.
-    None for payloads the WAV codec cannot parse."""
-    parsed = _parse_wav(bytes(payload))
-    if parsed is None:
-        return None
-    ch0 = parsed["samples"][:: parsed["n_channels"]]
-    return [
-        sum(s * s for s in ch0[i : i + frame_len])
-        for i in range(0, len(ch0), frame_len)
-    ]
-
-
-def active_span(energies: list[int], threshold: int) -> tuple[int, int] | None:
-    """[first, last] frame index with energy > threshold — the trim
-    window a pipeline cuts silence outside of. None when every frame is
-    at or under the threshold (all-silence clip)."""
-    idx = [i for i, e in enumerate(energies) if e > threshold]
-    return (idx[0], idx[-1]) if idx else None
-
-
-def frame_energies(
-    media: DataFrame,
-    frame_len: int = 256,
-    silence_threshold: int = 0,
-) -> DataFrame:
-    """Arrow-batched frame-energy extraction over audio payloads:
-    (media_id, n_frames, energies array<long>, active_start, active_end)
-    — undecodable payloads yield NULLs (quarantine contract). The
-    energy profile is what VAD, silence trimming, and loudness
-    normalization consume; the trim span is computed inline so a
-    downstream cut needs no second decode."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("energies", T.ArrayType(T.LongType())),
-            T.StructField("active_start", T.IntegerType()),
-            T.StructField("active_end", T.IntegerType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                row = {
-                    "media_id": media_id,
-                    "n_frames": None,
-                    "energies": None,
-                    "active_start": None,
-                    "active_end": None,
-                }
+                    samples = [(b - 128) * 256 for b in data[:256]] or [0]
+                    payload = synth(samples, sample_rate=8000)
+                row = {"media_id": media_id, "kind": "audio"}
                 try:
-                    en = audio_frame_energy(bytes(payload), frame_len)
-                    if en is not None:
-                        row["n_frames"] = len(en)
-                        row["energies"] = en
-                        span = active_span(en, silence_threshold)
-                        if span is not None:
-                            row["active_start"], row["active_end"] = span
+                    row.update(decode(payload, "audio"))
                 except Exception:
-                    pass
+                    row.update(failed)
                 out.append(row)
-            yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
+            yield pd.DataFrame(out, columns=columns)
 
-    return media.repartition(
-        media.sparkSession.sparkContext.defaultParallelism, "media_id"
-    ).mapInPandas(run, schema)
+    return run
+
+
+@register("multimodal_audio_features")  # rows-only (no oracle: Python
+# codec path); the codec is pinned by golden tests in tests/test_multimodal.py
+def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end audio pipeline over synthetic WAV media: one
+    mapInPandas stage synthesizes deterministic PCM waveforms from
+    document bytes (the stand-in for reading real audio blobs) and
+    decodes them back through the REAL wav codec into integer-exact
+    energy features. Every third document ships a deliberately foreign
+    payload to exercise the stub fallback inline."""
+    prepare(spark)
+    docs = table(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("media_id"), "text"
+    )
+    return docs.mapInPandas(_audio_stage(), schema=AUDIO_DECODED_SCHEMA)

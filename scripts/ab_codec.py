@@ -19,7 +19,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from datawarehouse_project_spark.catalog import all_queries
 from datawarehouse_project_spark.operators.dedup import doc_shingle_frame
@@ -39,7 +40,7 @@ def _noop(df) -> None:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/repo/.scale/sf1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", f"{ROOT}/.scale/sf1")
     spark = get_spark("dwspark-ab-codec", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     codec = spark.conf.get("spark.io.compression.codec")
